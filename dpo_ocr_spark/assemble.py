@@ -35,12 +35,6 @@ def explode_tokens(extracted: DataFrame) -> DataFrame:
     ).select("url", "t.*")
 
 
-def explode_blocks(extracted: DataFrame) -> DataFrame:
-    return extracted.select(
-        "url", F.explode("blocks").alias("b")
-    ).select("url", "b.*")
-
-
 def _ordered_concat(sort_cols: list[str]) -> F.Column:
     """concat_ws(' ', words ordered by sort_cols) as a single aggregate —
     sort-within-aggregate keeps the op shuffle-once and deterministic."""

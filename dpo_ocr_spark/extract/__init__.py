@@ -1,15 +1,7 @@
 """Extraction stage exports.
 
-``extract_pages`` is the Arrow-native ``mapInArrow`` fast path
-(stage_arrow.py); ``extract_pages_pandas`` is the reference
-``mapInPandas`` implementation it is equivalence-tested against
-(tests/test_extract.py). Both produce byte-identical EXTRACT_RESULT
-rows; the fast path is ~1.65× the reference at local[8] (nested
-tokens/blocks serialize as flat ListArrays instead of pandas object
-columns).
+``extract_pages`` is the Arrow-batched ``mapInArrow`` stage (stage.py);
+``extract.html`` holds the HTML segmenter it runs per page.
 """
 
-from .stage import extract_pages as extract_pages_pandas  # noqa: F401
-from .stage_arrow import extract_pages_arrow  # noqa: F401
-
-extract_pages = extract_pages_arrow
+from .stage import extract_pages  # noqa: F401

@@ -18,9 +18,9 @@ browsers and html5lib follow):
 Per the WHATWG alias rules, latin-1 labels (iso-8859-1, ascii, us-ascii)
 map to windows-1252.  Unknown labels fall back to the UTF-8 ladder.
 
-Used by both HTML segmenters (extract/html.py stdlib reference and
-extract/html_fast.py hot path) so their equivalence tests cover the
-decode layer too.  Layout payloads (Document-AI-shaped JSON) stay plain
+Used by the HTML segmenter (extract/html.py) and by its stdlib
+reference twin (tests/html_reference.py), so their equivalence tests
+cover the decode layer too.  Layout payloads (Document-AI-shaped JSON) stay plain
 UTF-8 — JSON is UTF-8 by spec.
 """
 

@@ -121,28 +121,6 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WS_SQL = "split(regexp_replace(lower(text), '\\\\s+', ' '), ' ')"
 
 
-def _shingles() -> F.Column:
-    """Ordered word-3-gram shingles of the normalized text (distinct).
-    Texts shorter than K words yield one (short) shingle — the oracle SQL
-    mirrors the same clipping via inclusive list slices."""
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(size({_WS_SQL}) - "
-            f"{SHINGLE_K - 1}, 1)), "
-            f"i -> concat_ws(' ', slice({_WS_SQL}, i, {SHINGLE_K})))"
-        )
-    )
-
-
-def shingle_frame_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles — pure-SQL reference
-    implementation (the oracle-parity definition)."""
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(_shingles()).alias("shingle"))
-    )
-
-
 _WS_ASCII = None  # lazy: compiled on first executor use
 
 
@@ -354,9 +332,9 @@ def ngram_jaccard_from_sized_shingles(
     """Single-consumption Jaccard pipeline over a (doc_id, shingle, n)
     frame: the doc sizes ride inside the bucket structs, so the plan is
     scan → kernel → groupBy(shingle) → pair fan-out → groupBy(pair) —
-    two shuffles, ONE kernel execution.  Row-identical to
-    ``ngram_jaccard_from_shingles`` (pinned by a pytest); that three-join
-    form re-ran the shingle kernel and its scan once per join side."""
+    two shuffles, ONE kernel execution.  Row-identical to the three-join
+    reference form in tests/dedup_reference.py (pinned by a pytest), which
+    re-ran the shingle kernel and its scan once per join side."""
     inter = (
         _capped_groups(
             sh.groupBy("shingle").agg(
@@ -391,74 +369,7 @@ def ngram_jaccard_from_sized_shingles(
     )
 
 
-def ngram_jaccard_from_shingles(
-    sh: DataFrame, threshold_x1000: int = 300, max_df: int = MAX_GROUP
-) -> DataFrame:
-    """Exact word-shingle Jaccard over all pairs sharing ≥1 shingle.
-
-    Join on shingle (never crossJoin): candidate pairs are generated only
-    where an inverted-index bucket overlaps — the same sparsity argument
-    that makes this viable at scale, here with exact verification.
-    Shingles with document frequency > max_df are dropped from the
-    intersection (observed drop count: drop_stats('ngram_jaccard')) —
-    the stop-shingle fan-out cap; sizes/denominators stay exact.
-    Jaccard emitted ×1000 integer-floored (engine-exact)."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # inverted index → in-bucket pair fan-out (one shuffle; the previous
-    # shingle-equality self-join recomputed the shingle kernel per side
-    # and shuffled the full frame twice)
-    inter = (
-        _capped_groups(
-            sh.groupBy("shingle").agg(
-                F.sort_array(F.collect_list("doc_id")).alias("ids")
-            ),
-            "ngram_jaccard",
-            max_df,
-        )
-        .select(F.explode(_pair_combos("ids")).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            (F.col("n_a") + F.col("n_b") - F.col("n_inter")).alias("n_union"),
-            F.floor(
-                F.col("n_inter") * 1000
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).cast("long").alias("jaccard_x1000"),
-        )
-        .filter(F.col("jaccard_x1000") >= threshold_x1000)
-    )
-
-
 _MERSENNE31 = 2_147_483_647
-
-
-def _minhash_cols() -> list[F.Column]:
-    """k minhashes from ONE md5 per shingle (12 md5s/shingle was the
-    measured sf0.1 hot spot: 90s → universal-hash derivation
-    h_i = (a_i·base + b_i) mod 2³¹−1 from base = md5int(shingle) mod 2³¹−1.
-    Engine-portable: DuckDB computes the identical md5/hex-int/modulo."""
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("long") % _MERSENNE31
-    )
-    cols = []
-    for i in range(MINHASH_K):
-        h = (base * (2 * i + 3) + i * 7 + 1) % _MERSENNE31
-        cols.append(F.min(h).alias(f"mh_{i}"))
-    return cols
-
-
-def minhash_of(sh: DataFrame) -> DataFrame:
-    return sh.groupBy("doc_id").agg(*_minhash_cols())
 
 
 @nogc_batches
@@ -470,8 +381,9 @@ def _signature_batches(it):
     whose JVM aggregate evaluated ``md5(shingle)`` once per hash
     function (k=12 md5s per shingle — codegen does not CSE across
     aggregate expressions, visible in the r6 before-plan) and shuffled
-    every shingle string.  Row-identical to
-    ``minhash_of(shingles_of(docs))`` (pinned by a pytest)."""
+    every shingle string.  Row-identical to the SQL reference form in
+    tests/dedup_reference.py over ``shingles_of(docs)`` (pinned by a
+    pytest)."""
     import re
     from hashlib import md5
 
@@ -481,7 +393,7 @@ def _signature_batches(it):
     global _WS_ASCII
     if _WS_ASCII is None:
         _WS_ASCII = re.compile(r"\s+", re.ASCII)
-    # h_i = (base * (2i+3) + 7i+1) mod M31 — the _minhash_cols contract
+    # h_i = (base * (2i+3) + 7i+1) mod M31 — the DuckDB oracle's contract
     A = np.arange(MINHASH_K, dtype=np.int64) * 2 + 3
     B = np.arange(MINHASH_K, dtype=np.int64) * 7 + 1
     for batch in it:
@@ -684,44 +596,6 @@ def _quantized(df: DataFrame) -> DataFrame:
     )
 
 
-def embedding_neardup_pairs(
-    spark: SparkSession, sf_dir: str, t_num: int = 2, t_den: int = 5
-) -> DataFrame:
-    """Pairs with cosine ≥ t, decided in EXACT integer arithmetic:
-    dot > 0 and dot² · t_den² ≥ t_num² · |a|²·|b|² — bit-identical across
-    engines (no float in the predicate).  All-pairs here (500 vecs); the
-    scale path buckets by LSH first (ops/similarity.py)."""
-    emb = _quantized(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    )
-    a = emb.alias("a")
-    b = emb.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.q"), F.col("b.q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            dot.alias("dot"),
-            F.col("a.norm2").alias("na"),
-            F.col("b.norm2").alias("nb"),
-        )
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot") * F.col("dot") * (t_den * t_den)
-                >= F.lit(t_num * t_num) * F.col("na") * F.col("nb")
-            )
-        )
-        .select("vec_a", "vec_b")
-    )
-    return pairs
-
-
 def embedding_neardup_lsh(
     spark: SparkSession,
     sf_dir: str,
@@ -734,7 +608,7 @@ def embedding_neardup_lsh(
     collisions (union over the 8 tables), then decided by the same EXACT
     integer cosine gate as the all-pairs twin.  Deterministic-approximate:
     pairs never colliding in any table are missed — recall vs the all-pairs
-    oracle twin (embedding_neardup_pairs) is pinned in pytest, and the
+    twin (tests/dedup_reference.py) is pinned in pytest, and the
     DuckDB oracle re-derives the identical buckets, so the driver hash is
     still exact.
 

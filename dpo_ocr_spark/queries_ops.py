@@ -361,8 +361,8 @@ FROM bc a JOIN bc c
 # candidates = same-(table, bucket) collisions with the hot-bucket cap,
 # decided by the exact integer cosine gate.  Deterministic-approximate —
 # the DuckDB oracle re-derives the identical buckets so the hash stays
-# exact; recall vs the all-pairs twin (embedding_neardup_pairs, kept as
-# the pytest baseline) is pinned in tests/test_ops.py.
+# exact; recall vs the all-pairs twin (tests/dedup_reference.py) is
+# pinned in tests/test_ops.py.
 _register(
     "embedding_neardup",
     D.embedding_neardup_lsh,

@@ -120,7 +120,3 @@ LINEAGE = T.StructType(
         T.StructField("num_buckets", T.IntegerType(), False),
     ]
 )
-
-# DDL-string forms (for mapInPandas / applyInPandas signatures).
-def ddl(schema: T.StructType) -> str:
-    return schema.simpleString()[7:-1]  # strip 'struct<' ... '>'

@@ -19,7 +19,7 @@ from pyspark.sql import SparkSession
 # the downstream explode+shuffle (assemble at local[32]: 13-26s vs 5-12s)
 # — 8192 is the measured sweet spot. Memory safety against fat payloads
 # (~1 MB pages at real scale) is NOT this knob's job — the extraction
-# stage byte-bounds its own batches (stage_arrow.TARGET_PAYLOAD_BYTES,
+# stage byte-bounds its own batches (extract.stage.TARGET_PAYLOAD_BYTES,
 # zero-copy slicing), so the row cap stays payload-agnostic.
 ARROW_MAX_RECORDS = 8192
 

@@ -40,7 +40,7 @@ parser only needs ``read``).  ``fetch_records`` groups by file and seeks,
 which maps 1:1 onto S3 ranged GETs.  No per-row Python anywhere a built-in
 could go: header/CDX formatting is JVM-side; only the byte-level container
 codec runs in Arrow-batched Python, the same boundary as the page decoder
-(extract/stage_arrow.py).
+(extract/stage.py).
 """
 
 from __future__ import annotations
@@ -481,7 +481,7 @@ _ARROW_REC_FIELDS = [
 
 
 def _records_to_batches(recs: Iterator[dict], batch_bytes: int = 32 << 20):
-    """Byte-bounded Arrow batching (same budget idiom as stage_arrow)."""
+    """Byte-bounded Arrow batching (same budget idiom as extract/stage.py)."""
     import pyarrow as pa
 
     types = {

@@ -2,8 +2,8 @@
 
 Pins: BOM beats meta beats ladder; WHATWG latin-1→cp1252 aliasing; the
 strict-UTF-8-else-cp1252 total fallback; and byte-identical extracted
-text across the UTF-8 / declared-cp1252 / BOM'd-UTF-16 page mix through
-BOTH segmenters.
+text across the UTF-8 / declared-cp1252 / BOM'd-UTF-16 page mix, with the
+segmenter and its stdlib reference agreeing on every page.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import pytest
 
 from dpo_ocr_spark.extract.charset import decode_html, detect_charset
 from dpo_ocr_spark.extract.html import extract_html, segment_html
-from dpo_ocr_spark.extract.html_fast import segment_html_fast
+from html_reference import segment_html as reference_segment_html
 from dpo_ocr_spark.corpus import expected_text, render_html, render_html_cs
 
 
@@ -74,8 +74,8 @@ def test_charset_mix_text_identical(doc_id):
     ta, *_ = extract_html(a)
     tb, *_ = extract_html(b)
     assert ta == tb == expected_text(text)
-    # both segmenters agree on the exotic bytes
-    assert segment_html(b) == segment_html_fast(b)
+    # the segmenter and its reference agree on the exotic bytes
+    assert segment_html(b) == reference_segment_html(b)
 
 
 def test_charset_mix_non_latin_falls_to_utf16():

@@ -106,17 +106,43 @@ def test_layout_block_bbox_envelope():
         assert bbox[1] == min(ys) and bbox[5] == max(ys)
 
 
-def test_arrow_stage_equivalence(spark):
-    """The mapInArrow fast path is row-identical to the mapInPandas
-    reference implementation (same EXTRACT_RESULT schema, same values)."""
-    from dpo_ocr_spark.corpus import build_web_pages
-    from dpo_ocr_spark.extract import extract_pages_arrow, extract_pages_pandas
+def test_stage_matches_per_row_reference(spark):
+    """Every row of the Arrow stage equals ``_extract_one`` applied to
+    that input row in the driver: sf0.001 pages plus a quarantined, a PDF
+    and a text-passthrough row."""
+    from datetime import datetime
 
-    pages = build_web_pages(spark, "/root/testdata/sf0.001")
-    a = extract_pages_pandas(pages)
-    b = extract_pages_arrow(pages)
-    assert a.schema == b.schema
-    assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect()))
+    from dpo_ocr_spark.corpus import build_web_pages, render_pdf
+    from dpo_ocr_spark.extract import extract_pages
+    from dpo_ocr_spark.extract.stage import _extract_one
+    from dpo_ocr_spark.schemas import EXTRACT_RESULT, WEB_PAGES
+
+    ts = datetime(2024, 1, 1)
+    extra = spark.createDataFrame(
+        [
+            ("q", ts, b"{not valid json", None, "en"),
+            ("pdf", ts, render_pdf(2, "alpha beta gamma delta"), None, "en"),
+            ("txt", ts, None, "pre-extracted text", "en"),
+        ],
+        schema=WEB_PAGES,
+    )
+    pages = build_web_pages(spark, "/root/testdata/sf0.001").unionByName(extra)
+    out = extract_pages(pages)
+    assert out.schema == EXTRACT_RESULT
+    want = {}
+    for r in pages.collect():
+        kind, text, tokens, blocks, nb = _extract_one(r.html, r.text)
+        want[r.url] = (
+            r.url, r.warc_ts, r.lang, kind, text, nb, len(tokens),
+            tokens, blocks,
+        )
+    got = {r.url: r for r in out.collect()}
+    assert got.keys() == want.keys()
+    assert [got[u].payload_kind for u in ("q", "pdf", "txt")] == [
+        "error", "pdf", "text",
+    ]
+    for url, row in want.items():
+        assert got[url] == row, url
 
 
 def test_adversarial_payloads_quarantined(spark):
@@ -154,9 +180,9 @@ def test_byte_bounded_rebatching(monkeypatch):
     payload-byte target before decode; row content is preserved."""
     import pyarrow as pa
 
-    from dpo_ocr_spark.extract import stage_arrow
+    from dpo_ocr_spark.extract import stage
 
-    monkeypatch.setattr(stage_arrow, "TARGET_PAYLOAD_BYTES", 1000)
+    monkeypatch.setattr(stage, "TARGET_PAYLOAD_BYTES", 1000)
     payloads = [b"<p>" + bytes([65 + i % 26]) * 300 + b"</p>" for i in range(12)]
     batch = pa.RecordBatch.from_arrays(
         [
@@ -168,12 +194,12 @@ def test_byte_bounded_rebatching(monkeypatch):
         ],
         names=["url", "warc_ts", "html", "text", "lang"],
     )
-    slices = list(stage_arrow._byte_bounded(iter([batch])))
+    slices = list(stage._byte_bounded(iter([batch])))
     assert len(slices) > 1
     assert sum(s.num_rows for s in slices) == 12
-    out = list(stage_arrow._extract_batches_arrow(iter([batch])))
+    out = list(stage._extract_batches(iter([batch])))
     urls = [u for b in out for u in b.column("url").to_pylist()]
     assert urls == [f"u{i}" for i in range(12)]
     # singleton rows never split even when over target
     one = batch.slice(0, 1)
-    assert [s.num_rows for s in stage_arrow._byte_bounded(iter([one]))] == [1]
+    assert [s.num_rows for s in stage._byte_bounded(iter([one]))] == [1]

@@ -6,6 +6,8 @@ Every quirk of block_identification.py is pinned by an explicit test so a
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dpo_ocr_spark.interpret.dates import interpret_block
@@ -192,7 +194,9 @@ def test_interpret_full_golden_sf0_01(spark):
         .sort_values(list(df.columns))
         .reset_index(drop=True)
     )
-    want = pd.read_parquet("/root/repo/tests/fixtures/interpret_full_sf0_01.parquet")
+    want = pd.read_parquet(
+        os.path.join(os.path.dirname(__file__), "fixtures", "interpret_full_sf0_01.parquet")
+    )
     assert list(got.columns) == list(want.columns)
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 

@@ -6,6 +6,8 @@ import pytest
 
 from dpo_ocr_spark.ops.dedup import simhash64_py
 
+import dedup_reference as R
+
 SD = "/root/testdata/sf0.001"
 
 
@@ -117,7 +119,7 @@ def test_shingle_kernel_equivalence(spark):
     slices, same first-occurrence distinct)."""
     from dpo_ocr_spark.ops import dedup as D
 
-    sql_rows = sorted(map(tuple, D.shingle_frame_sql(spark, SD).collect()))
+    sql_rows = sorted(map(tuple, R.shingle_frame_sql(spark, SD).collect()))
     py_rows = sorted(map(tuple, D.shingle_frame(spark, SD).collect()))
     assert py_rows == sql_rows
 
@@ -131,7 +133,7 @@ def test_signature_kernel_equivalence(spark):
     from dpo_ocr_spark.ops import dedup as D
 
     sql_rows = sorted(
-        map(tuple, D.minhash_of(D.shingle_frame(spark, SD)).collect())
+        map(tuple, R.minhash_of(D.shingle_frame(spark, SD)).collect())
     )
     py_rows = sorted(map(tuple, D.minhash_signatures(spark, SD).collect()))
     assert py_rows == sql_rows
@@ -147,7 +149,7 @@ def test_sized_jaccard_equivalence(spark):
     ref = sorted(
         map(
             tuple,
-            D.ngram_jaccard_from_shingles(
+            R.ngram_jaccard_from_shingles(
                 D.shingles_of(docs), threshold_x1000=0
             ).collect(),
         )
@@ -194,14 +196,14 @@ def test_hot_group_caps_bound_fanout(spark):
     sh = D.shingles_of(docs).cache()
 
     # 4 shared shingles have df=50 > 10 → dropped; the unique 5th can't pair
-    pairs = D.ngram_jaccard_from_shingles(sh, threshold_x1000=0, max_df=10)
+    pairs = R.ngram_jaccard_from_shingles(sh, threshold_x1000=0, max_df=10)
     assert pairs.count() == 0
     stats = D.drop_stats("ngram_jaccard")
     assert stats["dropped_groups"] == 4
     assert stats["dropped_ids"] == 4 * n
 
     # control: default cap leaves semantics exact (4/6 jaccard → all pairs)
-    pairs = D.ngram_jaccard_from_shingles(sh, threshold_x1000=300)
+    pairs = R.ngram_jaccard_from_shingles(sh, threshold_x1000=300)
     assert pairs.count() == n * (n - 1) // 2
     assert D.drop_stats("ngram_jaccard") == {
         "dropped_groups": 0,
@@ -219,7 +221,7 @@ def test_hot_lsh_bucket_cap(spark):
         [(i, "the very same text for every single doc") for i in range(n)],
         "doc_id long, text string",
     )
-    sig = D.minhash_of(D.shingles_of(docs))
+    sig = R.minhash_of(D.shingles_of(docs))
     capped = D.lsh_pairs_from_signatures(sig, max_bucket=10)
     assert capped.count() == 0
     stats = D.drop_stats("minhash_lsh")
@@ -239,7 +241,7 @@ def test_embedding_neardup_lsh_vs_allpairs(spark):
 
     sf = "/root/testdata/sf0.001"
     exact = {
-        (r.vec_a, r.vec_b) for r in D.embedding_neardup_pairs(spark, sf).collect()
+        (r.vec_a, r.vec_b) for r in R.embedding_neardup_pairs(spark, sf).collect()
     }
     lsh_df = D.embedding_neardup_lsh(spark, sf)
     lsh = {(r.vec_a, r.vec_b) for r in lsh_df.collect()}

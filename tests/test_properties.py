@@ -6,7 +6,6 @@ from hypothesis import given, settings, strategies as st
 
 from dpo_ocr_spark.corpus import expected_text, split_paragraphs
 from dpo_ocr_spark.extract.html import segment_html
-from dpo_ocr_spark.extract.html_fast import segment_html_fast
 from dpo_ocr_spark.interpret.dates import interpret_block
 from dpo_ocr_spark.interpret.fuzzy import (
     indel_distance,
@@ -16,6 +15,7 @@ from dpo_ocr_spark.interpret.fuzzy import (
     word_similarity,
 )
 from dpo_ocr_spark.interpret.mini_dateparser import parse
+from html_reference import segment_html as reference_segment_html
 
 words = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")),
@@ -84,8 +84,8 @@ def test_parse_never_crashes_and_validates(t, order):
 @given(st.binary(max_size=400))
 @settings(max_examples=300)
 def test_segmenters_never_crash(payload):
-    a = segment_html(payload)
-    b = segment_html_fast(payload)
+    a = reference_segment_html(payload)
+    b = segment_html(payload)
     assert isinstance(a, list) and isinstance(b, list)
 
 
@@ -94,4 +94,4 @@ def test_segmenters_agree_on_wellformed(t):
     from dpo_ocr_spark.corpus import render_html
 
     p = render_html(0, t)
-    assert segment_html(p) == segment_html_fast(p)
+    assert segment_html(p) == reference_segment_html(p)

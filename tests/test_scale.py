@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 from pyspark.sql import functions as F
 
 SD = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_salted_repartition_balances_hot_host(spark):
@@ -142,19 +144,18 @@ def test_spark_submit_job_end_to_end(tmp_path, spark):
     build_web_pages(spark, SD, partitions=4).write.parquet(src)
     out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
     zipout = subprocess.run(
-        [sys.executable, "/root/repo/jobs/make_pyfiles.py"],
+        [sys.executable, os.path.join(REPO, "jobs", "make_pyfiles.py"),
+         str(tmp_path / "dist")],
         capture_output=True, text=True, check=True,
     ).stdout.strip()
     assert zipout.endswith("dpo_ocr_spark.zip")
     cmd = [
-        sys.executable, "/root/repo/jobs/run_extract.py",
+        sys.executable, os.path.join(REPO, "jobs", "run_extract.py"),
         "--input", src, "--output", out, "--lineage", lin,
         "--salt-partitions", "8",
     ]
-    import os
-
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    env["PYTHONPATH"] = REPO
     r = subprocess.run(cmd, capture_output=True, text=True, env=env,
                        timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]

@@ -8,6 +8,7 @@ and the parquet fallback end-to-end.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -23,6 +24,7 @@ from dpo_ocr_spark.sources import (
 )
 
 SD = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _FakeReader:
@@ -115,10 +117,11 @@ def test_parquet_fallback_roundtrip(spark, tmp_path):
 
 def test_job_prints_submit_conf():
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_extract.py", "--print-iceberg-conf"],
+        [sys.executable, os.path.join(REPO, "jobs", "run_extract.py"),
+         "--print-iceberg-conf"],
         capture_output=True,
         text=True,
-        env={"PYTHONPATH": "/root/repo", "PATH": "/usr/bin:/bin"},
+        env={"PYTHONPATH": REPO, "PATH": "/usr/bin:/bin"},
         timeout=60,
     )
     assert r.returncode == 0, r.stderr[-2000:]

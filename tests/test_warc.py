@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import zlib
 
 import pytest
@@ -226,7 +227,6 @@ def test_multi_record_member(spark, tmp_path):
 def test_warc_ingest_job_end_to_end(tmp_path, spark, warc_dir):
     """Deployment shape: run_warc_ingest.py in a fresh interpreter —
     archives → pages table + CDX + extraction results + lineage + WET."""
-    import os
     import subprocess
     import sys
 
@@ -237,10 +237,11 @@ def test_warc_ingest_job_end_to_end(tmp_path, spark, warc_dir):
     lin_t = str(tmp_path / "lin")
     wet_t = str(tmp_path / "wet")
     env = dict(os.environ)
-    env["PYTHONPATH"] = "/root/repo"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = repo
     r = subprocess.run(
         [
-            sys.executable, "/root/repo/jobs/run_warc_ingest.py",
+            sys.executable, os.path.join(repo, "jobs", "run_warc_ingest.py"),
             "--warc-dir", out_dir, "--pages", pages_t, "--cdx", cdx_t,
             "--extract-to", ext_t, "--lineage", lin_t, "--wet-dir", wet_t,
             "--salt-partitions", "8",

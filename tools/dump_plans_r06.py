@@ -7,7 +7,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.environ["SPARK_GRAFT_STAGE_CACHE"] = "0"
 
 
@@ -39,7 +40,7 @@ def main() -> int:
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(f"/root/repo/plans/r06/{name}_{tag}.txt", "w") as f:
+        with open(os.path.join(ROOT, "plans", "r06", f"{name}_{tag}.txt"), "w") as f:
             f.write(txt)
         print(name, "->", f"plans/r06/{name}_{tag}.txt")
     return 0

@@ -11,7 +11,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # evidence must show the production plans, not the gate's shared-stage
 # memo (a checkpoint scan would hide the real extraction DAG)
 os.environ["SPARK_GRAFT_STAGE_CACHE"] = "0"
@@ -148,7 +149,7 @@ def main() -> int:
         "only Exchange is ensure_parallelism's local-fixture split, a "
         "metadata no-op on a production multi-split table.\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(sections))
     print("PLANS.md written; all plan assertions held")
     return 0
