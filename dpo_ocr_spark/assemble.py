@@ -76,11 +76,3 @@ def assemble_reading_order(
             F.avg("confidence").alias("block_confidence"),
         )
     )
-
-
-def line_confidence(tokens: DataFrame) -> DataFrame:
-    """Per-line mean confidence (QA UI, ui/app.R:337)."""
-    return tokens.groupBy("url", "page", "block", "word_line").agg(
-        F.avg("confidence").alias("line_confidence"),
-        F.count("*").alias("n_words"),
-    )

@@ -32,10 +32,7 @@ import html as _html
 import json
 import math
 import zlib
-from collections.abc import Iterator
-from datetime import datetime, timedelta, timezone
-
-import pandas as pd
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -263,33 +260,14 @@ def render_layout(doc_id: int, text: str) -> bytes:
     return json.dumps(doc, separators=(",", ":")).encode("utf-8")
 
 
-def _gen_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas reference generator (kept for equivalence testing)."""
-    for pdf in it:
-        out = pd.DataFrame(
-            {
-                "url": [page_url(int(i)) for i in pdf["doc_id"]],
-                "warc_ts": [
-                    EPOCH + timedelta(seconds=int(i)) for i in pdf["doc_id"]
-                ],
-                "html": [
-                    render_layout(int(i), t) if is_layout_doc(int(i)) else render_html(int(i), t)
-                    for i, t in zip(pdf["doc_id"], pdf["text"])
-                ],
-                "text": [None] * len(pdf),  # engine must fill (FIXTURES.md §1)
-                "lang": pdf["lang"].tolist(),
-            }
-        )
-        yield out
-
-
 _EPOCH_US = int(EPOCH.timestamp()) * 1_000_000
 
 
 @nogc_batches
 def _gen_batches_arrow(it, charset_mix: bool = False, pdf_mix: bool = False):
     """mapInArrow generator — hot path (skips both pandas conversions;
-    same rows as _gen_batches, pinned by test_corpus_gen_equivalence).
+    same rows as the pandas reference in tests/test_entry.py, pinned by
+    test_corpus_gen_equivalence).
     ``charset_mix`` swaps the HTML renderer for the deterministic
     UTF-8/cp1252/UTF-16 mix (render_html_cs); ``pdf_mix`` swaps it for
     the PDF renderer (render_pdf — Flate/raw streams by doc parity);
@@ -322,7 +300,7 @@ def _gen_batches_arrow(it, charset_mix: bool = False, pdf_mix: bool = False):
                 pa.array([None] * n, pa.string()),
                 batch.column("lang"),
             ],
-            names=["url", "warc_ts", "html", "text", "lang"],
+            names=WEB_PAGES.names,
         )
 
 
@@ -337,7 +315,7 @@ def build_web_pages(
 
     ``partitions``: repartition the scan BEFORE the generation UDF — the
     fixture parquet is a single row-group, so without an explicit exchange
-    every downstream mapInPandas stage would run as ONE task (measured:
+    every downstream Python stage would run as ONE task (measured:
     scaling efficiency 0.4 → fixed by salting ahead of the first Python
     stage; at real scale this is the salted repartition of the Iceberg
     scan, see scale.salted_repartition).

@@ -21,6 +21,7 @@ from collections.abc import Iterator
 from html import unescape
 
 from pyspark.sql import DataFrame, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .charset import decode_html
 
@@ -46,6 +47,7 @@ HTML_META = T.StructType(
         T.StructField("n_links", T.IntegerType(), False),
     ]
 )
+_HTML_META_ARROW = to_arrow_schema(HTML_META)
 
 
 def page_meta(payload: bytes) -> tuple:
@@ -86,6 +88,7 @@ OUTLINKS = T.StructType(
         T.StructField("target", T.StringType(), False),
     ]
 )
+_OUTLINKS_ARROW = to_arrow_schema(OUTLINKS)
 
 
 def page_links(payload: bytes, base_url: str) -> list[str]:
@@ -116,13 +119,6 @@ def outlinks(pages: DataFrame) -> DataFrame:
     def gen(it):
         import pyarrow as pa
 
-        schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("pos", pa.int32()),
-                pa.field("target", pa.string()),
-            ]
-        )
         for batch in it:
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
@@ -135,7 +131,7 @@ def outlinks(pages: DataFrame) -> DataFrame:
                     cols["pos"].append(pos)
                     cols["target"].append(target)
             if cols["url"]:
-                yield pa.RecordBatch.from_pydict(cols, schema=schema)
+                yield pa.RecordBatch.from_pydict(cols, schema=_OUTLINKS_ARROW)
 
     return pages.select("url", "html").mapInArrow(gen, schema=OUTLINKS)
 
@@ -146,20 +142,10 @@ def html_meta(pages: DataFrame) -> DataFrame:
     def gen(it) -> Iterator:
         import pyarrow as pa
 
-        schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("title", pa.string()),
-                pa.field("lang_attr", pa.string()),
-                pa.field("canonical_url", pa.string()),
-                pa.field("robots_noindex", pa.bool_()),
-                pa.field("n_links", pa.int32()),
-            ]
-        )
         for batch in it:
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
-            cols: dict[str, list] = {n: [] for n in schema.names}
+            cols: dict[str, list] = {n: [] for n in HTML_META.names}
             for url, html in zip(urls, htmls):
                 title, lang, canon, noindex, n_links = page_meta(
                     bytes(html) if html is not None else b""
@@ -170,6 +156,6 @@ def html_meta(pages: DataFrame) -> DataFrame:
                 cols["canonical_url"].append(canon)
                 cols["robots_noindex"].append(noindex)
                 cols["n_links"].append(n_links)
-            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+            yield pa.RecordBatch.from_pydict(cols, schema=_HTML_META_ARROW)
 
     return pages.select("url", "html").mapInArrow(gen, schema=HTML_META)

@@ -34,14 +34,12 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..nogc import nogc_batches
-from ..schemas import EXTRACT_RESULT
+from ..schemas import BLOCK, EXTRACT_RESULT, TOKEN
 from .html import extract_html
 from .layout import extract_layout
-
-_INT32 = pa.int32()
-_INT64 = pa.int64()
 
 # Byte-bound on the payload decoded per emitted batch. The Spark-level
 # knob (arrow.maxRecordsPerBatch) counts ROWS, but page payloads span
@@ -52,29 +50,8 @@ _INT64 = pa.int64()
 # caps the nested token/block output per batch regardless of doc size.
 TARGET_PAYLOAD_BYTES = 16 << 20
 
-_TOKEN_TYPE = pa.struct(
-    [
-        pa.field("page", _INT32, False),
-        pa.field("block", _INT32, False),
-        pa.field("para", _INT32, False),
-        pa.field("word_line", _INT32, False),
-        pa.field("word", _INT32, False),
-        pa.field("word_text", pa.string(), False),
-        pa.field("confidence", pa.float64(), False),
-        pa.field("bbox", pa.list_(_INT32)),
-        pa.field("start", _INT64),
-        pa.field("end", _INT64),
-    ]
-)
-
-_BLOCK_TYPE = pa.struct(
-    [
-        pa.field("page", _INT32, False),
-        pa.field("block", _INT32, False),
-        pa.field("confidence", pa.float64()),
-        pa.field("bbox", pa.list_(_INT32)),
-    ]
-)
+_TOKEN_TYPE = to_arrow_type(TOKEN)
+_BLOCK_TYPE = to_arrow_type(BLOCK)
 
 
 def _extract_one(payload: bytes | None, pre_text: str | None):
@@ -131,7 +108,7 @@ def _nested_list_array(
         ],
         fields=list(struct_type),
     )
-    return pa.ListArray.from_arrays(pa.array(offsets, _INT32), struct)
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
 
 
 @nogc_batches
@@ -174,12 +151,12 @@ def _extract_batches(
                 batch.column("lang"),
                 pa.array(kinds, pa.string()),
                 pa.array(texts, pa.string()),
-                pa.array(nbytes, _INT64),
-                pa.array(ntoks, _INT32),
+                pa.array(nbytes, pa.int64()),
+                pa.array(ntoks, pa.int32()),
                 _nested_list_array(tok_off, tok_cols, _TOKEN_TYPE),
                 _nested_list_array(blk_off, blk_cols, _BLOCK_TYPE),
             ],
-            names=[f.name for f in EXTRACT_RESULT.fields],
+            names=EXTRACT_RESULT.names,
         )
 
 

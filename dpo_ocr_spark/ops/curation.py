@@ -52,7 +52,7 @@ def _words() -> Column:
 
 def _ngrams(words: Column, n: int) -> Column:
     """Ordered word-n-grams; texts shorter than n words yield one clipped
-    gram (identical slice semantics to ops.dedup._shingles)."""
+    gram (identical slice semantics to tests/dedup_reference._shingles)."""
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
         lambda i: F.array_join(F.slice(words, i, n), " "),

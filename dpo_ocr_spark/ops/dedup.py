@@ -119,9 +119,20 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WS_SQL = "split(regexp_replace(lower(text), '\\\\s+', ' '), ' ')"
+# Java \s is ASCII-only — re.ASCII keeps Python identical to _WS_SQL
+_WS_ASCII = re.compile(r"\s+", re.ASCII)
 
 
-_WS_ASCII = None  # lazy: compiled on first executor use
+def _distinct_shingles(text: str | None) -> list[str]:
+    """The text's distinct word-SHINGLE_K shingles in first-occurrence
+    order: _WS_SQL's lower → ASCII-whitespace normalize → split, then
+    every K-word window; a text shorter than K words (empty and NULL
+    included) yields one clipped shingle."""
+    words = _WS_ASCII.sub(" ", (text or "").lower()).split(" ")
+    n = max(len(words) - (SHINGLE_K - 1), 1)
+    return list(
+        dict.fromkeys(" ".join(words[i : i + SHINGLE_K]) for i in range(n))
+    )
 
 
 @nogc_batches
@@ -132,25 +143,15 @@ def _shingle_batches(it):
     transform/slice SQL expression measured 4.3s warm at sf0.1 vs ~0.4s
     here (the JVM evaluates the O(words·k) slice chain per row without
     loop fusion; Python does one linear pass)."""
-    import re
-
     import pyarrow as pa
 
-    global _WS_ASCII
-    if _WS_ASCII is None:
-        # Java \s is ASCII-only — re.ASCII keeps Python identical
-        _WS_ASCII = re.compile(r"\s+", re.ASCII)
     for batch in it:
         ids: list[int] = []
         shingles: list[str] = []
         for doc_id, text in zip(
             batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
         ):
-            words = _WS_ASCII.sub(" ", (text or "").lower()).split(" ")
-            n = max(len(words) - (SHINGLE_K - 1), 1)
-            uniq = dict.fromkeys(
-                " ".join(words[i : i + SHINGLE_K]) for i in range(n)
-            )
+            uniq = _distinct_shingles(text)
             ids.extend([doc_id] * len(uniq))
             shingles.extend(uniq)
         yield pa.RecordBatch.from_arrays(
@@ -178,13 +179,8 @@ def _sized_shingle_batches(it):
     consumption chain — the (sizes ⋈ pairs ⋈ sizes) form re-executed the
     shingle kernel (and its scan) three times, once per join side
     (guide §2.4: share one exchange instead of recomputing)."""
-    import re
-
     import pyarrow as pa
 
-    global _WS_ASCII
-    if _WS_ASCII is None:
-        _WS_ASCII = re.compile(r"\s+", re.ASCII)
     for batch in it:
         ids: list[int] = []
         shingles: list[str] = []
@@ -192,11 +188,7 @@ def _sized_shingle_batches(it):
         for doc_id, text in zip(
             batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
         ):
-            words = _WS_ASCII.sub(" ", (text or "").lower()).split(" ")
-            n = max(len(words) - (SHINGLE_K - 1), 1)
-            uniq = dict.fromkeys(
-                " ".join(words[i : i + SHINGLE_K]) for i in range(n)
-            )
+            uniq = _distinct_shingles(text)
             ids.extend([doc_id] * len(uniq))
             shingles.extend(uniq)
             ns.extend([len(uniq)] * len(uniq))
@@ -384,15 +376,11 @@ def _signature_batches(it):
     every shingle string.  Row-identical to the SQL reference form in
     tests/dedup_reference.py over ``shingles_of(docs)`` (pinned by a
     pytest)."""
-    import re
     from hashlib import md5
 
     import numpy as np
     import pyarrow as pa
 
-    global _WS_ASCII
-    if _WS_ASCII is None:
-        _WS_ASCII = re.compile(r"\s+", re.ASCII)
     # h_i = (base * (2i+3) + 7i+1) mod M31 — the DuckDB oracle's contract
     A = np.arange(MINHASH_K, dtype=np.int64) * 2 + 3
     B = np.arange(MINHASH_K, dtype=np.int64) * 7 + 1
@@ -402,14 +390,9 @@ def _signature_batches(it):
         bases: list[int] = []
         offsets = [0]
         for text in texts:
-            words = _WS_ASCII.sub(" ", (text or "").lower()).split(" ")
-            n = max(len(words) - (SHINGLE_K - 1), 1)
-            uniq = dict.fromkeys(
-                " ".join(words[i : i + SHINGLE_K]) for i in range(n)
-            )
             bases.extend(
                 int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % _MERSENNE31
-                for s in uniq
+                for s in _distinct_shingles(text)
             )
             offsets.append(len(bases))
         if not doc_ids:
@@ -692,7 +675,8 @@ def dedup_clusters(
     instead of O(diameter) — the property that matters at 10¹² docs
     where a boilerplate chain can be millions long.  Each round is two shuffles on bounded keys; the loop is
     driver-side control flow over DataFrames (no data ever collects).
-    Convergence is detected by a changed-label count, and the label frame
+    Convergence is detected by an unchanged label sum (a run that needs
+    more than ``max_iter`` rounds raises), and the label frame
     is ``localCheckpoint``-ed every round so the logical plan stays O(1)
     in the round count — without truncation the final action re-plans the
     fully unrolled loop (measured: 2,922 Exchanges at 25 rounds), which
@@ -713,14 +697,24 @@ def dedup_clusters(
 def clusters_from_edges(
     docs: DataFrame, pairs: DataFrame, max_iter: int = 25
 ) -> DataFrame:
-    """Core CC loop over (doc_id) nodes and (doc_a, doc_b) edges."""
+    """Core CC loop over (doc_id) nodes and (doc_a, doc_b) edges.
+
+    Raises RuntimeError if the labels still change in round ``max_iter``."""
+
+    def label_sum(frame: DataFrame):
+        # DECIMAL(38,0) keeps the sum exact at any corpus size (sum(long)
+        # could wrap at ~10^12 doc ids and alias a change as convergence)
+        return frame.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ).first()["s"]
+
     sym = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("src", "dst")
         .cache()
     )
     labels = docs.select("doc_id", F.col("doc_id").alias("label")).cache()
-    prev_sum = None
+    prev_sum = label_sum(labels)
     for _ in range(max_iter):
         nbr = (
             sym.join(labels, sym.src == labels.doc_id)
@@ -750,19 +744,18 @@ def clusters_from_edges(
         # join-against-old-labels count (one cheap aggregate vs a full
         # shuffle join per round — guide §2.4): every step takes a min,
         # so each node's label is non-increasing and the sum strictly
-        # decreases unless the round was a no-op.  DECIMAL(38,0) keeps
-        # the sum exact at any corpus size (sum(long) could wrap at
-        # ~10^12 doc ids and alias a change as convergence).
-        new_sum = (
-            jumped.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).first()["s"]
-        )
+        # decreases unless the round was a no-op.
+        new_sum = label_sum(jumped)
         labels.unpersist()
         labels = jumped
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        sym.unpersist()
+        raise RuntimeError(
+            f"connected components did not converge in {max_iter} rounds"
+        )
     sym.unpersist()
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 

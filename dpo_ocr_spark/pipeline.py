@@ -2,7 +2,7 @@
 
 scan → (salted repartition) → Arrow extract → exploded tokens/blocks →
 assembly.  Physical shape at scale: parquet/Iceberg scan (pruned) →
-round-robin-on-salt exchange → mapInPandas (pipelined, no shuffle) →
+round-robin-on-salt exchange → mapInArrow (pipelined, no shuffle) →
 one groupBy shuffle for assembly — exactly the two-shuffle plan SURVEY.md
 §4 calls for.
 """

@@ -53,6 +53,7 @@ from collections.abc import Iterator
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import WEB_PAGES
 
@@ -101,6 +102,12 @@ WET_RECORDS = T.StructType(
         T.StructField("text", T.StringType(), True),
     ]
 )
+
+# Arrow schemas of the batches the Python codecs build, derived from the
+# declarations above so the two cannot drift apart.
+_RECORDS_ARROW = to_arrow_schema(WARC_RECORDS)
+_INDEX_ARROW = to_arrow_schema(WARC_INDEX)
+_WET_ARROW = to_arrow_schema(WET_RECORDS)
 
 
 # ---------------------------------------------------------------------------
@@ -197,24 +204,6 @@ def _mime_of(html: bytes) -> str:
     return "application/json" if html[:1] == b"{" else "text/html; charset=UTF-8"
 
 
-def _index_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("warc_ts", pa.timestamp("us", tz="UTC")),
-            pa.field("mime", pa.string()),
-            pa.field("http_status", pa.int32()),
-            pa.field("payload_digest", pa.string()),
-            pa.field("payload_len", pa.int64()),
-            pa.field("warc_file", pa.string()),
-            pa.field("rec_offset", pa.int64()),
-            pa.field("rec_length", pa.int64()),
-        ]
-    )
-
-
 def _archive_writer(it, out_dir: str, ext: str, compress: bool, records_of):
     """Shared writer scaffold for WARC/WET sinks: one file per partition
     (warcinfo first, one gzip member per record when compressed), index
@@ -229,7 +218,7 @@ def _archive_writer(it, out_dir: str, ext: str, compress: bool, records_of):
     fname = f"part-{pid:05d}{ext}"
     path = os.path.join(out_dir, fname)
     os.makedirs(out_dir, exist_ok=True)
-    rows: dict[str, list] = {f.name: [] for f in WARC_INDEX.fields}
+    rows: dict[str, list] = {n: [] for n in WARC_INDEX.names}
     with open(path, "wb") as f:
         info = _warcinfo(fname)
         f.write(_gzip_member(info) if compress else info)
@@ -248,7 +237,7 @@ def _archive_writer(it, out_dir: str, ext: str, compress: bool, records_of):
                 rows["rec_offset"].append(pos)
                 rows["rec_length"].append(len(out))
                 pos += len(out)
-    yield pa.RecordBatch.from_pydict(rows, schema=_index_arrow_schema())
+    yield pa.RecordBatch.from_pydict(rows, schema=_INDEX_ARROW)
 
 
 def write_warc(
@@ -424,6 +413,32 @@ def _open(path: str):
     return open(path, "rb")
 
 
+def _record(
+    headers: dict[str, str], payload: bytes, path: str, off: int, length: int
+) -> dict:
+    """One response or conversion record as a dict keyed like WARC_RECORDS
+    (plus ``rec_type`` and ``lang``); a response's HTTP body is decoded."""
+    rtype = headers.get("warc-type")
+    rec: dict = {
+        "warc_file": path,
+        "rec_offset": off,
+        "rec_length": length,
+        "rec_type": rtype,
+        "url": headers.get("warc-target-uri", ""),
+        "warc_ts": _parse_warc_ts(headers.get("warc-date")),
+        "payload_digest": headers.get("warc-payload-digest"),
+        "lang": headers.get("warc-identified-content-language"),
+    }
+    if rtype == "response":
+        status, mime, body = _parse_http_response(payload)
+        rec.update(http_status=status, content_type=mime, html=body)
+        if rec["payload_digest"] is None:
+            rec["payload_digest"] = sha1_b32(body)
+    else:
+        rec.update(http_status=None, content_type="text/plain", html=payload)
+    return rec
+
+
 def _records_of_file(path: str) -> Iterator[dict]:
     """All response/conversion records of one archive, streamed."""
     compressed = path.endswith(".gz")
@@ -435,8 +450,7 @@ def _records_of_file(path: str) -> Iterator[dict]:
             streams = iter([(0, len(raw), raw)])
         for m_off, m_len, raw in streams:
             for r_at, headers, payload in _iter_records_in(raw):
-                rtype = headers.get("warc-type")
-                if rtype not in ("response", "conversion"):
+                if headers.get("warc-type") not in ("response", "conversion"):
                     continue
                 if compressed:
                     off, length = m_off, m_len
@@ -445,69 +459,27 @@ def _records_of_file(path: str) -> Iterator[dict]:
                     off = r_at
                     head_len = raw.index(_CRLF + _CRLF, r_at) + 4 - r_at
                     length = head_len + int(headers["content-length"]) + 4
-                rec: dict = {
-                    "warc_file": path,
-                    "rec_offset": off,
-                    "rec_length": int(length),
-                    "rec_type": rtype,
-                    "url": headers.get("warc-target-uri", ""),
-                    "warc_ts": _parse_warc_ts(headers.get("warc-date")),
-                    "payload_digest": headers.get("warc-payload-digest"),
-                    "lang": headers.get("warc-identified-content-language"),
-                }
-                if rtype == "response":
-                    status, mime, body = _parse_http_response(payload)
-                    rec.update(http_status=status, content_type=mime, html=body)
-                    if rec["payload_digest"] is None:
-                        rec["payload_digest"] = sha1_b32(body)
-                else:
-                    rec.update(
-                        http_status=None, content_type="text/plain", html=payload
-                    )
-                yield rec
+                yield _record(headers, payload, path, off, int(length))
 
 
-_ARROW_REC_FIELDS = [
-    ("url", "string"),
-    ("warc_ts", "ts"),
-    ("html", "binary"),
-    ("content_type", "string"),
-    ("http_status", "int32"),
-    ("payload_digest", "string"),
-    ("warc_file", "string"),
-    ("rec_offset", "int64"),
-    ("rec_length", "int64"),
-]
-
-
-def _records_to_batches(recs: Iterator[dict], batch_bytes: int = 32 << 20):
-    """Byte-bounded Arrow batching (same budget idiom as extract/stage.py)."""
+def _records_to_batches(recs: Iterator[dict], schema, batch_bytes: int = 32 << 20):
+    """Record dicts → Arrow batches of ``schema``, in order, each closed
+    once its payloads reach ``batch_bytes`` (same budget idiom as
+    extract/stage.py): a 1 GB archive never materializes as ONE batch."""
     import pyarrow as pa
 
-    types = {
-        "string": pa.string(),
-        "ts": pa.timestamp("us", tz="UTC"),
-        "binary": pa.binary(),
-        "int32": pa.int32(),
-        "int64": pa.int64(),
-    }
-    schema = pa.schema([pa.field(n, types[t]) for n, t in _ARROW_REC_FIELDS])
-    cols: dict[str, list] = {n: [] for n, _ in _ARROW_REC_FIELDS}
+    cols: dict[str, list] = {n: [] for n in schema.names}
     budget = 0
-
-    def flush():
-        return pa.RecordBatch.from_pydict(cols, schema=schema)
-
     for r in recs:
-        for n, _ in _ARROW_REC_FIELDS:
-            cols[n].append(r.get(n))
+        for n, col in cols.items():
+            col.append(r.get(n))
         budget += len(r.get("html") or b"") + 128
         if budget >= batch_bytes:
-            yield flush()
-            cols = {n: [] for n, _ in _ARROW_REC_FIELDS}
+            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+            cols = {n: [] for n in schema.names}
             budget = 0
-    if cols["url"]:
-        yield flush()
+    if budget:
+        yield pa.RecordBatch.from_pydict(cols, schema=schema)
 
 
 def _paths_frame(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:
@@ -543,7 +515,7 @@ def read_warc(
                 )
                 if status_ok_only:
                     recs = (r for r in recs if r["http_status"] == 200)
-                yield from _records_to_batches(recs)
+                yield from _records_to_batches(recs, _RECORDS_ARROW)
 
     return _paths_frame(spark, paths).mapInArrow(gen, schema=WARC_RECORDS)
 
@@ -598,49 +570,19 @@ def write_wet(extracted: DataFrame, out_dir: str, *, compress: bool = True) -> D
     )
 
 
-_WET_ARROW_FIELDS = [
-    ("url", "string"),
-    ("warc_ts", "ts"),
-    ("lang", "string"),
-    ("text", "string"),
-]
-
-
 def read_wet(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:
     """WET paths → (url, warc_ts, lang, text); byte-bounded batches like
-    read_warc (a 1 GB archive must never materialize as ONE batch)."""
+    read_warc."""
 
     def gen(it):
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("warc_ts", pa.timestamp("us", tz="UTC")),
-                pa.field("lang", pa.string()),
-                pa.field("text", pa.string()),
-            ]
-        )
-        batch_bytes = 32 << 20
         for batch in it:
             for path in batch.column("path").to_pylist():
-                cols: dict[str, list] = {n: [] for n, _ in _WET_ARROW_FIELDS}
-                budget = 0
-                for r in _records_of_file(path):
-                    if r["rec_type"] != "conversion":
-                        continue
-                    cols["url"].append(r["url"])
-                    cols["warc_ts"].append(r["warc_ts"])
-                    cols["lang"].append(r["lang"])
-                    text = r["html"].decode("utf-8")
-                    cols["text"].append(text)
-                    budget += len(text) + 128
-                    if budget >= batch_bytes:
-                        yield pa.RecordBatch.from_pydict(cols, schema=schema)
-                        cols = {n: [] for n, _ in _WET_ARROW_FIELDS}
-                        budget = 0
-                if cols["url"]:
-                    yield pa.RecordBatch.from_pydict(cols, schema=schema)
+                recs = (
+                    dict(r, text=r["html"].decode("utf-8"))
+                    for r in _records_of_file(path)
+                    if r["rec_type"] == "conversion"
+                )
+                yield from _records_to_batches(recs, _WET_ARROW)
 
     return _paths_frame(spark, paths).mapInArrow(gen, schema=WET_RECORDS)
 
@@ -733,24 +675,10 @@ def fetch_records(spark: SparkSession, index: DataFrame) -> DataFrame:
                             if compressed:
                                 raw = zlib.decompress(raw, 16 + zlib.MAX_WBITS)
                             for _, headers, payload in _iter_records_in(raw):
-                                if headers.get("warc-type") != "response":
-                                    continue
-                                status, mime, body = _parse_http_response(payload)
-                                yield {
-                                    "url": headers.get("warc-target-uri", ""),
-                                    "warc_ts": _parse_warc_ts(headers.get("warc-date")),
-                                    "html": body,
-                                    "content_type": mime,
-                                    "http_status": status,
-                                    "payload_digest": headers.get("warc-payload-digest")
-                                    or sha1_b32(body),
-                                    "warc_file": path,
-                                    "rec_offset": off,
-                                    "rec_length": n,
-                                    "rec_type": "response",
-                                }
+                                if headers.get("warc-type") == "response":
+                                    yield _record(headers, payload, path, off, n)
 
-            yield from _records_to_batches(recs())
+            yield from _records_to_batches(recs(), _RECORDS_ARROW)
 
     cols = index.select("warc_file", "rec_offset", "rec_length")
     return cols.repartition("warc_file").mapInArrow(gen, schema=WARC_RECORDS)

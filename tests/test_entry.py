@@ -27,11 +27,33 @@ def test_extract_text_nonempty(spark):
 
 def test_corpus_gen_equivalence(spark):
     """Arrow corpus generator is row-identical to the pandas reference."""
-    from dpo_ocr_spark.corpus import WEB_PAGES, _gen_batches, build_web_pages
+    from datetime import timedelta
+
+    import pandas as pd
+
+    from dpo_ocr_spark import corpus as C
+    from dpo_ocr_spark.corpus import WEB_PAGES, build_web_pages
+
+    def reference_batches(it):
+        # nested, so Spark pickles it by value for its Python workers
+        for pdf in it:
+            ids = [int(i) for i in pdf["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "url": [C.page_url(i) for i in ids],
+                    "warc_ts": [C.EPOCH + timedelta(seconds=i) for i in ids],
+                    "html": [
+                        C.render_layout(i, t) if C.is_layout_doc(i) else C.render_html(i, t)
+                        for i, t in zip(ids, pdf["text"])
+                    ],
+                    "text": [None] * len(pdf),  # engine must fill (FIXTURES.md §1)
+                    "lang": pdf["lang"].tolist(),
+                }
+            )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text", "lang"
     )
-    ref = sorted(map(repr, docs.mapInPandas(_gen_batches, schema=WEB_PAGES).collect()))
+    ref = sorted(map(repr, docs.mapInPandas(reference_batches, schema=WEB_PAGES).collect()))
     hot = sorted(map(repr, build_web_pages(spark, "/root/testdata/sf0.001").collect()))
     assert ref == hot

@@ -317,6 +317,26 @@ def test_dedup_clusters_topologies(spark):
                    6: 6, 7: 6, 8: 6}
 
 
+def test_dedup_clusters_stop_rule(spark):
+    """A 16-node path needs 4 label-changing rounds plus one that
+    confirms the fixpoint: max_iter=4 raises instead of returning
+    unconverged labels, the default converges.  A graph with no edges
+    is converged from the start, so one round suffices."""
+    from dpo_ocr_spark.ops.dedup import clusters_from_edges
+
+    docs = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
+        clusters_from_edges(docs, path, max_iter=4)
+    got = {r.doc_id: r.cluster_id for r in clusters_from_edges(docs, path).collect()}
+    assert got == {i: 0 for i in range(16)}
+    no_edges = path.limit(0)
+    got = clusters_from_edges(docs, no_edges, max_iter=1).collect()
+    assert {r.doc_id: r.cluster_id for r in got} == {i: i for i in range(16)}
+
+
 def test_kmeans_centroids_fit(spark):
     """Integer-exact Lloyd's fit: counts cover the corpus, centroids move
     off the md5-sample init, the fit is deterministic, and the fitted

@@ -140,6 +140,56 @@ def test_member_splitter_chunk_boundaries():
         assert pos == len(raw)
 
 
+def test_records_to_batches_byte_budget(tmp_path):
+    """A batch closes as soon as its payload bytes (+128 per record) reach
+    the budget; rows keep archive order and carry the declared schema —
+    for WARC response records and for WET conversion records, whose
+    budget counts UTF-8 bytes, not characters."""
+    sizes = [10, 300, 0, 900, 50, 50, 50, 2000, 5]
+    hdrs = [("WARC-Date", "2024-01-01T00:00:00Z")]
+    warc = tmp_path / "b.warc"
+    warc.write_bytes(
+        b"".join(
+            W._warc_record(
+                "response",
+                hdrs + [("WARC-Target-URI", f"https://a.example.org/{i}")],
+                W._http_response(b"x" * n, "text/html"),
+            )
+            for i, n in enumerate(sizes)
+        )
+    )
+    wet = tmp_path / "b.warc.wet"
+    wet.write_bytes(
+        b"".join(
+            W._warc_record(
+                "conversion",
+                hdrs + [("WARC-Target-URI", f"https://a.example.org/{i}")],
+                ("é" * n).encode("utf-8"),
+            )
+            for i, n in enumerate(sizes)
+        )
+    )
+    urls = [f"https://a.example.org/{i}" for i in range(len(sizes))]
+    recs = list(W._records_of_file(str(warc)))
+    batches = list(W._records_to_batches(iter(recs), W._RECORDS_ARROW, 1000))
+    assert [b.num_rows for b in batches] == [4, 4, 1]
+    assert all(b.schema == W._RECORDS_ARROW for b in batches)
+    assert [u for b in batches for u in b.column("url").to_pylist()] == urls
+    assert [h for b in batches for h in b.column("html").to_pylist()] == [
+        b"x" * n for n in sizes
+    ]
+
+    recs = [dict(r, text=r["html"].decode("utf-8")) for r in W._records_of_file(str(wet))]
+    batches = list(W._records_to_batches(iter(recs), W._WET_ARROW, 1000))
+    assert [b.num_rows for b in batches] == [3, 1, 4, 1]
+    assert all(b.schema == W._WET_ARROW for b in batches)
+    assert [u for b in batches for u in b.column("url").to_pylist()] == urls
+    assert [t for b in batches for t in b.column("text").to_pylist()] == [
+        "é" * n for n in sizes
+    ]
+    assert list(W._records_to_batches(iter([]), W._WET_ARROW)) == []
+
+
 def test_http_decodings_unit():
     body = b"<html>x</html>" * 40
     for kw in ({}, {"chunked": True}, {"gzipped": True}, {"chunked": True, "gzipped": True}):
