@@ -8,7 +8,7 @@ Differences from bench.py's methodology:
 - every timed query/phase is materialized through the built-in ``noop``
   data source (computes EVERY column of EVERY row, discards the result)
   instead of ``count()`` — so opaque-stage output columns (the nested
-  tokens/blocks of the extraction stage) are paid for, not pruned;
+  tokens of the extraction stage) are paid for, not pruned;
 - jobs are labelled via ``setJobDescription`` for UI/event-log reading.
 
 Usage: python bench_extra.py [repeats]   (env as bench.py: SPARK_GRAFT_SF_DIR,

@@ -1,23 +1,32 @@
 """Token→line→block assembly (SURVEY.md A1/A2/T3/F1) — pure built-in ops.
 
-Re-expresses the reference's ordered ``string_agg`` block assembly:
+This module is the only place block records are built; the decoders emit
+tokens only.  Re-expresses the reference's ordered ``string_agg`` block
+assembly:
 
 - ``assemble_blocks`` reproduces block_identification.py:68 exactly,
   *including its load-bearing quirk*: the SQL groups by
   (document_id, block, word_line) but selects ``block`` — producing
   line-grain rows labeled as blocks (SURVEY.md §7.3). We therefore group by
-  (url, block, word_line), with the confidence gate ``confidence > 0.70``
-  (settings.py.template:23) applied before aggregation.
+  (url, warc_ts, block, word_line), with the confidence gate
+  ``confidence > 0.70`` (settings.py.template:23) applied before
+  aggregation.
 
 - ``assemble_reading_order`` reproduces auto_id_compare.py:236-243: full
-  reading-order text per (url, block) — inner order
+  reading-order text per (url, warc_ts, block) — inner order
   (page, word_line, word) — gated at ``confidence >= 0.85``.
 
+Rows are keyed per capture: the reference's document is a (url, warc_ts)
+pair here, so two captures of one url (a re-crawl) never merge.
+
 Determinism: word order inside each group is pinned by ``array_sort`` over
-a struct whose leading fields are the sort keys — byte-identical output
-run-to-run regardless of partitioning (the property that makes the golden
-byte-identity gate possible). Everything here is JVM-side/whole-stage
-codegen: exactly one shuffle (the groupBy), partial aggregation map-side.
+a struct whose leading fields are the sort keys, so ``block_text`` is
+byte-identical under any partitioning (the property that makes the golden
+byte-identity gate possible).  ``block_confidence`` is an ``avg`` over
+doubles whose last bits can depend on summation order; the gate queries
+therefore check it as the rounded sum ``block_confidence * n_words * 100``.
+Everything here is JVM-side/whole-stage codegen: exactly one shuffle (the
+groupBy), partial aggregation map-side.
 """
 
 from __future__ import annotations
@@ -29,10 +38,11 @@ AUTOMATCH_CONFIDENCE = 0.85  # auto_id_compare.py:243
 
 
 def explode_tokens(extracted: DataFrame) -> DataFrame:
-    """EXTRACT_RESULT frame → flat token rows (url + TOKEN columns)."""
+    """EXTRACT_RESULT frame → flat token rows (url, warc_ts + TOKEN
+    columns)."""
     return extracted.select(
-        "url", F.explode("tokens").alias("t")
-    ).select("url", "t.*")
+        "url", "warc_ts", F.explode("tokens").alias("t")
+    ).select("url", "warc_ts", "t.*")
 
 
 def _ordered_concat(sort_cols: list[str]) -> F.Column:
@@ -48,14 +58,16 @@ def assemble_blocks(
 ) -> DataFrame:
     """Line-grain block assembly (reference block_identification.py:68).
 
-    Returns (url, block, word_line, block_text, block_confidence).
+    Returns (url, warc_ts, block, word_line, block_text,
+    block_confidence, n_words).
     """
     return (
         tokens.filter(F.col("confidence") > F.lit(min_confidence))
-        .groupBy("url", "block", "word_line")
+        .groupBy("url", "warc_ts", "block", "word_line")
         .agg(
             _ordered_concat(["word"]).alias("block_text"),
             F.avg("confidence").alias("block_confidence"),
+            F.count("*").alias("n_words"),
         )
     )
 
@@ -65,14 +77,15 @@ def assemble_reading_order(
 ) -> DataFrame:
     """Full reading-order block text (auto_id_compare.py:204-248).
 
-    Returns (url, block, block_text, block_confidence); inner order
-    (page, word_line, word) per :236-238.
+    Returns (url, warc_ts, block, block_text, block_confidence,
+    n_words); inner order (page, word_line, word) per :236-238.
     """
     return (
         tokens.filter(F.col("confidence") >= F.lit(min_confidence))
-        .groupBy("url", "block")
+        .groupBy("url", "warc_ts", "block")
         .agg(
             _ordered_concat(["page", "word_line", "word"]).alias("block_text"),
             F.avg("confidence").alias("block_confidence"),
+            F.count("*").alias("n_words"),
         )
     )

@@ -30,7 +30,9 @@ Token records are derived from the kept segments: whitespace tokenization
 with [start,end) char spans into the final text (the Document-AI text-anchor
 convention, run_docai.py:84-93), confidence 1.0 (native text has no OCR
 uncertainty), reading-order ids assigned with running counters exactly like
-the reference's b/p/w walk (run_gvision_ocr.py:179-181, 187, 283).
+the reference's b/p/w walk (run_gvision_ocr.py:179-181, 187, 283).  Each
+kept segment is one block; the decoder returns (text, tokens) only, and
+block records are built from the tokens by ``assemble.py``.
 """
 
 from __future__ import annotations
@@ -278,22 +280,20 @@ def segment_html(payload: bytes) -> list[str]:
     return kept
 
 
-def extract_html(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
-    """bytes → (text, tokens, blocks).
+def extract_html(payload: bytes) -> tuple[str, list[tuple]]:
+    """bytes → (text, tokens).
 
     tokens: (page, block, para, word_line, word, word_text, confidence,
-             bbox|None, start, end) — TOKEN schema order.
-    blocks: (page, block, confidence, bbox|None) — BLOCK schema order.
+             bbox|None, start, end) — TOKEN schema order; each kept
+             segment is one block.
     """
     segments = segment_html(payload)
     text = "\n".join(segments)
     tokens: list[tuple] = []
     tokens_append = tokens.append
-    blocks: list[tuple] = []
     widx = 0
     seg_start = 0
     for b, seg in enumerate(segments):
-        blocks.append((1, b, 1.0, None))
         # Offsets are arithmetic, not searched: ``text`` is exactly the
         # segments joined by '\n' and words within a segment are joined
         # by single ' ' (split(' ') round-trips), so item j+1 starts at
@@ -308,4 +308,4 @@ def extract_html(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
             widx += 1
             offset = end + 1
         seg_start += len(seg) + 1  # '\n' between segments
-    return text, tokens, blocks
+    return text, tokens

@@ -13,6 +13,11 @@ word_line derived from the extracted text's '\\n' boundaries — the same
 invariant the reference's monotone line scan establishes
 (run_gvision_ocr.py:304-309): a word's line is the fulltext line containing
 its span.
+
+The decoder returns (text, tokens) only.  A block's confidence and bbox
+are aggregates of its tokens: ``assemble.py`` computes the confidence
+(A2), and the ``minmax_envelope`` and ``crop_rects`` queries the bbox
+envelope (A5).
 """
 
 from __future__ import annotations
@@ -21,8 +26,8 @@ import json
 from bisect import bisect_right
 
 
-def extract_layout(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
-    """bytes → (text, tokens, blocks); tuple layout matches TOKEN/BLOCK."""
+def extract_layout(payload: bytes) -> tuple[str, list[tuple]]:
+    """bytes → (text, tokens); token tuples follow the TOKEN schema."""
     doc = json.loads(payload.decode("utf-8"))
     text: str = doc["text"]
     # Precompute char-offset → line index (count of '\n' before offset):
@@ -39,29 +44,12 @@ def extract_layout(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
         return bisect_right(line_starts, offset) - 1
 
     tokens: list[tuple] = []
-    blocks: list[tuple] = []
     widx = 0
     for page in doc.get("pages", []):
         pno = int(page.get("page", 1))
         for blk in page.get("blocks", []):
             b = int(blk["block"])
             words = blk.get("words", [])
-            confs = [float(w["conf"]) for w in words] or [0.0]
-            xs: list[int] = []
-            ys: list[int] = []
-            for w in words:
-                bbox = w.get("bbox")
-                if bbox:
-                    xs.extend(bbox[0::2])
-                    ys.extend(bbox[1::2])
-            # block bbox = min/max envelope of word quads (reference A5
-            # crop-rect idiom, old/ocr_to_csv.py:56-69)
-            bbox8 = (
-                [min(xs), min(ys), max(xs), min(ys), max(xs), max(ys), min(xs), max(ys)]
-                if xs
-                else None
-            )
-            blocks.append((pno, b, sum(confs) / len(confs), bbox8))
             for w in words:
                 start, end = int(w["span"][0]), int(w["span"][1])
                 tokens.append(
@@ -79,4 +67,4 @@ def extract_layout(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
                     )
                 )
                 widx += 1
-    return text, tokens, blocks
+    return text, tokens

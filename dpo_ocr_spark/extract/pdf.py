@@ -25,9 +25,10 @@ font metrics on board) — positions from explicit ``Tm``/``Td`` are
 exact, so extraction is exact for any writer that positions runs, and
 approximate only for writers that rely on intra-run advances.
 
-Output shape mirrors ``extract_html``: tokens ``(page, block=line,
-para=line, word_line=line, widx, word, 1.0, None, start, end)`` so PDF
-pages flow through assembly/spans/eval identically to HTML pages.
+Output shape mirrors ``extract_html``: ``(text, tokens)`` with tokens
+``(page, block=line, para=line, word_line=line, widx, word, 1.0, None,
+start, end)`` so PDF pages flow through assembly/spans/eval identically
+to HTML pages.
 """
 
 from __future__ import annotations
@@ -250,8 +251,8 @@ def _parse_content(stream: bytes) -> list[tuple[float, float, str]]:
     return shows
 
 
-def extract_pdf(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
-    """bytes → (text, tokens, blocks) — extract_html's exact shapes.
+def extract_pdf(payload: bytes) -> tuple[str, list[tuple]]:
+    """bytes → (text, tokens) — extract_html's exact shapes.
 
     Reading order: lines by descending y, words by ascending x; empty
     shown strings are positional placeholders that reconstruct runs of
@@ -269,11 +270,9 @@ def extract_pdf(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
         ordered.append([s for _x, s in sorted(lines[y], key=lambda t: t[0])])
     text = "\n".join(" ".join(words) for words in ordered)
     tokens: list[tuple] = []
-    blocks: list[tuple] = []
     widx = 0
     offset = 0
     for li, words in enumerate(ordered):
-        blocks.append((1, li, 1.0, None))
         for w in words:
             if w == "":
                 offset += 1
@@ -284,4 +283,4 @@ def extract_pdf(payload: bytes) -> tuple[str, list[tuple], list[tuple]]:
             tokens.append((1, li, li, li, widx, w, 1.0, None, start, end))
             widx += 1
         offset += 1  # the '\n' separator
-    return text, tokens, blocks
+    return text, tokens

@@ -1,6 +1,6 @@
 """End-to-end extraction pipeline wiring (SURVEY.md §3.1).
 
-scan → (salted repartition) → Arrow extract → exploded tokens/blocks →
+scan → (salted repartition) → Arrow extract → exploded tokens → block
 assembly.  Physical shape at scale: parquet/Iceberg scan (pruned) →
 round-robin-on-salt exchange → mapInArrow (pipelined, no shuffle) →
 one groupBy shuffle for assembly — exactly the two-shuffle plan SURVEY.md

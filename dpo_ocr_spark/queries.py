@@ -131,6 +131,18 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return explode_tokens(_extracted(spark, sf_dir))
 
 
+def _conf_sum_x100() -> F.Column:
+    """Integer-exact confidence sum of an assembled block: the oracles
+    sum confidence×100 per block, assembly reports its avg (a double);
+    fixture confidences are multiples of 0.01 and blocks hold few words,
+    so rounding avg × n_words × 100 recovers the sum exactly."""
+    return (
+        F.round(F.col("block_confidence") * F.col("n_words") * 100)
+        .cast("long")
+        .alias("conf_sum_x100")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Extraction pipeline (flagship; SURVEY.md §3.1, operators S1-S3, C15-C16)
 # ---------------------------------------------------------------------------
@@ -364,18 +376,10 @@ GROUP BY url, block, word_line
 def q_block_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2/F1/T3: confidence-gated ordered assembly at line grain
     (reference block_identification.py:68, incl. its group-by quirk)."""
-    from .assemble import _ordered_concat
+    from .assemble import assemble_blocks
 
-    tokens = _tokens(spark, sf_dir)
-    return (
-        tokens.filter(F.col("confidence") > F.lit(0.70))
-        .withColumn("conf_x100", F.round(F.col("confidence") * 100).cast("long"))
-        .groupBy("url", "block", "word_line")
-        .agg(
-            _ordered_concat(["word"]).alias("block_text"),
-            F.sum("conf_x100").alias("conf_sum_x100"),
-            F.count("*").alias("n_words"),
-        )
+    return assemble_blocks(_tokens(spark, sf_dir)).select(
+        "url", "block", "word_line", "block_text", _conf_sum_x100(), "n_words"
     )
 
 
@@ -706,18 +710,10 @@ GROUP BY url, block
 def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict-confidence full reading-order assembly per block
     (auto_id_compare.py:204-248, ORDER BY page, block, word_line, word)."""
-    from .assemble import _ordered_concat
+    from .assemble import assemble_reading_order
 
-    tokens = _tokens(spark, sf_dir)
-    return (
-        tokens.filter(F.col("confidence") >= F.lit(0.85))
-        .withColumn("conf_x100", F.round(F.col("confidence") * 100).cast("long"))
-        .groupBy("url", "block")
-        .agg(
-            _ordered_concat(["page", "word_line", "word"]).alias("block_text"),
-            F.sum("conf_x100").alias("conf_sum_x100"),
-            F.count("*").alias("n_words"),
-        )
+    return assemble_reading_order(_tokens(spark, sf_dir)).select(
+        "url", "block", "block_text", _conf_sum_x100(), "n_words"
     )
 
 # side-effect registration of the training-data ops queries

@@ -11,17 +11,11 @@ epoch-microsecond timestamps).
 
 from __future__ import annotations
 
-from .queries import ORACLES, QUERIES
+from .queries import ORACLES, register
 from .session import scratch_dir as _scratch_dir
 from .ops import curation as C
 from .ops import events as EV
 from .ops.similarity import SEMANTIC_PRUNE_ORACLE, semantic_prune
-
-
-def _register(name: str, fn, sql: str | None = None) -> None:
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLES[name] = sql
 
 
 def _q_streaming_window_counts(spark, sf_dir: str):
@@ -56,21 +50,22 @@ FROM w, mx
 WHERE start_us + 3600000000 <= m - 3600000000
 """
 
-_register("asof_join", EV.asof_join, EV.ASOF_ORACLE)
-_register("sessionize", EV.sessionize, EV.SESSIONIZE_ORACLE)
-_register("value_quantiles", EV.value_quantiles, EV.VALUE_QUANTILES_ORACLE)
-_register("decontaminate", C.decontaminate, C.DECONTAMINATE_ORACLE)
-_register("repetition_stats", C.repetition_stats, C.REPETITION_ORACLE)
-_register("training_order", C.training_order, C.TRAINING_ORDER_ORACLE)
-_register("semantic_prune", semantic_prune, SEMANTIC_PRUNE_ORACLE)
-_register("tfidf_top_terms", C.tfidf_top_terms, C.TFIDF_ORACLE)
-_register("lm_bigram_score", C.lm_bigram_score, C.LM_BIGRAM_ORACLE)
-_register("domain_mix", C.domain_mix, C.DOMAIN_MIX_ORACLE)
-_register("url_filter", C.url_filter, C.URL_FILTER_ORACLE)
-_register("chunk_documents", C.chunk_documents, C.CHUNK_ORACLE)
-_register(
-    "streaming_window_counts", _q_streaming_window_counts, STREAM_WINDOW_ORACLE
-)
+register("asof_join", EV.ASOF_ORACLE)(EV.asof_join)
+register("sessionize", EV.SESSIONIZE_ORACLE)(EV.sessionize)
+register("value_quantiles", EV.VALUE_QUANTILES_ORACLE)(EV.value_quantiles)
+register("decontaminate", C.DECONTAMINATE_ORACLE)(C.decontaminate)
+register("repetition_stats", C.REPETITION_ORACLE)(C.repetition_stats)
+register("training_order", C.TRAINING_ORDER_ORACLE)(C.training_order)
+register("semantic_prune", SEMANTIC_PRUNE_ORACLE)(semantic_prune)
+register("tfidf_top_terms", C.TFIDF_ORACLE)(C.tfidf_top_terms)
+register("lm_bigram_score", C.LM_BIGRAM_ORACLE)(C.lm_bigram_score)
+register("domain_mix", C.DOMAIN_MIX_ORACLE)(C.domain_mix)
+register("url_filter", C.URL_FILTER_ORACLE)(C.url_filter)
+register("chunk_documents", C.CHUNK_ORACLE)(C.chunk_documents)
+register(
+    "streaming_window_counts",
+    STREAM_WINDOW_ORACLE,
+)(_q_streaming_window_counts)
 
 
 def _q_streaming_interval_join(spark, sf_dir: str):
@@ -103,11 +98,10 @@ FROM e a JOIN e b
  AND b.t_us <= a.t_us + 600000000
 """
 
-_register(
+register(
     "streaming_interval_join",
-    _q_streaming_interval_join,
     STREAM_INTERVAL_JOIN_ORACLE,
-)
+)(_q_streaming_interval_join)
 
 
 def _curated_training_oracle() -> str:
@@ -130,9 +124,10 @@ FROM h
 """
 
 
-_register(
-    "curated_training_set", C.curated_training_set, _curated_training_oracle()
-)
+register(
+    "curated_training_set",
+    _curated_training_oracle(),
+)(C.curated_training_set)
 
 
 def _host_cap_oracle() -> str:
@@ -157,12 +152,11 @@ FROM h
 
 from .ops.textstats import host_cap  # noqa: E402
 
-_register("host_cap", host_cap, _host_cap_oracle())
-_register(
+register("host_cap", _host_cap_oracle())(host_cap)
+register(
     "repetition_stats_exploded",
-    C.repetition_stats_exploded,
     C.REPETITION_ORACLE,
-)
+)(C.repetition_stats_exploded)
 
 
 def _incremental_dedup_oracle() -> str:
@@ -220,11 +214,11 @@ WHERE d.doc_id % {m} = 0
 
 from .ops.dedup import incremental_dedup  # noqa: E402
 
-_register("incremental_dedup", incremental_dedup, _incremental_dedup_oracle())
+register("incremental_dedup", _incremental_dedup_oracle())(incremental_dedup)
 
-_register("pii_scrub", C.pii_scrub, C.PII_ORACLE)
+register("pii_scrub", C.PII_ORACLE)(C.pii_scrub)
 
-_register("props_extract", EV.props_extract, EV.PROPS_EXTRACT_ORACLE)
+register("props_extract", EV.PROPS_EXTRACT_ORACLE)(EV.props_extract)
 
 
 def _q_streaming_sessionize(spark, sf_dir: str):
@@ -273,94 +267,82 @@ WHERE session_id <> last_sid
 """
 
 
-_register(
+register(
     "streaming_sessionize",
-    _q_streaming_sessionize,
     _streaming_sessionize_oracle(),
-)
+)(_q_streaming_sessionize)
 
 from .ops.pixels import IMAGE_AUTOCROP_ORACLE, image_autocrop  # noqa: E402
 
-_register("image_autocrop", image_autocrop, IMAGE_AUTOCROP_ORACLE)
+register("image_autocrop", IMAGE_AUTOCROP_ORACLE)(image_autocrop)
 # same arithmetic oracle through the COMPRESSED codec paths: PNG is
 # lossless; JPEG q92 4:2:0 quantization error never moves a border or
 # gutter under the autocrop threshold (exhaustive over the id space)
-_register(
+register(
     "image_autocrop_png",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png"),
     IMAGE_AUTOCROP_ORACLE,
-)
-_register(
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png"))
+register(
     "image_autocrop_jpeg",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg"))
 # r4 codec additions through the same pixel pipeline + oracle: Adam7
 # interlace is lossless; progressive decode is byte-identical to the
 # baseline decode of the same image (pinned in tests/test_codecs.py)
-_register(
+register(
     "image_autocrop_png_adam7",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png_adam7"),
     IMAGE_AUTOCROP_ORACLE,
-)
-_register(
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png_adam7"))
+register(
     "image_autocrop_jpeg_prog",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_prog"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_prog"))
 # r5: the sub-byte PNG decode path (1/2/4-bit gray + palette, 16-bit) —
 # the fixture is pure black/white, so 1-bit grayscale is lossless for it
 # and the same arithmetic oracle applies
-_register(
+register(
     "image_autocrop_png_1bit",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png_gray1"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png_gray1"))
 # r5 JPEG long tail: 12-bit extended sequential (SOF1 + 16-bit DQT +
 # 2048 level shift; x16 scaling makes the decode byte-identical to the
 # baseline stream) and SOF3 lossless (Annex-H predictors; exact pixels)
-_register(
+register(
     "image_autocrop_jpeg12",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg12"),
     IMAGE_AUTOCROP_ORACLE,
-)
-_register(
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg12"))
+register(
     "image_autocrop_jpeg_ll",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_ll"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_ll"))
 # SOF9 arithmetic entropy coding (T.81 Annex D/F QM coder, cross-
 # validated both directions against libjpeg-turbo): same quantized
 # coefficients as the baseline stream -> same decoded pixels
-_register(
+register(
     "image_autocrop_jpeg_arith",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_arith"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_arith"))
 # SOF10 progressive arithmetic (T.81 Annex G successive approximation
 # over the QM coder, cross-validated both directions against
 # libjpeg-turbo): same coefficients as the baseline stream again
-_register(
+register(
     "image_autocrop_jpeg_pa",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_pa"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_pa"))
 # Annex J hierarchical: DHP-led pyramid (non-differential SOF0 base,
 # EXP-expanded SOF5 differential refinement; encoder mirrors the
 # decoder's integer reference reconstruction exactly), and the SOF3+SOF7
 # lossless pyramid whose decode is bit-exact — no libjpeg cross-check
 # exists (libjpeg has no hierarchical mode), so the claims rest on the
 # self-roundtrip + spec pins in tests/test_codecs.py
-_register(
+register(
     "image_autocrop_jpeg_hier",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier"),
     IMAGE_AUTOCROP_ORACLE,
-)
-_register(
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier"))
+register(
     "image_autocrop_jpeg_hier_ll",
-    lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier_ll"),
     IMAGE_AUTOCROP_ORACLE,
-)
+)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier_ll"))
 
 
 def _cluster_reps_oracle() -> str:
@@ -391,15 +373,16 @@ FROM rk
 
 from .ops.dedup import cluster_representatives  # noqa: E402
 
-_register(
-    "cluster_representatives", cluster_representatives, _cluster_reps_oracle()
-)
+register(
+    "cluster_representatives",
+    _cluster_reps_oracle(),
+)(cluster_representatives)
 
-_register("url_normalize", C.url_normalize, C.URL_NORMALIZE_ORACLE)
+register("url_normalize", C.URL_NORMALIZE_ORACLE)(C.url_normalize)
 
-_register("unicode_normalize", C.unicode_normalize, C.UNICODE_NORMALIZE_ORACLE)
+register("unicode_normalize", C.UNICODE_NORMALIZE_ORACLE)(C.unicode_normalize)
 
-_register("cube_summary", EV.cube_summary, EV.CUBE_SUMMARY_ORACLE)
+register("cube_summary", EV.CUBE_SUMMARY_ORACLE)(EV.cube_summary)
 
 # r5 late additions: the audio/video stub in ops/multimodal.py replaced
 # by REAL container decode paths (RIFF/WAVE PCM + MJPEG-in-AVI, pure
@@ -413,8 +396,8 @@ from .ops.av import (  # noqa: E402
     video_frame_sample,
 )
 
-_register("audio_features", audio_features, AUDIO_FEATURES_ORACLE)
-_register("video_frame_sample", video_frame_sample, VIDEO_FRAME_SAMPLE_ORACLE)
+register("audio_features", AUDIO_FEATURES_ORACLE)(audio_features)
+register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)
 
 
 # r5 sketch layer (ops/sketches.py): fixed-size mergeable summaries for
@@ -426,33 +409,32 @@ _register("video_frame_sample", video_frame_sample, VIDEO_FRAME_SAMPLE_ORACLE)
 # count plus an integer-math ±5% agreement flag the oracle pins TRUE.
 from .ops import sketches as SKT  # noqa: E402
 
-_register(
-    "decontaminate_bloom", SKT.decontaminate_bloom, C.DECONTAMINATE_ORACLE
-)
+register(
+    "decontaminate_bloom",
+    C.DECONTAMINATE_ORACLE,
+)(SKT.decontaminate_bloom)
 
-_register(
+register(
     "source_counts_cms",
-    SKT.source_counts_cms,
     """
 SELECT source, count(*) AS n_docs
 FROM documents GROUP BY 1
 """,
-)
+)(SKT.source_counts_cms)
 
 _WS_TERMS = (
     "unnest(regexp_split_to_array(regexp_replace(lower(text),"
     " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' '))"
 )
 
-_register(
+register(
     "term_topk_sketch",
-    SKT.term_topk_sketch,
     f"""
 WITH w AS (SELECT {_WS_TERMS} AS term FROM documents),
 c AS (SELECT term, count(*) AS n FROM w GROUP BY 1)
 SELECT term, n FROM c ORDER BY n DESC, term LIMIT {SKT.TOPK_K}
 """,
-)
+)(SKT.term_topk_sketch)
 
 _GRAMS_BY_LANG = f"""
 ws AS (
@@ -469,9 +451,8 @@ ws AS (
 )
 """
 
-_register(
+register(
     "gram_cardinality_hll",
-    SKT.gram_cardinality_hll,
     f"""
 WITH {_GRAMS_BY_LANG}
 SELECT lang, count(DISTINCT gram) AS n_distinct, TRUE AS est_ok
@@ -479,7 +460,7 @@ FROM g GROUP BY 1
 UNION ALL
 SELECT 'ALL', count(DISTINCT gram), TRUE FROM g
 """,
-)
+)(SKT.gram_cardinality_hll)
 
 
 # Distributed BPE tokenizer training (ops/bpe.py): 8 merge iterations of
@@ -488,4 +469,4 @@ SELECT 'ALL', count(DISTINCT gram), TRUE FROM g
 # subqueries, so the full iterative computation is value-checked.
 from .ops.bpe import bpe_oracle, bpe_train  # noqa: E402
 
-_register("bpe_merges", bpe_train, bpe_oracle())
+register("bpe_merges", bpe_oracle())(bpe_train)

@@ -14,17 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries import ORACLES, QUERIES, _LBL_CTE
+from .queries import ORACLES, _LBL_CTE, register
 from .sqlfrags import _COUNTY_SQL, _TAIL_SQL  # noqa: F401 (re-export)
 from .eval import harness as H
 
 _SIZES_SQL = ", ".join(f"('{s}', {int(s * 100)})" for s in H.SIZES)
-
-
-def _register(name: str, fn, sql: str | None = None) -> None:
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLES[name] = sql
 
 
 # golden twin of eval.harness.golden_transcription — 8 scored fields
@@ -76,25 +70,23 @@ def _q_golden_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     return H.golden_long(spark, sf_dir)
 
 
-_register(
+register(
     "eval_golden_long",
-    _q_golden_long,
     f"WITH {_GOLDEN_CTE} SELECT url, field, data FROM glong",
-)
+)(_q_golden_long)
 
 
 def _q_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return H.splits(spark, sf_dir)
 
 
-_register(
+register(
     "eval_splits",
-    _q_splits,
     f"""
 WITH {_GOLDEN_CTE}
 SELECT url, reference_size, ref_or_test FROM sp
 """,
-)
+)(_q_splits)
 
 
 def _label_auto_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,9 +129,8 @@ def _q_accuracy_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return H.accuracy(spark, sf_dir, fields, fuzzy=False)
 
 
-_register(
+register(
     "eval_accuracy_exact",
-    _q_accuracy_exact,
     f"""
 WITH {_GOLDEN_CTE},
 test_g AS (
@@ -161,7 +152,7 @@ SELECT field, reference_size,
 FROM matched
 GROUP BY field, reference_size
 """,
-)
+)(_q_accuracy_exact)
 
 
 def _q_accuracy_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,9 +168,10 @@ def _q_accuracy_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a word_similarity kernel that under-scores identical strings or
 # mishandles NULLs breaks this hash. (The kernel's pg_trgm values are
 # separately pinned against published outputs in tests/test_interpret.py.)
-_register(
-    "eval_accuracy_trgm", _q_accuracy_fuzzy, ORACLES["eval_accuracy_exact"]
-)
+register(
+    "eval_accuracy_trgm",
+    ORACLES["eval_accuracy_exact"],
+)(_q_accuracy_fuzzy)
 
 
 # --- §3.3 auto-match cascade (auto_id_compare.py:276-311, 519-555) -----------
@@ -203,7 +195,7 @@ def _q_auto_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _auto_table(spark, sf_dir)
 
 
-_register("auto_match", _q_auto_match)
+register("auto_match")(_q_auto_match)
 
 
 def _q_accuracy_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,7 +209,7 @@ def _q_accuracy_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register("eval_accuracy_auto", _q_accuracy_auto)
+register("eval_accuracy_auto")(_q_accuracy_auto)
 
 
 def _q_accuracy_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,7 +231,7 @@ def _q_accuracy_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return H.accuracy_over_auto(spark, sf_dir, geo, AUTO_SIZES)
 
 
-_register("eval_accuracy_geo", _q_accuracy_geo)
+register("eval_accuracy_geo")(_q_accuracy_geo)
 
 
 # The six geo-accuracy fields with DESIGNED constant outcomes on the
@@ -267,9 +259,8 @@ def _q_accuracy_geo_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GEO_HIER_FIELDS_SQL = ", ".join(f"'{f}'" for f in _GEO_DESIGNED)
-_register(
+register(
     "eval_accuracy_geo_hier",
-    _q_accuracy_geo_hier,
     f"""
 WITH {_GOLDEN_CTE},
 tc AS (
@@ -288,7 +279,7 @@ SELECT field, reference_size,
                  THEN n_golden ELSE 0 END AS BIGINT) AS n_matched
 FROM tc
 """,
-)
+)(_q_accuracy_geo_hier)
 
 
 # Same designed-fields trick for the FIRST accuracy page (the plain auto
@@ -315,9 +306,8 @@ def _q_accuracy_auto_designed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _AUTO_DESIGNED_FIELDS_SQL = ", ".join(f"'{f}'" for f in _AUTO_DESIGNED)
-_register(
+register(
     "eval_accuracy_auto_designed",
-    _q_accuracy_auto_designed,
     f"""
 WITH {_GOLDEN_CTE},
 tc AS (
@@ -336,7 +326,7 @@ SELECT field, reference_size,
                  THEN n_golden ELSE 0 END AS BIGINT) AS n_matched
 FROM tc
 """,
-)
+)(_q_accuracy_auto_designed)
 
 
 def _q_other_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,9 +343,8 @@ def _q_other_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     "interp_other_numbers",
-    _q_other_numbers,
     f"""
 WITH {_LBL_CTE}
 SELECT url, 6 AS block_id, 'other_numbers' AS data_type,
@@ -365,7 +354,7 @@ SELECT url, 6 AS block_id, 'other_numbers' AS data_type,
          AS verbatim_value
 FROM lbl
 """,
-)
+)(_q_other_numbers)
 
 
 # --- span export -------------------------------------------------------------
@@ -381,9 +370,8 @@ def _q_span_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_records(lines, fields)
 
 
-_register(
+register(
     "span_records",
-    _q_span_records,
     f"""
 WITH {_GOLDEN_CTE},
 lines AS (
@@ -425,7 +413,7 @@ SELECT url, field,
 FROM f
 WHERE verbatim IS NOT NULL AND strpos(line, verbatim) > 1
 """,
-)
+)(_q_span_records)
 
 
 def _q_training_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -459,7 +447,7 @@ FROM ann GROUP BY url
 """
 )
 
-_register("training_jsonl", _q_training_jsonl, _TRAIN_JSONL_SQL)
+register("training_jsonl", _TRAIN_JSONL_SQL)(_q_training_jsonl)
 
 
 # --- zonal extraction (J8 + pivot) --------------------------------------------
@@ -508,9 +496,8 @@ def _q_zonal_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_zonal() -> None:
     from .queries import _TOKENS_CTE
 
-    _register(
+    register(
         "zonal_cells",
-        _q_zonal_cells,
         f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE}
 SELECT url,
@@ -524,10 +511,9 @@ SELECT url,
 FROM zcell WHERE field_name IS NOT NULL
 GROUP BY url, field_name, row_no
 """,
-    )
-    _register(
+    )(_q_zonal_cells)
+    register(
         "zonal_pivot",
-        _q_zonal_pivot,
         f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE},
 cells AS (
@@ -541,7 +527,7 @@ SELECT url, CAST(row_no AS INT) AS row_no,
        max(CASE WHEN field_name = 'right_col' THEN cell_text END) AS right_col
 FROM cells GROUP BY url, row_no
 """,
-    )
+    )(_q_zonal_pivot)
 
 
 _register_zonal()
@@ -579,9 +565,8 @@ def _q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_qa() -> None:
     from .queries import _TOKENS_CTE
 
-    _register(
+    register(
         "url_confidence",
-        _q_url_confidence,
         f"""
 WITH {_TOKENS_CTE}
 SELECT url, COUNT(*) AS n_tokens,
@@ -590,17 +575,16 @@ SELECT url, COUNT(*) AS n_tokens,
          AS n_ok
 FROM tok GROUP BY url
 """,
-    )
-    _register(
+    )(_q_url_confidence)
+    register(
         "conf_histogram",
-        _q_conf_histogram,
         f"""
 WITH {_TOKENS_CTE}
 SELECT CAST(floor(conf_x100 * 40 / 100) AS INT) AS bin,
        COUNT(*) AS n
 FROM tok GROUP BY 1
 """,
-    )
+    )(_q_conf_histogram)
 
 
 _register_qa()
@@ -639,11 +623,10 @@ def _streaming_oracle(select: str) -> str:
     return f"WITH {_ETEXT_CTE}\n{select}"
 
 
-_register(
+register(
     "streaming_extract",
-    _q_streaming_extract,
     _streaming_oracle("SELECT url, etext AS text FROM paras"),
-)
+)(_q_streaming_extract)
 
 
 def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,15 +653,14 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     "streaming_dedup",
-    _q_streaming_dedup,
     # every url fed twice; first-seen state must emit each EXACTLY once
     # with the batch-contract text — n pins the exactly-once semantics
     _streaming_oracle(
         "SELECT url, CAST(1 AS BIGINT) AS n, etext AS text FROM paras"
     ),
-)
+)(_q_streaming_dedup)
 
 
 # --- S12 annotated-image sink → draw plan (run_gvision_ocr.py:185-260) -------
@@ -693,9 +675,8 @@ def _q_annotate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_annotate() -> None:
     from .queries import _TOKENS_CTE
 
-    _register(
+    register(
         "annotate_plan",
-        _q_annotate_plan,
         f"""
 WITH {_TOKENS_CTE},
 geo AS (
@@ -728,7 +709,7 @@ SELECT url, CAST(block AS INT) AS block,
        CAST(least(by1 + 3, 100) AS INT) AS ay3
 FROM blocks
 """,
-    )
+    )(_q_annotate_plan)
 
 
 _register_annotate()
@@ -746,9 +727,8 @@ def _q_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_form_fields() -> None:
     from .queries import _TOKENS_CTE
 
-    _register(
+    register(
         "form_fields",
-        _q_form_fields,
         f"""
 WITH {_TOKENS_CTE},
 ff AS (
@@ -777,7 +757,7 @@ GROUP BY url, line
 HAVING COUNT(*) FILTER (side = 'f') > 0
    AND COUNT(*) FILTER (side = 'v') > 0
 """,
-    )
+    )(_q_form_fields)
 
 
 _register_form_fields()
@@ -861,9 +841,8 @@ def _q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_misc() -> None:
     from .queries import _TOKENS_CTE
 
-    _register(
+    register(
         "crop_rects",
-        _q_crop_rects,
         f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE}
 SELECT url,
@@ -874,10 +853,9 @@ SELECT url,
        CAST(least(MAX(line_idx * 24 + 18) + 10, 100) AS BIGINT) AS crop_y1
 FROM ztok GROUP BY url
 """,
-    )
-    _register(
+    )(_q_crop_rects)
+    register(
         "rollup_summary",
-        _q_rollup_summary,
         """
 SELECT COALESCE(l_returnflag, 'ALL') AS rf,
        COALESCE(l_linestatus, 'ALL') AS ls,
@@ -885,10 +863,9 @@ SELECT COALESCE(l_returnflag, 'ALL') AS rf,
        CAST(SUM(CAST(l_quantity AS BIGINT) * 10000) AS BIGINT) AS qty_x10k
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
-    )
-    _register(
+    )(_q_rollup_summary)
+    register(
         "scalar_chain",
-        _q_scalar_chain,
         """
 SELECT n_nationkey,
        lower(replace(n_name || ', ' || r_name, ' EAST', ' East.'))
@@ -897,7 +874,7 @@ SELECT n_nationkey,
        CAST(n_nationkey AS VARCHAR) AS key_str
 FROM nation JOIN region ON n_regionkey = r_regionkey
 """,
-    )
+    )(_q_scalar_chain)
 
 
 _register_misc()
@@ -934,9 +911,8 @@ def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_paragraph() -> None:
     from .queries import _ETEXT_CTE
 
-    _register(
+    register(
         "paragraph_dedup",
-        _q_paragraph_dedup,
         f"""
 WITH {_ETEXT_CTE},
 p AS (
@@ -946,7 +922,7 @@ SELECT md5(para) AS para_md5, COUNT(*) AS n_occurrences,
        COUNT(DISTINCT url) AS n_docs, MIN(url) AS first_url
 FROM p WHERE length(para) > 0 GROUP BY 1
 """,
-    )
+    )(_q_paragraph_dedup)
 
 
 _register_paragraph()

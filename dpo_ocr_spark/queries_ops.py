@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries import ORACLES, QUERIES
+from .queries import register
 from .ops import dedup as D
 from .ops import similarity as S
 from .ops import textstats as TS
@@ -121,17 +121,10 @@ def _lang_scores_sql() -> str:
     return ", ".join(parts)
 
 
-def _register(name: str, fn, sql: str | None = None) -> None:
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLES[name] = sql
-
-
 # --- textstats ----------------------------------------------------------------
 
-_register(
+register(
     "token_counts",
-    TS.token_counts,
     f"""
 SELECT doc_id,
        len(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+')) AS n_words,
@@ -139,11 +132,10 @@ SELECT doc_id,
        length(text) AS n_chars
 FROM documents
 """,
-)
+)(TS.token_counts)
 
-_register(
+register(
     "quality_scores",
-    TS.quality_scores,
     f"""
 SELECT doc_id,
        len(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+')) AS n_words,
@@ -159,13 +151,12 @@ SELECT doc_id,
           / len(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+')) >= 10) AS keep
 FROM documents
 """,
-)
+)(TS.quality_scores)
 
 _LANGS_DESC = sorted(STOPWORDS)
 
-_register(
+register(
     "language_id",
-    TS.language_id,
     f"""
 WITH s AS (
   SELECT doc_id, lang AS labeled_lang, {_lang_scores_sql()} FROM documents
@@ -180,24 +171,22 @@ SELECT doc_id, labeled_lang,
        ELSE 'und' END AS pred_lang
 FROM s
 """,
-)
+)(TS.language_id)
 
 _NORM_SQL = r"regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')"
 
-_register(
+register(
     "fingerprints",
-    TS.fingerprints,
     f"""
 SELECT doc_id,
        md5({_NORM_SQL}) AS fp_md5,
        {_MD5INT.format(expr=_NORM_SQL)} AS fp_int
 FROM documents
 """,
-)
+)(TS.fingerprints)
 
-_register(
+register(
     "host_stats",
-    lambda spark, sf: TS.host_stats(spark, sf).drop("n_bytes"),
     """
 WITH h AS (
   SELECT 'host-' || CASE WHEN doc_id % 10 = 0 THEN 'hot'
@@ -210,7 +199,7 @@ SELECT host, COUNT(*) AS n_docs,
        COUNT(*) * 20 > t.total AS salt_candidate
 FROM h, t GROUP BY host, t.total
 """,
-)
+)(lambda spark, sf: TS.host_stats(spark, sf).drop("n_bytes"))
 
 _PRED_LANG_CASE = (
     "CASE "
@@ -230,9 +219,8 @@ _VERDICT_CASE = """CASE WHEN NOT is_keeper THEN 'dup'
             WHEN pred_lang != labeled_lang THEN 'lang_mismatch'
             ELSE 'keep' END"""
 
-_register(
+register(
     "curation_verdict",
-    TS.curation_verdict,
     f"""
 WITH k AS (
   SELECT doc_id,
@@ -258,16 +246,15 @@ SELECT doc_id,
        ({_VERDICT_CASE}) = 'keep' AS keep
 FROM p
 """,
-)
+)(TS.curation_verdict)
 
 _RATE_CASE = "CASE " + " ".join(
     f"WHEN lang = '{lang}' THEN {r}"
     for lang, r in sorted(TS.SAMPLE_RATES_X1000.items())
 ) + f" ELSE {TS.SAMPLE_DEFAULT_X1000} END"
 
-_register(
+register(
     "stratified_sample",
-    TS.stratified_sample,
     f"""
 SELECT doc_id, lang,
        {_MD5INT.format(expr="CAST(doc_id AS VARCHAR)")} % 1000
@@ -275,11 +262,10 @@ SELECT doc_id, lang,
 FROM documents
 WHERE {_MD5INT.format(expr="CAST(doc_id AS VARCHAR)")} % 1000 < {_RATE_CASE}
 """,
-)
+)(TS.stratified_sample)
 
-_register(
+register(
     "shard_packing",
-    TS.shard_packing,
     f"""
 SELECT doc_id, lang,
        len(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+')) AS n_tokens,
@@ -289,23 +275,21 @@ SELECT doc_id, lang,
             / {TS.SHARD_TOKEN_BUDGET}) AS BIGINT) AS shard_id
 FROM documents
 """,
-)
+)(TS.shard_packing)
 
 # --- dedup ---------------------------------------------------------------------
 
-_register(
+register(
     "exact_dedup",
-    D.exact_dedup,
     r"""
 SELECT md5(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp,
        MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_dups
 FROM documents GROUP BY 1
 """,
-)
+)(D.exact_dedup)
 
-_register(
+register(
     "ngram_jaccard",
-    lambda spark, sf: D.ngram_jaccard_pairs(spark, sf, threshold_x1000=100),
     f"""
 WITH {_SH_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -329,17 +313,15 @@ JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE CAST(floor(n_inter * 1000 / (sa.n + sb.n - n_inter)) AS BIGINT) >= 100
 """,
-)
+)(lambda spark, sf: D.ngram_jaccard_pairs(spark, sf, threshold_x1000=100))
 
-_register(
+register(
     "minhash_signatures",
-    D.minhash_signatures,
     f"WITH {_MH_CTE} SELECT * FROM mh",
-)
+)(D.minhash_signatures)
 
-_register(
+register(
     "minhash_lsh_pairs",
-    D.minhash_lsh_pairs,
     f"""
 WITH {_MH_CTE},
 b AS (
@@ -355,7 +337,7 @@ SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
 FROM bc a JOIN bc c
   ON a.band = c.band AND a.bucket = c.bucket AND a.doc_id < c.doc_id
 """,
-)
+)(D.minhash_lsh_pairs)
 
 # embedding_neardup is the LSH-BUCKETED scale path (the registered query):
 # candidates = same-(table, bucket) collisions with the hot-bucket cap,
@@ -363,9 +345,8 @@ FROM bc a JOIN bc c
 # the DuckDB oracle re-derives the identical buckets so the hash stays
 # exact; recall vs the all-pairs twin (tests/dedup_reference.py) is
 # pinned in tests/test_ops.py.
-_register(
+register(
     "embedding_neardup",
-    D.embedding_neardup_lsh,
     f"""
 WITH {_Q_CTE},
 {_LSH_BUCKETS_CTE},
@@ -395,14 +376,13 @@ WHERE CAST(list_dot_product(list_transform(na.qv, x -> CAST(x AS DOUBLE)),
              AS BIGINT) * 25
       >= 4 * na.norm2 * nb.norm2
 """,
-)
+)(D.embedding_neardup_lsh)
 
 # dedup_clusters: connected components over the near-dup pair graph.
 # The min-label fixpoint is unique, so the Spark pointer-jumping loop and
 # the DuckDB recursive reachability CTE provably agree row-for-row.
-_register(
+register(
     "dedup_clusters",
-    D.dedup_clusters,
     f"""
 WITH RECURSIVE {_SH_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -433,7 +413,7 @@ reach AS (
 )
 SELECT doc AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY doc
 """,
-)
+)(D.dedup_clusters)
 
 # --- similarity search ----------------------------------------------------------
 
@@ -500,7 +480,7 @@ FROM cent{iters} c LEFT JOIN (
 """
 
 
-_register("kmeans_centroids", S.kmeans_centroids, _kmeans_oracle(S.KMEANS_ITERS))
+register("kmeans_centroids", _kmeans_oracle(S.KMEANS_ITERS))(S.kmeans_centroids)
 
 
 def _ivf_kmeans_oracle(iters: int) -> str:
@@ -558,17 +538,15 @@ FROM ranked WHERE rn <= {S.TOP_K}
 
 # the kmeans-fitted search end-to-end, hash-checked: kmeans rounds AND the
 # IVF probe/re-rank both re-derived in DuckDB
-_register(
+register(
     "ann_ivf_kmeans",
-    lambda spark, sf: S.ivf_topk(spark, sf, fit="kmeans"),
     _ivf_kmeans_oracle(S.KMEANS_ITERS),
-)
+)(lambda spark, sf: S.ivf_topk(spark, sf, fit="kmeans"))
 
 
 
-_register(
+register(
     "ann_brute_force",
-    S.brute_force_topk,
     f"""
 WITH {_Q_CTE},
 scored AS (
@@ -590,7 +568,7 @@ SELECT query_id, cand_id, CAST(rn AS INT) AS rank,
        round(cos, 6) AS cos_r6
 FROM ranked WHERE rn <= {S.TOP_K}
 """,
-)
+)(S.brute_force_topk)
 
 # ann_lsh is FULLY oracle-checked: the md5-derived ±1 hyperplanes, the
 # integer sign bits (quantized dot > 0 — exact), the Hamming-1 probe XORs
@@ -631,7 +609,7 @@ SELECT query_id, cand_id, CAST(rn AS INT) AS rank,
 FROM ranked WHERE rn <= {S.TOP_K}
 """
 
-_register("ann_lsh", S.lsh_topk, _LSH_ORACLE)
+register("ann_lsh", _LSH_ORACLE)(S.lsh_topk)
 # ann_ivf oracle: centroid sampling (md5 order), cell assignment and the
 # probe ranking re-derived in SQL. Portable because the similarity double
 # is double(exact-int dot) / sqrt(double(n_a)·double(n_b)) in BOTH engines
@@ -692,7 +670,7 @@ SELECT query_id, cand_id, CAST(rn AS INT) AS rank,
 FROM ranked WHERE rn <= {S.TOP_K}
 """
 
-_register("ann_ivf", S.ivf_topk, _IVF_ORACLE)
+register("ann_ivf", _IVF_ORACLE)(S.ivf_topk)
 
 # --- multimodal (plumbing; header metadata is oracle-checkable) ------------------
 
@@ -703,9 +681,8 @@ def _media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_media_meta(synth_media(spark, sf_dir))
 
 
-_register(
+register(
     "media_meta",
-    _media_meta,
     """
 SELECT doc_id,
        CASE WHEN doc_id % 3 = 0 THEN 'audio' ELSE 'image' END AS media_type,
@@ -715,7 +692,7 @@ SELECT doc_id,
        TRUE AS valid
 FROM documents
 """,
-)
+)(_media_meta)
 
 
 def _resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,9 +701,8 @@ def _resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_plan(synth_media(spark, sf_dir))
 
 
-_register(
+register(
     "media_resize_plan",
-    _resize_plan,
     """
 WITH m AS (
   SELECT doc_id,
@@ -739,7 +715,7 @@ SELECT doc_id, width, height,
        CAST(floor(height * 256 / greatest(width, height)) AS INT) AS target_h
 FROM m
 """,
-)
+)(_resize_plan)
 
 # simhash oracle: FNV-1a re-implemented in DuckDB HUGEINT arithmetic
 # (the 64-bit wrap-around multiply runs mod 2^64 in 128-bit ints; xor
@@ -767,9 +743,8 @@ list_reduce(
             % 18446744073709551616::HUGEINT)
 """
 
-_register(
+register(
     "simhash",
-    D.simhash,
     rf"""
 WITH w AS (
   SELECT doc_id,
@@ -797,7 +772,7 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN bits USING (doc_id)
 GROUP BY d.doc_id
 """,
-)
+)(D.simhash)
 
 
 # --- ExactSubstr-style repeated-substring spans (r4) -------------------------
@@ -840,9 +815,8 @@ spans AS (
 )
 """
 
-_register(
+register(
     "substring_dedup",
-    D.substring_dedup,
     f"""
 WITH {_SUBSTR_SPANS_CTES},
 per_doc AS (
@@ -857,7 +831,7 @@ SELECT ws.doc_id, len(ws.w) AS n_words,
          AS dup_per_mille
 FROM ws LEFT JOIN per_doc p ON ws.doc_id = p.doc_id
 """,
-)
+)(D.substring_dedup)
 
 
 def _q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -873,13 +847,12 @@ def _q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
+register(
     "substring_dedup_spans",
-    _q_substring_spans,
     f"""
 WITH {_SUBSTR_SPANS_CTES}
 SELECT doc_id, CAST(span_id AS BIGINT) AS span_id, s AS span_start,
        CAST(e AS BIGINT) AS span_end
 FROM spans
 """,
-)
+)(_q_substring_spans)

@@ -7,7 +7,9 @@ Mirrors the reference's declared relational schemas (SURVEY.md §1):
   text + confidence + quad bbox; the reference flattens the 4-vertex quad
   into 8 int columns, we keep an array<int> of the same 8 values in the
   same order (x0,y0,x1,y1,x2,y2,x3,y3).
-- block       — replaces ``ocr_blocks`` (database/database.sql:168-191).
+- blocks are not a stored record: ``assemble.py`` builds them from token
+  rows, as the reference builds ``ocr_blocks`` (database/database.sql:
+  168-191) from word rows (block_identification.py:68).
 - field       — replaces ``ocr_interpreted_blocks`` (database/database.sql:99-126),
   unique on (url, block_id, data_type) per the constraint at :115.
 - span        — Document-AI text anchors (ML/google_documentai/run_docai.py:84-93):
@@ -58,15 +60,6 @@ TOKEN = T.StructType(
     ]
 )
 
-BLOCK = T.StructType(
-    [
-        T.StructField("page", T.IntegerType(), False),
-        T.StructField("block", T.IntegerType(), False),
-        T.StructField("confidence", T.DoubleType(), True),
-        T.StructField("bbox", T.ArrayType(T.IntegerType()), True),
-    ]
-)
-
 # Extraction-stage output: one wide row per url (SURVEY.md §3.1 stage 6).
 EXTRACT_RESULT = T.StructType(
     [
@@ -78,7 +71,6 @@ EXTRACT_RESULT = T.StructType(
         T.StructField("n_bytes", T.LongType(), False),
         T.StructField("n_tokens", T.IntegerType(), False),
         T.StructField("tokens", T.ArrayType(TOKEN), True),
-        T.StructField("blocks", T.ArrayType(BLOCK), True),
     ]
 )
 

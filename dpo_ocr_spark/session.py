@@ -18,9 +18,10 @@ from pyspark.sql import SparkSession
 # 8192 extraction gains ~5% more but the big pinned batches GC-destabilize
 # the downstream explode+shuffle (assemble at local[32]: 13-26s vs 5-12s)
 # — 8192 is the measured sweet spot. Memory safety against fat payloads
-# (~1 MB pages at real scale) is NOT this knob's job — the extraction
-# stage byte-bounds its own batches (extract.stage.TARGET_PAYLOAD_BYTES,
-# zero-copy slicing), so the row cap stays payload-agnostic.
+# (~1 MB pages at real scale) is NOT this knob's job: page payloads span
+# ~1 KB to ~1 MB, so the engine also bounds every batch at 16 MB
+# (arrow.maxBytesPerBatch, set next to this cap in get_spark) before it
+# reaches a Python worker, and the row cap stays payload-agnostic.
 ARROW_MAX_RECORDS = 8192
 
 
@@ -50,6 +51,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS),
         )
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 << 20))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # local mode: the driver heap IS the cluster memory — size it for

@@ -5,6 +5,5 @@ from .iceberg import (  # noqa: F401
     is_table_ref,
     latest_snapshot_id,
     read_web_pages,
-    resume_from_snapshot,
     write_results,
 )

@@ -17,10 +17,11 @@ how. Everything here is jar-agnostic:
 
 Resume contract at scale: each run records the table's snapshot id next
 to its per-partition lineage rows (scale.with_lineage). A restart does
-an incremental append-scan from that snapshot (``resume_from_snapshot``)
-— only rows committed after the checkpoint are reprocessed, and the
-anti-join against completed lineage (scale.resume_filter) covers the
-partial-failure window inside a snapshot. The reference's analog is
+an incremental append-scan from that snapshot (``incremental_pages`` with
+the checkpointed id as ``start_snapshot_id``) — only rows committed
+after the checkpoint are reprocessed, and the anti-join against
+completed lineage (scale.resume_filter) covers the partial-failure window
+inside a snapshot. The reference's analog is
 delete-by-project + full rerun (block_identification.py:63); ours is
 additive and idempotent.
 """
@@ -136,14 +137,6 @@ def latest_snapshot_id(spark: SparkSession, table: str) -> int | None:
         ).collect()
     )
     return int(row[0].snapshot_id) if row else None
-
-
-def resume_from_snapshot(
-    spark: SparkSession, table: str, checkpoint_snapshot_id: int
-) -> DataFrame:
-    """Pages not yet covered by the checkpointed snapshot (see module
-    docstring for how this composes with scale.resume_filter)."""
-    return incremental_pages(spark, table, checkpoint_snapshot_id)
 
 
 def write_results(

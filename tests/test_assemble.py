@@ -2,13 +2,20 @@
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import types as T
 
 from dpo_ocr_spark.schemas import TOKEN
 
 TOKEN_WITH_URL = T.StructType(
-    [T.StructField("url", T.StringType(), False)] + list(TOKEN.fields)
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), True),
+    ]
+    + list(TOKEN.fields)
 )
+TS = datetime(2024, 1, 1)
 
 
 def _tokens(spark):
@@ -23,7 +30,7 @@ def _tokens(spark):
     ]
     return spark.createDataFrame(
         [
-            (u, p, b, pa, wl, w, t, c, None, None, None)
+            (u, TS, p, b, pa, wl, w, t, c, None, None, None)
             for (u, p, b, pa, wl, w, t, c) in rows
         ],
         schema=TOKEN_WITH_URL,
@@ -63,3 +70,30 @@ def test_determinism_under_repartition(spark):
     a = sorted(map(tuple, assemble_blocks(t).collect()))
     b = sorted(map(tuple, assemble_blocks(t.repartition(7)).collect()))
     assert a == b
+
+
+def test_captures_of_one_url_assemble_apart(spark):
+    """A capture is (url, warc_ts): a re-crawl of one url with other text
+    gives its own block rows instead of merging into the first one's."""
+    from dpo_ocr_spark.assemble import (
+        assemble_blocks,
+        assemble_reading_order,
+        explode_tokens,
+    )
+    from dpo_ocr_spark.extract import extract_pages
+    from dpo_ocr_spark.schemas import WEB_PAGES
+
+    later = datetime(2024, 6, 1)
+    pages = spark.createDataFrame(
+        [
+            ("u", TS, b"<p>first crawl</p>", None, "en"),
+            ("u", later, b"<p>second crawl</p>", None, "en"),
+        ],
+        schema=WEB_PAGES,
+    )
+    tokens = explode_tokens(extract_pages(pages))
+    for assembled in (assemble_blocks(tokens), assemble_reading_order(tokens)):
+        rows = assembled.collect()
+        assert sorted(r.block_text for r in rows) == ["first crawl", "second crawl"]
+        got = sorted((r.warc_ts, r.block_text, r.n_words) for r in rows)
+        assert got == [(TS, "first crawl", 2), (later, "second crawl", 2)]

@@ -29,9 +29,9 @@ def test_byte_identical_text_all_docs():
     for doc_id, text in DOCS:
         exp = expected_text(text)
         if is_layout_doc(doc_id):
-            got, _, _ = extract_layout(render_layout(doc_id, text))
+            got, _ = extract_layout(render_layout(doc_id, text))
         else:
-            got, _, _ = extract_html(render_html(doc_id, text))
+            got, _ = extract_html(render_html(doc_id, text))
         assert got == exp, f"doc {doc_id} text not byte-identical"
 
 
@@ -42,7 +42,7 @@ def test_token_spans_slice_text():
             if is_layout_doc(doc_id)
             else render_html(doc_id, text)
         )
-        got, tokens, _ = (
+        got, tokens = (
             extract_layout(payload) if is_layout_doc(doc_id) else extract_html(payload)
         )
         for t in tokens:
@@ -52,7 +52,7 @@ def test_token_spans_slice_text():
 
 def test_reading_order_ids_monotone():
     doc_id, text = next((d, t) for d, t in DOCS if is_layout_doc(d))
-    _, tokens, _ = extract_layout(render_layout(doc_id, text))
+    _, tokens = extract_layout(render_layout(doc_id, text))
     keys = [(t[0], t[1], t[3], t[4]) for t in tokens]  # page,block,line,word
     assert keys == sorted(keys)
     assert [t[4] for t in tokens] == list(range(len(tokens)))
@@ -96,16 +96,6 @@ def test_confidence_formula_range():
     assert any(v <= 0.70 for v in vals) and any(v >= 0.85 for v in vals)
 
 
-def test_layout_block_bbox_envelope():
-    doc_id, text = next((d, t) for d, t in DOCS if is_layout_doc(d))
-    _, tokens, blocks = extract_layout(render_layout(doc_id, text))
-    for page, b, conf, bbox in blocks:
-        xs = [v for t in tokens if t[1] == b for v in t[7][0::2]]
-        ys = [v for t in tokens if t[1] == b for v in t[7][1::2]]
-        assert bbox[0] == min(xs) and bbox[2] == max(xs)
-        assert bbox[1] == min(ys) and bbox[5] == max(ys)
-
-
 def test_stage_matches_per_row_reference(spark):
     """Every row of the Arrow stage equals ``_extract_one`` applied to
     that input row in the driver: sf0.001 pages plus a quarantined, a PDF
@@ -131,10 +121,9 @@ def test_stage_matches_per_row_reference(spark):
     assert out.schema == EXTRACT_RESULT
     want = {}
     for r in pages.collect():
-        kind, text, tokens, blocks, nb = _extract_one(r.html, r.text)
+        kind, text, tokens, nb = _extract_one(r.html, r.text)
         want[r.url] = (
-            r.url, r.warc_ts, r.lang, kind, text, nb, len(tokens),
-            tokens, blocks,
+            r.url, r.warc_ts, r.lang, kind, text, nb, len(tokens), tokens,
         )
     got = {r.url: r for r in out.collect()}
     assert got.keys() == want.keys()
@@ -175,31 +164,50 @@ def test_adversarial_payloads_quarantined(spark):
     assert rows["f"].text == "fallback"
 
 
-def test_byte_bounded_rebatching(monkeypatch):
-    """Oversized incoming Arrow batches are sliced (zero-copy) to the
-    payload-byte target before decode; row content is preserved."""
+def test_byte_bounded_rebatching(spark):
+    """The engine bounds the stage's input batches by payload bytes
+    (arrow.maxBytesPerBatch): under a small bound one partition reaches
+    the kernel as several batches, each within the bound unless it is a
+    single row, and rows keep their order and content."""
+    from datetime import datetime
+
     import pyarrow as pa
+    from pyspark.sql import types as T
 
-    from dpo_ocr_spark.extract import stage
+    from dpo_ocr_spark.extract import extract_pages, stage
+    from dpo_ocr_spark.schemas import EXTRACT_RESULT, WEB_PAGES
 
-    monkeypatch.setattr(stage, "TARGET_PAYLOAD_BYTES", 1000)
+    bound = 1000
+    ts = datetime(2024, 1, 1)
     payloads = [b"<p>" + bytes([65 + i % 26]) * 300 + b"</p>" for i in range(12)]
-    batch = pa.RecordBatch.from_arrays(
-        [
-            pa.array([f"u{i}" for i in range(12)]),
-            pa.array([None] * 12, pa.timestamp("us", tz="UTC")),
-            pa.array(payloads, pa.binary()),
-            pa.array([None] * 12, pa.string()),
-            pa.array(["en"] * 12),
-        ],
-        names=["url", "warc_ts", "html", "text", "lang"],
+    pages = spark.createDataFrame(
+        [(f"u{i:02d}", ts, p, None, "en") for i, p in enumerate(payloads)],
+        schema=WEB_PAGES,
+    ).coalesce(1)
+
+    def sized(it):
+        # the production kernel, tagging each output row with its batch
+        for seq, out in enumerate(stage._extract_batches(it)):
+            n = out.num_rows
+            yield out.append_column("batch", pa.array([seq] * n, pa.int32()))
+
+    tagged_schema = T.StructType(
+        EXTRACT_RESULT.fields + [T.StructField("batch", T.IntegerType(), False)]
     )
-    slices = list(stage._byte_bounded(iter([batch])))
-    assert len(slices) > 1
-    assert sum(s.num_rows for s in slices) == 12
-    out = list(stage._extract_batches(iter([batch])))
-    urls = [u for b in out for u in b.column("url").to_pylist()]
-    assert urls == [f"u{i}" for i in range(12)]
-    # singleton rows never split even when over target
-    one = batch.slice(0, 1)
-    assert [s.num_rows for s in stage._byte_bounded(iter([one]))] == [1]
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(bound))
+    try:
+        tagged = pages.mapInArrow(sized, tagged_schema).collect()
+        staged = extract_pages(pages).collect()
+    finally:
+        spark.conf.set(key, before)
+    batches: dict[int, list] = {}
+    for r in tagged:
+        batches.setdefault(r.batch, []).append(r)
+    assert len(batches) > 1
+    for rows in batches.values():
+        assert len(rows) == 1 or sum(r.n_bytes for r in rows) <= bound
+    assert [r.url for r in tagged] == [f"u{i:02d}" for i in range(12)]
+    assert [r.batch for r in tagged] == sorted(r.batch for r in tagged)
+    assert [tuple(r)[:-1] for r in tagged] == [tuple(r) for r in staged]

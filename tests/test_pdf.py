@@ -25,10 +25,10 @@ TEXTS = [
 def test_roundtrip_flate_and_raw():
     for i, t in enumerate(TEXTS):
         for doc_id in (i * 2, i * 2 + 1):  # even = FlateDecode, odd = raw
-            got, tokens, blocks = extract_pdf(render_pdf(doc_id, t))
+            got, tokens = extract_pdf(render_pdf(doc_id, t))
             assert got == expected_text(t), (doc_id, t)
             n_lines = expected_text(t).count("\n") + 1
-            assert len(blocks) == n_lines
+            assert len({tok[1] for tok in tokens}) == n_lines
             # token shape mirrors extract_html: block == word_line == line
             for tok in tokens:
                 assert tok[1] == tok[3] and tok[6] == 1.0 and tok[7] is None
@@ -37,7 +37,7 @@ def test_roundtrip_flate_and_raw():
 
 
 def test_dispatch_kind_pdf():
-    kind, text, tokens, _blocks, nb = _extract_one(render_pdf(2, TEXTS[0]), None)
+    kind, text, tokens, nb = _extract_one(render_pdf(2, TEXTS[0]), None)
     assert kind == "pdf" and nb > 0
     assert text == expected_text(TEXTS[0]) and len(tokens) == 10
     # garbage that claims to be PDF quarantines instead of aborting
@@ -73,7 +73,7 @@ def test_td_tstar_tj_array_parsing():
         + str(len(content)).encode()
         + b" >>\nstream\n" + content + b"\nendstream\nendobj\n"
     )
-    text, tokens, _ = extract_pdf(pdf)
+    text, tokens = extract_pdf(pdf)
     assert text == "first\nsecond\nthi rd"
 
 
