@@ -271,16 +271,12 @@ def extract_pdf(payload: bytes) -> tuple[str, list[tuple]]:
     text = "\n".join(" ".join(words) for words in ordered)
     tokens: list[tuple] = []
     widx = 0
-    offset = 0
+    pos = 0  # offsets follow the join: one ' ' or '\n' after each word
     for li, words in enumerate(ordered):
         for w in words:
-            if w == "":
-                offset += 1
-                continue
-            start = text.find(w, offset)
-            end = start + len(w)
-            offset = end
-            tokens.append((1, li, li, li, widx, w, 1.0, None, start, end))
-            widx += 1
-        offset += 1  # the '\n' separator
+            if w:
+                end = pos + len(w)
+                tokens.append((1, li, li, li, widx, w, 1.0, None, pos, end))
+                widx += 1
+            pos += len(w) + 1
     return text, tokens

@@ -10,26 +10,16 @@ closes the boundary with no codec libraries, which the container lacks:
   palette, 8-bit RGB / gray+alpha / RGBA, 16-bit gray/RGB/alpha
   (high-byte reduction), all five scanline filters, Adam7 interlace
   (seven independently filtered sub-images scattered onto the raster),
-  zlib (stdlib) inflate; plus filter-0 encoders (fixtures + sinks).
-- **JPEG**: baseline sequential (SOF0), extended sequential (SOF1,
-  8-bit and 12-bit with 16-bit quant tables and 2048 level shift),
-  progressive (SOF2), lossless (SOF3, Annex-H predictors 1-7,
-  SSSS/EXTEND diff coding, modulo-2^16), and arithmetic sequential
-  (SOF9: T.81 Annex D/F QM coder with Table D.3 adaptation, DAC
-  conditioning, byte stuffing/carry handling — cross-validated in both
-  directions against libjpeg-turbo) decoders — canonical Huffman,
-  spectral selection + successive approximation (DC/AC first and
-  refinement scans, EOB runs), dequant, batched 8×8 IDCT, chroma
-  upsampling for 4:4:4 / 4:2:2 / 4:2:0, restart markers — plus
-  baseline/12-bit/progressive/lossless/arithmetic (sequential SOF9 and
-  progressive SOF10) encoders used by fixtures.  Hierarchical streams
-  (Annex J: DHP, EXP reference expansion, differential SOF5 sequential
-  and SOF7 lossless frames over Huffman/lossless non-differential
-  bases) decode via ``_decode_jpeg_hier``, with matching pyramid
-  encoders; differential-progressive (SOF6) and differential-arithmetic
-  (SOF13-15) frames are the remaining explicit rejects — libjpeg has no
-  hierarchical mode at all, so no cross-validator exists and only the
-  self-roundtrip-pinned subset is claimed.
+  zlib (stdlib) inflate; plus a filter-0 RGB encoder (fixtures + sinks).
+- **JPEG**: 8-bit Huffman-coded decoder — baseline sequential (SOF0),
+  extended sequential (SOF1, decoded through the baseline path) and
+  progressive (SOF2): canonical Huffman, spectral selection +
+  successive approximation (DC/AC first and refinement scans, EOB
+  runs), dequant, batched 8×8 IDCT, chroma upsampling for 4:4:4 /
+  4:2:2 / 4:2:0, restart markers — plus baseline and progressive
+  encoders used by fixtures.  Lossless (SOF3), hierarchical (DHP,
+  SOF5-7), arithmetic (SOF9-11, SOF13-15) and non-8-bit frames raise a
+  ``ValueError`` that names the marker.
 
 Performance shape: the bit-serial parts (Huffman, PNG sub/avg/paeth
 filters) are honest per-element Python — fine because decode
@@ -250,43 +240,6 @@ def encode_png(img: np.ndarray, interlace: bool = False) -> bytes:
                 ).tobytes()
             )
         raster = b"".join(parts)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raster, 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_gray(img: np.ndarray, depth: int = 1) -> bytes:
-    """(h, w, 3) uint8 RGB (gray-valued, each sample an exact multiple of
-    255/(2^depth - 1)) → grayscale PNG at bit depth 1/2/4/8 — the fixture
-    encoder for the sub-byte decode path.  Lossless by construction: the
-    assert rejects any image the depth cannot represent exactly."""
-    h, w, c = img.shape
-    assert c == 3 and img.dtype == np.uint8
-    assert depth in (1, 2, 4, 8)
-    g = img[:, :, 0]
-    assert (img == g[:, :, None]).all(), "not a gray-valued image"
-    maxv = (1 << depth) - 1
-    scale = 255 // maxv
-    assert (g % scale == 0).all(), f"samples not exact at depth {depth}"
-    v = (g // scale).astype(np.uint8)
-    if depth == 8:
-        packed = v
-    else:
-        bits = np.unpackbits(v[:, :, None], axis=2)[:, :, 8 - depth:]
-        flat = bits.reshape(h, w * depth)
-        pad = (-flat.shape[1]) % 8
-        if pad:
-            flat = np.concatenate(
-                [flat, np.zeros((h, pad), np.uint8)], axis=1
-            )
-        packed = np.packbits(flat, axis=1)
-    raster = np.concatenate(
-        [np.zeros((h, 1), np.uint8), packed], axis=1
-    ).tobytes()
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 0, 0, 0, 0)
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
@@ -602,514 +555,20 @@ def _skip_entropy(data: bytes, pos: int) -> int:
     return len(data)
 
 
-# ---------------------------------------------------------------------------
-# Arithmetic entropy coding (SOF9 sequential DCT; ITU-T T.81 Annexes D+F)
-# ---------------------------------------------------------------------------
-# Probability estimation state machine of T.81 Table D.3 as
-# (Qe, NMPS, NLPS, switch) rows; index 113 is the non-adapting ~0.5 bin
-# used for AC coefficient signs (F.1.4.4.1.2).  Values verified against
-# the system libjpeg-turbo's jpeg_aritab (tests re-extract and compare
-# when the library is present).
-_ARITH_TAB = (
-    (0x5a1d, 1, 1, 1), (0x2586, 2, 14, 0), (0x1114, 3, 16, 0), (0x080b, 4, 18, 0),
-    (0x03d8, 5, 20, 0), (0x01da, 6, 23, 0), (0x00e5, 7, 25, 0), (0x006f, 8, 28, 0),
-    (0x0036, 9, 30, 0), (0x001a, 10, 33, 0), (0x000d, 11, 35, 0), (0x0006, 12, 9, 0),
-    (0x0003, 13, 10, 0), (0x0001, 13, 12, 0), (0x5a7f, 15, 15, 1), (0x3f25, 16, 36, 0),
-    (0x2cf2, 17, 38, 0), (0x207c, 18, 39, 0), (0x17b9, 19, 40, 0), (0x1182, 20, 42, 0),
-    (0x0cef, 21, 43, 0), (0x09a1, 22, 45, 0), (0x072f, 23, 46, 0), (0x055c, 24, 48, 0),
-    (0x0406, 25, 49, 0), (0x0303, 26, 51, 0), (0x0240, 27, 52, 0), (0x01b1, 28, 54, 0),
-    (0x0144, 29, 56, 0), (0x00f5, 30, 57, 0), (0x00b7, 31, 59, 0), (0x008a, 32, 60, 0),
-    (0x0068, 33, 62, 0), (0x004e, 34, 63, 0), (0x003b, 35, 32, 0), (0x002c, 9, 33, 0),
-    (0x5ae1, 37, 37, 1), (0x484c, 38, 64, 0), (0x3a0d, 39, 65, 0), (0x2ef1, 40, 67, 0),
-    (0x261f, 41, 68, 0), (0x1f33, 42, 69, 0), (0x19a8, 43, 70, 0), (0x1518, 44, 72, 0),
-    (0x1177, 45, 73, 0), (0x0e74, 46, 74, 0), (0x0bfb, 47, 75, 0), (0x09f8, 48, 77, 0),
-    (0x0861, 49, 78, 0), (0x0706, 50, 79, 0), (0x05cd, 51, 48, 0), (0x04de, 52, 50, 0),
-    (0x040f, 53, 50, 0), (0x0363, 54, 51, 0), (0x02d4, 55, 52, 0), (0x025c, 56, 53, 0),
-    (0x01f8, 57, 54, 0), (0x01a4, 58, 55, 0), (0x0160, 59, 56, 0), (0x0125, 60, 57, 0),
-    (0x00f6, 61, 58, 0), (0x00cb, 62, 59, 0), (0x00ab, 63, 61, 0), (0x008f, 32, 61, 0),
-    (0x5b12, 65, 65, 1), (0x4d04, 66, 80, 0), (0x412c, 67, 81, 0), (0x37d8, 68, 82, 0),
-    (0x2fe8, 69, 83, 0), (0x293c, 70, 84, 0), (0x2379, 71, 86, 0), (0x1edf, 72, 87, 0),
-    (0x1aa9, 73, 87, 0), (0x174e, 74, 72, 0), (0x1424, 75, 72, 0), (0x119c, 76, 74, 0),
-    (0x0f6b, 77, 74, 0), (0x0d51, 78, 75, 0), (0x0bb6, 79, 77, 0), (0x0a40, 48, 77, 0),
-    (0x5832, 81, 80, 1), (0x4d1c, 82, 88, 0), (0x438e, 83, 89, 0), (0x3bdd, 84, 90, 0),
-    (0x34ee, 85, 91, 0), (0x2eae, 86, 92, 0), (0x299a, 87, 93, 0), (0x2516, 71, 86, 0),
-    (0x5570, 89, 88, 1), (0x4ca9, 90, 95, 0), (0x44d9, 91, 96, 0), (0x3e22, 92, 97, 0),
-    (0x3824, 93, 99, 0), (0x32b4, 94, 99, 0), (0x2e17, 86, 93, 0), (0x56a8, 96, 95, 1),
-    (0x4f46, 97, 101, 0), (0x47e5, 98, 102, 0), (0x41cf, 99, 103, 0), (0x3c3d, 100, 104, 0),
-    (0x375e, 93, 99, 0), (0x5231, 102, 105, 0), (0x4c0f, 103, 106, 0), (0x4639, 104, 107, 0),
-    (0x415e, 99, 103, 0), (0x5627, 106, 105, 1), (0x50e7, 107, 108, 0), (0x4b85, 103, 109, 0),
-    (0x5597, 109, 110, 0), (0x504f, 107, 111, 0), (0x5a10, 111, 110, 1), (0x5522, 109, 112, 0),
-    (0x59eb, 111, 112, 1), (0x5a1d, 113, 113, 0),
+# Frame markers outside the decoder: lossless (SOF3), differential /
+# hierarchical (SOF5-7 and the DHP header) and arithmetic-coded
+# (SOF9-11, SOF13-15).  Each is rejected by name rather than skipped as
+# an unknown segment, which would surface later as "missing SOF/SOS".
+_UNSUPPORTED_FRAMES = frozenset(
+    (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF, 0xDE)
 )
-
-# statistics-area geometry (T.81 Table F.4 / F.1.4.4): DC S0 bases at
-# dc_context ∈ {0,4,8,12,16}, SS/SP/SN at +1/+2/+3, X1 at 20, magnitude
-# bits at node+14; AC bases 3(k-1) (SE, S0/sign-free), X2 chains at 189
-# (k <= Kx) / 217 (k > Kx)
-_DC_STAT_BINS = 64
-_AC_STAT_BINS = 256
-_FIXED_BIN = 113
-
-
-class _Stats:
-    """One conditioning-table statistics area: per-bin (index, mps)."""
-
-    def __init__(self, n: int) -> None:
-        self.idx = [0] * n
-        self.mps = [0] * n
-
-
-class _ArithDecoder:
-    """T.81 Annex D decoder (DECODE / MPS_EXCHANGE / LPS_EXCHANGE /
-    RENORM_D / BYTEIN flowcharts), with the entropy-segment byte
-    conventions of B.1.1.5: 0xFF 0x00 is a stuffed data 0xFF, any other
-    0xFF-marker ends the segment and zero bytes are supplied after."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.hit_marker = False
-        # load the first 16 code bits into Chigh; A = 0x10000 mirrors
-        # INITENC so the first subtraction happens at the same scale
-        self.c = self._next_byte() << 16
-        self._bytein()
-        self.c <<= 8
-        self.ct = 0
-        self.a = 0x10000
-
-    def _next_byte(self) -> int:
-        if self.hit_marker:
-            return 0
-        data = self.data
-        if self.pos >= len(data):
-            self.hit_marker = True
-            return 0
-        b = data[self.pos]
-        self.pos += 1
-        if b != 0xFF:
-            return b
-        while self.pos < len(data) and data[self.pos] == 0xFF:
-            self.pos += 1
-        if self.pos < len(data) and data[self.pos] == 0x00:
-            self.pos += 1
-            return 0xFF
-        self.hit_marker = True
-        self.pos -= 1  # leave BOTH marker bytes for _skip_entropy
-        return 0
-
-    def _bytein(self) -> None:
-        self.c += self._next_byte() << 8
-        self.ct = 8
-
-    def _renorm(self) -> None:
-        while True:
-            if self.ct == 0:
-                self._bytein()
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.a & 0x8000:
-                return
-
-    def decode(self, stats: _Stats, s: int) -> int:
-        # MPS owns the BOTTOM subinterval [0, A-Qe), LPS the top
-        qe, nmps, nlps, sw = _ARITH_TAB[stats.idx[s]]
-        mps = stats.mps[s]
-        self.a -= qe
-        if (self.c >> 16) < self.a:
-            if self.a & 0x8000:
-                return mps
-            # Figure F.22 MPS_EXCHANGE
-            if self.a < qe:
-                d = 1 - mps
-                if sw:
-                    stats.mps[s] = 1 - mps
-                stats.idx[s] = nlps
-            else:
-                d = mps
-                stats.idx[s] = nmps
-            self._renorm()
-        else:
-            self.c -= self.a << 16
-            # Figure F.23 LPS_EXCHANGE
-            if self.a < qe:
-                d = mps
-                stats.idx[s] = nmps
-            else:
-                d = 1 - mps
-                if sw:
-                    stats.mps[s] = 1 - mps
-                stats.idx[s] = nlps
-            self.a = qe
-            self._renorm()
-        return d
-
-
-class _ArithEncoder:
-    """T.81 Annex D encoder (CODE / CODEMPS / CODELPS / RENORME /
-    BYTEOUT / FLUSH), emitting B.1.1.5-framed bytes (0xFF always
-    followed by a stuffed 0x00)."""
-
-    def __init__(self) -> None:
-        self.a = 0x10000
-        self.c = 0
-        self.ct = 11
-        self.buffer: int | None = None
-        self.sc = 0  # stacked 0xFF bytes (may still receive a carry)
-        self.out = bytearray()
-
-    def _emit(self, b: int) -> None:
-        self.out.append(b)
-        if b == 0xFF:
-            self.out.append(0x00)
-
-    def _byteout(self) -> None:
-        t = self.c >> 19
-        if t > 0xFF:
-            # carry: +1 into the buffered byte, stacked 0xFFs roll to 0x00
-            self._emit(self.buffer + 1)
-            for _ in range(self.sc):
-                self._emit(0x00)
-            self.sc = 0
-            self.buffer = t & 0xFF  # 3 spacer bits: cannot be 0xFF here
-        elif t == 0xFF:
-            self.sc += 1
-        else:
-            if self.buffer is not None:
-                self._emit(self.buffer)
-            for _ in range(self.sc):
-                self._emit(0xFF)
-            self.sc = 0
-            self.buffer = t
-        self.c &= 0x7FFFF
-
-    def _renorm(self) -> None:
-        while True:
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-                self.ct = 8
-            if self.a & 0x8000:
-                return
-
-    def code(self, stats: _Stats, s: int, d: int) -> None:
-        # MPS owns the BOTTOM subinterval (C unchanged), LPS the top
-        qe, nmps, nlps, sw = _ARITH_TAB[stats.idx[s]]
-        mps = stats.mps[s]
-        a = self.a - qe
-        if d == mps:
-            if a & 0x8000:
-                self.a = a
-                return
-            if a < qe:
-                self.c += a  # conditional exchange: MPS takes the top
-                self.a = qe
-            else:
-                self.a = a
-            stats.idx[s] = nmps
-        else:
-            if a < qe:
-                self.a = a  # conditional exchange: LPS takes the bottom
-            else:
-                self.c += a
-                self.a = qe
-            if sw:
-                stats.mps[s] = 1 - mps
-            stats.idx[s] = nlps
-        self._renorm()
-
-    def flush(self) -> bytes:
-        # Figure D.18/D.19: pick the in-interval value with the most
-        # trailing zeros, then push the remaining 16 bits out
-        t = (self.c + self.a - 1) & 0xFFFF0000
-        self.c = t + 0x8000 if t < self.c else t
-        self.c <<= self.ct
-        self._byteout()
-        self.c <<= 8
-        self._byteout()
-        if self.buffer is not None:
-            self._emit(self.buffer)
-        for _ in range(self.sc):
-            self._emit(0xFF)
-        # trailing zero bytes could be discarded (D.1.8); keep them
-        return bytes(self.out)
-
-
-def _arith_decode_dc(
-    dec: _ArithDecoder, st: _Stats, ctx: int, lo: int, up: int,
-) -> tuple[int, int]:
-    """Decode one DC diff (F.2.4.1).  Returns (diff, new dc context)."""
-    base = ctx
-    if dec.decode(st, base) == 0:
-        return 0, 0
-    sign = dec.decode(st, base + 1)
-    m = dec.decode(st, base + 2 + sign)
-    node = base + 2 + sign
-    if m:
-        node = 20
-        while dec.decode(st, node):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("arithmetic DC magnitude overflow")
-            node += 1
-    if m < (1 << lo) >> 1:
-        new_ctx = 0
-    elif m > (1 << up) >> 1:
-        new_ctx = 12 + sign * 4
-    else:
-        new_ctx = 4 + sign * 4
-    v = m
-    node += 14
-    while m > 1:
-        m >>= 1
-        if dec.decode(st, node):
-            v |= m
-    v += 1
-    return (-v if sign else v), new_ctx
-
-
-def _arith_decode_ac(
-    dec: _ArithDecoder, st: _Stats, fixed: _Stats, coef: np.ndarray,
-    kx: int, ss: int = 1, se: int = 63, al: int = 0,
-) -> None:
-    """Decode AC coefficients of one block in zigzag order (F.2.4.2 /
-    G.2 first pass over band Ss..Se at approximation Al): per-index EOB
-    decision, fixed-bin sign, magnitude category tree with the
-    Kx-conditioned X2+ chains."""
-    k = ss
-    while k <= se:
-        base = 3 * (k - 1)
-        if dec.decode(st, base):  # EOB
-            return
-        while dec.decode(st, base + 1) == 0:
-            k += 1
-            if k > se:
-                raise ValueError("arithmetic AC index overflow")
-            base = 3 * (k - 1)
-        sign = dec.decode(fixed, 0)
-        node = base + 2
-        m = dec.decode(st, node)
-        if m:
-            if dec.decode(st, node):
-                m = 2
-                node = 189 if k <= kx else 217
-                while dec.decode(st, node):
-                    m <<= 1
-                    if m == 0x8000:
-                        raise ValueError("arithmetic AC magnitude overflow")
-                    node += 1
-        v = m
-        node += 14
-        while m > 1:
-            m >>= 1
-            if dec.decode(st, node):
-                v |= m
-        v += 1
-        coef[k] = (-v if sign else v) << al
-        k += 1
-
-
-def _arith_decode_ac_refine(
-    dec: _ArithDecoder, st: _Stats, fixed: _Stats, coef: np.ndarray,
-    ss: int, se: int, al: int,
-) -> None:
-    """G.2 AC refinement scan: correction bits for history-nonzero
-    coefficients, newly-nonzero insertions at ±1<<Al, EOB decisions
-    only beyond the previous scan's end-of-block index."""
-    p1 = 1 << al
-    m1 = -p1
-    kex = se
-    while kex > 0 and coef[kex] == 0:
-        kex -= 1
-    k = ss
-    while k <= se:
-        base = 3 * (k - 1)
-        if k > kex and dec.decode(st, base):  # EOB
-            return
-        while True:
-            if coef[k]:
-                if dec.decode(st, base + 2):
-                    coef[k] += m1 if coef[k] < 0 else p1
-                break
-            if dec.decode(st, base + 1):
-                coef[k] = m1 if dec.decode(fixed, 0) else p1
-                break
-            k += 1
-            if k > se:
-                raise ValueError("arithmetic AC refine overflow")
-            base = 3 * (k - 1)
-        k += 1
-
-
-def _arith_encode_dc(
-    enc: _ArithEncoder, st: _Stats, ctx: int, diff: int, lo: int, up: int,
-) -> int:
-    """Encode one DC diff (F.1.4.4.1).  Returns the new dc context."""
-    base = ctx
-    if diff == 0:
-        enc.code(st, base, 0)
-        return 0
-    enc.code(st, base, 1)
-    sign = 1 if diff < 0 else 0
-    v = -diff if sign else diff
-    enc.code(st, base + 1, sign)
-    node = base + 2 + sign
-    m = 0
-    v -= 1
-    if v:
-        enc.code(st, node, 1)
-        m = 1
-        node = 20
-        v2 = v
-        while v2 > 1:
-            v2 >>= 1
-            enc.code(st, node, 1)
-            m <<= 1
-            node += 1
-    enc.code(st, node, 0)
-    if m < (1 << lo) >> 1:
-        new_ctx = 0
-    elif m > (1 << up) >> 1:
-        new_ctx = 12 + sign * 4
-    else:
-        new_ctx = 4 + sign * 4
-    node += 14
-    while m > 1:
-        m >>= 1
-        enc.code(st, node, 1 if v & m else 0)
-    return new_ctx
-
-
-def _arith_encode_ac(
-    enc: _ArithEncoder, st: _Stats, fixed: _Stats, zz: np.ndarray,
-    kx: int, ss: int = 1, se: int = 63, al: int = 0,
-) -> None:
-    """Encode AC coefficients of one block (F.1.4.4.2 / G.1 first pass
-    over band Ss..Se at approximation Al)."""
-    ke = se
-    while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
-        ke -= 1
-    k = ss
-    while k <= ke:
-        base = 3 * (k - 1)
-        enc.code(st, base, 0)  # not EOB yet
-        v = int(zz[k])
-        t = abs(v) >> al
-        while t == 0:
-            enc.code(st, base + 1, 0)
-            k += 1
-            base = 3 * (k - 1)
-            v = int(zz[k])
-            t = abs(v) >> al
-        enc.code(st, base + 1, 1)
-        enc.code(fixed, 0, 1 if v < 0 else 0)
-        node = base + 2
-        m = 0
-        t -= 1
-        if t:
-            enc.code(st, node, 1)
-            m = 1
-            v2 = t
-            if v2 > 1:
-                enc.code(st, node, 1)
-                m = 2
-                node = 189 if k <= kx else 217
-                while v2 > 3:
-                    v2 >>= 1
-                    enc.code(st, node, 1)
-                    m <<= 1
-                    node += 1
-        enc.code(st, node, 0)
-        node += 14
-        while m > 1:
-            m >>= 1
-            enc.code(st, node, 1 if t & m else 0)
-        k += 1
-    if k <= se:
-        enc.code(st, 3 * (k - 1), 1)  # EOB
-
-
-def _arith_encode_ac_refine(
-    enc: _ArithEncoder, st: _Stats, fixed: _Stats, zz: np.ndarray,
-    ss: int, se: int, al: int,
-) -> None:
-    """G.1 AC refinement scan encoder (mirror of the decode above)."""
-    ke = se
-    while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
-        ke -= 1
-    kex = se
-    while kex > 0 and (abs(int(zz[kex])) >> (al + 1)) == 0:
-        kex -= 1
-    k = ss
-    while k <= ke:
-        base = 3 * (k - 1)
-        if k > kex:
-            enc.code(st, base, 0)
-        while True:
-            v = int(zz[k])
-            t = abs(v) >> al
-            if t:
-                if t >> 1:  # history-nonzero: correction bit
-                    enc.code(st, base + 2, t & 1)
-                else:  # newly nonzero: sign via the fixed bin
-                    enc.code(st, base + 1, 1)
-                    enc.code(fixed, 0, 1 if v < 0 else 0)
-                break
-            enc.code(st, base + 1, 0)
-            k += 1
-            base = 3 * (k - 1)
-        k += 1
-    if k <= se:
-        enc.code(st, 3 * (k - 1), 1)  # EOB
-
-
-def _decode_lossless_scan(
-    br: _BitReader, dc_t: dict, h: int, w: int,
-    prec: int, predictor: int, pt: int,
-) -> np.ndarray:
-    """SOF3 lossless scan, one component (spec Annex H): Huffman-coded
-    sample diffs (DC-style SSSS categories, SSSS=16 → +32768), modulo
-    2^16 arithmetic, predictors 1-7 with the first-sample / first-line
-    defaults of H.1.2.1, inverse point transform << Pt at the end."""
-    if predictor not in range(1, 8):
-        raise ValueError(f"bad lossless predictor {predictor}")
-    out = np.zeros((h, w), np.int64)
-    default = 1 << (prec - 1 - pt)
-    for y in range(h):
-        for x in range(w):
-            s = br.huff(dc_t)
-            if s == 16:
-                diff = 32768
-            else:
-                diff = _extend(br.read(s), s) if s else 0
-            if y == 0 and x == 0:
-                pred = default
-            elif y == 0:
-                pred = int(out[0, x - 1])
-            elif x == 0:
-                pred = int(out[y - 1, 0])
-            else:
-                ra = int(out[y, x - 1])
-                rb = int(out[y - 1, x])
-                rc = int(out[y - 1, x - 1])
-                pred = [
-                    ra, rb, rc, ra + rb - rc,
-                    ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                    (ra + rb) >> 1,
-                ][predictor - 1]
-            out[y, x] = (pred + diff) & 0xFFFF
-    return out << pt
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """JPEG → (h, w, 3) uint8 RGB.  Baseline sequential (SOF0),
-    extended sequential (SOF1, 8/12-bit precision), progressive (SOF2:
-    spectral selection + successive approximation, DC/AC first and
-    refinement scans, EOB runs, restart intervals) and lossless (SOF3,
-    single-component).  12-bit frames are scaled back to the 8-bit
-    output contract after the level shift."""
+    """JPEG → (h, w, 3) uint8 RGB.  8-bit Huffman-coded frames only:
+    baseline sequential (SOF0), extended sequential (SOF1) and
+    progressive (SOF2: spectral selection + successive approximation,
+    DC/AC first and refinement scans, EOB runs, restart intervals)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -1121,14 +580,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     grid: dict[int, tuple[int, int, int, int]] = {}  # cid -> bw,bh grid+used
     n_scans = 0
     hmax = vmax = mcux = mcuy = 0
-    precision = 8
-    lossless = False
-    arith = False
-    # arithmetic conditioning defaults (F.1.4.4.1.2 / F.1.4.4.2):
-    # DC (L, U) = (0, 1); AC Kx = 5 — overridden by a DAC segment
-    dc_cond: dict[int, tuple[int, int]] = {t: (0, 1) for t in range(4)}
-    ac_cond: dict[int, int] = {t: 5 for t in range(4)}
-    planes_ll: dict[int, np.ndarray] = {}  # lossless: cid -> (h, w)
     while pos < len(data) - 1:
         if data[pos] != 0xFF:
             raise ValueError("bad JPEG marker stream")
@@ -1138,64 +589,51 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             continue
         if marker == 0xD9:  # EOI
             break
+        if marker in _UNSUPPORTED_FRAMES:
+            name = "DHP" if marker == 0xDE else f"SOF{marker - 0xC0}"
+            raise ValueError(
+                f"unsupported JPEG frame 0xFF{marker:02X} ({name})"
+            )
         ln = struct.unpack(">H", data[pos : pos + 2])[0]
         seg = data[pos + 2 : pos + ln]
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
                 pq, tq = seg[i] >> 4, seg[i] & 15
+                # 16-bit tables (pq=1) belong to 12-bit frames, which
+                # the SOF precision check rejects by name
                 if pq == 0:
                     qtables[tq] = np.frombuffer(
                         seg, np.uint8, 64, i + 1
                     ).astype(np.int64)
-                    i += 65
-                else:  # 16-bit entries (12-bit precision frames)
-                    qtables[tq] = np.frombuffer(
-                        seg, ">u2", 64, i + 1
-                    ).astype(np.int64)
-                    i += 129
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA):
-            # SOF0 baseline / SOF1 extended sequential (8/12-bit) /
-            # SOF2 progressive / SOF3 lossless / SOF9-SOF10 arithmetic
+                i += 65 + 64 * pq
+        elif marker in (0xC0, 0xC1, 0xC2):
+            # SOF0 baseline / SOF1 extended sequential / SOF2 progressive
             prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            lossless = marker == 0xC3
-            arith = marker in (0xC9, 0xCA)
-            if lossless:
-                if prec not in range(2, 17):
-                    raise ValueError(f"bad lossless precision {prec}")
-            elif prec not in (8, 12):
-                raise ValueError("only 8/12-bit DCT precision supported")
-            if prec == 12 and marker == 0xC0:
-                raise ValueError("12-bit precision is illegal in SOF0")
+            if prec != 8:
+                raise ValueError(
+                    f"unsupported JPEG frame 0xFF{marker:02X} "
+                    f"(SOF{marker - 0xC0}) precision {prec}: 8-bit only"
+                )
             comps = []
             for i in range(nc):
                 cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
                 comps.append((cid, hv >> 4, hv & 15, tq))
             frame = (h, w, comps)
-            precision = prec
-            if not lossless:
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
-                for cid, hi, v, _ in comps:
-                    # padded MCU grid; non-interleaved scans cover only
-                    # the component's true block dims (spec A.2.2)
-                    gw, gh = mcux * hi, mcuy * v
-                    cw = -(-(w * hi) // hmax)  # component dims (ceil)
-                    ch = -(-(h * v) // vmax)
-                    bw = -(-cw // 8)
-                    bh = -(-ch // 8)
-                    coefs[cid] = np.zeros((gh, gw, 64), np.int64)
-                    grid[cid] = (gw, gh, bw, bh)
-        elif marker == 0xDE:  # DHP: hierarchical stream (Annex J)
-            return _decode_jpeg_hier(data)
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"differential frame 0xFF{marker:02X} outside a "
-                "hierarchical stream (no preceding DHP)"
-            )
+            hmax = max(c[1] for c in comps)
+            vmax = max(c[2] for c in comps)
+            mcux = -(-w // (8 * hmax))
+            mcuy = -(-h // (8 * vmax))
+            for cid, hi, v, _ in comps:
+                # padded MCU grid; non-interleaved scans cover only
+                # the component's true block dims (spec A.2.2)
+                gw, gh = mcux * hi, mcuy * v
+                cw = -(-(w * hi) // hmax)  # component dims (ceil)
+                ch = -(-(h * v) // vmax)
+                bw = -(-cw // 8)
+                bh = -(-ch // 8)
+                coefs[cid] = np.zeros((gh, gw, 64), np.int64)
+                grid[cid] = (gw, gh, bw, bh)
         elif marker == 0xC4:  # DHT
             i = 0
             while i < len(seg):
@@ -1205,13 +643,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 vals = list(seg[i + 17 : i + 17 + nv])
                 huff[(tc, th)] = _build_huff(bits, vals)
                 i += 17 + nv
-        elif marker == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
-            for i in range(0, len(seg), 2):
-                tc, tb = seg[i] >> 4, seg[i] & 15
-                if tc == 0:
-                    dc_cond[tb] = (seg[i + 1] & 15, seg[i + 1] >> 4)
-                else:
-                    ac_cond[tb] = seg[i + 1]
         elif marker == 0xDD:  # DRI
             restart = struct.unpack(">H", seg[:2])[0]
         elif marker == 0xDA:  # SOS
@@ -1227,84 +658,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             pos += ln
             h, w, comps = frame
             scan_tabs = {cs: (dc, ac) for cs, dc, ac in scan}
-            if arith:
-                if restart:
-                    raise ValueError(
-                        "restart markers in arithmetic scans not supported"
-                    )
-                dec = _ArithDecoder(data, pos)
-                # statistics reset at every scan start (F.1.4.4 / G.2)
-                dc_stats = {t: _Stats(_DC_STAT_BINS) for t in range(4)}
-                ac_stats = {t: _Stats(_AC_STAT_BINS) for t in range(4)}
-                fixed = _Stats(1)
-                fixed.idx[0] = _FIXED_BIN
-                if ss == 0:
-                    # DC scan, interleaved (sequential SOF9: AC follows
-                    # in the same block walk with se == 63)
-                    dc_ctx = {c[0]: 0 for c in comps}
-                    preds = {c[0]: 0 for c in comps}
-                    scomps = [c for c in comps if c[0] in scan_tabs]
-                    for m in range(mcux * mcuy):
-                        my, mx = divmod(m, mcux)
-                        for cid, hi, v, _tq in scomps:
-                            dcid, acid = scan_tabs[cid]
-                            for by in range(v):
-                                for bx in range(hi):
-                                    coef = coefs[cid][
-                                        my * v + by, mx * hi + bx
-                                    ]
-                                    if ah == 0:
-                                        diff, ctx = _arith_decode_dc(
-                                            dec, dc_stats[dcid],
-                                            dc_ctx[cid], *dc_cond[dcid],
-                                        )
-                                        preds[cid] += diff
-                                        dc_ctx[cid] = ctx
-                                        coef[0] = preds[cid] << al
-                                    elif dec.decode(fixed, 0):
-                                        coef[0] |= 1 << al
-                                    if se > 0 and ah == 0:
-                                        _arith_decode_ac(
-                                            dec, ac_stats[acid], fixed,
-                                            coef, ac_cond[acid], 1, se, al,
-                                        )
-                else:
-                    # AC scan: single component, true block raster
-                    cid, _dcid, acid = scan[0][0], *scan_tabs[scan[0][0]]
-                    _gw, _gh, bw, bh = grid[cid]
-                    for b in range(bw * bh):
-                        by, bx = divmod(b, bw)
-                        coef = coefs[cid][by, bx]
-                        if ah == 0:
-                            _arith_decode_ac(
-                                dec, ac_stats[acid], fixed, coef,
-                                ac_cond[acid], ss, se, al,
-                            )
-                        else:
-                            _arith_decode_ac_refine(
-                                dec, ac_stats[acid], fixed, coef,
-                                ss, se, al,
-                            )
-                n_scans += 1
-                pos = _skip_entropy(data, dec.pos)
-                continue
             br = _BitReader(data, pos)
-            if lossless:
-                if len(scan) != 1 or len(comps) != 1:
-                    raise ValueError(
-                        "only single-component lossless scans supported"
-                    )
-                if restart:
-                    raise ValueError(
-                        "restart markers in lossless scans not supported"
-                    )
-                cid, dc_id, _ = scan[0]
-                planes_ll[cid] = _decode_lossless_scan(
-                    br, huff[(0, dc_id)], h, w, precision, ss, al
-                )
-                n_scans += 1
-                pos = _skip_entropy(data, br.pos)
-                continue
             st = _ScanState(comps)
             if len(scan) > 1 or (ss == 0 and len(scan) == len(comps)):
                 # interleaved MCU order (DC and/or baseline full-band)
@@ -1360,20 +714,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("JPEG missing SOF/SOS")
     h, w, comps = frame
 
-    if lossless:
-        # single grayscale component (enforced at scan decode); scale
-        # non-8-bit precisions down/up to the uint8 output contract
-        plane = planes_ll[comps[0][0]]
-        if precision > 8:
-            plane = plane >> (precision - 8)
-        elif precision < 8:
-            plane = plane << (8 - precision)
-        g = np.clip(plane, 0, 255).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-
     # dequantize + inverse zigzag + batched IDCT per component
-    shift = float(1 << (precision - 1))
-    maxv = float((1 << precision) - 1)
     out_planes = []
     for cid, hi, v, tq in comps:
         deq = coefs[cid] * qtables[tq]  # (bh, bw, 64) zigzag order
@@ -1386,9 +727,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         plane = blk.transpose(0, 2, 1, 3).reshape(
             nat.shape[0] * 8, nat.shape[1] * 8
         )
-        p = np.clip(plane + shift, 0, maxv)
-        if precision == 12:
-            p = p / 16.0  # back to the 8-bit output scale
+        p = np.clip(plane + 128.0, 0, 255.0)
         p = np.repeat(np.repeat(p, vmax // v, axis=0), hmax // hi, axis=1)
         out_planes.append(p[:h, :w])
     if len(out_planes) == 1:
@@ -1407,277 +746,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     ).astype(np.uint8)
 
 
-# --- hierarchical JPEG (ITU-T T.81 Annex J) ---------------------------------
-
-
-def _hier_upsample(p: np.ndarray, eh: int, ev: int) -> np.ndarray:
-    """Reference-component expansion, spec J.1.1.2: doubled axis gets
-    x[2i] = in[i], x[2i+1] = (in[i] + in[i+1] + 1) >> 1, last column/row
-    replicated.  Integer-exact (the bit-exact filter the spec fixes so
-    encoder and decoder reconstruct identical references)."""
-    p = p.astype(np.int64)
-    if eh:
-        q = np.empty((p.shape[0], 2 * p.shape[1]), np.int64)
-        q[:, 0::2] = p
-        if p.shape[1] > 1:
-            q[:, 1:-1:2] = (p[:, :-1] + p[:, 1:] + 1) >> 1
-        q[:, -1] = p[:, -1]
-        p = q
-    if ev:
-        q = np.empty((2 * p.shape[0], p.shape[1]), np.int64)
-        q[0::2, :] = p
-        if p.shape[0] > 1:
-            q[1:-1:2, :] = (p[:-1, :] + p[1:, :] + 1) >> 1
-        q[-1, :] = p[-1, :]
-        p = q
-    return p
-
-
-def _decode_lossless_diff_scan(
-    br: _BitReader, dc_t: dict, ref: np.ndarray, h: int, w: int
-) -> np.ndarray:
-    """Differential lossless scan (SOF7, spec J.1.1.3/H): the coded
-    values are sample-minus-reference diffs — no spatial predictor —
-    added back modulo 2^16."""
-    out = np.zeros((h, w), np.int64)
-    for y in range(h):
-        for x in range(w):
-            s = br.huff(dc_t)
-            if s == 16:
-                diff = 32768
-            else:
-                diff = _extend(br.read(s), s) if s else 0
-            out[y, x] = (int(ref[y, x]) + diff) & 0xFFFF
-    return out
-
-
-def _decode_jpeg_hier(data: bytes) -> np.ndarray:
-    """Hierarchical JPEG (Annex J): DHP-led pyramid of frames — a
-    non-differential first frame per component followed by EXP-expanded
-    differential refinement frames whose decoded values add onto the
-    upsampled reference reconstruction.
-
-    Supported frame types inside the pyramid: Huffman sequential DCT
-    (SOF0/SOF1 non-differential, SOF5 differential) and lossless
-    (SOF3 non-differential, SOF7 differential); components must share
-    sampling factors (the 4:4:4/grayscale pyramids the fixture encoders
-    emit).  Progressive (SOF6) and arithmetic (SOF13-15) differential
-    frames reject explicitly — with no independent implementation to
-    cross-validate against (libjpeg has no hierarchical mode at all),
-    only the self-roundtrip-pinned subset is claimed."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    dhp = None  # (precision, H, W, comps)
-    refs: dict[int, np.ndarray] = {}  # cid -> int64 (h, w) reconstruction
-    pending_exp: tuple[int, int] | None = None
-    restart = 0
-    fr: dict | None = None  # current frame context
-
-    def finish_frame() -> None:
-        nonlocal fr
-        if fr is None:
-            return
-        prec = fr["prec"]
-        shift = 1 << (prec - 1)
-        maxv = (1 << prec) - 1
-        for cid, _hi, _vi, tq in fr["comps"]:
-            if fr["lossless"]:
-                recon = fr["planes"][cid]
-            else:
-                deq = fr["coefs"][cid] * qtables[tq]
-                nat = np.zeros_like(deq, dtype=np.float64)
-                nat[..., ZIGZAG] = deq
-                blocks = nat.reshape(*nat.shape[:2], 8, 8)
-                blk = np.einsum(
-                    "ij,mnjk,kl->mnil", _DCT_C.T, blocks, _DCT_C,
-                    optimize=True,
-                )
-                plane = blk.transpose(0, 2, 1, 3).reshape(
-                    nat.shape[0] * 8, nat.shape[1] * 8
-                )[: fr["h"], : fr["w"]]
-                vals = np.rint(plane).astype(np.int64)
-                if fr["diff"]:
-                    recon = np.clip(refs[cid] + vals, 0, maxv)
-                else:
-                    recon = np.clip(vals + shift, 0, maxv)
-            refs[cid] = recon
-        fr = None
-
-    while pos < len(data) - 1:
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = data[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        ln = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + ln]
-        if marker == 0xDB:  # DQT (tables persist across frames, B.2.4.1)
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                if pq == 0:
-                    qtables[tq] = np.frombuffer(
-                        seg, np.uint8, 64, i + 1
-                    ).astype(np.int64)
-                    i += 65
-                else:
-                    qtables[tq] = np.frombuffer(
-                        seg, ">u2", 64, i + 1
-                    ).astype(np.int64)
-                    i += 129
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                bits = list(seg[i + 1 : i + 17])
-                nv = sum(bits)
-                vals = list(seg[i + 17 : i + 17 + nv])
-                huff[(tc, th)] = _build_huff(bits, vals)
-                i += 17 + nv
-        elif marker == 0xDD:  # DRI
-            restart = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDE:  # DHP
-            prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise ValueError("hierarchical: 8-bit precision only")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            dhp = (prec, h, w, comps)
-        elif marker == 0xDF:  # EXP: expand reference for the next frame
-            finish_frame()
-            pending_exp = (seg[0] >> 4, seg[0] & 15)
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC7):
-            finish_frame()
-            if dhp is None:
-                raise ValueError("hierarchical frame before DHP")
-            diff = marker in (0xC5, 0xC7)
-            lossless = marker in (0xC3, 0xC7)
-            prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise ValueError("hierarchical: 8-bit precision only")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
-                if (hv >> 4, hv & 15) != (1, 1):
-                    raise ValueError(
-                        "hierarchical: components must be unsubsampled"
-                    )
-                comps.append((cid, 1, 1, tq))
-            if diff:
-                eh, ev = pending_exp or (0, 0)
-                for cid, *_ in comps:
-                    if cid not in refs:
-                        raise ValueError(
-                            "differential frame without reference"
-                        )
-                    refs[cid] = _hier_upsample(refs[cid], eh, ev)[:h, :w]
-                    if refs[cid].shape != (h, w):
-                        raise ValueError(
-                            "reference/frame size mismatch after EXP"
-                        )
-                pending_exp = None
-            fr = {
-                "diff": diff, "lossless": lossless, "prec": prec,
-                "h": h, "w": w, "comps": comps,
-                "coefs": {
-                    c[0]: np.zeros((-(-h // 8), -(-w // 8), 64), np.int64)
-                    for c in comps
-                },
-                "planes": {},
-            }
-        elif marker in (0xC2, 0xC6, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"unsupported frame type 0xFF{marker:02X} inside a "
-                "hierarchical stream (Huffman sequential/lossless only)"
-            )
-        elif marker == 0xDA:  # SOS
-            if fr is None:
-                raise ValueError("hierarchical SOS outside a frame")
-            ns = seg[0]
-            scan = []
-            for i in range(ns):
-                cs, tt = seg[1 + 2 * i], seg[2 + 2 * i]
-                scan.append((cs, tt >> 4, tt & 15))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            pos += ln
-            br = _BitReader(data, pos)
-            scan_tabs = {cs: (dc, ac) for cs, dc, ac in scan}
-            if fr["lossless"]:
-                if len(scan) != 1:
-                    raise ValueError(
-                        "hierarchical: single-component lossless scans only"
-                    )
-                cid, dc_id, _ = scan[0]
-                if fr["diff"]:
-                    # Ss must be 0 in differential lossless scans (J.1.1.3)
-                    fr["planes"][cid] = _decode_lossless_diff_scan(
-                        br, huff[(0, dc_id)], refs[cid], fr["h"], fr["w"]
-                    )
-                else:
-                    fr["planes"][cid] = _decode_lossless_scan(
-                        br, huff[(0, dc_id)], fr["h"], fr["w"],
-                        fr["prec"], ss, seg[3 + 2 * ns] & 15,
-                    )
-            else:
-                st = _ScanState(fr["comps"])
-                scomps = [c for c in fr["comps"] if c[0] in scan_tabs]
-                bw_g = -(-fr["w"] // 8)
-                bh_g = -(-fr["h"] // 8)
-                for b in range(bw_g * bh_g):
-                    if restart and b and b % restart == 0:
-                        br.expect_rst()
-                        st.reset()
-                    by, bx = divmod(b, bw_g)
-                    for cid, _hi, _vi, _tq in scomps:
-                        dc_id, ac_id = scan_tabs[cid]
-                        coef = fr["coefs"][cid][by, bx]
-                        if fr["diff"]:
-                            # DC prediction is zero in differential
-                            # frames (F.2.1.3.1): the coded value IS the
-                            # block's DC
-                            st.preds[cid] = 0
-                        _decode_dc(br, st, coef, cid, huff[(0, dc_id)], 0, 0)
-                        if se > 0:
-                            _decode_ac_first(
-                                br, st, coef, huff[(1, ac_id)],
-                                max(ss, 1), se, 0,
-                            )
-            pos = _skip_entropy(data, br.pos)
-            continue
-        pos += ln
-    finish_frame()
-    if dhp is None or not refs:
-        raise ValueError("hierarchical stream missing DHP/frames")
-    _prec, h, w, comps = dhp
-    planes = []
-    for cid, *_ in comps:
-        p = refs[cid]
-        if p.shape != (h, w):
-            raise ValueError("pyramid did not reach the DHP dimensions")
-        planes.append(p.astype(np.float64))
-    if len(planes) == 1:
-        g = np.clip(planes[0], 0, 255).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(planes) != 3:
-        raise ValueError(f"{len(planes)}-component hierarchical JPEG")
-    y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(
-        np.rint(np.stack([r, g, b], axis=2)), 0, 255
-    ).astype(np.uint8)
-
-
-# --- baseline JPEG encoder (fixtures; grayscale or 4:4:4 color) -------------
+# --- baseline JPEG encoder (fixtures; gray or 4:4:4/4:2:2/4:2:0 color) ------
 
 
 class _BitWriter:
@@ -1719,15 +788,6 @@ def _category(v: int) -> int:
     return int(v).bit_length() if v >= 0 else int(-v).bit_length()
 
 
-def _quant_zz(
-    block: np.ndarray, q: np.ndarray, shift: float = 128.0
-) -> np.ndarray:
-    """Forward DCT + quantize one 8x8 block → zigzag-order int64[64]."""
-    cf = _DCT_C @ (block.astype(np.float64) - shift) @ _DCT_C.T
-    coef = np.rint(cf.reshape(64) / q.astype(np.float64)).astype(np.int64)
-    return coef[ZIGZAG]
-
-
 def _write_block_zz(
     bw: _BitWriter,
     zz: np.ndarray,
@@ -1765,18 +825,6 @@ def _write_block_zz(
     return dc
 
 
-def _encode_block(
-    bw: _BitWriter,
-    block: np.ndarray,
-    q: np.ndarray,
-    pred: int,
-    dc_enc: dict,
-    ac_enc: dict,
-    shift: float = 128.0,
-) -> int:
-    return _write_block_zz(bw, _quant_zz(block, q, shift), pred, dc_enc, ac_enc)
-
-
 def _dht_segment(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
     payload = bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
     return b"\xff\xc4" + struct.pack(">H", len(payload) + 2) + payload
@@ -1795,458 +843,8 @@ def _block_mean_pool(p: np.ndarray, fy: int, fx: int) -> np.ndarray:
     return pp.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
 
 
-def encode_jpeg(
-    img: np.ndarray,
-    quality: int = 85,
-    subsampling: str = "444",
-    restart_interval: int = 0,
-    precision: int = 8,
-    arithmetic: bool = False,
-) -> bytes:
-    """(h, w) gray or (h, w, 3) RGB uint8 → baseline JFIF.
-
-    ``subsampling``: '444', '422' or '420' (ignored for gray);
-    ``restart_interval``: emit DRI + RSTn every N MCUs (0 = none);
-    ``precision``: 8 (SOF0 baseline) or 12 (SOF1 extended sequential —
-    samples and quant tables are both scaled x16, so the quantized
-    coefficient stream is IDENTICAL to the 8-bit encoding and the
-    decoded image is byte-identical to the baseline decode; what the
-    12-bit stream exercises is the SOF1/16-bit-DQT/level-shift-2048
-    decode path, pinned in tests);
-    ``arithmetic``: entropy-code the SAME quantized coefficients with
-    the T.81 Annex D/F arithmetic coder (SOF9, default conditioning,
-    no DHT) — again decode-identical to the Huffman stream by
-    construction."""
-    if precision not in (8, 12):
-        raise ValueError("precision must be 8 or 12")
-    if arithmetic and (restart_interval or precision != 8):
-        raise ValueError(
-            "arithmetic encoder supports 8-bit, no restarts"
-        )
-    sc = 1 if precision == 8 else 16
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    # libjpeg quality scaling of the Annex K tables
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    ql = np.clip((QTABLE_LUMA * scale + 50) // 100, 1, 255) * sc
-    qc = np.clip((QTABLE_CHROMA * scale + 50) // 100, 1, 255) * sc
-    samp = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}[subsampling]
-    factors = [(1, 1)] if gray else [samp, (1, 1), (1, 1)]
-    nc = len(factors)
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-    for tq, q in ((0, ql),) if gray else ((0, ql), (1, qc)):
-        if precision == 8:
-            out += b"\xff\xdb" + struct.pack(">H", 67) + bytes(
-                [tq]
-            ) + bytes(int(q[z]) for z in ZIGZAG)
-        else:  # pq=1: 16-bit entries
-            out += b"\xff\xdb" + struct.pack(">H", 131) + bytes(
-                [0x10 | tq]
-            ) + b"".join(struct.pack(">H", int(q[z])) for z in ZIGZAG)
-    sof = struct.pack(">BHHB", precision, h, w, nc)
-    for i in range(nc):
-        hi, vi = factors[i]
-        sof += bytes([i + 1, hi << 4 | vi, 0 if i == 0 else 1])
-    if arithmetic:
-        sof_marker = b"\xff\xc9"
-    else:
-        sof_marker = b"\xff\xc0" if precision == 8 else b"\xff\xc1"
-    out += sof_marker + struct.pack(">H", len(sof) + 2) + sof
-    if not arithmetic:
-        out += _dht_segment(0, 0, *HUFF_DC_LUMA)
-        out += _dht_segment(1, 0, *HUFF_AC_LUMA)
-        if not gray:
-            out += _dht_segment(0, 1, *HUFF_DC_CHROMA)
-            out += _dht_segment(1, 1, *HUFF_AC_CHROMA)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00 if i == 0 else 0x11])
-    sos += b"\x00\x3f\x00"
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-
-    if gray:
-        planes = [img.astype(np.float64)]
-        qs = [ql]
-    else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        yp = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        planes = [yp, cb, cr]
-        qs = [ql, qc, qc]
-    dc_l = _huff_encode_map(*HUFF_DC_LUMA)
-    ac_l = _huff_encode_map(*HUFF_AC_LUMA)
-    dc_c = _huff_encode_map(*HUFF_DC_CHROMA)
-    ac_c = _huff_encode_map(*HUFF_AC_CHROMA)
-    encs = [(dc_l, ac_l)] + [(dc_c, ac_c)] * (nc - 1)
-
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    padded = []
-    for ci, p in enumerate(planes):
-        hi, vi = factors[ci]
-        sub = _block_mean_pool(p, vmax // vi, hmax // hi)
-        sh, sw = sub.shape
-        pp = np.empty((mcuy * vi * 8, mcux * hi * 8))
-        pp[:sh, :sw] = sub
-        pp[sh:, :sw] = sub[sh - 1 : sh, :]
-        pp[:, sw:] = pp[:, sw - 1 : sw]
-        padded.append(np.clip(pp, 0, 255) * sc)
-
-    if arithmetic:
-        # same coefficient walk, arithmetic entropy layer (Annex F.1.4)
-        enc = _ArithEncoder()
-        dc_stats = {t: _Stats(_DC_STAT_BINS) for t in range(2)}
-        ac_stats = {t: _Stats(_AC_STAT_BINS) for t in range(2)}
-        fixed = _Stats(1)
-        fixed.idx[0] = _FIXED_BIN
-        dc_ctx = [0] * nc
-        apreds = [0] * nc
-        for m in range(mcux * mcuy):
-            my, mx = divmod(m, mcux)
-            for ci in range(nc):
-                hi, vi = factors[ci]
-                tbl = 0 if ci == 0 else 1
-                for by in range(vi):
-                    for bx in range(hi):
-                        y0 = (my * vi + by) * 8
-                        x0 = (mx * hi + bx) * 8
-                        blk = padded[ci][y0 : y0 + 8, x0 : x0 + 8]
-                        zz = _quant_zz(blk, qs[ci], 128.0 * sc)
-                        dc = int(zz[0])
-                        dc_ctx[ci] = _arith_encode_dc(
-                            enc, dc_stats[tbl], dc_ctx[ci],
-                            dc - apreds[ci], 0, 1,
-                        )
-                        apreds[ci] = dc
-                        _arith_encode_ac(enc, ac_stats[tbl], fixed, zz, 5)
-        out += enc.flush()
-        out += b"\xff\xd9"  # EOI
-        return bytes(out)
-
-    bwr = _BitWriter()
-    preds = [0] * nc
-    rst = 0
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            bwr.flush()
-            bwr.out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            preds = [0] * nc
-        my, mx = divmod(m, mcux)
-        for ci in range(nc):
-            hi, vi = factors[ci]
-            for by in range(vi):
-                for bx in range(hi):
-                    y0 = (my * vi + by) * 8
-                    x0 = (mx * hi + bx) * 8
-                    blk = padded[ci][y0 : y0 + 8, x0 : x0 + 8]
-                    preds[ci] = _encode_block(
-                        bwr, blk, qs[ci], preds[ci], *encs[ci],
-                        shift=128.0 * sc,
-                    )
-    bwr.flush()
-    out += bwr.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def encode_jpeg_lossless(img: np.ndarray, predictor: int = 1) -> bytes:
-    """(h, w) gray or (h, w, 3) gray-valued RGB uint8 → SOF3 lossless
-    JPEG (single 8-bit component, predictor 1-7, no point transform) —
-    the fixture encoder for the Annex-H decode path.  Exact roundtrip:
-    decode_jpeg returns the input replicated to RGB bit-for-bit."""
-    if predictor not in range(1, 8):
-        raise ValueError(f"bad lossless predictor {predictor}")
-    g = img if img.ndim == 2 else img[:, :, 0]
-    if img.ndim == 3:
-        assert (img == g[:, :, None]).all(), "not a gray-valued image"
-    h, w = g.shape
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    out += b"\xff\xc3" + struct.pack(">H", len(sof) + 2) + sof
-    # DC luma categories 0..11 cover the 8-bit diff range (SSSS <= 8)
-    out += _dht_segment(0, 0, *HUFF_DC_LUMA)
-    sos = bytes([1, 1, 0x00, predictor, 0, 0x00])
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-    dc_enc = _huff_encode_map(*HUFF_DC_LUMA)
-    bwr = _BitWriter()
-    gi = g.astype(np.int64)
-    for y in range(h):
-        for x in range(w):
-            if y == 0 and x == 0:
-                pred = 128  # 1 << (P - 1 - Pt)
-            elif y == 0:
-                pred = int(gi[0, x - 1])
-            elif x == 0:
-                pred = int(gi[y - 1, 0])
-            else:
-                ra = int(gi[y, x - 1])
-                rb = int(gi[y - 1, x])
-                rc = int(gi[y - 1, x - 1])
-                pred = [
-                    ra, rb, rc, ra + rb - rc,
-                    ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                    (ra + rb) >> 1,
-                ][predictor - 1]
-            diff = int(gi[y, x]) - pred
-            s = _category(diff)
-            code, ln = dc_enc[s]
-            bwr.write(code, ln)
-            if s:
-                bwr.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    bwr.flush()
-    out += bwr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# --- hierarchical JPEG encoders (fixtures; exercise the Annex J decoder) ----
-
-
-def _pad8(p: np.ndarray) -> np.ndarray:
-    """Edge-replicate a plane to 8-multiples (block padding, A.2.1)."""
-    h, w = p.shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    pp = np.empty((ph, pw))
-    pp[:h, :w] = p
-    pp[h:, :w] = p[h - 1 : h, :]
-    pp[:, w:] = pp[:, w - 1 : w]
-    return pp
-
-
-def _idct_zz(zz: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """(bh, bw, 64) quantized zigzag coefficients → float sample plane
-    (the decoder's exact dequant + IDCT, reused so the encoder tracks
-    the decoder's reference reconstruction bit-for-bit).  ``q`` is in
-    natural order (as the encoders hold it); the decoder multiplies
-    zigzag coefficients by the zigzag-ordered DQT payload, so reorder."""
-    deq = zz * q[ZIGZAG]
-    nat = np.zeros_like(deq, dtype=np.float64)
-    nat[..., ZIGZAG] = deq
-    blocks = nat.reshape(*nat.shape[:2], 8, 8)
-    blk = np.einsum(
-        "ij,mnjk,kl->mnil", _DCT_C.T, blocks, _DCT_C, optimize=True
-    )
-    return blk.transpose(0, 2, 1, 3).reshape(
-        nat.shape[0] * 8, nat.shape[1] * 8
-    )
-
-
-def _sof_payload(h: int, w: int, comps: list[tuple[int, int]]) -> bytes:
-    """SOF/DHP parameter block: precision 8, dims, (cid, tq) 1x1 comps."""
-    sof = struct.pack(">BHHB", 8, h, w, len(comps))
-    for cid, tq in comps:
-        sof += bytes([cid, 0x11, tq])
-    return sof
-
-
-def encode_jpeg_hier(
-    img: np.ndarray, quality: int = 92, levels: int = 2
-) -> bytes:
-    """(h, w) gray or (h, w, 3) RGB uint8 → hierarchical JPEG (Annex J):
-    DHP, a non-differential SOF0 frame at the coarsest pyramid level,
-    then per finer level an EXP(1,1) expansion and a differential SOF5
-    frame coding (level − upsampled reconstruction).  4:4:4 components;
-    the encoder mirrors the decoder's reference reconstruction exactly
-    (same quantized coefficients → same IDCT → same J.1.1.2 upsample),
-    so the pyramid refines the true decoder state, not an estimate."""
-    if levels < 1:
-        raise ValueError("levels >= 1")
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    ql = np.clip((QTABLE_LUMA * scale + 50) // 100, 1, 255)
-    qc = np.clip((QTABLE_CHROMA * scale + 50) // 100, 1, 255)
-    if gray:
-        planes = [img.astype(np.float64)]
-        qs, tqs = [ql], [0]
-    else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-        ]
-        qs, tqs = [ql, qc, qc], [0, 1, 1]
-    nc = len(planes)
-    dc_l = _huff_encode_map(*HUFF_DC_LUMA)
-    ac_l = _huff_encode_map(*HUFF_AC_LUMA)
-    dc_c = _huff_encode_map(*HUFF_DC_CHROMA)
-    ac_c = _huff_encode_map(*HUFF_AC_CHROMA)
-    encs = [(dc_l, ac_l)] + [(dc_c, ac_c)] * (nc - 1)
-
-    out = bytearray(b"\xff\xd8")
-    for tq, q in ((0, ql),) if gray else ((0, ql), (1, qc)):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(q[z]) for z in ZIGZAG
-        )
-    comps = [(i + 1, tqs[i]) for i in range(nc)]
-    dhp = _sof_payload(h, w, comps)
-    out += b"\xff\xde" + struct.pack(">H", len(dhp) + 2) + dhp
-    out += _dht_segment(0, 0, *HUFF_DC_LUMA)
-    out += _dht_segment(1, 0, *HUFF_AC_LUMA)
-    if not gray:
-        out += _dht_segment(0, 1, *HUFF_DC_CHROMA)
-        out += _dht_segment(1, 1, *HUFF_AC_CHROMA)
-
-    recons: list[np.ndarray] | None = None
-    for k in reversed(range(levels)):
-        f = 1 << k
-        lh, lw = -(-h // f), -(-w // f)
-        lplanes = [
-            _block_mean_pool(p, f, f)[:lh, :lw] for p in planes
-        ]
-        diff = recons is not None
-        if diff:
-            out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP
-            refs = [_hier_upsample(rc, 1, 1)[:lh, :lw] for rc in recons]
-        sof = _sof_payload(lh, lw, comps)
-        out += (b"\xff\xc5" if diff else b"\xff\xc0") + struct.pack(
-            ">H", len(sof) + 2
-        ) + sof
-        sos = bytes([nc])
-        for i in range(nc):
-            sos += bytes([i + 1, 0x00 if i == 0 else 0x11])
-        sos += b"\x00\x3f\x00"
-        out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-        bwr = _BitWriter()
-        preds = [0] * nc
-        bw_g, bh_g = -(-lw // 8), -(-lh // 8)
-        zzs = [
-            np.zeros((bh_g, bw_g, 64), np.int64) for _ in range(nc)
-        ]
-        padded = [
-            _pad8(
-                (lplanes[ci] - refs[ci]) if diff else lplanes[ci]
-            )
-            for ci in range(nc)
-        ]
-        for b in range(bw_g * bh_g):
-            by, bx = divmod(b, bw_g)
-            for ci in range(nc):
-                blk = padded[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                zz = _quant_zz(blk, qs[ci], 0.0 if diff else 128.0)
-                zzs[ci][by, bx] = zz
-                if diff:
-                    # DC prediction is zero in differential frames
-                    _write_block_zz(bwr, zz, 0, *encs[ci])
-                else:
-                    preds[ci] = _write_block_zz(bwr, zz, preds[ci], *encs[ci])
-        bwr.flush()
-        out += bwr.out
-        new_recons = []
-        for ci in range(nc):
-            vals = np.rint(_idct_zz(zzs[ci], qs[ci])[:lh, :lw]).astype(
-                np.int64
-            )
-            if diff:
-                rc = np.clip(refs[ci] + vals, 0, 255)
-            else:
-                rc = np.clip(vals + 128, 0, 255)
-            new_recons.append(rc)
-        recons = new_recons
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _write_lossless_plane(
-    bwr: _BitWriter, gi: np.ndarray, dc_enc: dict
-) -> None:
-    """Predictor-1 lossless scan body (shared with encode_jpeg_lossless's
-    inline loop shape; first sample predicts 128 per H.1.2.1)."""
-    h, w = gi.shape
-    for y in range(h):
-        for x in range(w):
-            if y == 0 and x == 0:
-                pred = 128
-            elif y == 0:
-                pred = int(gi[0, x - 1])
-            elif x == 0:
-                pred = int(gi[y - 1, 0])
-            else:
-                pred = int(gi[y, x - 1])
-            diff = int(gi[y, x]) - pred
-            s = _category(diff)
-            code, ln = dc_enc[s]
-            bwr.write(code, ln)
-            if s:
-                bwr.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-
-
-def encode_jpeg_hier_lossless(img: np.ndarray, levels: int = 2) -> bytes:
-    """(h, w) gray or gray-valued RGB uint8 → lossless hierarchical JPEG:
-    SOF3 (predictor 1) at the coarsest level, then EXP + SOF7 differential
-    lossless refinements.  Every refinement codes exact sample diffs, so
-    ``decode_jpeg`` returns the input bit-for-bit — the end-to-end pin
-    for the Annex J marker/EXP/reference plumbing."""
-    g = img if img.ndim == 2 else img[:, :, 0]
-    if img.ndim == 3:
-        assert (img == g[:, :, None]).all(), "not a gray-valued image"
-    h, w = g.shape
-    out = bytearray(b"\xff\xd8")
-    dhp = _sof_payload(h, w, [(1, 0)])
-    out += b"\xff\xde" + struct.pack(">H", len(dhp) + 2) + dhp
-    out += _dht_segment(0, 0, *HUFF_DC_LUMA)
-    dc_enc = _huff_encode_map(*HUFF_DC_LUMA)
-    recon: np.ndarray | None = None
-    for k in reversed(range(levels)):
-        f = 1 << k
-        lh, lw = -(-h // f), -(-w // f)
-        level = np.clip(
-            np.rint(_block_mean_pool(g.astype(np.float64), f, f)[:lh, :lw]),
-            0, 255,
-        ).astype(np.int64)
-        diff = recon is not None
-        if diff:
-            out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP
-            ref = _hier_upsample(recon, 1, 1)[:lh, :lw]
-        sof = _sof_payload(lh, lw, [(1, 0)])
-        out += (b"\xff\xc7" if diff else b"\xff\xc3") + struct.pack(
-            ">H", len(sof) + 2
-        ) + sof
-        # SOS: predictor 1 for the non-differential frame; Ss=0 in
-        # differential frames (no spatial predictor, J.1.1.3)
-        sos = bytes([1, 1, 0x00, 0 if diff else 1, 0, 0x00])
-        out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-        bwr = _BitWriter()
-        if diff:
-            d = level - ref
-            for y in range(lh):
-                for x in range(lw):
-                    v = int(d[y, x])
-                    s = _category(v)
-                    code, ln = dc_enc[s]
-                    bwr.write(code, ln)
-                    if s:
-                        bwr.write(v if v >= 0 else v + (1 << s) - 1, s)
-            recon = level
-        else:
-            _write_lossless_plane(bwr, level, dc_enc)
-            recon = level
-        bwr.flush()
-        out += bwr.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# --- progressive JPEG encoder (fixtures; exercises the SOF2 decoder) --------
-
-
 def _coef_tensors(img: np.ndarray, quality: int, subsampling: str):
-    """Forward path shared with encode_jpeg: per-component zigzag-order
+    """Forward path of both encoders: per-component zigzag-order
     quantized coefficient tensors (gh, gw, 64) over the padded MCU grid,
     plus frame metadata."""
     gray = img.ndim == 2
@@ -2292,7 +890,90 @@ def _coef_tensors(img: np.ndarray, quality: int, subsampling: str):
         ).astype(np.int64)
         tensors.append(nat[..., ZIGZAG])
         dims.append((-(-sw // 8), -(-sh // 8)))  # true (bw, bh)
-    return gray, h, w, factors, hmax, vmax, mcux, mcuy, tensors, dims, ql, qc
+    return h, w, factors, mcux, mcuy, tensors, dims, ql, qc
+
+
+def _frame_header(
+    sof: int, h: int, w: int, factors: list, ql: np.ndarray, qc: np.ndarray
+) -> bytearray:
+    """SOI + JFIF APP0 + 8-bit DQT (luma, plus chroma for color) + the
+    ``sof`` frame header with one component per sampling factor."""
+    nc = len(factors)
+    out = bytearray(b"\xff\xd8")
+    out += (
+        b"\xff\xe0"
+        + struct.pack(">H", 16)
+        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    )
+    for tq, q in ((0, ql),) if nc == 1 else ((0, ql), (1, qc)):
+        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
+            int(q[z]) for z in ZIGZAG
+        )
+    payload = struct.pack(">BHHB", 8, h, w, nc)
+    for i, (hi, vi) in enumerate(factors):
+        payload += bytes([i + 1, hi << 4 | vi, 0 if i == 0 else 1])
+    out += bytes([0xFF, sof]) + struct.pack(">H", len(payload) + 2) + payload
+    return out
+
+
+def encode_jpeg(
+    img: np.ndarray,
+    quality: int = 85,
+    subsampling: str = "444",
+    restart_interval: int = 0,
+) -> bytes:
+    """(h, w) gray or (h, w, 3) RGB uint8 → baseline (SOF0) JFIF.
+
+    ``subsampling``: '444', '422' or '420' (ignored for gray);
+    ``restart_interval``: emit DRI + RSTn every N MCUs (0 = none)."""
+    h, w, factors, mcux, mcuy, tensors, _dims, ql, qc = _coef_tensors(
+        img, quality, subsampling
+    )
+    nc = len(factors)
+    out = _frame_header(0xC0, h, w, factors, ql, qc)
+    out += _dht_segment(0, 0, *HUFF_DC_LUMA)
+    out += _dht_segment(1, 0, *HUFF_AC_LUMA)
+    if nc == 3:
+        out += _dht_segment(0, 1, *HUFF_DC_CHROMA)
+        out += _dht_segment(1, 1, *HUFF_AC_CHROMA)
+    if restart_interval:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+    sos = bytes([nc])
+    for i in range(nc):
+        sos += bytes([i + 1, 0x00 if i == 0 else 0x11])
+    sos += b"\x00\x3f\x00"
+    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
+
+    dc_l = _huff_encode_map(*HUFF_DC_LUMA)
+    ac_l = _huff_encode_map(*HUFF_AC_LUMA)
+    dc_c = _huff_encode_map(*HUFF_DC_CHROMA)
+    ac_c = _huff_encode_map(*HUFF_AC_CHROMA)
+    encs = [(dc_l, ac_l)] + [(dc_c, ac_c)] * (nc - 1)
+    bwr = _BitWriter()
+    preds = [0] * nc
+    rst = 0
+    for m in range(mcux * mcuy):
+        if restart_interval and m and m % restart_interval == 0:
+            bwr.flush()
+            bwr.out += bytes([0xFF, 0xD0 + rst])
+            rst = (rst + 1) % 8
+            preds = [0] * nc
+        my, mx = divmod(m, mcux)
+        for ci in range(nc):
+            hi, vi = factors[ci]
+            for by in range(vi):
+                for bx in range(hi):
+                    preds[ci] = _write_block_zz(
+                        bwr, tensors[ci][my * vi + by, mx * hi + bx],
+                        preds[ci], *encs[ci],
+                    )
+    bwr.flush()
+    out += bwr.out
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+# --- progressive JPEG encoder (fixtures; exercises the SOF2 decoder) --------
 
 
 class _OpBuf:
@@ -2460,24 +1141,11 @@ def encode_jpeg_progressive(
     → per-component AC refinement to Al=0.  Huffman tables are built per
     scan from the actual symbol histogram (Annex K tables lack EOBn
     codes)."""
-    (gray, h, w, factors, hmax, vmax, mcux, mcuy, tensors, dims,
-     ql, qc) = _coef_tensors(img, quality, subsampling)
-    nc = len(factors)
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    h, w, factors, mcux, mcuy, tensors, dims, ql, qc = _coef_tensors(
+        img, quality, subsampling
     )
-    for tq, q in ((0, ql),) if gray else ((0, ql), (1, qc)):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(q[z]) for z in ZIGZAG
-        )
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hi, vi = factors[i]
-        sof += bytes([i + 1, hi << 4 | vi, 0 if i == 0 else 1])
-    out += b"\xff\xc2" + struct.pack(">H", len(sof) + 2) + sof
+    nc = len(factors)
+    out = _frame_header(0xC2, h, w, factors, ql, qc)
 
     tid_of = [0] + [1] * (nc - 1)
 
@@ -2536,121 +1204,6 @@ def encode_jpeg_progressive(
         _enc_ac_refine(buf, tid_of[ci], tensors[ci], bw, bh, 1, 63, 0)
         hdr = bytes([1, ci + 1, tid_of[ci]])
         buf.emit(out, hdr + bytes([1, 63, 0x10]))
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive_arith(
-    img: np.ndarray, quality: int = 85, subsampling: str = "444"
-) -> bytes:
-    """(h, w) gray or (h, w, 3) RGB uint8 → progressive ARITHMETIC
-    (SOF10) JFIF: the SAME scan script as encode_jpeg_progressive
-    (interleaved DC first at Al=1 → per-component AC bands 1-5 / 6-63
-    at Al=1 → DC refinement → AC refinement to Al=0) with the Annex G
-    arithmetic entropy layer — fresh QM coder and statistics per scan,
-    default conditioning.  Decodes byte-identical to the progressive
-    and baseline streams of the same image (same coefficients)."""
-    (gray, h, w, factors, hmax, vmax, mcux, mcuy, tensors, dims,
-     ql, qc) = _coef_tensors(img, quality, subsampling)
-    nc = len(factors)
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xe0"
-        + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-    for tq, q in ((0, ql),) if gray else ((0, ql), (1, qc)):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(q[z]) for z in ZIGZAG
-        )
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        hi, vi = factors[i]
-        sof += bytes([i + 1, hi << 4 | vi, 0 if i == 0 else 1])
-    out += b"\xff\xca" + struct.pack(">H", len(sof) + 2) + sof
-    tid_of = [0] + [1] * (nc - 1)
-
-    def emit_scan(hdr_comps: bytes, band: bytes, payload: bytes) -> None:
-        sos = hdr_comps + band
-        out.extend(b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos)
-        out.extend(payload)
-
-    def fresh():
-        enc = _ArithEncoder()
-        fixed = _Stats(1)
-        fixed.idx[0] = _FIXED_BIN
-        return enc, fixed
-
-    # scan 1: DC first, interleaved, Al=1
-    enc, fixed = fresh()
-    dstats = {t: _Stats(_DC_STAT_BINS) for t in range(2)}
-    dctx = [0] * nc
-    preds = [0] * nc
-    for m in range(mcux * mcuy):
-        my, mx = divmod(m, mcux)
-        for ci in range(nc):
-            hi, vi = factors[ci]
-            for by in range(vi):
-                for bx in range(hi):
-                    d = int(tensors[ci][my * vi + by, mx * hi + bx, 0]) >> 1
-                    dctx[ci] = _arith_encode_dc(
-                        enc, dstats[tid_of[ci]], dctx[ci],
-                        d - preds[ci], 0, 1,
-                    )
-                    preds[ci] = d
-    hdr = bytes([nc])
-    for ci in range(nc):
-        hdr += bytes([ci + 1, tid_of[ci] << 4])
-    emit_scan(hdr, bytes([0, 0, 0x01]), enc.flush())
-
-    # scans 2..: AC first bands at Al=1, per component
-    for ss, se in ((1, 5), (6, 63)):
-        for ci in range(nc):
-            enc, fixed = fresh()
-            astats = _Stats(_AC_STAT_BINS)
-            bw, bh = dims[ci]
-            for b in range(bw * bh):
-                by, bx = divmod(b, bw)
-                _arith_encode_ac(
-                    enc, astats, fixed, tensors[ci][by, bx], 5, ss, se, 1
-                )
-            emit_scan(
-                bytes([1, ci + 1, tid_of[ci]]), bytes([ss, se, 0x01]),
-                enc.flush(),
-            )
-
-    # DC refinement: one fixed-bin decision per block
-    enc, fixed = fresh()
-    for m in range(mcux * mcuy):
-        my, mx = divmod(m, mcux)
-        for ci in range(nc):
-            hi, vi = factors[ci]
-            for by in range(vi):
-                for bx in range(hi):
-                    enc.code(
-                        fixed, 0,
-                        int(tensors[ci][my * vi + by, mx * hi + bx, 0]) & 1,
-                    )
-    hdr = bytes([nc])
-    for ci in range(nc):
-        hdr += bytes([ci + 1, 0])
-    emit_scan(hdr, bytes([0, 0, 0x10]), enc.flush())
-
-    # AC refinement to Al=0, per component
-    for ci in range(nc):
-        enc, fixed = fresh()
-        astats = _Stats(_AC_STAT_BINS)
-        bw, bh = dims[ci]
-        for b in range(bw * bh):
-            by, bx = divmod(b, bw)
-            _arith_encode_ac_refine(
-                enc, astats, fixed, tensors[ci][by, bx], 1, 63, 0
-            )
-        emit_scan(
-            bytes([1, ci + 1, tid_of[ci]]), bytes([1, 63, 0x10]),
-            enc.flush(),
-        )
 
     out += b"\xff\xd9"
     return bytes(out)

@@ -107,16 +107,16 @@ def extract_media_meta(media: DataFrame) -> DataFrame:
 
 def decode_stub(payload: bytes) -> "object":
     """Every in-scope modality decodes for REAL now: images via
-    ops/codecs.py (PPM; PNG full 8-bit, all filters, Adam7; JPEG
-    baseline SOF0 + progressive SOF2, Huffman+IDCT, 4:4:4/4:2:2/4:2:0,
-    restart markers), audio via ops/av.py decode_wav (RIFF/WAVE PCM
+    ops/codecs.py (PPM; PNG at every bit depth 1-16, all filters,
+    Adam7; 8-bit JPEG baseline SOF0 / extended SOF1 + progressive SOF2,
+    Huffman+IDCT, 4:4:4/4:2:2/4:2:0, restart markers), audio via ops/av.py decode_wav (RIFF/WAVE PCM
     u8/s16/s24/s32, multichannel) and video via ops/av.py decode_avi
     (MJPEG-in-AVI container walk + per-frame JPEG decode) — each
     oracle-checked via the image_autocrop* / audio_features /
     video_frame_sample queries.  What remains rejected (not faked):
     compressed audio (MP3/AAC/FLAC) and inter-frame video codecs
-    (H.264/VP9), plus exotic image variants the decoders reject
-    explicitly (arithmetic-coded JPEG, 16-bit depths)."""
+    (H.264/VP9), plus the JPEG frames the decoder rejects by marker
+    (lossless, hierarchical, arithmetic-coded, non-8-bit precision)."""
     if payload[:2] in (b"P6", b"\xff\xd8") or payload[:8].startswith(
         b"\x89PNG"
     ):

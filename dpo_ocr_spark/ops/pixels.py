@@ -19,12 +19,13 @@ the reference's pixel algorithms on actual arrays inside Arrow batches:
   nmah_ledgers_1.py:27-34``; detecting the gutter valley instead is this
   engine's refinement of that step (robust to off-center bindings).
 
-JPEG/PNG remain a codec plug-in point: ``decode_ppm`` is the ONLY
-format-specific function — swapping in a real decoder changes no other
-line.  The registered query builds per-doc images whose geometry is a
-pure function of doc_id, so the DuckDB oracle re-derives the expected
-crop box / gutter arithmetically while the engine does the full
-bytes → pixels → geometry work.
+Compressed images decode through ``ops/codecs.py`` (PNG, and 8-bit
+Huffman-coded baseline / progressive JPEG); ``decode_image`` sniffs the
+magic bytes and hands PPM back to ``decode_ppm``, so every format meets
+the geometry code as the same RGB array.  The registered queries build
+per-doc images whose geometry is a pure function of doc_id, so the
+DuckDB oracle re-derives the expected crop box / gutter arithmetically
+while the engine does the full bytes → pixels → geometry work.
 """
 
 from __future__ import annotations
@@ -187,8 +188,9 @@ def image_autocrop(
 ) -> DataFrame:
     """I1+I3 through real pixels: synthesize an image per doc
     (deterministic geometry), ENCODE it in ``codec`` (ppm / png /
-    baseline jpeg 4:2:0), magic-sniff DECODE it back, trim blank
-    borders, find the page-split gutter — all inside Arrow batches
+    png_adam7 / jpeg baseline / jpeg_prog progressive, JPEG at q92
+    4:2:0), magic-sniff DECODE it back, trim blank borders, find the
+    page-split gutter — all inside Arrow batches
     (mapInPandas), zero shuffles.  The oracle re-derives every output
     column as doc_id arithmetic; it is codec-independent because PNG is
     lossless and the JPEG q92 quantization error (≤10 at block edges)
@@ -201,42 +203,16 @@ def image_autocrop(
     ).select("doc_id")
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import decode_image, encode_jpeg, encode_png
-
         from .codecs import (
-            encode_jpeg_hier, encode_jpeg_hier_lossless,
-            encode_jpeg_lossless, encode_jpeg_progressive,
-            encode_jpeg_progressive_arith, encode_png_gray,
+            decode_image, encode_jpeg, encode_jpeg_progressive, encode_png,
         )
 
         encoders = {
             "ppm": lambda im: encode_ppm(im),
             "png": encode_png,
             "png_adam7": lambda im: encode_png(im, interlace=True),
-            # the fixture is pure black/white, so the 1-bit grayscale
-            # path is lossless for it — exercises the sub-byte decoder
-            "png_gray1": lambda im: encode_png_gray(im, depth=1),
             "jpeg": lambda im: encode_jpeg(im, 92, "420"),
             "jpeg_prog": lambda im: encode_jpeg_progressive(im, 92, "420"),
-            # 12-bit SOF1: x16-scaled samples+tables → decodes
-            # byte-identical to the baseline stream (pinned in tests)
-            "jpeg12": lambda im: encode_jpeg(im, 92, "420", precision=12),
-            # SOF3 lossless: exact pixels (the fixture is gray-valued)
-            "jpeg_ll": lambda im: encode_jpeg_lossless(im, 4),
-            # SOF9 arithmetic: same coefficients as baseline -> same pixels
-            "jpeg_arith": lambda im: encode_jpeg(
-                im, 92, "420", arithmetic=True
-            ),
-            # SOF10 progressive arithmetic: same scan script as the
-            # Huffman progressive stream, Annex G entropy layer
-            "jpeg_pa": lambda im: encode_jpeg_progressive_arith(
-                im, 92, "420"
-            ),
-            # Annex J hierarchical: SOF0 base + EXP + SOF5 differential
-            # refinement (q92 4:4:4 pyramid), and the exact SOF3+SOF7
-            # lossless pyramid
-            "jpeg_hier": lambda im: encode_jpeg_hier(im, 92, levels=2),
-            "jpeg_hier_ll": lambda im: encode_jpeg_hier_lossless(im, 2),
         }
         enc = encoders[codec]
         for pdf in it:

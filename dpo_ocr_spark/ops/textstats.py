@@ -127,9 +127,11 @@ def host_stats(spark, sf_dir: str):
     input for salting decisions at 100 TB (which hosts exceed a uniform
     partition's share; FIXTURES.md §1 deliberately concentrates ~10% of
     urls on one host).  Pure JVM expressions: regexp host parse, one
-    groupBy, integer-exact share (×10000 floored basis points).
+    groupBy, integer-exact share (×10000 floored basis points).  The
+    corpus total is a window sum over the per-host rows, so the corpus
+    is generated once, by the aggregate's own job.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Window, functions as F
 
     from ..corpus import build_web_pages
     from ..scale import decode_partitions
@@ -140,8 +142,9 @@ def host_stats(spark, sf_dir: str):
     pages = build_web_pages(
         spark, sf_dir, partitions=decode_partitions(spark, sf_dir)
     )
-    total = pages.count()  # scalar job; at scale a cheap metadata count
     host = F.regexp_extract("url", r"^https://([^/]+)/", 1)
+    # one row per host (19 in the fixture): the global window is tiny
+    total = F.sum("n_docs").over(Window.partitionBy())
     return (
         pages.groupBy(host.alias("host"))
         .agg(

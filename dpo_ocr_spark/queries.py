@@ -746,12 +746,10 @@ ORACLES["interpret_full"] = queries_cascade.INTERPRET_FULL_ORACLE
 # tail.
 # r6 rotation queue (late-r5 additions, all local-sweep green at sf0.01
 # AND sf0.1, never driver-sampled): append_sink, audio_features,
-# video_frame_sample, image_autocrop_png_1bit / _jpeg12 / _jpeg_ll /
-# _jpeg_arith / _jpeg_pa, resume_extract, eval_accuracy_auto_designed (in sample
-# r5), decontaminate_bloom, source_counts_cms, term_topk_sketch,
+# video_frame_sample, resume_extract, eval_accuracy_auto_designed (in
+# sample r5), decontaminate_bloom, source_counts_cms, term_topk_sketch,
 # gram_cardinality_hll, bpe_merges; plus the WARC/WET/CDX container
 # queries (warc_extract, warc_fetch_subset, cdx_urlkeys, wet_langs)
-# and the hierarchical-JPEG pair (image_autocrop_jpeg_hier, _hier_ll)
 # and the charset-mix extraction twin (extract_text_charsets) and the
 # head-metadata family (html_meta, noindex_filter, outlinks,
 # canonical_dedup, crawl_frontier) and the PDF-payload extraction twin

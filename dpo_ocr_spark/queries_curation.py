@@ -297,52 +297,6 @@ register(
     "image_autocrop_jpeg_prog",
     IMAGE_AUTOCROP_ORACLE,
 )(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_prog"))
-# r5: the sub-byte PNG decode path (1/2/4-bit gray + palette, 16-bit) —
-# the fixture is pure black/white, so 1-bit grayscale is lossless for it
-# and the same arithmetic oracle applies
-register(
-    "image_autocrop_png_1bit",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="png_gray1"))
-# r5 JPEG long tail: 12-bit extended sequential (SOF1 + 16-bit DQT +
-# 2048 level shift; x16 scaling makes the decode byte-identical to the
-# baseline stream) and SOF3 lossless (Annex-H predictors; exact pixels)
-register(
-    "image_autocrop_jpeg12",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg12"))
-register(
-    "image_autocrop_jpeg_ll",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_ll"))
-# SOF9 arithmetic entropy coding (T.81 Annex D/F QM coder, cross-
-# validated both directions against libjpeg-turbo): same quantized
-# coefficients as the baseline stream -> same decoded pixels
-register(
-    "image_autocrop_jpeg_arith",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_arith"))
-# SOF10 progressive arithmetic (T.81 Annex G successive approximation
-# over the QM coder, cross-validated both directions against
-# libjpeg-turbo): same coefficients as the baseline stream again
-register(
-    "image_autocrop_jpeg_pa",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_pa"))
-# Annex J hierarchical: DHP-led pyramid (non-differential SOF0 base,
-# EXP-expanded SOF5 differential refinement; encoder mirrors the
-# decoder's integer reference reconstruction exactly), and the SOF3+SOF7
-# lossless pyramid whose decode is bit-exact — no libjpeg cross-check
-# exists (libjpeg has no hierarchical mode), so the claims rest on the
-# self-roundtrip + spec pins in tests/test_codecs.py
-register(
-    "image_autocrop_jpeg_hier",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier"))
-register(
-    "image_autocrop_jpeg_hier_ll",
-    IMAGE_AUTOCROP_ORACLE,
-)(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_hier_ll"))
 
 
 def _cluster_reps_oracle() -> str:

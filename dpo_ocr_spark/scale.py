@@ -100,11 +100,15 @@ def with_lineage(extracted: DataFrame, num_buckets: int | None = None) -> tuple[
     """Attach partition ids and derive the lineage frame (LINEAGE schema).
 
     Returns (results_with_partition_id, lineage).  Lineage aggregates are
-    computed from the same frame in one extra pass — at real scale both
-    land in the same Iceberg commit so they are atomic.  ``num_buckets``
-    (defaults to the frame's partition count) is recorded on every lineage
-    row so a resume run can recompute each url's partition assignment
-    without the data (see ``resume_filter``).
+    computed from the same frame in one extra pass.  The two frames are
+    NOT committed atomically: ``jobs/run_extract.py`` writes them with
+    two ``write_results`` calls, i.e. two Iceberg commits.  A crash
+    between the commits leaves results with no lineage, and a
+    lineage-based resume then re-runs those partitions (ROADMAP
+    direction 2 derives lineage from the committed results instead).
+    ``num_buckets`` (defaults to the frame's partition count) is recorded
+    on every lineage row so a resume run can recompute each url's
+    partition assignment without the data (see ``resume_filter``).
     """
     n = num_buckets if num_buckets is not None else extracted.rdd.getNumPartitions()
     tagged = extracted.withColumn("partition_id", F.spark_partition_id())
@@ -128,8 +132,11 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame, key: str = "url") -
       page's partition id with the same pure function salted_repartition
       used and anti-join on completed partition ids.  A lineage row
       attests its whole partition committed (task commits are atomic and
-      lineage lands in the same Iceberg commit as results), so this
-      reprocesses exactly the failed partitions.
+      lineage is written only after the results), so those partitions
+      are skipped.  Results and lineage are two commits, not one (see
+      ``with_lineage``): a partition whose results committed but whose
+      lineage did not is re-run, and its result rows are appended again
+      (ROADMAP direction 2).
 
     Empty lineage ⇒ everything pending.  A frame with neither column set
     raises — a silent time/watermark filter here would drop unprocessed

@@ -162,12 +162,38 @@ def test_jpeg_odd_dimensions():
 def test_jpeg_rejections():
     with pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"\x00\x01")
-    # a differential frame (SOF5) with no DHP before it is malformed:
-    # flip FFC0 → FFC5 in a plain sequential stream
+    # a differential frame (SOF5) is rejected by name: flip FFC0 → FFC5
+    # in a plain sequential stream
     data = bytearray(encode_jpeg(np.zeros((8, 8), np.uint8)))
     i = bytes(data).index(b"\xff\xc0")
     data[i + 1] = 0xC5
-    with pytest.raises(ValueError, match="outside a hierarchical"):
+    with pytest.raises(ValueError, match="0xFFC5 \\(SOF5\\)"):
+        decode_jpeg(bytes(data))
+
+
+# lossless, hierarchical and arithmetic-coded frames: outside the decoder
+RETIRED_SOF = [0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF]
+
+
+@pytest.mark.parametrize(
+    "marker, precision",
+    [(m, 8) for m in RETIRED_SOF] + [(0xDE, 8), (0xC1, 12)],
+    ids=lambda v: f"FF{v:02X}" if v > 16 else f"p{v}",
+)
+def test_decode_jpeg_rejects_retired_frames(marker, precision):
+    """Flipping the SOF0 marker of a valid baseline stream to a retired
+    frame marker, to DHP, or to a 12-bit SOF1 raises one ValueError
+    naming that marker — never a silent skip that would surface later
+    as "missing SOF/SOS"."""
+    data = bytearray(encode_jpeg(RNG.integers(0, 256, (9, 11, 3), np.uint8)))
+    i = bytes(data).index(b"\xff\xc0")
+    data[i + 1] = marker
+    data[i + 4] = precision  # P, the first byte of the frame header
+    name = "DHP" if marker == 0xDE else f"SOF{marker - 0xC0}"
+    match = rf"0xFF{marker:02X} \({name}\)"
+    if precision != 8:
+        match += f" precision {precision}"
+    with pytest.raises(ValueError, match=match):
         decode_jpeg(bytes(data))
 
 
@@ -180,236 +206,6 @@ def test_jpeg_sof1_8bit_is_baseline_compatible():
     i = bytes(data).index(b"\xff\xc0")
     data[i + 1] = 0xC1
     assert np.array_equal(decode_jpeg(bytes(data)), base)
-
-
-def test_jpeg_12bit_matches_baseline():
-    """12-bit SOF1 (x16 samples and x16 16-bit quant tables): the
-    quantized coefficient stream is identical to the 8-bit encoding and
-    IDCT is linear, so the decode — through the 2048 level shift, 4095
-    clip and /16 rescale — is byte-identical to the baseline decode."""
-    for shape, sub in [
-        ((16, 16), "444"), ((7, 9), "444"),
-        ((20, 12, 3), "420"), ((17, 23, 3), "422"), ((24, 40, 3), "444"),
-    ]:
-        img = RNG.integers(0, 256, shape, dtype=np.uint8)
-        s = sub if img.ndim == 3 else "444"
-        base = decode_jpeg(encode_jpeg(img, 80, s))
-        ext = decode_jpeg(encode_jpeg(img, 80, s, precision=12))
-        assert np.array_equal(base, ext), (shape, sub)
-    # 12-bit must arrive as SOF1, never SOF0
-    blob = encode_jpeg(RNG.integers(0, 256, (8, 8), np.uint8), 80, "444",
-                       precision=12)
-    assert b"\xff\xc1" in blob and b"\xff\xc0" not in blob
-
-
-def test_jpeg_arithmetic_matches_baseline():
-    """SOF9 (T.81 Annex D/F QM coder): the arithmetic encoder codes the
-    SAME quantized coefficients as the Huffman stream, so the decode is
-    byte-identical to the baseline decode; arithmetic files must also
-    be strictly smaller on these inputs (the adaptation working)."""
-    for shape, sub in [
-        ((16, 16), "444"), ((7, 9), "444"),
-        ((20, 12, 3), "420"), ((17, 23, 3), "422"), ((33, 31, 3), "420"),
-    ]:
-        img = RNG.integers(0, 256, shape, dtype=np.uint8)
-        s = sub if img.ndim == 3 else "444"
-        hb = encode_jpeg(img, 80, s)
-        ab = encode_jpeg(img, 80, s, arithmetic=True)
-        assert np.array_equal(decode_jpeg(hb), decode_jpeg(ab)), (shape, sub)
-        assert len(ab) < len(hb), (shape, sub)
-    blob = encode_jpeg(
-        RNG.integers(0, 256, (8, 8), np.uint8), 80, "444", arithmetic=True
-    )
-    assert b"\xff\xc9" in blob and b"\xff\xc4" not in blob  # SOF9, no DHT
-
-
-def test_jpeg_progressive_arith_matches_baseline():
-    """SOF10 (T.81 Annex G): the progressive-arithmetic encoder codes
-    the SAME coefficients as the baseline/progressive streams through
-    the successive-approximation scan script (DC+AC first passes at
-    Al=1, refinement scans to Al=0), so all three decode identically."""
-    from dpo_ocr_spark.ops.codecs import encode_jpeg_progressive_arith
-
-    for shape, sub in [
-        ((16, 16), "444"), ((7, 9), "444"),
-        ((20, 12, 3), "420"), ((17, 23, 3), "422"), ((33, 31, 3), "420"),
-    ]:
-        img = RNG.integers(0, 256, shape, dtype=np.uint8)
-        s = sub if img.ndim == 3 else "444"
-        base = decode_jpeg(encode_jpeg(img, 80, s))
-        pa = encode_jpeg_progressive_arith(img, 80, s)
-        assert np.array_equal(decode_jpeg(pa), base), (shape, sub)
-        assert b"\xff\xca" in pa and b"\xff\xc4" not in pa  # SOF10, no DHT
-
-
-def test_arith_coder_core_roundtrip():
-    """Raw QM-coder: random decision streams over adaptive contexts and
-    the fixed ~0.5 bin roundtrip exactly (exercises conditional
-    exchange, carry propagation, byte stuffing and flush)."""
-    from dpo_ocr_spark.ops.codecs import (
-        _FIXED_BIN, _ArithDecoder, _ArithEncoder, _Stats,
-    )
-
-    for trial in range(10):
-        p = float(RNG.uniform(0.01, 0.99))
-        bits = (RNG.random(4000) < p).astype(int).tolist()
-        enc = _ArithEncoder()
-        st = _Stats(8)
-        for i, b in enumerate(bits):
-            enc.code(st, i % 8, b)
-        blob = enc.flush()
-        dec = _ArithDecoder(blob, 0)
-        st2 = _Stats(8)
-        assert [dec.decode(st2, i % 8) for i in range(len(bits))] == bits
-    enc = _ArithEncoder()
-    fx = _Stats(1)
-    fx.idx[0] = _FIXED_BIN
-    bits = [(i * 7) % 2 for i in range(999)]
-    for b in bits:
-        enc.code(fx, 0, b)
-    blob = enc.flush()
-    dec = _ArithDecoder(blob, 0)
-    fx2 = _Stats(1)
-    fx2.idx[0] = _FIXED_BIN
-    assert [dec.decode(fx2, 0) for _ in bits] == bits
-
-
-_LIBJPEG_SO = "/usr/lib/x86_64-linux-gnu/libjpeg.so.62.3.0"
-
-
-def test_arith_state_table_matches_libjpeg():
-    """_ARITH_TAB must equal T.81 Table D.3 as compiled into the system
-    libjpeg (jpeg_aritab, packed (qe<<16)|(nmps<<8)|(switch<<7)|nlps)."""
-    import os
-    import struct as _s
-
-    if not os.path.exists(_LIBJPEG_SO):
-        pytest.skip("system libjpeg not present")
-    from dpo_ocr_spark.ops.codecs import _ARITH_TAB
-
-    blob = open(_LIBJPEG_SO, "rb").read()
-    i = blob.find(_s.pack("<Q", 0x5A1D0181))
-    assert i > 0, "jpeg_aritab not found in libjpeg binary"
-    vals = _s.unpack_from("<114Q", blob, i)
-    ext = tuple(
-        (v >> 16, (v >> 8) & 0xFF, v & 0x7F, (v >> 7) & 1) for v in vals
-    )
-    assert ext == _ARITH_TAB
-
-
-_TRANSCODE_C = r"""
-#include <stdio.h>
-#include <jpeglib.h>
-int main(int argc, char **argv) {
-  struct jpeg_decompress_struct s; struct jpeg_compress_struct d;
-  struct jpeg_error_mgr se, de; jvirt_barray_ptr *coefs;
-  FILE *fi = fopen(argv[1], "rb"), *fo = fopen(argv[2], "wb");
-  if (argc != 4 || !fi || !fo) return 2;
-  s.err = jpeg_std_error(&se); jpeg_create_decompress(&s);
-  jpeg_stdio_src(&s, fi); jpeg_read_header(&s, TRUE);
-  coefs = jpeg_read_coefficients(&s);
-  d.err = jpeg_std_error(&de); jpeg_create_compress(&d);
-  jpeg_copy_critical_parameters(&s, &d);
-  d.arith_code = argv[3][0] == 'a' || argv[3][0] == 'p' ? TRUE : FALSE;
-  if (argv[3][0] == 'p') jpeg_simple_progression(&d);
-  if (!d.arith_code) d.optimize_coding = TRUE;
-  jpeg_stdio_dest(&d, fo); jpeg_write_coefficients(&d, coefs);
-  jpeg_finish_compress(&d); jpeg_destroy_compress(&d);
-  jpeg_finish_decompress(&s); jpeg_destroy_decompress(&s);
-  fclose(fi); fclose(fo); return 0;
-}
-"""
-
-
-def test_arith_interop_with_libjpeg(tmp_path):
-    """Cross-validation against libjpeg-turbo in BOTH directions via a
-    coefficient-exact transcode helper: (a) libjpeg reads our SOF9
-    stream and its Huffman re-encode decodes identically, (b) libjpeg
-    writes an SOF9 stream from our Huffman file and our arithmetic
-    decoder reads it to identical pixels."""
-    import os
-    import shutil
-    import subprocess
-
-    if shutil.which("gcc") is None or not os.path.exists(
-        "/usr/include/jpeglib.h"
-    ):
-        pytest.skip("gcc / libjpeg headers not present")
-    src = tmp_path / "tx.c"
-    exe = tmp_path / "tx"
-    src.write_text(_TRANSCODE_C)
-    subprocess.run(
-        ["gcc", "-O2", "-o", str(exe), str(src), "-ljpeg"], check=True
-    )
-    for shape, sub in [((16, 16), "444"), ((20, 12, 3), "420"),
-                       ((17, 23, 3), "422")]:
-        img = RNG.integers(0, 256, shape, dtype=np.uint8)
-        s = sub if img.ndim == 3 else "444"
-        hb = encode_jpeg(img, 80, s)
-        ab = encode_jpeg(img, 80, s, arithmetic=True)
-        (tmp_path / "h.jpg").write_bytes(hb)
-        (tmp_path / "a.jpg").write_bytes(ab)
-        subprocess.run(
-            [str(exe), str(tmp_path / "a.jpg"),
-             str(tmp_path / "a2h.jpg"), "huff"], check=True,
-        )
-        assert np.array_equal(
-            decode_jpeg((tmp_path / "a2h.jpg").read_bytes()),
-            decode_jpeg(hb),
-        ), ("libjpeg->huff", shape, sub)
-        subprocess.run(
-            [str(exe), str(tmp_path / "h.jpg"),
-             str(tmp_path / "h2a.jpg"), "arith"], check=True,
-        )
-        assert np.array_equal(
-            decode_jpeg((tmp_path / "h2a.jpg").read_bytes()),
-            decode_jpeg(hb),
-        ), ("libjpeg->arith", shape, sub)
-        # SOF10 progressive-arithmetic, both directions: libjpeg reads
-        # OUR scan script; we read libjpeg's own (different) scan script
-        from dpo_ocr_spark.ops.codecs import encode_jpeg_progressive_arith
-
-        (tmp_path / "pa.jpg").write_bytes(
-            encode_jpeg_progressive_arith(img, 80, s)
-        )
-        subprocess.run(
-            [str(exe), str(tmp_path / "pa.jpg"),
-             str(tmp_path / "pa2h.jpg"), "huff"], check=True,
-        )
-        assert np.array_equal(
-            decode_jpeg((tmp_path / "pa2h.jpg").read_bytes()),
-            decode_jpeg(hb),
-        ), ("libjpeg->huff-from-SOF10", shape, sub)
-        subprocess.run(
-            [str(exe), str(tmp_path / "h.jpg"),
-             str(tmp_path / "h2pa.jpg"), "prog"], check=True,
-        )
-        blob = (tmp_path / "h2pa.jpg").read_bytes()
-        assert b"\xff\xca" in blob, ("libjpeg emitted non-SOF10", shape, sub)
-        assert np.array_equal(
-            decode_jpeg(blob), decode_jpeg(hb),
-        ), ("we-read-libjpeg-SOF10", shape, sub)
-
-
-def test_jpeg_lossless_exact_all_predictors():
-    """SOF3: exact roundtrip for every predictor 1-7, including the
-    first-row/first-column prediction defaults (1-wide/1-tall shapes)."""
-    from dpo_ocr_spark.ops.codecs import encode_jpeg_lossless
-
-    for p in range(1, 8):
-        g = RNG.integers(0, 256, (19, 27), dtype=np.uint8)
-        out = decode_jpeg(encode_jpeg_lossless(g, p))
-        assert np.array_equal(out, np.repeat(g[:, :, None], 3, axis=2)), p
-    for shape in [(1, 17), (19, 1), (1, 1)]:
-        g = RNG.integers(0, 256, shape, dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg_lossless(g, 4))[:, :, 0], g
-        ), shape
-    # gray-valued RGB input accepted; non-gray rejected
-    rgb = np.repeat(
-        RNG.integers(0, 256, (5, 7), np.uint8)[:, :, None], 3, axis=2
-    )
-    assert np.array_equal(decode_jpeg(encode_jpeg_lossless(rgb, 1)), rgb)
 
 
 def test_jpeg_progressive_matches_baseline():
@@ -693,96 +489,3 @@ def test_png_depth_rejections():
     # CRC is not verified by the decoder, so flipping the byte is enough
     with pytest.raises(ValueError, match="interlaced"):
         decode_png(bytes(data))
-
-
-# --- hierarchical JPEG (Annex J) ---------------------------------------------
-
-
-def _hier_test_img(h=47, w=61):
-    x = np.linspace(0, 255, w)
-    return (np.add.outer(np.linspace(0, 200, h), x) / 2).astype(np.uint8)
-
-
-def test_jpeg_hier_lossless_exact():
-    from dpo_ocr_spark.ops.codecs import (
-        decode_jpeg, encode_jpeg_hier_lossless,
-    )
-
-    for h, w, levels in ((47, 61, 3), (8, 8, 1), (9, 17, 2), (1, 5, 2)):
-        img = _hier_test_img(h, w)
-        out = decode_jpeg(encode_jpeg_hier_lossless(img, levels=levels))
-        assert (out == np.repeat(img[:, :, None], 3, axis=2)).all(), (
-            h, w, levels,
-        )
-
-
-def test_jpeg_hier_single_level_equals_sequential():
-    """levels=1 → DHP + one non-differential SOF0 frame: the decoded
-    pixels must be identical to the plain sequential encoding (same
-    tables, same coefficient walk — only the hierarchical plumbing
-    differs)."""
-    from dpo_ocr_spark.ops.codecs import (
-        decode_jpeg, encode_jpeg, encode_jpeg_hier,
-    )
-
-    img = _hier_test_img()
-    a = decode_jpeg(encode_jpeg_hier(img, 92, levels=1))
-    b = decode_jpeg(encode_jpeg(img, 92, "444"))
-    assert (a == b).all()
-    rgb = np.dstack([img, 255 - img, np.roll(img, 5, axis=1)])
-    a = decode_jpeg(encode_jpeg_hier(rgb, 92, levels=1))
-    b = decode_jpeg(encode_jpeg(rgb, 92, "444"))
-    # color differs by at most the integer-reference rounding: the
-    # hierarchical decoder reconstructs INTEGER component references
-    # (they feed J.1.1.2 integer upsampling), the sequential decoder
-    # color-converts unrounded floats.  Each of Y/Cb/Cr can move ≤0.5,
-    # so B moves ≤ 0.5 + 1.772·0.5 = 1.386 before the final rint → ±2
-    assert np.abs(a.astype(int) - b.astype(int)).max() <= 2
-
-
-def test_jpeg_hier_refinement_tightens():
-    """Each differential refinement frame must reduce (or keep) the
-    reconstruction error vs the original — and the full pyramid must sit
-    at sequential-quality error levels."""
-    from dpo_ocr_spark.ops.codecs import decode_jpeg, encode_jpeg_hier
-
-    img = _hier_test_img()
-    errs = []
-    for levels in (1, 2, 3):
-        out = decode_jpeg(encode_jpeg_hier(img, 92, levels=levels))[:, :, 0]
-        errs.append(np.abs(out.astype(int) - img.astype(int)).mean())
-    assert errs[0] <= 1.5 and errs[1] <= 1.5 and errs[2] <= 1.5
-    # and a coarse base alone (decode of a truncated pyramid) is NOT
-    # already exact — i.e. the refinement frames carry real signal
-    out2 = decode_jpeg(encode_jpeg_hier(img, 92, levels=3))
-    assert np.abs(out2[:, :, 0].astype(int) - img.astype(int)).max() <= 8
-
-
-def test_jpeg_hier_color_roundtrip_close():
-    from dpo_ocr_spark.ops.codecs import decode_jpeg, encode_jpeg_hier
-
-    img = _hier_test_img()
-    rgb = np.dstack([img, 255 - img, np.roll(img, 5, axis=1)])
-    out = decode_jpeg(encode_jpeg_hier(rgb, 92, levels=3))
-    assert np.abs(out.astype(int) - rgb.astype(int)).max() <= 12
-
-
-def test_jpeg_hier_rejections():
-    from dpo_ocr_spark.ops.codecs import decode_jpeg, encode_jpeg_hier
-
-    img = _hier_test_img(16, 16)
-    data = bytearray(encode_jpeg_hier(img, 92, levels=2))
-    # differential frame marker without a hierarchical stream
-    sof5_at = bytes(data).find(b"\xff\xc5")
-    assert sof5_at > 0
-    import pytest as _pytest
-
-    # flip the SOF5 into an unsupported differential-progressive SOF6
-    data2 = bytearray(data)
-    data2[sof5_at + 1] = 0xC6
-    with _pytest.raises(ValueError, match="unsupported frame type"):
-        decode_jpeg(bytes(data2))
-    # SOF5 with no DHP before it (cut the stream after SOI, splice frame)
-    tail = bytes(data[sof5_at:])
-    with _pytest.raises(ValueError, match="outside a hierarchical"):
-        decode_jpeg(b"\xff\xd8" + tail)

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import zlib
 
+from hypothesis import given, settings, strategies as st
+
 from dpo_ocr_spark.corpus import expected_text, render_pdf
 from dpo_ocr_spark.extract.pdf import (
     _decode_pdf_string,
@@ -111,3 +113,32 @@ def test_indirect_length_falls_back_to_heuristic():
     assert _streams_of(pdf) == [b"BT (ok) Tj ET"]
     text, *_ = extract_pdf(pdf)
     assert text == "ok"
+
+
+def test_token_offsets_after_blank_line():
+    # "a  b" renders a middle line whose only show is "()": that line is
+    # empty text plus one '\n', so it moves later offsets by exactly one
+    kind, text, tokens, _nb = _extract_one(render_pdf(1, "a  b"), None)
+    assert kind == "pdf" and text == "a\n\nb"
+    assert [(t[5], t[8], t[9]) for t in tokens] == [("a", 0, 1), ("b", 3, 4)]
+
+
+_HOSTILE_PIECES = [
+    "a", "word", "x", " ", "  ", "\n", "\x0b", "\x0c", "\x1c", "\x1d",
+    "\x85", "　", "(", ")", "\\", "()", "日本語", "テスト", "ünï",
+]
+
+
+@given(
+    st.lists(st.sampled_from(_HOSTILE_PIECES), max_size=30).map("".join),
+    st.integers(0, 1),
+)
+@settings(max_examples=400, derandomize=True, deadline=None)
+def test_token_offsets_slice_text_on_hostile_input(raw, doc_id):
+    # doc_id parity picks the FlateDecode or the raw content stream
+    kind, text, tokens, _nb = _extract_one(render_pdf(doc_id, raw), None)
+    assert kind == "pdf"
+    for tok in tokens:
+        start, end = tok[8], tok[9]
+        assert 0 <= start <= end <= len(text), (tok, text)
+        assert text[start:end] == tok[5], (tok, text)

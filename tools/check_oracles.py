@@ -56,6 +56,7 @@ def main() -> int:
     qs = E.queries()
     oracles = E.oracle_sql()
     failed = []
+    counts = dict.fromkeys(("OK", "rows-only", "FAIL", "TYPE-FAIL"), 0)
 
     # Typed-output audit (r4 postmortem): the driver gate renders DuckDB
     # HUGEINT/DECIMAL output columns differently from BIGINT — all 11 r4
@@ -83,6 +84,7 @@ def main() -> int:
             print(f"{name:28s} TYPE-FAIL  oracle output {bad} "
                   "(HUGEINT/DECIMAL banned — CAST to BIGINT)")
             failed.append(name)
+            counts["TYPE-FAIL"] += 1
 
     for name, fn in qs.items():
         if only and name not in only:
@@ -94,6 +96,7 @@ def main() -> int:
         if name not in oracles:
             print(f"{name:28s} rows-only: {len(srows)} rows "
                   f"({time.time()-t0:.1f}s)")
+            counts["rows-only"] += 1
             if len(srows) == 0:
                 failed.append(name)
             continue
@@ -106,6 +109,7 @@ def main() -> int:
         oh = value_hash(ocols, orows)
         ok_hash = sh == oh
         status = "OK" if (ok_cols and ok_count and ok_hash) else "FAIL"
+        counts[status] += 1
         print(
             f"{name:28s} {status}  rows {len(srows)}/{len(orows)} "
             f"cols={'=' if ok_cols else scols} hash "
@@ -127,6 +131,7 @@ def main() -> int:
                     if a != b:
                         print(f"  spark : {a[:300]}\n  oracle: {b[:300]}")
                         break
+    print("  ".join(f"{k} {v}" for k, v in counts.items()))
     print("FAILED:", failed if failed else "none")
     return 1 if failed else 0
 
