@@ -45,12 +45,22 @@ def explode_tokens(extracted: DataFrame) -> DataFrame:
     ).select("url", "warc_ts", "t.*")
 
 
-def _ordered_concat(sort_cols: list[str]) -> F.Column:
-    """concat_ws(' ', words ordered by sort_cols) as a single aggregate —
-    sort-within-aggregate keeps the op shuffle-once and deterministic."""
-    struct_cols = [F.col(c) for c in sort_cols] + [F.col("word_text")]
-    arr = F.array_sort(F.collect_list(F.struct(*struct_cols)))
-    return F.concat_ws(" ", F.transform(arr, lambda s: s["word_text"]))
+def _ordered_concat(
+    sort_cols: list[str],
+    value: str = "word_text",
+    sep: str | F.Column = " ",
+    where: F.Column | None = None,
+) -> F.Column:
+    """``value`` ordered by sort_cols and joined with ``sep`` (a string, or
+    a grouping-key column) as a single aggregate — sort-within-aggregate
+    keeps the op shuffle-once and deterministic.  With ``where``, only the
+    group's rows where it holds contribute (a conditional aggregation)."""
+    item = F.struct(*sort_cols, value)
+    arr = F.array_sort(
+        F.collect_list(item if where is None else F.when(where, item))
+    )
+    values = F.transform(arr, lambda s: s[value])
+    return F.call_function("concat_ws", F.lit(sep), values)
 
 
 def assemble_blocks(

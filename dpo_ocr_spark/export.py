@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .assemble import _ordered_concat
+
 # the reference's CSV column schema, restated (run_gvision_ocr.py:173-174)
 CSV_COLUMNS = [
     "word_text", "block", "page", "word", "word_line", "confidence",
@@ -30,13 +32,8 @@ CSV_COLUMNS = [
 def flatten_lines(blocks: DataFrame) -> DataFrame:
     """Per-url flattened line: block texts joined with ' ' in reading
     order (the csv-row analog the reference computes offsets against)."""
-    arr = F.array_sort(
-        F.collect_list(F.struct("block", "word_line", "block_text"))
-    )
     return blocks.groupBy("url").agg(
-        F.concat_ws(
-            " ", F.transform(arr, lambda s: s["block_text"])
-        ).alias("line")
+        _ordered_concat(["block", "word_line"], "block_text").alias("line")
     )
 
 
@@ -248,17 +245,11 @@ def form_fields(tokens: DataFrame, split_x: int = 320) -> DataFrame:
     is_field = F.col("wx2") < split_x
     is_value = F.col("wx0") >= split_x
 
-    def side_text(cond: F.Column) -> F.Column:
-        arr = F.array_sort(
-            F.collect_list(F.when(cond, F.struct("word", "word_text")))
-        )
-        return F.concat_ws(" ", F.transform(arr, lambda s: s["word_text"]))
-
     g = t.groupBy("url", "page", "line").agg(
-        side_text(is_field).alias("field_name"),
+        _ordered_concat(["word"], where=is_field).alias("field_name"),
         F.sum(F.when(is_field, F.col("cx"))).alias("fs"),
         F.count(F.when(is_field, 1)).alias("fn"),
-        side_text(is_value).alias("value"),
+        _ordered_concat(["word"], where=is_value).alias("value"),
         F.sum(F.when(is_value, F.col("cx"))).alias("vs"),
         F.count(F.when(is_value, 1)).alias("vn"),
     )

@@ -511,7 +511,6 @@ def interpret_all(
     gazetteer: DataFrame,
     taxonomy: DataFrame,
     collector_strings: tuple[str, ...] = COLLECTOR_STRINGS,
-    with_fallback: bool = True,
     hierarchy: DataFrame | None = None,
 ) -> DataFrame:
     """Full §3.2 pipeline: dates → localities (→ admin-hierarchy
@@ -525,9 +524,6 @@ def interpret_all(
     taxo = dedup_line_grain(match_taxonomy(spark, blocks, taxonomy))
     base = merge_fields(merge_fields(dates, locs), taxo)
     coll = dedup_line_grain(match_collector(blocks, base, collector_strings))
-    merged = merge_fields(base, coll)
-    if not with_fallback:
-        return merged
-    merged = merged.cache()
+    merged = merge_fields(base, coll).cache()
     fb = dedup_line_grain(similarity_fallback(spark, blocks, merged))
     return merge_fields(merged, fb)

@@ -16,8 +16,7 @@ First-class LLM-training-data ops, each in its 100 TB shape:
   entirely IN-ROW with higher-order array expressions — zero shuffles,
   embarrassingly parallel, whole-stage-codegen.  The in-row scan is
   O(words²) per document, bounded by the upstream extract stage's
-  document-length cap; for pathological multi-MB docs the explode +
-  groupBy form is the fallback (same result, one shuffle).
+  document-length cap.
 - **training_order**: deterministic shuffle of the corpus into training
   shards — shard by md5-derived hash, position by (hash, doc_id) within
   shard.  Reproducible across runs, engines and cluster sizes (no
@@ -59,33 +58,25 @@ def _ngrams(words: Column, n: int) -> Column:
     )
 
 
-def decontaminate(
-    spark: SparkSession, sf_dir: str, eval_is_bounded: bool = True
-) -> DataFrame:
+def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per corpus doc: distinct word-4-grams shared with the eval split.
 
     Returns (doc_id, lang, n_hits, contaminated) for every NON-eval doc.
 
-    ``eval_is_bounded``: the broadcast of the eval n-gram set is valid
-    ONLY when the eval side is a true fixed-size benchmark suite (the
-    production case: MMLU/GSM8K/…-style sets whose size is independent of
-    corpus size).  This fixture derives eval from ``doc_id % 97 == 0`` —
-    ~1% of the corpus, so the broadcast side would grow linearly at
-    100 TB; pass ``eval_is_bounded=False`` for any eval-∝-corpus setup
-    and the probe becomes a plain shuffled equi-join on gram (AQE still
-    upgrades it to broadcast when the set actually fits).  Results are
-    identical either way (pinned in tests).
+    The eval n-gram set is broadcast, which is valid when the eval side is
+    a true fixed-size benchmark suite (the production case: MMLU/GSM8K/…
+    -style sets whose size is independent of corpus size).  This fixture
+    derives eval from ``doc_id % 97 == 0`` — ~1% of the corpus, so here
+    the broadcast side grows linearly with the corpus.
     """
     docs = _docs(spark, sf_dir)
     grams = docs.select(
         "doc_id",
         F.explode(F.array_distinct(_ngrams(_words(), N_DECON))).alias("gram"),
     )
-    eval_grams = (
+    eval_grams = F.broadcast(
         grams.filter(F.col("doc_id") % EVAL_MOD == 0).select("gram").distinct()
     )
-    if eval_is_bounded:
-        eval_grams = F.broadcast(eval_grams)
     hits = (
         grams.filter(F.col("doc_id") % EVAL_MOD != 0)
         .join(eval_grams, "gram")
@@ -185,58 +176,6 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("top2_share_x1000") > TOP2_SHARE_MAX)
             )
         ).alias("repetitive"),
-    )
-
-
-def repetition_stats_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-based twin of repetition_stats for pathological document
-    lengths (the in-row form is O(words²) per doc): explode words / grams
-    → per-(doc, token) counts → per-doc aggregates.  Two linear shuffles,
-    per-task memory O(1).  Output identical to the in-row form
-    (equivalence pinned in tests/test_events_curation.py)."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", _words().alias("w")
-    )
-    base = docs.select("doc_id", F.size("w").alias("n_words"), "w")
-    dup = (
-        base.select("doc_id", "n_words", F.explode("w").alias("tok"))
-        .groupBy("doc_id", "n_words", "tok")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id", "n_words")
-        .agg(
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias(
-                "dup_n"
-            )
-        )
-    )
-    top2 = (
-        base.select("doc_id", F.explode(_ngrams(F.col("w"), 2)).alias("g"))
-        .groupBy("doc_id", "g")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top2_count"))
-    )
-    return (
-        dup.join(top2, "doc_id")
-        .select(
-            "doc_id",
-            "n_words",
-            F.expr("dup_n * 1000 div n_words").alias("dup_word_frac_x1000"),
-            "top2_count",
-            F.expr("top2_count * 2 * 1000 div n_words").alias(
-                "top2_share_x1000"
-            ),
-        )
-        .select(
-            "*",
-            (
-                (F.col("dup_word_frac_x1000") > DUP_FRAC_MAX)
-                | (
-                    (F.col("n_words") >= MIN_WORDS_TOP2)
-                    & (F.col("top2_share_x1000") > TOP2_SHARE_MAX)
-                )
-            ).alias("repetitive"),
-        )
     )
 
 

@@ -136,49 +136,18 @@ def _distinct_shingles(text: str | None) -> list[str]:
 
 
 @nogc_batches
-def _shingle_batches(it):
-    """Arrow shingle kernel — hot path. Python ASCII-\\s regex + slicing
-    replicates the SQL definition exactly (equivalence pinned by
+def _sized_shingle_batches(it):
+    """Arrow shingle kernel — hot path.  Emits each document's distinct
+    shingles with its distinct-shingle count ``n`` on every row.
+    Python ASCII-\\s regex + slicing replicates the SQL definition
+    exactly (equivalence pinned by
     tests/test_ops.py::test_shingle_kernel_equivalence): the nested
     transform/slice SQL expression measured 4.3s warm at sf0.1 vs ~0.4s
     here (the JVM evaluates the O(words·k) slice chain per row without
-    loop fusion; Python does one linear pass)."""
-    import pyarrow as pa
-
-    for batch in it:
-        ids: list[int] = []
-        shingles: list[str] = []
-        for doc_id, text in zip(
-            batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
-        ):
-            uniq = _distinct_shingles(text)
-            ids.extend([doc_id] * len(uniq))
-            shingles.extend(uniq)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, pa.int64()), pa.array(shingles, pa.string())],
-            names=["doc_id", "shingle"],
-        )
-
-
-def shingles_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles (Arrow kernel)."""
-    return docs.select("doc_id", "text").mapInArrow(
-        _shingle_batches, schema="doc_id long, shingle string"
-    )
-
-
-def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingles_of(_docs(spark, sf_dir))
-
-
-@nogc_batches
-def _sized_shingle_batches(it):
-    """Shingle kernel variant that also emits each document's distinct-
-    shingle count ``n`` on every row.  Carrying the size through the
-    inverted-index bucket join lets the Jaccard pipeline run as ONE
-    consumption chain — the (sizes ⋈ pairs ⋈ sizes) form re-executed the
-    shingle kernel (and its scan) three times, once per join side
-    (guide §2.4: share one exchange instead of recomputing)."""
+    loop fusion; Python does one linear pass).  Carrying the size on the
+    rows lets the Jaccard consumers run as ONE consumption chain — a
+    (sizes ⋈ pairs ⋈ sizes) form re-executes the kernel (and its scan)
+    once per join side."""
     import pyarrow as pa
 
     for batch in it:
@@ -374,8 +343,8 @@ def _signature_batches(it):
     function (k=12 md5s per shingle — codegen does not CSE across
     aggregate expressions, visible in the r6 before-plan) and shuffled
     every shingle string.  Row-identical to the SQL reference form in
-    tests/dedup_reference.py over ``shingles_of(docs)`` (pinned by a
-    pytest)."""
+    tests/dedup_reference.py over the kernel's (doc_id, shingle) rows
+    (pinned by a pytest)."""
     from hashlib import md5
 
     import numpy as np
@@ -800,7 +769,9 @@ def incremental_dedup(
         .select("doc_id", F.lit(True).alias("exact_dup"))
     )
 
-    sh = shingles_of(docs)
+    # doc sizes ride on the shingle rows: no per-doc size groupBy, no
+    # size joins (each would re-run the kernel and its scan)
+    sh = sized_shingles_of(docs)
     # membership is a pure doc_id predicate -> filter, never a join
     new_sh = sh.filter(F.col("doc_id") % BATCH_MOD == 0)
     corp_sh = sh.filter(F.col("doc_id") % BATCH_MOD != 0)
@@ -809,24 +780,20 @@ def incremental_dedup(
     corp_idx = corp_sh.join(
         corp_df.filter(F.col("df") <= MAX_GROUP).select("shingle"), "shingle"
     )
-    inter = (
-        new_sh.withColumnRenamed("doc_id", "new_id")
-        .join(corp_idx.withColumnRenamed("doc_id", "corp_id"), "shingle")
-        .groupBy("new_id", "corp_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     scored = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("new_id"), F.col("n").alias("n_new")),
-            "new_id",
+        new_sh.select(
+            F.col("doc_id").alias("new_id"), "shingle", F.col("n").alias("n_new")
         )
         .join(
-            sizes.select(
-                F.col("doc_id").alias("corp_id"), F.col("n").alias("n_corp")
+            corp_idx.select(
+                F.col("doc_id").alias("corp_id"),
+                "shingle",
+                F.col("n").alias("n_corp"),
             ),
-            "corp_id",
+            "shingle",
         )
+        .groupBy("new_id", "corp_id", "n_new", "n_corp")
+        .agg(F.count("*").alias("n_inter"))
         .select(
             "new_id",
             "corp_id",

@@ -2,10 +2,10 @@
 
 Per the brief, image/audio/video are treated as opaque ``binary`` columns
 with a typed metadata struct; decode / feature-extract / resize /
-frame-sample run as Arrow-batched UDFs over ``mapInPandas``.  The actual
-codecs are NOT in this container, so the decode step is a deterministic
-fake behind ``decode_stub`` (clearly marked); the Spark-side plumbing —
-schema, partitioning, UDF signature, batch shape — is real and tested.
+frame-sample run as Arrow-batched UDFs over ``mapInPandas``.  The decode
+step ``decode_stub`` dispatches to the pure-Python decoders in
+ops/codecs.py (images) and ops/av.py (WAV audio, MJPEG-in-AVI video) and
+raises on the codecs those do not cover.
 
 The synthetic payload format (built from document text bytes) carries a
 12-byte header: magic 'MM01' + uint32 width + uint32 height (big-endian),

@@ -9,9 +9,9 @@ a fixed-size, mergeable summary built in one pass:
 - ``decontaminate_bloom``: a bloom filter over the eval n-gram set
   (fixed M bits however large the corpus) prescreens corpus grams BEFORE
   any join, so only candidate grams — contamination hits plus a
-  vanishing FP stream — reach the exact verify join.  With
-  ``eval_is_bounded=False`` semantics (eval ∝ corpus, shuffled join) the
-  prescreen collapses the all-corpus-grams shuffle to survivors only.
+  vanishing FP stream — reach the exact verify join.  When the eval set
+  grows with the corpus, the prescreen cuts the verify join's corpus side
+  to the survivors only.
   Output is EXACTLY ``ops.curation.decontaminate``'s by construction:
   the same hashes build and probe the filter (no false negatives), and
   the verify join removes every false positive — hash values affect

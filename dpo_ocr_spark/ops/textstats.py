@@ -15,7 +15,7 @@ Ratios are emitted ×1000 as integers (FP-hash-safe oracle contract).
 
 from __future__ import annotations
 
-from .dedup import md5_int63
+from .dedup import _docs, md5_int63
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # tiny per-language stopword lists (deterministic, shared with oracle SQL)
@@ -33,16 +33,6 @@ STOPWORDS = {
 # vertical tab, RE2's does not, and this constant is interpolated into
 # BOTH engines' regexes (r3 review finding)
 SUBWORD_REGEX = r"[a-z]{1,4}|[A-Z][a-z]{0,3}|\d{1,4}|[^ \t\n\x0b\f\ra-zA-Z0-9]"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan at size-derived parallelism (see dedup._docs)."""
-    from ..scale import decode_partitions, ensure_parallelism
-
-    return ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        min_parts=decode_partitions(spark, sf_dir),
-    )
 
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

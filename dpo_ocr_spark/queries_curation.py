@@ -153,10 +153,6 @@ FROM h
 from .ops.textstats import host_cap  # noqa: E402
 
 register("host_cap", _host_cap_oracle())(host_cap)
-register(
-    "repetition_stats_exploded",
-    C.REPETITION_ORACLE,
-)(C.repetition_stats_exploded)
 
 
 def _incremental_dedup_oracle() -> str:

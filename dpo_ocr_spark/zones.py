@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .assemble import _ordered_concat
+
 SPLIT_X = 320
 N_ROWS = 3
 Y_STEP = 24  # corpus.render_layout: y = 24 * block
@@ -61,20 +63,16 @@ def zonal_data(tokens: DataFrame, zones: DataFrame) -> DataFrame:
         (F.col("wx0") >= F.col("x0")) & (F.col("wx2") < F.col("x1"))
         & (F.col("wy0") >= F.col("y0")) & (F.col("wy2") <= F.col("y1")),
     )
-    arr = F.array_sort(F.collect_list(F.struct("word", "word_text")))
-    grouped = joined.groupBy(
-        "url", "zone_id", "field_name", "row_no", "word_separator"
-    ).agg(
-        F.transform(arr, lambda s: s["word_text"]).alias("cell_words"),
-        F.count("*").alias("n_words"),
-    )
     # the separator comes from the zone row (a grouping key, so constant
     # within the group) — reference joins with ocr_zones.word_separator,
     # database/database.sql:229-251, NOT a hardcoded space
-    return grouped.select(
-        "url", "zone_id", "field_name", "row_no", "word_separator",
-        F.expr("array_join(cell_words, word_separator)").alias("cell_text"),
-        "n_words",
+    return joined.groupBy(
+        "url", "zone_id", "field_name", "row_no", "word_separator"
+    ).agg(
+        _ordered_concat(["word"], sep=F.col("word_separator")).alias(
+            "cell_text"
+        ),
+        F.count("*").alias("n_words"),
     )
 
 

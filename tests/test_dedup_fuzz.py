@@ -1,6 +1,6 @@
 """Differential fuzz of the Arrow dedup kernels against their SQL twins.
 
-``shingles_of``, ``sized_shingles_of`` and the MinHash signature kernel
+The shingle kernel (``sized_shingles_of``) and the MinHash signature kernel
 (``_signature_batches``) restate in Python the shingle rule that
 tests/dedup_reference.py states in Spark SQL: lower-case, collapse
 ASCII whitespace, split on ' ', clip to word-3-grams, keep the first
@@ -82,9 +82,10 @@ def test_dedup_kernels_match_reference_on_hostile_text(spark, texts):
     ref = docs.select("doc_id", F.explode(R._shingles()).alias("shingle"))
     want = _rows(ref)
 
-    assert _rows(D.shingles_of(docs)) == want
+    sized = D.sized_shingles_of(docs)
+    assert _rows(sized.select("doc_id", "shingle")) == want
     n = Counter(doc_id for doc_id, _ in want)
-    assert _rows(D.sized_shingles_of(docs)) == sorted(
+    assert _rows(sized) == sorted(
         (doc_id, s, n[doc_id]) for doc_id, s in want
     )
     sig = docs.select("doc_id", "text").mapInArrow(

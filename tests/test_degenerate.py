@@ -52,7 +52,6 @@ def _ops():
         EV.props_extract,
         C.decontaminate,
         C.repetition_stats,
-        C.repetition_stats_exploded,
         C.training_order,
         C.tfidf_top_terms,
         C.pii_scrub,
@@ -86,7 +85,6 @@ def test_new_ops_survive_empty_text_doc(spark, tmp_path):
 
     for fn in (
         C.repetition_stats,
-        C.repetition_stats_exploded,
         C.training_order,
         C.tfidf_top_terms,
         C.pii_scrub,

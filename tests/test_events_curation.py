@@ -119,14 +119,6 @@ def test_decontaminate_crafted(spark, tmp_path):
     assert set(got) == {1, 2}
     assert got[1] == (1, True)
     assert got[2] == (0, False)
-    # eval-∝-corpus fallback (no broadcast hint) is result-identical
-    fallback = {
-        r.doc_id: (r.n_hits, r.contaminated)
-        for r in decontaminate(
-            spark, str(tmp_path), eval_is_bounded=False
-        ).collect()
-    }
-    assert fallback == got
 
 
 def test_repetition_stats_crafted(spark, tmp_path):
@@ -235,19 +227,6 @@ def test_streaming_window_withholds_unfinalized(spark, tmp_path):
         (_EPOCH - dt.datetime(1970, 1, 1)).total_seconds()
     ) // 3600
     assert got == {epoch_hour0: 1, epoch_hour0 + 1: 1}
-
-
-def test_repetition_exploded_equals_inrow(spark):
-    """The shuffle-based twin must produce row-identical output to the
-    in-row form (it's the documented fallback for giant documents)."""
-    from dpo_ocr_spark.ops.curation import (
-        repetition_stats,
-        repetition_stats_exploded,
-    )
-
-    a = sorted(map(tuple, repetition_stats(spark, SD).collect()))
-    b = sorted(map(tuple, repetition_stats_exploded(spark, SD).collect()))
-    assert a == b
 
 
 def test_asof_and_sessionize_vs_python_reference(spark, tmp_path):

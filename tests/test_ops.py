@@ -120,21 +120,22 @@ def test_shingle_kernel_equivalence(spark):
     from dpo_ocr_spark.ops import dedup as D
 
     sql_rows = sorted(map(tuple, R.shingle_frame_sql(spark, SD).collect()))
-    py_rows = sorted(map(tuple, D.shingle_frame(spark, SD).collect()))
+    sh = D.sized_shingles_of(D._docs(spark, SD)).select("doc_id", "shingle")
+    py_rows = sorted(map(tuple, sh.collect()))
     assert py_rows == sql_rows
 
 
 def test_signature_kernel_equivalence(spark):
     """The whole-signature Arrow kernel (one md5/shingle + numpy min)
-    is row-identical to the SQL reference minhash_of(shingles_of(docs))
+    is row-identical to the SQL reference minhash_of over the shingle
+    kernel's (doc_id, shingle) rows
     — the r6 optimization moved the k-hash derivation into the kernel
     so the JVM no longer computes k md5s per shingle nor shuffles the
     shingle strings."""
     from dpo_ocr_spark.ops import dedup as D
 
-    sql_rows = sorted(
-        map(tuple, R.minhash_of(D.shingle_frame(spark, SD)).collect())
-    )
+    sh = D.sized_shingles_of(D._docs(spark, SD)).select("doc_id", "shingle")
+    sql_rows = sorted(map(tuple, R.minhash_of(sh).collect()))
     py_rows = sorted(map(tuple, D.minhash_signatures(spark, SD).collect()))
     assert py_rows == sql_rows
 
@@ -150,7 +151,8 @@ def test_sized_jaccard_equivalence(spark):
         map(
             tuple,
             R.ngram_jaccard_from_shingles(
-                D.shingles_of(docs), threshold_x1000=0
+                D.sized_shingles_of(docs).select("doc_id", "shingle"),
+                threshold_x1000=0,
             ).collect(),
         )
     )
@@ -193,7 +195,7 @@ def test_hot_group_caps_bound_fanout(spark):
         [(i, f"click here to see unique page {i}") for i in range(n)],
         "doc_id long, text string",
     )
-    sh = D.shingles_of(docs).cache()
+    sh = D.sized_shingles_of(docs).select("doc_id", "shingle").cache()
 
     # 4 shared shingles have df=50 > 10 → dropped; the unique 5th can't pair
     pairs = R.ngram_jaccard_from_shingles(sh, threshold_x1000=0, max_df=10)
@@ -221,7 +223,7 @@ def test_hot_lsh_bucket_cap(spark):
         [(i, "the very same text for every single doc") for i in range(n)],
         "doc_id long, text string",
     )
-    sig = R.minhash_of(D.shingles_of(docs))
+    sig = R.minhash_of(D.sized_shingles_of(docs).select("doc_id", "shingle"))
     capped = D.lsh_pairs_from_signatures(sig, max_bucket=10)
     assert capped.count() == 0
     stats = D.drop_stats("minhash_lsh")

@@ -92,6 +92,18 @@ def test_cc_loop_lineage_truncated(spark):
     assert n_exchanges < 50, f"{n_exchanges} Exchanges — lineage not truncated"
 
 
+def test_incremental_dedup_shingle_kernel_runs(spark):
+    """incremental_dedup takes each doc's shingle count from the kernel's
+    rows, so no per-doc size groupBy and no size joins re-run the kernel
+    and its scan: the final plan runs the Python shingle kernel at most
+    three times (the batch side, the corpus index and its stop-shingle
+    counts).  The size-join form ran it five times."""
+    from dpo_ocr_spark.ops.dedup import incremental_dedup
+
+    plan = _plan(incremental_dedup(spark, SD)).split("== Initial Plan ==")[0]
+    assert plan.count("MapInArrow") <= 3, plan
+
+
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     """Results written partitionBy(lang) must scan ONLY the filtered
     partition on read — PartitionFilters at the source, other-language
