@@ -63,16 +63,14 @@ def _ordered_concat(
     return F.call_function("concat_ws", F.lit(sep), values)
 
 
-def assemble_blocks(
-    tokens: DataFrame, min_confidence: float = INTERPRET_CONFIDENCE
-) -> DataFrame:
+def assemble_blocks(tokens: DataFrame) -> DataFrame:
     """Line-grain block assembly (reference block_identification.py:68).
 
     Returns (url, warc_ts, block, word_line, block_text,
     block_confidence, n_words).
     """
     return (
-        tokens.filter(F.col("confidence") > F.lit(min_confidence))
+        tokens.filter(F.col("confidence") > F.lit(INTERPRET_CONFIDENCE))
         .groupBy("url", "warc_ts", "block", "word_line")
         .agg(
             _ordered_concat(["word"]).alias("block_text"),
@@ -82,16 +80,14 @@ def assemble_blocks(
     )
 
 
-def assemble_reading_order(
-    tokens: DataFrame, min_confidence: float = AUTOMATCH_CONFIDENCE
-) -> DataFrame:
+def assemble_reading_order(tokens: DataFrame) -> DataFrame:
     """Full reading-order block text (auto_id_compare.py:204-248).
 
     Returns (url, warc_ts, block, block_text, block_confidence,
     n_words); inner order (page, word_line, word) per :236-238.
     """
     return (
-        tokens.filter(F.col("confidence") >= F.lit(min_confidence))
+        tokens.filter(F.col("confidence") >= F.lit(AUTOMATCH_CONFIDENCE))
         .groupBy("url", "warc_ts", "block")
         .agg(
             _ordered_concat(["page", "word_line", "word"]).alias("block_text"),

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .assemble import _ordered_concat
+from .zones import SPLIT_X
+
+# annotate_plan's outline width and page box (run_gvision_ocr.py:185-260)
+LINE_WIDTH, PAGE_W, PAGE_H = 3, 2000, 100
 
 # the reference's CSV column schema, restated (run_gvision_ocr.py:173-174)
 CSV_COLUMNS = [
@@ -215,7 +219,7 @@ def json_response_sink(extracted: DataFrame, path: str) -> None:
     ).write.mode("overwrite").text(path)
 
 
-def form_fields(tokens: DataFrame, split_x: int = 320) -> DataFrame:
+def form_fields(tokens: DataFrame) -> DataFrame:
     """Document-AI form-field (key-value) extraction
     (ML/google_documentai/run_docai.py:130-145): per page, pairs of
     (field_name, field_confidence, value, value_confidence) — the
@@ -242,8 +246,8 @@ def form_fields(tokens: DataFrame, split_x: int = 320) -> DataFrame:
     )
     # zonal containment semantics (zones.zonal_data): half-open on x —
     # a word straddling the split belongs to neither side
-    is_field = F.col("wx2") < split_x
-    is_value = F.col("wx0") >= split_x
+    is_field = F.col("wx2") < SPLIT_X
+    is_value = F.col("wx0") >= SPLIT_X
 
     g = t.groupBy("url", "page", "line").agg(
         _ordered_concat(["word"], where=is_field).alias("field_name"),
@@ -267,19 +271,14 @@ def form_fields(tokens: DataFrame, split_x: int = 320) -> DataFrame:
     )
 
 
-def annotate_plan(
-    tokens: DataFrame,
-    line_width: int = 3,
-    page_w: int = 2000,
-    page_h: int = 100,
-) -> DataFrame:
+def annotate_plan(tokens: DataFrame) -> DataFrame:
     """S12 annotated-image sink, split into its deterministic DRAW PLAN
     (this table) and the rasterize step (PIL absent in this container —
     same codec boundary as ops/multimodal.decode_stub).
 
     Reference run_gvision_ocr.py:185-260: per block, a confidence color
     class (>0.9 green, >0.8 yellow, >0.7 orange, else red) and the quad
-    outset by line_width, clamped to the page box; the sink then draws 4
+    outset by LINE_WIDTH, clamped to the page box; the sink then draws 4
     lines 0→1→2→3→0 between consecutive corners.  This table IS the
     sink's full information content — every drawn pixel is a pure
     function of one row.
@@ -302,17 +301,17 @@ def annotate_plan(
         .when(F.col("s") > 70 * F.col("n"), "#ffa366")
         .otherwise("#ff6666")
     )
-    w = line_width
+    w = LINE_WIDTH
     return g.select(
         "url",
         F.col("block").cast("int").alias("block"),
         color.alias("linecolor"),
         F.greatest(F.col("bx0") - w, F.lit(0)).cast("int").alias("ax0"),
         F.greatest(F.col("by0") - w, F.lit(0)).cast("int").alias("ay0"),
-        F.least(F.col("bx1") + w, F.lit(page_w)).cast("int").alias("ax1"),
+        F.least(F.col("bx1") + w, F.lit(PAGE_W)).cast("int").alias("ax1"),
         F.greatest(F.col("by0") - w, F.lit(0)).cast("int").alias("ay1"),
-        F.least(F.col("bx1") + w, F.lit(page_w)).cast("int").alias("ax2"),
-        F.least(F.col("by1") + w, F.lit(page_h)).cast("int").alias("ay2"),
+        F.least(F.col("bx1") + w, F.lit(PAGE_W)).cast("int").alias("ax2"),
+        F.least(F.col("by1") + w, F.lit(PAGE_H)).cast("int").alias("ay2"),
         F.greatest(F.col("bx0") - w, F.lit(0)).cast("int").alias("ax3"),
-        F.least(F.col("by1") + w, F.lit(page_h)).cast("int").alias("ay3"),
+        F.least(F.col("by1") + w, F.lit(PAGE_H)).cast("int").alias("ay3"),
     )

@@ -241,7 +241,7 @@ def cascade_rows(
 
 
 def _ref_dictionaries(
-    spark: SparkSession, sf_dir: str, sizes: list[str]
+    spark: SparkSession, sf_dir: str
 ) -> dict[str, dict[str, list[str]]]:
     """{size: {field: sorted distinct ref-split golden values}}."""
     from ..eval.harness import golden_long, splits
@@ -252,12 +252,12 @@ def _ref_dictionaries(
             splits(spark, sf_dir).filter(F.col("ref_or_test") == "ref"),
             "url",
         )
-        .filter(F.col("reference_size").isin(sizes))
+        .filter(F.col("reference_size").isin(AUTO_SIZES))
         .select("reference_size", "field", "data")
         .distinct()
         .collect()  # vocabulary-sized by construction
     )
-    dicts: dict[str, dict[str, list[str]]] = {s: {} for s in sizes}
+    dicts: dict[str, dict[str, list[str]]] = {s: {} for s in AUTO_SIZES}
     for r in ref:
         dicts[r["reference_size"]].setdefault(r["field"], []).append(r["data"])
     for by_field in dicts.values():
@@ -266,17 +266,16 @@ def _ref_dictionaries(
     return dicts
 
 
-def _test_blocks(
-    spark: SparkSession, sf_dir: str, blocks: DataFrame, sizes: list[str]
-) -> DataFrame:
-    """blocks × their test-split sizes (broadcast dim join)."""
+def _test_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """auto_blocks × their test-split sizes (broadcast dim join)."""
     from ..eval.harness import splits
+    from .labels import auto_blocks
 
-    return blocks.join(
+    return auto_blocks(spark, sf_dir).join(
         F.broadcast(
             splits(spark, sf_dir).filter(
                 (F.col("ref_or_test") == "test")
-                & F.col("reference_size").isin(sizes)
+                & F.col("reference_size").isin(AUTO_SIZES)
             )
         ),
         "url",
@@ -315,43 +314,31 @@ def _dedup_upserts(out: DataFrame) -> DataFrame:
     )
 
 
-def _auto_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    blocks: DataFrame | None = None,
-    sizes: list[str] | None = None,
-) -> DataFrame:
+def _auto_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-dedup upsert rows of the auto table: the 8-field dictionary
     cascade (pass 0) + the active geo country pass (pass 1,
     auto_id_compare.py:519-560 — the gazetteer is the gadm0/country
     level, here the initcap region names).
 
-    The default-fixture path is stage-cached: auto_match AND auto_geo
-    both consume these rows, and the fuzzy-DP cascade is the most
-    expensive interpret stage — without the memo a gate run would
-    execute it twice."""
+    Stage-cached: auto_match AND auto_geo both consume these rows, and
+    the fuzzy-DP cascade is the most expensive interpret stage — without
+    the memo a gate run would execute it twice."""
+    from ..stagecache import shared
+
+    return shared(
+        spark, f"auto_rows:{sf_dir}", lambda: _auto_rows_uncached(spark, sf_dir)
+    )
+
+
+def _auto_rows_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dims import _gadm
-    from .labels import auto_blocks
 
-    sizes = sizes or AUTO_SIZES
-    if blocks is None and sizes == AUTO_SIZES:
-        from ..stagecache import shared
-
-        return shared(
-            spark,
-            f"auto_rows:{sf_dir}",
-            lambda: _auto_rows(
-                spark, sf_dir, auto_blocks(spark, sf_dir), sizes
-            ),
-        )
-    if blocks is None:
-        blocks = auto_blocks(spark, sf_dir)
-    dicts = _ref_dictionaries(spark, sf_dir, sizes)
+    dicts = _ref_dictionaries(spark, sf_dir)
     gazetteer = sorted(
         r[0] for r in _gadm(spark, sf_dir).select("country").distinct().collect()
     )
     bc = spark.sparkContext.broadcast((dicts, gazetteer))
-    work = _test_blocks(spark, sf_dir, blocks, sizes)
+    work = _test_blocks(spark, sf_dir)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         d_all, gaz = bc.value
@@ -375,22 +362,12 @@ def _auto_rows(
     return work.mapInPandas(run, schema=AUTO_SCHEMA)
 
 
-def auto_match(
-    spark: SparkSession,
-    sf_dir: str,
-    blocks: DataFrame | None = None,
-    sizes: list[str] | None = None,
-) -> DataFrame:
+def auto_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The auto table (long form): one row per (url, size, field) upsert."""
-    return _dedup_upserts(_auto_rows(spark, sf_dir, blocks, sizes))
+    return _dedup_upserts(_auto_rows(spark, sf_dir))
 
 
-def auto_geo(
-    spark: SparkSession,
-    sf_dir: str,
-    blocks: DataFrame | None = None,
-    sizes: list[str] | None = None,
-) -> DataFrame:
+def auto_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``ocr_transcription_ento_auto_geo`` analog: the auto table
     (auto_id_compare.py:369: CREATE TABLE ..._geo AS SELECT * FROM auto)
     plus the gadm1/state (pass 2) and gadm2/county (pass 3) geo passes.
@@ -417,17 +394,8 @@ def auto_geo(
     - tie-breaks follow the pinned dictionary order (name-sorted), pandas
       keep='first'."""
     from .dims import _gadm
-    from .labels import auto_blocks
 
-    sizes = sizes or AUTO_SIZES
-    # Compute the base cascade rows with the caller's ORIGINAL blocks
-    # (None stays None) so the default path hits the auto_rows stage
-    # cache shared with auto_match — resolving blocks first would defeat
-    # the memo and run the fuzzy-DP cascade twice per gate session
-    # (r4 advice item #1).
-    base_rows = _auto_rows(spark, sf_dir, blocks, sizes)
-    if blocks is None:
-        blocks = auto_blocks(spark, sf_dir)
+    base_rows = _auto_rows(spark, sf_dir)
     g = _gadm(spark, sf_dir)
     states = [
         (n, c, len(n))
@@ -446,7 +414,7 @@ def auto_geo(
         )
     ]
     bc = spark.sparkContext.broadcast((states, counties))
-    work = _test_blocks(spark, sf_dir, blocks, sizes)
+    work = _test_blocks(spark, sf_dir)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states_l, counties_l = bc.value

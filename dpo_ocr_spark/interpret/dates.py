@@ -5,7 +5,7 @@ load-bearing quirks, each preserved deliberately (SURVEY.md §7.3):
 
 - C1: ``re.sub(r'\\W+ ,-/', '', text)`` — the pattern only strips non-word
   runs followed by literal " ,-/", a near-no-op; NOT "fixed".
-- C2: year accepted iff 1800 <= y < cur_year (``range`` excludes the
+- C2: year accepted iff 1800 <= y < CUR_YEAR (``range`` excludes the
   current year, :98).
 - C4: roman-month map has ``"X11": "Dec"`` and *no* ``XII`` key (:143);
   substring containment (``"I" in "VI"``) and replace-all quirks kept.
@@ -36,6 +36,7 @@ ROMAN_MONTH = {
 }
 
 FROM_YEAR = 1800  # block_identification.py:79
+CUR_YEAR = 2026  # the "current year" bound, pinned so output is reproducible
 _ALPHA_RE = re.compile(r"\W+ ,-/")
 _NONWORD_RE = re.compile(r"\W+")
 _DIGITS_RE = re.compile(r"\d+")
@@ -81,15 +82,13 @@ def _roman(text: str, first_wins: bool) -> tuple[tuple[int, int, int], str] | No
     return result
 
 
-def _century_fix(y: int, cur_year: int) -> int:
+def _century_fix(y: int) -> int:
     """:169-171 — 'if it interprets year 64 as 2064' subtract 1000 (sic)."""
-    return y - 1000 if y > cur_year else y
+    return y - 1000 if y > CUR_YEAR else y
 
 
 def interpret_block(
-    text: str,
-    collector_strings: tuple[str, ...] = (),
-    cur_year: int = 2026,
+    text: str, collector_strings: tuple[str, ...] = ()
 ) -> tuple[str, str, str, str] | None:
     """One block text → (data_type, data_format, interpreted_value,
     verbatim_value) or None; mirrors the :84-200 per-block control flow."""
@@ -108,7 +107,7 @@ def interpret_block(
             y = int(alpha_yr)
         except ValueError:
             return None
-        if FROM_YEAR <= y < cur_year:
+        if FROM_YEAR <= y < CUR_YEAR:
             return ("verbatim_date", "Date (year)", alpha_yr, alpha_block)
         # fall through — e.g. "1,500'" (digits 1500 < 1800) continues on
         # to the elevation rule
@@ -137,7 +136,7 @@ def interpret_block(
         (y, mo, d), alpha = roman1
         interpreted = f"{y:04d}-{mo:02d}-{d:02d}"
         verbatim = alpha
-    elif any(str(i) in text for i in range(FROM_YEAR, cur_year)):
+    elif any(str(i) in text for i in range(FROM_YEAR, CUR_YEAR)):
         p = _parse_last_wins(alpha_block)
         if p is not None:
             y, mo, d = p
@@ -155,13 +154,13 @@ def interpret_block(
                 p = _parse_first_wins(alpha_of(text))
                 if p is not None:
                     y, mo, d = p
-                    y = _century_fix(y, cur_year)
+                    y = _century_fix(y)
                     interpreted = f"{y}-{mo:02d}-{d:02d}"
                     verbatim = alpha_of(text)
                 roman2 = _roman(text, first_wins=True)
                 if roman2 is not None:
                     (y, mo, d), alpha = roman2
-                    y = _century_fix(y, cur_year)
+                    y = _century_fix(y)
                     interpreted = f"{y}-{mo:02d}-{d:02d}"
                     verbatim = alpha
                 break  # only the first matching NN is processed (:158 guard)

@@ -130,7 +130,7 @@ def gazetteer_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def taxonomy(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+def taxonomy(spark: SparkSession) -> DataFrame:
     """Leveled taxonomy dictionary (sciname, sortorder, name_type) —
     the U1 union of species / species_abbr / genus / family projections
     with UNION-dedup and ORDER BY sciname, sortorder."""

@@ -59,11 +59,6 @@ ROMAN_OF_MONTH = [
     "XI", "XII",
 ]
 
-# SQL CASE fragment shared with the DuckDB oracle
-ROMAN_CASE_SQL = "CASE month(o_orderdate) " + " ".join(
-    f"WHEN {m} THEN '{r}'" for m, r in enumerate(ROMAN_OF_MONTH) if r
-) + " END"
-
 
 def _label_base(
     spark: SparkSession, sf_dir: str, nation: bool = False,

@@ -69,16 +69,14 @@ def _emit(rows: list[tuple]) -> pd.DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def interpret_dates(
-    blocks: DataFrame, collector_strings: tuple[str, ...] = COLLECTOR_STRINGS
-) -> DataFrame:
+def interpret_dates(blocks: DataFrame) -> DataFrame:
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[tuple] = []
             for url, block, wl, text in zip(
                 pdf["url"], pdf["block"], pdf["word_line"], pdf["block_text"]
             ):
-                r = interpret_block(text, collector_strings)
+                r = interpret_block(text, COLLECTOR_STRINGS)
                 if r is not None:
                     dt, fmt, iv, vv = r
                     rows.append(
@@ -315,11 +313,7 @@ def match_other_numbers(blocks: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def match_collector(
-    blocks: DataFrame,
-    fields_so_far: DataFrame,
-    collector_strings: tuple[str, ...] = COLLECTOR_STRINGS,
-) -> DataFrame:
+def match_collector(blocks: DataFrame, fields_so_far: DataFrame) -> DataFrame:
     others = (
         fields_so_far.filter(F.col("data_type") != "collector")
         .groupBy(F.col("url"), F.col("block_id").alias("block"))
@@ -338,7 +332,7 @@ def match_collector(
                 pdf["url"], pdf["block"], pdf["word_line"],
                 pdf["block_text"], pdf["other_vals"],
             ):
-                for coll in collector_strings:
+                for coll in COLLECTOR_STRINGS:
                     if coll not in text:
                         continue
                     interpreted = text
@@ -350,7 +344,7 @@ def match_collector(
                     interpreted = interpreted.replace(coll, "").strip()
                     # quirk :319-321 — skip when the remainder equals any
                     # collector string with itself removed
-                    coll2 = [c.replace(interpreted, "") for c in collector_strings]
+                    coll2 = [c.replace(interpreted, "") for c in COLLECTOR_STRINGS]
                     if interpreted in coll2:
                         continue
                     if len(interpreted) > 3:
@@ -373,10 +367,7 @@ SIM_DICT_CAP = 100_000  # semantic knob: top-N most frequent dictionary values
 
 
 def similarity_fallback(
-    spark: SparkSession,
-    blocks: DataFrame,
-    fields: DataFrame,
-    dict_cap: int = SIM_DICT_CAP,
+    spark: SparkSession, blocks: DataFrame, fields: DataFrame
 ) -> DataFrame:
     """block_identification.py:330-364 — a block missing any known
     data_type gets the globally most word-similar existing
@@ -388,7 +379,7 @@ def similarity_fallback(
     equivalent).
 
     Scale shape: the snapshot is a DISTINCT (type, format, value)
-    dictionary aggregated distributedly and bounded to the ``dict_cap``
+    dictionary aggregated distributedly and bounded to the ``SIM_DICT_CAP``
     most frequent entries (TakeOrdered — never a full sort, never a
     corpus-sized collect; the fields table itself is corpus-sized at
     10¹² docs, its distinct dictionary is vocabulary-sized).  Below the
@@ -403,7 +394,7 @@ def similarity_fallback(
             "interpreted_value",
             "data_format",
         )
-        .limit(dict_cap)
+        .limit(SIM_DICT_CAP)
         .collect()
     )
     snapshot = [
@@ -510,20 +501,19 @@ def interpret_all(
     blocks: DataFrame,
     gazetteer: DataFrame,
     taxonomy: DataFrame,
-    collector_strings: tuple[str, ...] = COLLECTOR_STRINGS,
     hierarchy: DataFrame | None = None,
 ) -> DataFrame:
     """Full §3.2 pipeline: dates → localities (→ admin-hierarchy
     expansion when a hierarchy dim is given) → taxonomy → collector →
     similarity fallback, merged with reference upsert semantics."""
     blocks = blocks.cache()
-    dates = dedup_line_grain(interpret_dates(blocks, collector_strings))
+    dates = dedup_line_grain(interpret_dates(blocks))
     locs = dedup_line_grain(match_localities(spark, blocks, gazetteer))
     if hierarchy is not None:
         locs = locs.unionByName(expand_locality(locs, blocks, hierarchy))
     taxo = dedup_line_grain(match_taxonomy(spark, blocks, taxonomy))
     base = merge_fields(merge_fields(dates, locs), taxo)
-    coll = dedup_line_grain(match_collector(blocks, base, collector_strings))
+    coll = dedup_line_grain(match_collector(blocks, base))
     merged = merge_fields(base, coll).cache()
     fb = dedup_line_grain(similarity_fallback(spark, blocks, merged))
     return merge_fields(merged, fb)

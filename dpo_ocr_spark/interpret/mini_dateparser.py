@@ -5,8 +5,7 @@ The reference calls dateparser with settings
 ``PREFER_DAY_OF_MONTH='first'``, ``REQUIRE_PARTS=['month','year']``
 (block_identification.py:136-138).  That library isn't available here, so
 this module implements the subset of its behavior the pipeline relies on,
-deterministically (no locale, no current-time dependence except an explicit
-``cur_year`` argument):
+deterministically (no locale, no current-time dependence):
 
 - tokenization on whitespace / '-' / '/' / ',' / '.';
 - month = English month name or abbreviation (case-insensitive), or a

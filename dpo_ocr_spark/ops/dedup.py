@@ -75,9 +75,12 @@ def drop_stats(what: str) -> dict:
     return {"dropped_groups": int(row["g"] or 0), "dropped_ids": int(row["i"] or 0)}
 # embedding quantization: round(x * 10^3) → exact BIGINT arithmetic.
 # Overflow budget: |x| ≤ 1, dims ≤ 128 → |dot| ≤ 1.28e8, dot² ≤ 1.64e16;
-# with t = t_num/t_den ≤ 1 and t_den ≤ 20: dot²·t_den² ≤ 6.6e18 < 2^63
-# and t_num²·na·nb ≤ 6.6e18 < 2^63.
+# with t = COS_NUM/COS_DEN ≤ 1 and COS_DEN ≤ 20: dot²·COS_DEN² ≤ 6.6e18
+# < 2^63 and COS_NUM²·na·nb ≤ 6.6e18 < 2^63.
 _QUANT = 1_000
+COS_NUM, COS_DEN = 2, 5  # embedding near-dup gate: cosine ≥ 2/5
+JACCARD_X1000 = 300  # shingle-Jaccard near-dup gate (×1000)
+CLUSTER_JACCARD_X1000 = 100  # dedup_clusters' edge gate (×1000)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,13 +184,11 @@ def sized_shingles_of(docs: DataFrame) -> DataFrame:
 SUBSTR_K = 8  # tokens per window for exact-substring duplicate spans
 
 
-def substring_dedup(
-    spark: SparkSession, sf_dir: str, k: int = SUBSTR_K
-) -> DataFrame:
+def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style repeated-substring detection (the
     suffix-duplication method of "Deduplicating Training Data Makes
     Language Models Better", Lee et al. 2022, at word granularity): a
-    k-token window is a duplicate when its exact text occurs ≥2 times
+    SUBSTR_K-token window is a duplicate when its exact text occurs ≥2 times
     anywhere in the corpus (within- or cross-document); overlapping
     duplicate windows merge into maximal spans per document.
 
@@ -195,7 +196,7 @@ def substring_dedup(
     number of maximal duplicate spans, duplicated-token total, and
     per-mille duplicated fraction — the per-doc signal a curation pass
     thresholds on (consumers can equally cut the spans themselves, which
-    are (min_i, max_i + k - 1) per span group).
+    are (min_i, max_i + SUBSTR_K - 1) per span group).
 
     Scale shape at 10¹² docs: window fingerprints are md5-int64 of the
     k-gram — positions shuffle ONCE on fp for the global count, the
@@ -204,7 +205,7 @@ def substring_dedup(
     only), then ONE shuffle on doc_id for the gaps-and-islands merge.
     No pair enumeration anywhere — unlike MinHash/Jaccard this never
     materializes doc×doc candidates."""
-    spans = substring_dup_spans(spark, sf_dir, k)
+    spans = substring_dup_spans(spark, sf_dir)
     per_doc = spans.groupBy("doc_id", "n_words").agg(
         F.count("*").alias("n_dup_spans"),
         F.sum(F.col("e") - F.col("s") + 1).alias("n_dup_tokens"),
@@ -233,9 +234,7 @@ def _substring_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def substring_dup_spans(
-    spark: SparkSession, sf_dir: str, k: int = SUBSTR_K
-) -> DataFrame:
+def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicate token intervals per document — the SINGLE
     implementation of the fingerprint → dup-set → gaps-and-islands
     pipeline (both the per-doc summary and the span-level cut list
@@ -244,6 +243,7 @@ def substring_dup_spans(
     1-based inclusive."""
     from pyspark.sql import Window as W
 
+    k = SUBSTR_K
     ws = _substring_words(spark, sf_dir)
     grams = (
         ws.filter(F.col("n_words") >= k)
@@ -277,18 +277,15 @@ def substring_dup_spans(
 
 
 def ngram_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold_x1000: int = 300,
-    max_df: int = MAX_GROUP,
+    spark: SparkSession, sf_dir: str, threshold_x1000: int = JACCARD_X1000
 ) -> DataFrame:
     return ngram_jaccard_from_sized_shingles(
-        sized_shingles_of(_docs(spark, sf_dir)), threshold_x1000, max_df
+        sized_shingles_of(_docs(spark, sf_dir)), threshold_x1000
     )
 
 
 def ngram_jaccard_from_sized_shingles(
-    sh: DataFrame, threshold_x1000: int = 300, max_df: int = MAX_GROUP
+    sh: DataFrame, threshold_x1000: int = JACCARD_X1000
 ) -> DataFrame:
     """Single-consumption Jaccard pipeline over a (doc_id, shingle, n)
     frame: the doc sizes ride inside the bucket structs, so the plan is
@@ -304,7 +301,6 @@ def ngram_jaccard_from_sized_shingles(
                 ).alias("ids")
             ),
             "ngram_jaccard",
-            max_df,
         )
         .select(F.explode(_pair_combos("ids")).alias("p"))
         .groupBy(
@@ -389,12 +385,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, max_bucket: int = MAX_GROUP
-) -> DataFrame:
-    return lsh_pairs_from_signatures(
-        minhash_signatures(spark, sf_dir), max_bucket
-    )
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return lsh_pairs_from_signatures(minhash_signatures(spark, sf_dir))
 
 
 def lsh_pairs_from_signatures(
@@ -548,13 +540,7 @@ def _quantized(df: DataFrame) -> DataFrame:
     )
 
 
-def embedding_neardup_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    t_num: int = 2,
-    t_den: int = 5,
-    max_bucket: int = MAX_GROUP,
-) -> DataFrame:
+def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path for embedding near-dup (the REGISTERED query): candidate
     pairs are restricted to same-(table, bucket) random-hyperplane LSH
     collisions (union over the 8 tables), then decided by the same EXACT
@@ -587,7 +573,6 @@ def embedding_neardup_lsh(
                 F.sort_array(F.collect_list("vec_id")).alias("ids")
             ),
             "embedding_neardup",
-            max_bucket,
         )
         .select(F.explode(_pair_combos("ids")).alias("p"))
         .select(
@@ -617,20 +602,15 @@ def embedding_neardup_lsh(
         .filter(
             (F.col("dot") > 0)
             & (
-                F.col("dot") * F.col("dot") * (t_den * t_den)
-                >= F.lit(t_num * t_num) * F.col("na") * F.col("nb")
+                F.col("dot") * F.col("dot") * (COS_DEN * COS_DEN)
+                >= F.lit(COS_NUM * COS_NUM) * F.col("na") * F.col("nb")
             )
         )
         .select("vec_a", "vec_b")
     )
 
 
-def dedup_clusters(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold_x1000: int = 100,
-    max_iter: int = 25,
-) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph: every document
     labeled with the smallest doc_id in its component (the canonical
     representative a dedup pipeline keeps).
@@ -645,7 +625,7 @@ def dedup_clusters(
     where a boilerplate chain can be millions long.  Each round is two shuffles on bounded keys; the loop is
     driver-side control flow over DataFrames (no data ever collects).
     Convergence is detected by an unchanged label sum (a run that needs
-    more than ``max_iter`` rounds raises), and the label frame
+    more than 25 rounds raises), and the label frame
     is ``localCheckpoint``-ed every round so the logical plan stays O(1)
     in the round count — without truncation the final action re-plans the
     fully unrolled loop (measured: 2,922 Exchanges at 25 rounds), which
@@ -657,10 +637,10 @@ def dedup_clusters(
     execution-order independent — the DuckDB oracle re-derives it with a
     recursive reachability CTE."""
     docs = _docs(spark, sf_dir).select("doc_id")
-    pairs = ngram_jaccard_pairs(spark, sf_dir, threshold_x1000).select(
+    pairs = ngram_jaccard_pairs(spark, sf_dir, CLUSTER_JACCARD_X1000).select(
         "doc_a", "doc_b"
     )
-    return clusters_from_edges(docs, pairs, max_iter)
+    return clusters_from_edges(docs, pairs)
 
 
 def clusters_from_edges(
@@ -734,15 +714,13 @@ def clusters_from_edges(
 BATCH_MOD = 5  # doc_id % BATCH_MOD == 0 -> the "incoming" batch
 
 
-def incremental_dedup(
-    spark: SparkSession, sf_dir: str, threshold_x1000: int = 300
-) -> DataFrame:
+def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-batch-vs-corpus dedup — the nightly-crawl shape: the incoming
     batch (doc_id % 5 == 0) is checked against the already-indexed corpus
     (the rest), NEVER corpus×corpus.
 
     exact_dup: md5(normalized text) matches any corpus doc.
-    near_dup:  word-shingle Jaccard ≥ threshold against some corpus doc;
+    near_dup:  word-shingle Jaccard ≥ JACCARD_X1000 against some corpus doc;
     best match = argmax (jaccard, then smallest corpus doc_id).
 
     Scale shape: the corpus sides (fingerprint index, shingle inverted
@@ -770,11 +748,12 @@ def incremental_dedup(
     )
 
     # doc sizes ride on the shingle rows: no per-doc size groupBy, no
-    # size joins (each would re-run the kernel and its scan)
-    sh = sized_shingles_of(docs)
-    # membership is a pure doc_id predicate -> filter, never a join
-    new_sh = sh.filter(F.col("doc_id") % BATCH_MOD == 0)
-    corp_sh = sh.filter(F.col("doc_id") % BATCH_MOD != 0)
+    # size joins (each would re-run the kernel and its scan).  Membership
+    # is a pure doc_id predicate, filtered BELOW the kernel: Spark cannot
+    # push a filter through mapInArrow, and a doc's shingle rows depend on
+    # that doc alone, so each side shingles only its own documents.
+    new_sh = sized_shingles_of(docs.filter(is_batch))
+    corp_sh = sized_shingles_of(docs.filter(~is_batch))
     # stop-shingle cap on the corpus index side
     corp_df = corp_sh.groupBy("shingle").agg(F.count("*").alias("df"))
     corp_idx = corp_sh.join(
@@ -829,7 +808,7 @@ def incremental_dedup(
             "doc_id",
             F.coalesce("exact_dup", F.lit(False)).alias("exact_dup"),
             F.coalesce(
-                F.col("best_jaccard_x1000") >= threshold_x1000, F.lit(False)
+                F.col("best_jaccard_x1000") >= JACCARD_X1000, F.lit(False)
             ).alias("near_dup"),
             "best_match_id",
             "best_jaccard_x1000",

@@ -138,11 +138,14 @@ def decode_stub(payload: bytes) -> "object":
     )
 
 
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
+THUMB_SIDE = 256  # resize_plan's target longest side, pixels
+
+
+def resize_plan(media: DataFrame) -> DataFrame:
     """Resize planning (pure metadata math, JVM-side): target dims keeping
     aspect ratio — the shape a real thumbnailing stage would take."""
     meta = extract_media_meta(media)
-    scale_num = F.lit(max_side)
+    scale_num = F.lit(THUMB_SIDE)
     longest = F.greatest("width", "height")
     return meta.filter(F.col("valid")).select(
         "doc_id",

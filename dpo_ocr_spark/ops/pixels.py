@@ -86,14 +86,12 @@ def _gray(img: np.ndarray) -> np.ndarray:
     return img.min(axis=2).astype(np.float64)
 
 
-def autocrop_bounds(
-    gray: np.ndarray, white: float = WHITE
-) -> tuple[int, int, int, int]:
+def autocrop_bounds(gray: np.ndarray) -> tuple[int, int, int, int]:
     """Inclusive content box (top, bottom, left, right) after trimming
-    blank borders — rows/cols whose mean >= ``white``.  All-blank image
+    blank borders — rows/cols whose mean >= ``WHITE``.  All-blank image
     returns (-1, -1, -1, -1)."""
-    rows = gray.mean(axis=1) < white
-    cols = gray.mean(axis=0) < white
+    rows = gray.mean(axis=1) < WHITE
+    cols = gray.mean(axis=0) < WHITE
     if not rows.any():
         return (-1, -1, -1, -1)
     ys = np.flatnonzero(rows)
@@ -101,9 +99,7 @@ def autocrop_bounds(
     return (int(ys[0]), int(ys[-1]), int(xs[0]), int(xs[-1]))
 
 
-def find_gutter(
-    gray: np.ndarray, box: tuple[int, int, int, int], white: float = WHITE
-) -> int:
+def find_gutter(gray: np.ndarray, box: tuple[int, int, int, int]) -> int:
     """Center column of the widest all-blank column run strictly inside
     the content box — the two-page split point.  -1 when no blank run
     exists (single-block page)."""
@@ -111,7 +107,7 @@ def find_gutter(
     if top < 0:
         return -1
     sub = gray[top : bottom + 1, left : right + 1]
-    blank = sub.mean(axis=0) >= white
+    blank = sub.mean(axis=0) >= WHITE
     best_len, best_start, run_start = 0, -1, None
     for i, b in enumerate(blank.tolist() + [False]):
         if b and run_start is None:
@@ -143,14 +139,16 @@ def rotate_nn(img: np.ndarray, deg: float, fill: int = 255) -> np.ndarray:
     return out
 
 
-def estimate_skew(
-    gray: np.ndarray, max_deg: float = 3.0, step: float = 0.5
-) -> float:
-    """Projection-profile deskew: the candidate angle whose rotation
-    maximizes the variance of per-row ink mass (sharp text lines ⇒ spiky
-    profile).  Returns the angle TO APPLY to deskew."""
+SKEW_MAX_DEG, SKEW_STEP = 3.0, 0.5  # deskew candidate angles, degrees
+
+
+def estimate_skew(gray: np.ndarray) -> float:
+    """Projection-profile deskew: the candidate angle in ±SKEW_MAX_DEG
+    (SKEW_STEP apart) whose rotation maximizes the variance of per-row ink
+    mass (sharp text lines ⇒ spiky profile).  Returns the angle TO APPLY
+    to deskew."""
     best_angle, best_score = 0.0, -1.0
-    angles = np.arange(-max_deg, max_deg + 1e-9, step)
+    angles = np.arange(-SKEW_MAX_DEG, SKEW_MAX_DEG + 1e-9, SKEW_STEP)
     ink = 255.0 - gray
     for a in angles:
         rot = rotate_nn(ink.astype(np.uint8), float(a), fill=0)

@@ -62,7 +62,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is a small integer matmul, so ~256 KB of compressed vectors per
     task keeps tasks meaningful (a fixed core-count fan-out spread 2 000
     fixture rows over 32 tasks — the repartition + dispatch overhead was
-    ~0.6 s per consumption, measured); clamps to 2×cores at scale."""
+    ~0.6 s per consumption, measured); clamps to 2×cores at scale.
+    Rows are (vec_id, label, q, norm2): q the quantized embedding, norm2
+    its exact integer squared norm."""
     from ..scale import decode_partitions, ensure_parallelism
 
     df = ensure_parallelism(
@@ -81,7 +83,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return df.select("vec_id", q.alias("q"), norm2.alias("norm2"))
+    return df.select("vec_id", "label", q.alias("q"), norm2.alias("norm2"))
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -92,9 +94,7 @@ def _dot(a: str, b: str) -> F.Column:
     )
 
 
-def brute_force_topk(
-    spark: SparkSession, sf_dir: str, k: int = TOP_K
-) -> DataFrame:
+def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k of every corpus vector for each query vector."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -122,7 +122,7 @@ def brute_force_topk(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_K)
         .select(
             "query_id", "cand_id", F.col("rn").alias("rank"),
             F.round("cos", 6).alias("cos_r6"),
@@ -178,9 +178,7 @@ IVF_CELLS = 16
 IVF_NPROBE = 4
 
 
-def _ivf_centroids(
-    emb: DataFrame, k: int = IVF_CELLS
-) -> tuple[np.ndarray, np.ndarray]:
+def _ivf_centroids(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic coarse centroids: the IVF_CELLS vectors with the
     smallest md5(vec_id) — a seedless random sample (at real scale,
     replace with a k-means fit on the same md5-sample; the search path
@@ -190,7 +188,7 @@ def _ivf_centroids(
     rows = (
         emb.select("vec_id", "q", "norm2")
         .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(k)
+        .limit(IVF_CELLS)
         .collect()
     )
     M = np.array([r.q for r in rows], dtype=np.int64)
@@ -224,9 +222,7 @@ def _cells_udf(M: np.ndarray, cn2: np.ndarray, nprobe: int):
     return cells
 
 
-def ivf_topk(
-    spark: SparkSession, sf_dir: str, k: int = TOP_K, fit: str = "sample"
-) -> DataFrame:
+def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame:
     """IVF (inverted-file) ANN: corpus vectors live in their single
     nearest-centroid cell; queries probe their IVF_NPROBE nearest cells;
     exact cosine re-rank inside the probed cells.
@@ -241,7 +237,7 @@ def ivf_topk(
     broadcast query probes — candidates ≈ nprobe/cells of the corpus."""
     emb = _emb(spark, sf_dir)
     if fit == "kmeans":
-        M, cn2 = _kmeans_fit(emb, IVF_CELLS, KMEANS_ITERS)
+        M, cn2 = _kmeans_fit(emb)
     else:
         M, cn2 = _ivf_centroids(emb)
     corpus = emb.select(
@@ -283,7 +279,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_K)
         .select(
             "query_id", "cand_id", F.col("rn").alias("rank"),
             F.round("cos", 6).alias("cos_r6"),
@@ -291,7 +287,7 @@ def ivf_topk(
     )
 
 
-def lsh_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
+def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table bucketed ANN: candidates = union over tables of
     same-bucket rows, exact cosine re-rank within candidates."""
     emb = _emb(spark, sf_dir)
@@ -357,7 +353,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_K)
         .select(
             "query_id", "cand_id", F.col("rn").alias("rank"),
             F.round("cos", 6).alias("cos_r6"),
@@ -376,8 +372,9 @@ def _assign_cells(emb: DataFrame, M: np.ndarray, cn2: np.ndarray) -> DataFrame:
     )
 
 
-def _kmeans_fit(emb: DataFrame, k: int, iters: int) -> tuple[np.ndarray, np.ndarray]:
-    """Distributed Lloyd's iterations with INTEGER-EXACT centroid updates.
+def _kmeans_fit(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """KMEANS_ITERS distributed Lloyd's iterations with INTEGER-EXACT
+    centroid updates over IVF_CELLS cells.
 
     The fit the ann_ivf docstring promises at real scale, kept
     engine-portable: assignment uses the established exact-int-dot /
@@ -387,22 +384,22 @@ def _kmeans_fit(emb: DataFrame, k: int, iters: int) -> tuple[np.ndarray, np.ndar
     stay int64 vectors and DuckDB reproduces every round bit-for-bit
     (no float accumulation, no rounding-mode divergence).  Per round:
     one matmul-per-batch assignment pass + one (cell, dim) aggregation;
-    only the k×dims centroid table (driver-side constant) is collected.
+    only the cells×dims centroid table (driver-side constant) is collected.
     Empty cells keep their previous centroid."""
-    M, cn2 = _ivf_centroids(emb, k)  # deterministic md5-sample init
-    # fewer vectors than k (incl. an empty table): fit over what exists —
-    # M may have < k rows; callers must size output to len(M), not k
+    M, cn2 = _ivf_centroids(emb)  # deterministic md5-sample init
+    # fewer vectors than IVF_CELLS (incl. an empty table): fit over what
+    # exists — M may have fewer rows; callers size output to len(M)
     if M.ndim != 2 or len(M) == 0:
         import numpy as _np
 
         return _np.zeros((0, 1), dtype=_np.int64), _np.zeros(0, _np.int64)
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         sums = (
             _assign_cells(emb, M, cn2)
             .select("cell", F.posexplode("q").alias("d", "x"))
             .groupBy("cell", "d")
             .agg(F.sum("x").alias("s"), F.count("*").alias("c"))
-            .collect()  # k × dims rows — centroid-table-sized
+            .collect()  # cells × dims rows — centroid-table-sized
         )
         newM = M.copy()
         for r in sums:
@@ -417,16 +414,13 @@ def _kmeans_fit(emb: DataFrame, k: int, iters: int) -> tuple[np.ndarray, np.ndar
     return M, cn2
 
 
-def kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int = IVF_CELLS,
-    iters: int = KMEANS_ITERS,
-) -> DataFrame:
+def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fitted IVF centroids + final member counts (oracle-checked: the
     DuckDB twin unrolls the identical rounds as a CTE chain).  The
     centroid vector is emitted as a canonical CSV string — array-value
     stringification differs between engines, csv doesn't."""
     emb = _emb(spark, sf_dir)
-    M, cn2 = _kmeans_fit(emb, k, iters)
+    M, cn2 = _kmeans_fit(emb)
     if len(M) == 0:  # empty embeddings table
         return spark.createDataFrame(
             [], "cell int, centroid_csv string, norm2 long, n_members long"
@@ -445,7 +439,7 @@ def kmeans_centroids(
             int(cn2[cell]),
             int(counts.get(cell, 0)),
         )
-        for cell in range(len(M))  # may be < k on small tables
+        for cell in range(len(M))  # may be < IVF_CELLS on small tables
     ]
     return spark.createDataFrame(
         rows, "cell int, centroid_csv string, norm2 long, n_members long"
@@ -473,27 +467,7 @@ def semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank with a distributed similarity-threshold cut (quantile of cos_r6
     per label), same output contract.
     """
-    from ..scale import decode_partitions, ensure_parallelism
-
-    df = ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        min_parts=decode_partitions(
-            spark, sf_dir, table="embeddings.parquet",
-            per_task_bytes=256 << 10,
-        ),
-    )
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * _QUANT).cast("long"),
-    )
-    norm2 = F.aggregate(
-        F.zip_with(q, q, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    e = df.select(
-        "vec_id", "label", q.alias("q"), norm2.alias("norm2")
-    )
+    e = _emb(spark, sf_dir)
 
     # per-(label, dim) integer mean, rounded half-away-from-zero
     mean_v = F.when(

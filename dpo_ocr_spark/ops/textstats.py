@@ -216,42 +216,32 @@ def curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_RATES_X1000 = {"en": 500, "fr": 200}  # default stratum keep-rates
-SAMPLE_DEFAULT_X1000 = 100
+SAMPLE_RATES_X1000 = {"en": 500, "fr": 200}  # stratum keep-rates
+SAMPLE_DEFAULT_X1000 = 100  # keep-rate of every other language
 SHARD_TOKEN_BUDGET = 2_000  # whitespace tokens per training shard
 
 
-def stratified_sample(
-    spark: SparkSession,
-    sf_dir: str,
-    rates_x1000: dict[str, int] | None = None,
-    default_x1000: int = SAMPLE_DEFAULT_X1000,
-) -> DataFrame:
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language stratified sample (the sampleBy analog
     training pipelines use for language rebalancing) — membership is a
     pure hash predicate, so the sample is reproducible across runs,
     engines and cluster sizes: keep iff md5int(doc_id) % 1000 < rate[lang].
     No shuffle at all: a filter over one scan."""
-    rates = rates_x1000 or SAMPLE_RATES_X1000
     docs = _docs(spark, sf_dir).select("doc_id", "lang")
     bucket = (
         md5_int63(F.col("doc_id").cast("string")) % 1000
     )
-    rate = F.lit(default_x1000)
-    for lang, r in sorted(rates.items()):
+    rate = F.lit(SAMPLE_DEFAULT_X1000)
+    for lang, r in sorted(SAMPLE_RATES_X1000.items()):
         rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return docs.select(
         "doc_id", "lang", bucket.alias("sample_bucket")
     ).filter(F.col("sample_bucket") < rate)
 
 
-def shard_packing(
-    spark: SparkSession,
-    sf_dir: str,
-    token_budget: int = SHARD_TOKEN_BUDGET,
-) -> DataFrame:
+def shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence/shard packing: assign each document to a training shard
-    so shards hold ~token_budget whitespace tokens, per language, in
+    so shards hold ~SHARD_TOKEN_BUDGET whitespace tokens, per language, in
     deterministic doc_id order (the pre-tokenization packing step of an
     LLM data pipeline).  shard_id = floor(exclusive-prefix-sum / budget):
     a document lands in the shard its FIRST token falls into, so every
@@ -274,7 +264,7 @@ def shard_packing(
         "doc_id",
         "lang",
         "n_tokens",
-        F.floor(start / token_budget).cast("long").alias("shard_id"),
+        F.floor(start / SHARD_TOKEN_BUDGET).cast("long").alias("shard_id"),
     )
 
 

@@ -8,15 +8,16 @@ ranges resumable.
 Skew: the corpus deliberately concentrates ~10% of urls on one host
 (FIXTURES.md §1).  At 10¹² rows a host-hash partitioning would melt one
 executor; we salt on ``xxhash64(url)`` — uniform over urls regardless of
-host skew — before the heavy decode stage.  Downstream assembly groups by
-url, which is unique per row here, so AQE handles any residual skew
-(``spark.sql.adaptive.skewJoin.enabled``).
+host skew — before the heavy decode stage.  Downstream assembly groups
+per capture (url, warc_ts), a handful of rows each, so AQE handles any
+residual skew (``spark.sql.adaptive.skewJoin.enabled``).
 
 Resume: lineage is written with results; a restarted job anti-joins its
-input against completed lineage — by url when a url-bearing frame is
-given, else by CONTENT-DERIVED partition id (``pmod(hash(xxhash64(url)),
-num_buckets)``, exactly the assignment ``salted_repartition`` produced, so
-a completed partition's rows are re-identified from the urls alone).
+input against completed work — by capture (url, warc_ts) when a results
+frame is given, by url when the frame has urls only, else by
+CONTENT-DERIVED partition id (``pmod(hash(xxhash64(url)), num_buckets)``,
+exactly the assignment ``salted_repartition`` produced, so a completed
+partition's rows are re-identified from the urls alone).
 Time/watermark is never used as a resume predicate: under hash
 partitioning every partition spans the full timestamp range, so a
 max-watermark filter would silently drop unprocessed rows of failed
@@ -73,27 +74,27 @@ def decode_partitions(
     return max(1, min(cores * 2, -(-nbytes // per_task_bytes)))
 
 
-def salted_repartition(df: DataFrame, num_partitions: int, key: str = "url") -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Explicit skew-defusing exchange before a heavy narrow stage.
 
-    Hash-repartition on ``xxhash64(key)`` — byte-uniform even when the key
+    Hash-repartition on ``xxhash64(url)`` — byte-uniform even when the url
     space is host-skewed (many urls on one host hash apart).  One shuffle,
     after which the expensive decode work is balanced across executors.
 
-    The resulting partition id is a pure function of the key:
-    ``pmod(hash(xxhash64(key)), num_partitions)`` (Spark's HashPartitioning
+    The resulting partition id is a pure function of the url:
+    ``pmod(hash(xxhash64(url)), num_partitions)`` (Spark's HashPartitioning
     = Murmur3 seed 42, which is also ``F.hash``).  ``resume_bucket``
     recomputes it; a pytest pins the equality against
     ``spark_partition_id`` so a Spark-internals change fails loudly.
     """
-    return df.repartition(num_partitions, F.xxhash64(F.col(key)))
+    return df.repartition(num_partitions, F.xxhash64(F.col("url")))
 
 
-def resume_bucket(num_buckets: int, key: str = "url"):
+def resume_bucket(num_buckets: int):
     """The content-derived partition id ``salted_repartition`` assigns:
-    pmod(Murmur3(xxhash64(key)), n).  Used by resume to re-identify a
-    completed partition's rows from their keys alone."""
-    return F.pmod(F.hash(F.xxhash64(F.col(key))), F.lit(num_buckets)).cast("int")
+    pmod(Murmur3(xxhash64(url)), n).  Used by resume to re-identify a
+    completed partition's rows from their urls alone."""
+    return F.pmod(F.hash(F.xxhash64(F.col("url"))), F.lit(num_buckets)).cast("int")
 
 
 def with_lineage(extracted: DataFrame, num_buckets: int | None = None) -> tuple[DataFrame, DataFrame]:
@@ -120,14 +121,18 @@ def with_lineage(extracted: DataFrame, num_buckets: int | None = None) -> tuple[
     return tagged, lineage
 
 
-def resume_filter(pages: DataFrame, lineage_done: DataFrame, key: str = "url") -> DataFrame:
+def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
     """Re-run predicate: keep only pages NOT covered by completed lineage.
 
-    Two sound forms, both content-based (the reference's analog is
+    Three sound forms, all content-based (the reference's analog is
     delete-by-project + rerun, block_identification.py:63; ours is
     additive and idempotent):
 
-    * url-bearing frame (e.g. the results table itself): anti-join on url.
+    * capture-bearing frame (url + warc_ts, e.g. the results table
+      itself): null-safe anti-join on (url, warc_ts) — a capture is
+      (url, warc_ts), so an unprocessed re-crawl of a done url still runs.
+    * url-only frame: anti-join on url — every capture of a listed url
+      counts as done.
     * LINEAGE-schema frame (partition_id + num_buckets): recompute each
       page's partition id with the same pure function salted_repartition
       used and anti-join on completed partition ids.  A lineage row
@@ -144,8 +149,18 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame, key: str = "url") -
     timestamp range).
     """
     cols = set(lineage_done.columns)
-    if key in cols:
-        return pages.join(lineage_done.select(key), key, "left_anti")
+    if {"url", "warc_ts"} <= cols:
+        done = lineage_done.select(
+            F.col("url").alias("__done_url"), F.col("warc_ts").alias("__done_ts")
+        )
+        return pages.join(
+            done,
+            (F.col("url") == F.col("__done_url"))
+            & F.col("warc_ts").eqNullSafe(F.col("__done_ts")),
+            "left_anti",
+        )
+    if "url" in cols:
+        return pages.join(lineage_done.select("url"), "url", "left_anti")
     if {"partition_id", "num_buckets"} <= cols:
         # num_buckets is constant per run; lineage is one row per partition
         # (thousands at scale) so this collect is metadata-sized.
@@ -165,7 +180,7 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame, key: str = "url") -
             F.col("partition_id").alias("__done_bucket")
         ).distinct()
         return (
-            pages.withColumn("__bucket", resume_bucket(n_vals[0], key))
+            pages.withColumn("__bucket", resume_bucket(n_vals[0]))
             .join(
                 F.broadcast(done),
                 F.col("__bucket") == F.col("__done_bucket"),
@@ -174,7 +189,7 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame, key: str = "url") -
             .drop("__bucket")
         )
     raise ValueError(
-        f"resume_filter needs a '{key}' column or LINEAGE-schema columns "
+        "resume_filter needs a 'url' column or LINEAGE-schema columns "
         "(partition_id, num_buckets); refusing to guess — a watermark "
         "filter would silently skip failed partitions' pending rows"
     )

@@ -12,8 +12,6 @@ Mirrors the reference's declared relational schemas (SURVEY.md §1):
   168-191) from word rows (block_identification.py:68).
 - field       — replaces ``ocr_interpreted_blocks`` (database/database.sql:99-126),
   unique on (url, block_id, data_type) per the constraint at :115.
-- span        — Document-AI text anchors (ML/google_documentai/run_docai.py:84-93):
-  [start, end) character offsets into the per-url extracted text.
 - lineage     — per-partition lineage rows (north_rule): partition id,
   input count, bytes, checkpoint watermark.
 
@@ -85,15 +83,6 @@ FIELD = T.StructType(
         T.StructField("verbatim_value", T.StringType(), True),
         T.StructField("data_source", T.StringType(), True),
         T.StructField("match_score", T.DoubleType(), True),
-    ]
-)
-
-SPAN = T.StructType(
-    [
-        T.StructField("field", T.StringType(), False),
-        T.StructField("start", T.LongType(), False),
-        T.StructField("end", T.LongType(), False),
-        T.StructField("conf", T.DoubleType(), True),
     ]
 )
 

@@ -12,9 +12,9 @@ implements that ingestion/egress boundary Spark-first:
   (gzip member per record, warcinfo header record first), emitting the
   per-record index rows (offset/length/digest) as its output frame — the
   exact rows a CDX index holds, produced at write time for free.
-- :func:`read_warc` — distributed source: a paths frame (one task per
-  archive, which is how Common Crawl jobs actually parallelise: ~1 GB
-  archives × tens of thousands of files) streamed member-by-member, so
+- :func:`read_warc` — distributed source: a list of archive paths (one
+  task per archive, which is how Common Crawl jobs actually parallelise:
+  ~1 GB archives × tens of thousands of files) streamed member-by-member, so
   peak memory is one compressed chunk + one record, never the whole file.
   Handles uncompressed ``.warc`` too, plus HTTP ``Transfer-Encoding:
   chunked`` and ``Content-Encoding: gzip`` response bodies.
@@ -32,14 +32,15 @@ the record layout is fixed — so the same partition rewrites byte-identical
 archives, and the writer's index and the reader's scan must agree exactly
 (pinned in tests/test_warc.py).
 
-Scale notes (100 TB): parallelism unit = archive file; listing is a
-manifest frame (``paths_df``), repartitioned so each task streams one
-file.  Local paths use ``open()``; on a cluster the same code runs against
-a mounted object store (or swap ``_open`` for an fsspec/S3 opener — the
-parser only needs ``read``).  ``fetch_records`` groups by file and seeks,
-which maps 1:1 onto S3 ranged GETs.  No per-row Python anywhere a built-in
-could go: header/CDX formatting is JVM-side; only the byte-level container
-codec runs in Arrow-batched Python, the same boundary as the page decoder
+Scale notes (100 TB): parallelism unit = archive file; the listing
+(``list_warc_paths``) becomes a one-column frame with one partition per
+path, so each task streams one file.  Local paths use ``open()``; on a
+cluster the same code runs against a mounted object store (or swap
+``_open`` for an fsspec/S3 opener — the parser only needs ``read``).
+``fetch_records`` groups by file and seeks, which maps 1:1 onto S3 ranged
+GETs.  No per-row Python anywhere a built-in could go: header/CDX
+formatting is JVM-side; only the byte-level container codec runs in
+Arrow-batched Python, the same boundary as the page decoder
 (extract/stage.py).
 """
 
@@ -155,11 +156,12 @@ def _warc_record(rec_type: str, headers: list[tuple[str, str]], payload: bytes) 
     return head + payload + _CRLF + _CRLF
 
 
-def _chunked(body: bytes, chunk: int = 256) -> bytes:
-    """Encode an HTTP body with Transfer-Encoding: chunked."""
+def _chunked(body: bytes) -> bytes:
+    """Encode an HTTP body with Transfer-Encoding: chunked, 256 bytes a
+    chunk."""
     out = bytearray()
-    for i in range(0, len(body), chunk):
-        piece = body[i : i + chunk]
+    for i in range(0, len(body), 256):
+        piece = body[i : i + 256]
         out += f"{len(piece):x}".encode("ascii") + _CRLF + piece + _CRLF
     out += b"0" + _CRLF + _CRLF
     return bytes(out)
@@ -482,14 +484,11 @@ def _records_to_batches(recs: Iterator[dict], schema, batch_bytes: int = 32 << 2
         yield pa.RecordBatch.from_pydict(cols, schema=schema)
 
 
-def _paths_frame(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:
-    if isinstance(paths, DataFrame):
-        df = paths
-    else:
-        df = spark.createDataFrame([(p,) for p in sorted(paths)], "path: string")
+def _paths_frame(spark: SparkSession, paths: list[str]) -> DataFrame:
+    df = spark.createDataFrame([(p,) for p in sorted(paths)], "path: string")
     # one task per archive (round-robin: exact balance even when path
     # hashes collide) — the scale-out unit of every Common Crawl job
-    return df.repartition(max(df.count(), 1))
+    return df.repartition(max(len(paths), 1))
 
 
 def list_warc_paths(spark: SparkSession, directory: str, suffix: str = ".warc.gz") -> list[str]:
@@ -503,7 +502,7 @@ def list_warc_paths(spark: SparkSession, directory: str, suffix: str = ".warc.gz
 
 
 def read_warc(
-    spark: SparkSession, paths: list[str] | DataFrame, *, status_ok_only: bool = True
+    spark: SparkSession, paths: list[str], *, status_ok_only: bool = True
 ) -> DataFrame:
     """Archive paths → WARC_RECORDS frame (one streaming task per file)."""
 
@@ -536,10 +535,10 @@ def warc_pages(records: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def write_wet(extracted: DataFrame, out_dir: str, *, compress: bool = True) -> DataFrame:
-    """EXTRACT_RESULT-shaped frame (url, warc_ts, lang, text) → WET files;
-    returns the written index (payload digests over the UTF-8 text)."""
-    ext = ".warc.wet.gz" if compress else ".warc.wet"
+def write_wet(extracted: DataFrame, out_dir: str) -> DataFrame:
+    """EXTRACT_RESULT-shaped frame (url, warc_ts, lang, text) → gzipped
+    WET files; returns the written index (payload digests over the UTF-8
+    text)."""
 
     def records_of(batch):
         urls = batch.column("url").to_pylist()
@@ -563,14 +562,14 @@ def write_wet(extracted: DataFrame, out_dir: str, *, compress: bool = True) -> D
             yield url, ts, "text/plain", None, digest, len(body), rec
 
     def gen(it):
-        yield from _archive_writer(it, out_dir, ext, compress, records_of)
+        yield from _archive_writer(it, out_dir, ".warc.wet.gz", True, records_of)
 
     return extracted.select("url", "warc_ts", "lang", "text").mapInArrow(
         gen, schema=WARC_INDEX
     )
 
 
-def read_wet(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:
+def read_wet(spark: SparkSession, paths: list[str]) -> DataFrame:
     """WET paths → (url, warc_ts, lang, text); byte-bounded batches like
     read_warc."""
 

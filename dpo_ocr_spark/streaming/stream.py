@@ -21,22 +21,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..extract import extract_pages
 from ..schemas import WEB_PAGES
 
+WATERMARK = "1 hour"  # event-time lateness the windowed counts tolerate
+JOIN_LEAD = "10 minutes"  # stream_interval_join's follow-up window
+
 
 def stream_extract(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
     sink_table: str = "stream_extracted",
-    sink_dir: str | None = None,
 ) -> None:
     """Drain ``source_dir`` (parquet, WEB_PAGES schema) through the
-    extraction stage, exactly-once per file via the checkpoint; returns
-    after completion (AvailableNow).
+    extraction stage into the memory table ``sink_table``, exactly-once
+    per file via the checkpoint; returns after completion (AvailableNow).
 
-    ``sink_dir`` set → durable parquet sink: this is the resumable path
-    (re-running with the same checkpoint processes only new files — the
-    memory sink CANNOT recover from a checkpoint, verified empirically,
-    so it is only offered for ad-hoc inspection with a fresh checkpoint).
+    A memory sink CANNOT recover from a checkpoint, so this is for ad-hoc
+    inspection with a fresh checkpoint; ``stream_dedup_extract`` is the
+    resumable drain (durable parquet sink: re-running with the same
+    checkpoint processes only new files).
     """
     pages = (
         spark.readStream.schema(WEB_PAGES)
@@ -44,13 +46,13 @@ def stream_extract(
         .parquet(source_dir)
     )
     extracted = extract_pages(pages)
-    writer = extracted.writeStream.option(
-        "checkpointLocation", checkpoint_dir
-    ).trigger(availableNow=True)
-    if sink_dir is not None:
-        q = writer.format("parquet").option("path", sink_dir).start()
-    else:
-        q = writer.format("memory").queryName(sink_table).start()
+    q = (
+        extracted.writeStream.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .format("memory")
+        .queryName(sink_table)
+        .start()
+    )
     q.awaitTermination()
 
 
@@ -119,10 +121,10 @@ def stream_dedup_extract(
     q.awaitTermination()
 
 
-def late_page_counts(pages: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def late_page_counts(pages: DataFrame) -> DataFrame:
     """Watermarked per-hour page counts (late-data monitoring shape)."""
     return (
-        pages.withWatermark("warc_ts", watermark)
+        pages.withWatermark("warc_ts", WATERMARK)
         .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
         .agg(F.count("*").alias("n_pages"))
         .select("w.start", "w.end", "lang", "n_pages")
@@ -140,7 +142,6 @@ def stream_window_counts(
     src_dir: str,
     checkpoint_dir: str,
     table: str,
-    watermark: str = "1 hour",
 ):
     """Watermarked tumbling-window aggregation through a REAL stream:
     readStream → withWatermark → 1h window groupBy → append-mode memory
@@ -167,7 +168,7 @@ def stream_window_counts(
     )
     agg = (
         events.withColumn("t", instant)
-        .withWatermark("t", watermark)
+        .withWatermark("t", WATERMARK)
         .groupBy(F.window("t", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -304,15 +305,14 @@ def stream_interval_join(
     src_dir: str,
     checkpoint_dir: str,
     table: str,
-    lead: str = "10 minutes",
 ):
     """Stream-stream self INTERVAL JOIN: each event matched to the same
-    user's follow-up events within ``lead`` — the attribution/funnel
+    user's follow-up events within ``JOIN_LEAD`` — the attribution/funnel
     shape (click → purchase) every event pipeline needs.
 
     Both sides carry watermarks and the join condition is a closed time
     range on the event-time columns, so Spark derives a state-eviction
-    bound (state per side ≈ watermark delay + lead, NOT unbounded) — the
+    bound (state per side ≈ watermark delay + JOIN_LEAD, NOT unbounded) — the
     property that keeps a stream-stream join alive at 10^12 events.
     Inner joins emit every match regardless of watermark; the oracle is
     therefore the plain SQL interval self-join when the source drains in
@@ -333,7 +333,7 @@ def stream_interval_join(
             F.col("event_id").alias("src_event_id"),
             "user_id",
         )
-        .withWatermark("a_t", "1 hour")
+        .withWatermark("a_t", WATERMARK)
     )
     b = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -344,13 +344,13 @@ def stream_interval_join(
             F.col("user_id").alias("b_user"),
             F.col("event_type").alias("dst_type"),
         )
-        .withWatermark("b_t", "1 hour")
+        .withWatermark("b_t", WATERMARK)
     )
     joined = a.join(
         b,
         F.expr(
             "user_id = b_user AND b_t > a_t"
-            f" AND b_t <= a_t + interval {lead}"
+            f" AND b_t <= a_t + interval {JOIN_LEAD}"
         ),
     ).select(
         "user_id",

@@ -85,11 +85,15 @@ def main() -> int:
         parts = args.salt_partitions or spark.sparkContext.defaultParallelism * 2
         extracted = extract_pages(salted_repartition(pages, parts))
         results, lineage = with_lineage(extracted, num_buckets=parts)
+        # results, lineage (and WET) are separate actions over one frame:
+        # persisted, the salt shuffle and the decode run once, not per output
+        results = results.persist()
         write_results(results, args.extract_to)
         write_results(lineage, args.lineage)
         if args.wet_dir:
             wet = results.select("url", "warc_ts", "lang", "text")
             W.write_wet(wet, args.wet_dir).count()
+        results.unpersist()
     if n_outputs > 1:
         records.unpersist()
     return 0

@@ -104,6 +104,50 @@ def test_incremental_dedup_shingle_kernel_runs(spark):
     assert plan.count("MapInArrow") <= 3, plan
 
 
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The lines under tree-string node ``lines[i]``: every following line
+    whose ``+-`` marker sits deeper than the node's own."""
+    depth = lines[i].find("+- ")
+    out = []
+    for line in lines[i + 1 :]:
+        if line.find("+- ") <= depth:
+            break
+        out.append(line)
+    return out
+
+
+def test_incremental_dedup_filters_below_shingle_kernel(spark):
+    """Spark cannot push a filter through the opaque mapInArrow kernel, so
+    incremental_dedup splits batch from corpus BEFORE shingling: in the
+    final plan every shingle-kernel input is filtered on doc_id % 5.
+    Filtered above the kernel instead, each of its runs shingled the
+    whole corpus."""
+    import re
+
+    from dpo_ocr_spark.ops.dedup import incremental_dedup
+
+    lines = (
+        _plan(incremental_dedup(spark, SD))
+        .split("== Initial Plan ==")[0]
+        .splitlines()
+    )
+    kernels = [i for i, l in enumerate(lines) if "MapInArrow _sized_shingle" in l]
+    assert kernels, lines
+    for i in kernels:
+        below = _subtree(lines, i)
+        for line in below:
+            # a reused exchange's subtree is printed under its first use
+            if (m := re.search(r"ReusedExchange .*(\[plan_id=\d+\])", line)):
+                first = next(
+                    j for j, l in enumerate(lines)
+                    if m.group(1) in l and "ReusedExchange" not in l
+                )
+                below = below + _subtree(lines, first)
+        assert any(
+            re.search(r"Filter .*\(doc_id#\d+L % 5\)", l) for l in below
+        ), "\n".join([lines[i]] + below)
+
+
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     """Results written partitionBy(lang) must scan ONLY the filtered
     partition on read — PartitionFilters at the source, other-language

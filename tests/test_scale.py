@@ -61,6 +61,28 @@ def test_resume_filter_skips_done_urls(spark):
     assert remaining == 500 - n_done
 
 
+def test_resume_filter_keys_results_by_capture(spark):
+    """A capture is (url, warc_ts): resuming against the results table
+    skips only the done capture, so an unprocessed re-crawl of a done url
+    still runs (a null warc_ts matches null-safely).  A url-only frame
+    keeps its meaning: every capture of a listed url is done."""
+    from datetime import datetime
+
+    from dpo_ocr_spark.scale import resume_filter
+
+    t1, t2 = datetime(2024, 1, 1), datetime(2024, 2, 1)
+    pages = spark.createDataFrame(
+        [("u", t1), ("u", t2), ("v", None)], "url string, warc_ts timestamp"
+    )
+    done = spark.createDataFrame(
+        [("u", t1, "text"), ("v", None, "text")],
+        "url string, warc_ts timestamp, text string",
+    )
+    left = resume_filter(pages, done).collect()
+    assert [(r.url, r.warc_ts) for r in left] == [("u", t2)]
+    assert resume_filter(pages, done.select("url")).count() == 0
+
+
 def test_resume_bucket_matches_spark_partition_id(spark):
     """Pin the Spark internal resume depends on: after salted_repartition(n),
     spark_partition_id == pmod(hash(xxhash64(url)), n) for every row.  If a
