@@ -733,6 +733,8 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrored in the oracle); one pair-count shuffle + one argmax window
     per new doc.
     """
+    from pyspark.sql import Window as W
+
     docs = _docs(spark, sf_dir)
     is_batch = F.col("doc_id") % BATCH_MOD == 0
 
@@ -753,11 +755,13 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # push a filter through mapInArrow, and a doc's shingle rows depend on
     # that doc alone, so each side shingles only its own documents.
     new_sh = sized_shingles_of(docs.filter(is_batch))
-    corp_sh = sized_shingles_of(docs.filter(~is_batch))
-    # stop-shingle cap on the corpus index side
-    corp_df = corp_sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    corp_idx = corp_sh.join(
-        corp_df.filter(F.col("df") <= MAX_GROUP).select("shingle"), "shingle"
+    # stop-shingle cap on the corpus index side: the document frequency is
+    # a window count, so the corpus is shingled once (a groupBy joined back
+    # would re-run the kernel for each of its two consumers)
+    corp_idx = (
+        sized_shingles_of(docs.filter(~is_batch))
+        .select("*", F.count("*").over(W.partitionBy("shingle")).alias("df"))
+        .filter(F.col("df") <= MAX_GROUP)
     )
     scored = (
         new_sh.select(
@@ -782,8 +786,6 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("jaccard_x1000"),
         )
     )
-    from pyspark.sql import Window as W
-
     w = W.partitionBy("new_id").orderBy(
         F.desc("jaccard_x1000"), F.asc("corp_id")
     )

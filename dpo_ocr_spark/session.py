@@ -4,7 +4,9 @@ Local testing runs ``local[N]``; the same config block is what we would ship
 via ``spark-submit --py-files`` to a multi-executor cluster — every knob here
 is chosen for the 100 TB case (AQE for runtime re-planning and skew-join
 splitting, Arrow for the pandas-UDF extraction stage, bounded Arrow batch
-sizes because ``html`` payloads are large).
+sizes because ``html`` payloads are large). Every Python worker forks from
+``worker_daemon.py``, which pays the worker's import and heap costs once
+instead of on every task.
 """
 
 from __future__ import annotations
@@ -23,6 +25,10 @@ from pyspark.sql import SparkSession
 # (arrow.maxBytesPerBatch, set next to this cap in get_spark) before it
 # reaches a Python worker, and the row cap stays payload-agnostic.
 ARROW_MAX_RECORDS = 8192
+
+# The Python worker daemon: set here and by every spark-submit job under
+# jobs/, before its session starts.
+WORKER_DAEMON = ("spark.python.daemon.module", "dpo_ocr_spark.worker_daemon")
 
 
 def get_spark(
@@ -54,6 +60,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 << 20))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(*WORKER_DAEMON)
         # local mode: the driver heap IS the cluster memory — size it for
         # 32 concurrent tasks buffering Arrow batches + parquet blocks
         # (8g was measured to GC-thrash local[32] down to 0.27× of its

@@ -7,6 +7,7 @@ Ship as::
 
     python jobs/make_pyfiles.py          # → dist/dpo_ocr_spark.zip
     spark-submit --py-files dist/dpo_ocr_spark.zip \
+        --conf spark.executorEnv.PYTHONPATH=dist/dpo_ocr_spark.zip \
         jobs/run_curate.py \
         --input  /path/with/documents.parquet \
         --output /path/curated \
@@ -39,8 +40,10 @@ def main() -> int:
 
     from dpo_ocr_spark.ops.curation import curated_training_set, order_frame
     from dpo_ocr_spark.ops.textstats import curation_verdict
+    from dpo_ocr_spark.session import WORKER_DAEMON
 
-    spark = SparkSession.builder.getOrCreate()  # conf from spark-submit
+    # conf comes from spark-submit, the worker daemon from the package
+    spark = SparkSession.builder.config(*WORKER_DAEMON).getOrCreate()
     sf_dir = args.input
     if args.audit:
         # compute the verdict ONCE: write the audit, then derive the

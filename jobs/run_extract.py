@@ -5,6 +5,7 @@ Ship as::
 
     python jobs/make_pyfiles.py          # → dist/dpo_ocr_spark.zip
     spark-submit --py-files dist/dpo_ocr_spark.zip \
+        --conf spark.executorEnv.PYTHONPATH=dist/dpo_ocr_spark.zip \
         $(python jobs/run_extract.py --print-iceberg-conf) \
         jobs/run_extract.py \
         --input  web.crawl.pages            # Iceberg ref or parquet path
@@ -62,8 +63,10 @@ def main() -> int:
 
     from dpo_ocr_spark.extract import extract_pages
     from dpo_ocr_spark.scale import resume_filter, salted_repartition, with_lineage
+    from dpo_ocr_spark.session import WORKER_DAEMON
 
-    spark = SparkSession.builder.getOrCreate()  # conf comes from spark-submit
+    # conf comes from spark-submit, the worker daemon from the package
+    spark = SparkSession.builder.config(*WORKER_DAEMON).getOrCreate()
     if args.start_snapshot_id is not None:
         pages = incremental_pages(spark, args.input, args.start_snapshot_id)
     else:

@@ -5,6 +5,7 @@ Ship as::
 
     python jobs/make_pyfiles.py          # → dist/dpo_ocr_spark.zip
     spark-submit --py-files dist/dpo_ocr_spark.zip \
+        --conf spark.executorEnv.PYTHONPATH=dist/dpo_ocr_spark.zip \
         jobs/run_warc_ingest.py \
         --warc-dir  /data/cc/segments/…   # or --manifest paths.txt
         --pages     web.crawl.pages       # Iceberg ref or parquet path
@@ -50,8 +51,10 @@ def main() -> int:
 
     from dpo_ocr_spark.sources import warc as W
     from dpo_ocr_spark.sources.iceberg import write_results
+    from dpo_ocr_spark.session import WORKER_DAEMON
 
-    spark = SparkSession.builder.getOrCreate()  # conf from spark-submit
+    # conf comes from spark-submit, the worker daemon from the package
+    spark = SparkSession.builder.config(*WORKER_DAEMON).getOrCreate()
     if args.manifest:
         with open(args.manifest) as f:
             paths = [line.strip() for line in f if line.strip()]

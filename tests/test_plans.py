@@ -121,7 +121,9 @@ def test_incremental_dedup_filters_below_shingle_kernel(spark):
     incremental_dedup splits batch from corpus BEFORE shingling: in the
     final plan every shingle-kernel input is filtered on doc_id % 5.
     Filtered above the kernel instead, each of its runs shingled the
-    whole corpus."""
+    whole corpus.  The kernel runs exactly twice, batch once and corpus
+    once: the stop-shingle count is a window over the one corpus run, where
+    a groupBy joined back made Spark re-run the kernel for each consumer."""
     import re
 
     from dpo_ocr_spark.ops.dedup import incremental_dedup
@@ -132,7 +134,7 @@ def test_incremental_dedup_filters_below_shingle_kernel(spark):
         .splitlines()
     )
     kernels = [i for i, l in enumerate(lines) if "MapInArrow _sized_shingle" in l]
-    assert kernels, lines
+    assert len(kernels) == 2, "\n".join(lines)
     for i in kernels:
         below = _subtree(lines, i)
         for line in below:

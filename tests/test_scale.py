@@ -159,7 +159,9 @@ def test_resume_filter_refuses_unresumable_frames(spark):
 def test_spark_submit_job_end_to_end(tmp_path, spark):
     """The actual deployment shape: package → run the job script in a
     fresh interpreter → results + lineage written → resume run is a
-    no-op."""
+    no-op.  The job's Python workers fork from the package's daemon: a
+    sitecustomize on the job's PYTHONPATH records the command line of
+    every interpreter the job starts."""
     from dpo_ocr_spark.corpus import build_web_pages
 
     src = str(tmp_path / "in")
@@ -176,11 +178,24 @@ def test_spark_submit_job_end_to_end(tmp_path, spark):
         "--input", src, "--output", out, "--lineage", lin,
         "--salt-partitions", "8",
     ]
+    argv_dir = tmp_path / "argv"
+    argv_dir.mkdir()
+    (tmp_path / "site").mkdir()
+    (tmp_path / "site" / "sitecustomize.py").write_text(
+        "import os, sys\n"
+        f"with open(os.path.join({str(argv_dir)!r}, str(os.getpid())), 'w') as f:\n"
+        "    f.write(' '.join(sys.orig_argv))\n"
+    )
     env = dict(os.environ)
-    env["PYTHONPATH"] = REPO
+    env["PYTHONPATH"] = os.pathsep.join([str(tmp_path / "site"), REPO])
     r = subprocess.run(cmd, capture_output=True, text=True, env=env,
                        timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]
+    started = [p.read_text() for p in argv_dir.iterdir()]
+    assert any(
+        " -m dpo_ocr_spark.worker_daemon" in a for a in started
+    ), started
+    assert not any(" -m pyspark." in a for a in started), started
     assert spark.read.parquet(out).count() == 500
     lineage = spark.read.parquet(lin)
     assert lineage.agg(F.sum("input_count")).collect()[0][0] == 500
