@@ -273,8 +273,8 @@ def form_fields(tokens: DataFrame) -> DataFrame:
 
 def annotate_plan(tokens: DataFrame) -> DataFrame:
     """S12 annotated-image sink, split into its deterministic DRAW PLAN
-    (this table) and the rasterize step (PIL absent in this container —
-    same codec boundary as ops/multimodal.decode_stub).
+    (this table) and the rasterize step (PIL absent in this container,
+    and ops/codecs.py encodes images but does not draw on them).
 
     Reference run_gvision_ocr.py:185-260: per block, a confidence color
     class (>0.9 green, >0.8 yellow, >0.7 orange, else red) and the quad

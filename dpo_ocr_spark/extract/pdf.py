@@ -257,9 +257,16 @@ def extract_pdf(payload: bytes) -> tuple[str, list[tuple]]:
     Reading order: lines by descending y, words by ascending x; empty
     shown strings are positional placeholders that reconstruct runs of
     consecutive spaces (the writer emits one per empty word so
-    double-spaced source text round-trips byte-identically)."""
+    double-spaced source text round-trips byte-identically).
+
+    A payload with no complete ``stream … endstream`` segment has no
+    content to read: it raises, and the stage quarantines it as
+    ``payload_kind='error'`` instead of emitting an empty page."""
+    streams = _streams_of(payload)
+    if not streams:
+        raise ValueError("PDF payload has no complete stream … endstream segment")
     shows: list[tuple[float, float, str]] = []
-    for stream in _streams_of(payload):
+    for stream in streams:
         shows.extend(_parse_content(stream))
     # group by y (rounded: FP-stable), top-to-bottom = descending y
     lines: dict[float, list[tuple[float, str]]] = {}

@@ -1,7 +1,6 @@
 from .fuzzy import (  # noqa: F401
     ratio,
     partial_ratio,
-    token_sort_ratio,
     token_set_ratio,
     word_similarity,
 )

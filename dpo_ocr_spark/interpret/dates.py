@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import re
 
+from .dims import COLLECTOR_STRINGS
 from .mini_dateparser import parse
 
 ROMAN_MONTH = {
@@ -87,9 +88,7 @@ def _century_fix(y: int) -> int:
     return y - 1000 if y > CUR_YEAR else y
 
 
-def interpret_block(
-    text: str, collector_strings: tuple[str, ...] = ()
-) -> tuple[str, str, str, str] | None:
+def interpret_block(text: str) -> tuple[str, str, str, str] | None:
     """One block text → (data_type, data_format, interpreted_value,
     verbatim_value) or None; mirrors the :84-200 per-block control flow."""
     alpha_block = alpha_of(text)
@@ -113,7 +112,7 @@ def interpret_block(
         # to the elevation rule
 
     # keyword guards (:110-115)
-    if alpha_block in collector_strings:
+    if alpha_block in COLLECTOR_STRINGS:
         return None
     if "No." in alpha_block:
         return None

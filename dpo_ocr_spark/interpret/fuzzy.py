@@ -3,9 +3,11 @@
 Reimplements from public semantics — no fuzzy library ships in this
 environment:
 
-- ``ratio``/``partial_ratio``/``token_sort_ratio``/``token_set_ratio``:
-  the fuzzywuzzy/rapidfuzz family the reference scores with
+- ``ratio``/``partial_ratio``/``token_set_ratio``: the
+  fuzzywuzzy/rapidfuzz family the reference scores with
   (block_identification.py:249, 261, 294; auto_id_compare.py:289-292, 545).
+  Its token_sort_ratio is ``ratio`` over ``_sorted_tokens`` forms, which
+  the matchers precompute once per string.
   ratio = round(100 * (1 - indel_distance/(len1+len2))) — Levenshtein with
   substitutions forbidden (cost-2), the python-Levenshtein definition.
 - ``word_similarity``: PostgreSQL pg_trgm semantics
@@ -89,12 +91,8 @@ def partial_ratio(a: str, b: str) -> int:
 
 @lru_cache(maxsize=1 << 16)
 def _sorted_tokens(s: str) -> str:
+    """Tokenize, lowercase, sort, rejoin (fuzzywuzzy's token_sort form)."""
     return " ".join(sorted(_NON_WORD.sub(" ", s.lower()).split()))
-
-
-def token_sort_ratio(a: str, b: str) -> int:
-    """Tokenize, lowercase, sort, rejoin, then ratio (fuzzywuzzy)."""
-    return ratio(_sorted_tokens(a), _sorted_tokens(b))
 
 
 def token_set_ratio(a: str, b: str) -> int:
@@ -128,15 +126,6 @@ def _trigram_list(s: str) -> tuple[str, ...]:
         padded = f"  {word} "
         out.extend(padded[i : i + 3] for i in range(len(padded) - 2))
     return tuple(out)
-
-
-def similarity(a: str, b: str) -> float:
-    """pg_trgm similarity(): |∩| / |∪| of trigram sets."""
-    sa, sb = set(_trigram_list(a)), set(_trigram_list(b))
-    if not sa and not sb:
-        return 1.0
-    union = len(sa | sb)
-    return len(sa & sb) / union if union else 0.0
 
 
 def word_similarity(a: str, b: str) -> float:

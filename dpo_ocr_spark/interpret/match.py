@@ -44,7 +44,6 @@ from .fuzzy import (
     _trigram_list,
     ratio,
     ratio_upper_bound,
-    token_sort_ratio,
     word_similarity_pre,
     word_similarity_upper_bound,
 )
@@ -76,7 +75,7 @@ def interpret_dates(blocks: DataFrame) -> DataFrame:
             for url, block, wl, text in zip(
                 pdf["url"], pdf["block"], pdf["word_line"], pdf["block_text"]
             ):
-                r = interpret_block(text, COLLECTOR_STRINGS)
+                r = interpret_block(text)
                 if r is not None:
                     dt, fmt, iv, vv = r
                     rows.append(
@@ -501,16 +500,15 @@ def interpret_all(
     blocks: DataFrame,
     gazetteer: DataFrame,
     taxonomy: DataFrame,
-    hierarchy: DataFrame | None = None,
+    hierarchy: DataFrame,
 ) -> DataFrame:
-    """Full §3.2 pipeline: dates → localities (→ admin-hierarchy
-    expansion when a hierarchy dim is given) → taxonomy → collector →
-    similarity fallback, merged with reference upsert semantics."""
+    """Full §3.2 pipeline: dates → localities → admin-hierarchy
+    expansion → taxonomy → collector → similarity fallback, merged with
+    reference upsert semantics."""
     blocks = blocks.cache()
     dates = dedup_line_grain(interpret_dates(blocks))
     locs = dedup_line_grain(match_localities(spark, blocks, gazetteer))
-    if hierarchy is not None:
-        locs = locs.unionByName(expand_locality(locs, blocks, hierarchy))
+    locs = locs.unionByName(expand_locality(locs, blocks, hierarchy))
     taxo = dedup_line_grain(match_taxonomy(spark, blocks, taxonomy))
     base = merge_fields(merge_fields(dates, locs), taxo)
     coll = dedup_line_grain(match_collector(blocks, base))

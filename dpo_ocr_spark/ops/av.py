@@ -123,14 +123,13 @@ def decode_wav(data: bytes) -> tuple[int, int, int, np.ndarray]:
 # AVI container (Motion-JPEG)
 # ---------------------------------------------------------------------------
 
-_US_PER_FRAME = 100_000  # fps=10 in every synthesized fixture
+FPS = 10  # frame rate of every synthesized video
+_US_PER_FRAME = 1_000_000 // FPS
 
 
-def encode_avi_mjpeg(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
-    """Standard MJPEG-in-AVI: LIST hdrl (avih + LIST strl(strh/strf)),
-    LIST movi of ``00dc`` chunks, idx1 index."""
+def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
+    """Standard MJPEG-in-AVI at ``FPS``: LIST hdrl (avih + LIST
+    strl(strh/strf)), LIST movi of ``00dc`` chunks, idx1 index."""
 
     def chunk(cid: bytes, body: bytes) -> bytes:
         return (
@@ -144,7 +143,7 @@ def encode_avi_mjpeg(
     n = len(frames)
     avih = struct.pack(
         "<14I",
-        1_000_000 // fps,  # microseconds per frame
+        _US_PER_FRAME,     # microseconds per frame
         0,                 # max bytes/sec (advisory)
         0, 0x10,           # padding, flags: AVIF_HASINDEX
         n, 0, 1, 0,        # total frames, initial, streams, suggested buf
@@ -153,7 +152,7 @@ def encode_avi_mjpeg(
     )
     strh = (
         b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIIi", 0, 0, 0, 0, 1, fps, 0, n, 0, 0, -1)
+        + struct.pack("<IHHIIIIIIIi", 0, 0, 0, 0, 1, FPS, 0, n, 0, 0, -1)
         + struct.pack("<4H", 0, 0, width, height)
     )
     strf = struct.pack(
@@ -332,7 +331,7 @@ def synth_video(doc_id: int) -> bytes:
         encode_jpeg(synth_page(doc_id + 131 * f), 92, "420")
         for f in range(n)
     ]
-    return encode_avi_mjpeg(frames, IMG_W, IMG_H, fps=10)
+    return encode_avi_mjpeg(frames, IMG_W, IMG_H)
 
 
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

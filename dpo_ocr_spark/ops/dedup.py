@@ -39,11 +39,14 @@ LSH_BANDS = 4  # → rows per band = MINHASH_K / LSH_BANDS
 # it.  The oracle SQL applies the identical cap so the hash gate stays
 # aligned at any SF (at sf≤0.1 no group comes near the cap).
 MAX_GROUP = 1_000
-_DROP_SOURCES: dict[str, tuple[DataFrame, int]] = {}
+_DROP_SOURCES: dict[str, DataFrame] = {}
+# connected components: label-propagation rounds before dedup_clusters
+# gives up (a path of n nodes needs about log2(n) + 1 rounds)
+CC_MAX_ROUNDS = 25
 
 
-def _capped_groups(grouped: DataFrame, what: str, cap: int = MAX_GROUP) -> DataFrame:
-    """Keep groups with 2..cap members; register the grouped frame so
+def _capped_groups(grouped: DataFrame, what: str) -> DataFrame:
+    """Keep groups with 2..MAX_GROUP members; register the grouped frame so
     drop_stats(what) can report how many groups/ids the cap excluded.
     ``grouped`` must carry a sorted ``ids`` array column.
 
@@ -51,8 +54,8 @@ def _capped_groups(grouped: DataFrame, what: str, cap: int = MAX_GROUP) -> DataF
     empty-relation propagation prunes the CollectMetrics node whenever the
     capped result is empty — exactly the degenerate corpora the cap
     exists for — so stats are an explicit side aggregation instead.)"""
-    _DROP_SOURCES[what] = (grouped, cap)
-    return grouped.filter((F.size("ids") > 1) & (F.size("ids") <= cap))
+    _DROP_SOURCES[what] = grouped
+    return grouped.filter((F.size("ids") > 1) & (F.size("ids") <= MAX_GROUP))
 
 
 def drop_stats(what: str) -> dict:
@@ -64,13 +67,13 @@ def drop_stats(what: str) -> dict:
     retained grouped frame per dedup family), overwritten on each plan
     build; stats always describe the most recent corpus/params, and the
     frame is only valid while its SparkSession lives."""
-    src = _DROP_SOURCES.get(what)
-    if src is None:
+    grouped = _DROP_SOURCES.get(what)
+    if grouped is None:
         return {"dropped_groups": 0, "dropped_ids": 0}
-    grouped, cap = src
+    hot = F.size("ids") > MAX_GROUP
     row = grouped.agg(
-        F.sum(F.when(F.size("ids") > cap, 1).otherwise(0)).alias("g"),
-        F.sum(F.when(F.size("ids") > cap, F.size("ids")).otherwise(0)).alias("i"),
+        F.sum(F.when(hot, 1).otherwise(0)).alias("g"),
+        F.sum(F.when(hot, F.size("ids")).otherwise(0)).alias("i"),
     ).first()
     return {"dropped_groups": int(row["g"] or 0), "dropped_ids": int(row["i"] or 0)}
 # embedding quantization: round(x * 10^3) → exact BIGINT arithmetic.
@@ -389,14 +392,12 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_pairs_from_signatures(minhash_signatures(spark, sf_dir))
 
 
-def lsh_pairs_from_signatures(
-    sig: DataFrame, max_bucket: int = MAX_GROUP
-) -> DataFrame:
+def lsh_pairs_from_signatures(sig: DataFrame) -> DataFrame:
     """LSH banding: same (band, band-hash) bucket → candidate pair.
 
     Each band hashes r = K/b consecutive signature rows; a pair collides if
     ANY band matches (union over bands, dedup).  Only bucket-joins — scale
-    cost is Σ bucket² not n², and buckets larger than max_bucket are
+    cost is Σ bucket² not n², and buckets larger than MAX_GROUP are
     dropped with an observed count (drop_stats('minhash_lsh')): a
     degenerate bucket (boilerplate-heavy corpora hash thousands of docs
     into one) otherwise fans out m²/2 structs inside one row."""
@@ -427,7 +428,6 @@ def lsh_pairs_from_signatures(
                 F.sort_array(F.collect_list("doc_id")).alias("ids")
             ),
             "minhash_lsh",
-            max_bucket,
         )
         .select(F.explode(_pair_combos("ids")).alias("p"))
         .select("p.doc_a", "p.doc_b")
@@ -557,15 +557,11 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _all_buckets_udf, embedding_dims
 
     emb = _quantized(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    dims = embedding_dims(sf_dir)  # parquet-footer peek, no Spark job
-    if dims is None:
-        first = emb.select("q").first()  # non-local storage fallback
-        if first is None:  # empty table -> empty pair frame, no crash
-            return spark.createDataFrame([], "vec_a long, vec_b long")
-        dims = len(first.q)
     tabbed = emb.select(
         "vec_id",
-        F.posexplode(_all_buckets_udf(dims)("q")).alias("tbl", "bucket"),
+        F.posexplode(_all_buckets_udf(embedding_dims(sf_dir))("q")).alias(
+            "tbl", "bucket"
+        ),
     )
     pairs = (
         _capped_groups(
@@ -643,12 +639,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clusters_from_edges(docs, pairs)
 
 
-def clusters_from_edges(
-    docs: DataFrame, pairs: DataFrame, max_iter: int = 25
-) -> DataFrame:
+def clusters_from_edges(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Core CC loop over (doc_id) nodes and (doc_a, doc_b) edges.
 
-    Raises RuntimeError if the labels still change in round ``max_iter``."""
+    Raises RuntimeError if the labels still change in round
+    ``CC_MAX_ROUNDS``."""
 
     def label_sum(frame: DataFrame):
         # DECIMAL(38,0) keeps the sum exact at any corpus size (sum(long)
@@ -664,7 +659,7 @@ def clusters_from_edges(
     )
     labels = docs.select("doc_id", F.col("doc_id").alias("label")).cache()
     prev_sum = label_sum(labels)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         nbr = (
             sym.join(labels, sym.src == labels.doc_id)
             .groupBy(F.col("dst").alias("doc_id"))
@@ -703,7 +698,7 @@ def clusters_from_edges(
     else:
         sym.unpersist()
         raise RuntimeError(
-            f"connected components did not converge in {max_iter} rounds"
+            f"connected components did not converge in {CC_MAX_ROUNDS} rounds"
         )
     sym.unpersist()
     return labels.select("doc_id", F.col("label").alias("cluster_id"))

@@ -2,10 +2,12 @@
 
 Per the brief, image/audio/video are treated as opaque ``binary`` columns
 with a typed metadata struct; decode / feature-extract / resize /
-frame-sample run as Arrow-batched UDFs over ``mapInPandas``.  The decode
-step ``decode_stub`` dispatches to the pure-Python decoders in
-ops/codecs.py (images) and ops/av.py (WAV audio, MJPEG-in-AVI video) and
-raises on the codecs those do not cover.
+frame-sample run as Arrow-batched UDFs over ``mapInPandas``.  Real decodes
+live next to the queries that run them: ops/codecs.py ``decode_image``
+(PPM, PNG, 8-bit Huffman JPEG) and ops/av.py ``decode_wav`` /
+``decode_avi`` (WAV audio, MJPEG-in-AVI video).  Compressed audio
+(MP3/AAC/FLAC) and inter-frame video codecs (H.264/VP9) have no decoder
+here.
 
 The synthetic payload format (built from document text bytes) carries a
 12-byte header: magic 'MM01' + uint32 width + uint32 height (big-endian),
@@ -103,39 +105,6 @@ def extract_media_meta(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=META_SCHEMA)
-
-
-def decode_stub(payload: bytes) -> "object":
-    """Every in-scope modality decodes for REAL now: images via
-    ops/codecs.py (PPM; PNG at every bit depth 1-16, all filters,
-    Adam7; 8-bit JPEG baseline SOF0 / extended SOF1 + progressive SOF2,
-    Huffman+IDCT, 4:4:4/4:2:2/4:2:0, restart markers), audio via ops/av.py decode_wav (RIFF/WAVE PCM
-    u8/s16/s24/s32, multichannel) and video via ops/av.py decode_avi
-    (MJPEG-in-AVI container walk + per-frame JPEG decode) — each
-    oracle-checked via the image_autocrop* / audio_features /
-    video_frame_sample queries.  What remains rejected (not faked):
-    compressed audio (MP3/AAC/FLAC) and inter-frame video codecs
-    (H.264/VP9), plus the JPEG frames the decoder rejects by marker
-    (lossless, hierarchical, arithmetic-coded, non-8-bit precision)."""
-    if payload[:2] in (b"P6", b"\xff\xd8") or payload[:8].startswith(
-        b"\x89PNG"
-    ):
-        from .codecs import decode_image
-
-        return decode_image(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        from .av import decode_wav
-
-        return decode_wav(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from .av import decode_avi
-
-        return decode_avi(payload)
-    raise NotImplementedError(
-        "compressed audio / inter-frame video codecs require libs not "
-        "present in this environment (see ops/av.py for the real "
-        "WAV/MJPEG-AVI paths)"
-    )
 
 
 THUMB_SIDE = 256  # resize_plan's target longest side, pixels

@@ -1,23 +1,21 @@
-"""Real pixel-space operators (SURVEY §2 I1-I3) over uncompressed images.
+"""Real pixel-space operators (SURVEY §2 I1, I3) over decoded images.
 
-The container has no codec libraries (PIL / libjpeg / libpng), so rather
-than stubbing the whole pixel path (round-1 state, ops/multimodal.py
-``decode_stub``), the engine implements REAL decode + geometry for the
-uncompressed binary-PPM (P6) format — pure numpy, no codecs — and runs
-the reference's pixel algorithms on actual arrays inside Arrow batches:
+The container has no codec libraries (PIL / libjpeg / libpng), so the
+engine implements REAL decode + geometry for the uncompressed binary-PPM
+(P6) format — pure numpy, no codecs — and runs the reference's pixel
+algorithms on actual arrays inside Arrow batches:
 
 - I1 auto-trim borders: threshold border trim re-expressed from the
   reference's row/column-mean scan (autocrop:
   ``data_prep/NMAH_Ledgers/autocrop.py:22-55``);
-- I2 micro-rotation (deskew): projection-profile search — rotate by
-  candidate small angles, keep the angle maximizing row-ink variance
-  (the standard deskew objective; the reference trims after small
-  rotations in the same spirit);
 - I3 page split: gutter detection as the widest all-white column run
   inside the content box.  The reference splits two-page scans at a
   FIXED midpoint — ``round(width/2)``, ``data_prep/NMAH_Ledgers/
   nmah_ledgers_1.py:27-34``; detecting the gutter valley instead is this
   engine's refinement of that step (robust to off-center bindings).
+
+I2 micro-rotation (deskew) is not implemented: no registered query
+rotates, and the synthetic pages are never skewed.
 
 Compressed images decode through ``ops/codecs.py`` (PNG, and 8-bit
 Huffman-coded baseline / progressive JPEG); ``decode_image`` sniffs the
@@ -119,43 +117,6 @@ def find_gutter(gray: np.ndarray, box: tuple[int, int, int, int]) -> int:
     if best_len == 0:
         return -1
     return left + best_start + (best_len - 1) // 2
-
-
-def rotate_nn(img: np.ndarray, deg: float, fill: int = 255) -> np.ndarray:
-    """Nearest-neighbor rotation about the center, white fill — the
-    numpy-only micro-rotation kernel (small-angle deskew use)."""
-    h, w = img.shape[:2]
-    th = np.deg2rad(deg)
-    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    yy, xx = np.mgrid[0:h, 0:w]
-    # inverse map: output pixel -> source location
-    sy = np.cos(th) * (yy - cy) - np.sin(th) * (xx - cx) + cy
-    sx = np.sin(th) * (yy - cy) + np.cos(th) * (xx - cx) + cx
-    syi = np.rint(sy).astype(np.int64)
-    sxi = np.rint(sx).astype(np.int64)
-    ok = (syi >= 0) & (syi < h) & (sxi >= 0) & (sxi < w)
-    out = np.full_like(img, fill)
-    out[yy[ok], xx[ok]] = img[syi[ok], sxi[ok]]
-    return out
-
-
-SKEW_MAX_DEG, SKEW_STEP = 3.0, 0.5  # deskew candidate angles, degrees
-
-
-def estimate_skew(gray: np.ndarray) -> float:
-    """Projection-profile deskew: the candidate angle in ±SKEW_MAX_DEG
-    (SKEW_STEP apart) whose rotation maximizes the variance of per-row ink
-    mass (sharp text lines ⇒ spiky profile).  Returns the angle TO APPLY
-    to deskew."""
-    best_angle, best_score = 0.0, -1.0
-    angles = np.arange(-SKEW_MAX_DEG, SKEW_MAX_DEG + 1e-9, SKEW_STEP)
-    ink = 255.0 - gray
-    for a in angles:
-        rot = rotate_nn(ink.astype(np.uint8), float(a), fill=0)
-        score = float(rot.sum(axis=1).var())
-        if score > best_score:
-            best_score, best_angle = score, float(a)
-    return best_angle
 
 
 # --- synthetic geometry (pure doc_id arithmetic, mirrored in the oracle) ----

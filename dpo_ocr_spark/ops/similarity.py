@@ -37,24 +37,16 @@ MULTIPROBE_RADIUS = 1
 
 
 def embedding_dims(sf_dir: str) -> int | None:
-    """Embedding dimensionality from the local parquet footer (one-row
-    peek, no Spark job).  The previous ``emb.select("q").first()`` ran a
-    full scan job per query call just to size the hyperplane matrix —
-    a driver-side metadata question (guide §5: the driver should do no
-    data work, but metadata lookups belong there, not in a job).
-    Returns None when the file is absent/empty/non-local — callers fall
-    back to the ``first()`` job."""
-    try:
-        import pyarrow.parquet as pq
+    """Embedding dimensionality from the embeddings table's first row,
+    read with pyarrow (no Spark job: sizing the hyperplane matrix is a
+    driver-side metadata question, guide §5).  None for an empty table,
+    whose row count the parquet footers give; any read error raises."""
+    import pyarrow.dataset as ds
 
-        pf = pq.ParquetFile(f"{sf_dir}/embeddings.parquet")
-        batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-        if batch.num_rows == 0:
-            return None
-        vec = batch.column(0)[0].as_py()
-        return len(vec) if vec is not None else None
-    except Exception:
+    table = ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet")
+    if table.count_rows() == 0:
         return None
+    return len(table.head(1, columns=["embedding"]).column(0)[0].as_py())
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,6 +86,23 @@ def _dot(a: str, b: str) -> F.Column:
     )
 
 
+def _topk(scored: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cos) → each query's TOP_K candidates by
+    (cos desc, cand_id asc): per-query window argmax, never a global
+    sort."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("cand_id").asc()
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select(
+            "query_id", "cand_id", F.col("rn").alias("rank"),
+            F.round("cos", 6).alias("cos_r6"),
+        )
+    )
+
+
 def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k of every corpus vector for each query vector."""
     emb = _emb(spark, sf_dir)
@@ -117,17 +126,7 @@ def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))
         ).alias("cos"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id", "cand_id", F.col("rn").alias("rank"),
-            F.round("cos", 6).alias("cos_r6"),
-        )
-    )
+    return _topk(scored)
 
 
 def _plane_signs(table: int, plane: int, dims: int) -> list[int]:
@@ -146,16 +145,20 @@ def _plane_signs(table: int, plane: int, dims: int) -> list[int]:
     ]
 
 
-def _all_buckets_udf(dims: int):
+def _all_buckets_udf(dims: int | None):
     """All LSH-table buckets in ONE vectorized matmul per Arrow batch:
     X(batch×dims) @ M(dims×(tables·planes)) → sign bits → per-table
     bucket ints.  (The expression-tree form — 32 interpreted higher-order
-    folds over literal arrays — was the measured cold-start hot spot.)"""
+    folds over literal arrays — was the measured cold-start hot spot.)
+
+    ``dims`` is None for an empty table (``embedding_dims``): the planes
+    get zero width, no batch ever reaches the UDF, and the caller's plan
+    and schema stay those of a non-empty table."""
     from pyspark.sql import types as T
 
     M = np.array(
         [
-            _plane_signs(t, p, dims)
+            _plane_signs(t, p, dims or 0)
             for t in range(LSH_TABLES)
             for p in range(LSH_PLANES)
         ],
@@ -274,17 +277,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame
         )
         .dropDuplicates(["query_id", "cand_id"])
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id", "cand_id", F.col("rn").alias("rank"),
-            F.round("cos", 6).alias("cos_r6"),
-        )
-    )
+    return _topk(scored)
 
 
 def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,13 +285,6 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-bucket rows, exact cosine re-rank within candidates."""
     emb = _emb(spark, sf_dir)
     dims = embedding_dims(sf_dir)
-    if dims is None:  # non-local/odd storage: fall back to a scan job
-        first = emb.select("q").first()
-        if first is None:  # empty table -> empty result, no crash
-            return spark.createDataFrame(
-                [], "query_id long, cand_id long, cos_r6 double"
-            )
-        dims = len(first.q)
     # all table buckets in ONE pass over one scan (an 8-way union re-read
     # the parquet 8× — measured), then posexplode to (tbl, bucket) rows
     tabbed = emb.select(
@@ -348,17 +334,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id", "cand_id", F.col("rn").alias("rank"),
-            F.round("cos", 6).alias("cos_r6"),
-        )
-    )
+    return _topk(scored)
 
 
 KMEANS_ITERS = 2

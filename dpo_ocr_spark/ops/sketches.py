@@ -1,21 +1,10 @@
-"""Sketch-backed scale operators: bloom-prescreened decontamination,
-count-min host counts, frequent-items top-k, and mergeable HLL
-cardinality rollups.
+"""Sketch-backed scale operators: count-min host counts, frequent-items
+top-k, and mergeable HLL cardinality rollups.
 
 At 10^12 documents the exact forms of these operators all carry a
 corpus-proportional shuffle or state; the sketch forms replace that with
 a fixed-size, mergeable summary built in one pass:
 
-- ``decontaminate_bloom``: a bloom filter over the eval n-gram set
-  (fixed M bits however large the corpus) prescreens corpus grams BEFORE
-  any join, so only candidate grams — contamination hits plus a
-  vanishing FP stream — reach the exact verify join.  When the eval set
-  grows with the corpus, the prescreen cuts the verify join's corpus side
-  to the survivors only.
-  Output is EXACTLY ``ops.curation.decontaminate``'s by construction:
-  the same hashes build and probe the filter (no false negatives), and
-  the verify join removes every false positive — hash values affect
-  performance, never results.
 - ``source_counts_cms``: Spark's built-in count-min sketch (JVM
   aggregation, mergeable, width×depth ints total) answers per-key count
   point queries without keeping per-key state; exact for heavy hitters
@@ -37,114 +26,10 @@ pandas); these are the §"beyond the reference" training-data operators
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .curation import EVAL_MOD, N_DECON, _docs, _ngrams, _words
-
-# Bloom geometry: M bits / K hashes.  Eval suites are a few 10^5-10^6
-# n-grams in production (MMLU/GSM8K/...-scale); M = 2^23 bits (1 MiB)
-# keeps FP ~ (1-e^{-Kn/M})^K < 1e-6 at n = 10^5, and the broadcast is a
-# single megabyte per executor regardless of corpus size.
-BLOOM_BITS = 1 << 23
-BLOOM_K = 7
-# pandas hash_array keys (16 bytes each): h_i = h1 + i*h2 double hashing.
-_KEY1 = "dpo-bloom-h1-key"
-_KEY2 = "dpo-bloom-h2-key"
-
-
-def _bloom_indices(grams: np.ndarray) -> Iterator[np.ndarray]:
-    """K bit positions per gram, vectorized (uint64 double hashing)."""
-    h1 = pd.util.hash_array(grams, hash_key=_KEY1, categorize=False)
-    h2 = pd.util.hash_array(grams, hash_key=_KEY2, categorize=False)
-    for i in range(BLOOM_K):
-        yield (h1 + np.uint64(i) * h2) % np.uint64(BLOOM_BITS)
-
-
-def _gram_frame(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(_ngrams(_words(), N_DECON))).alias("gram"),
-    )
-
-
-def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`ops.curation.decontaminate` semantics through a bloom prescreen.
-
-    Build: per-partition M-bit arrays over the eval gram set
-    (mapInPandas), OR-merged on the driver — the ONLY driver-side
-    materialization is #partitions fixed-size bit arrays, never rows.
-    Probe: corpus grams stream through a vectorized membership test;
-    survivors (true hits + deterministic FPs) go to the exact verify
-    join, which restores exact semantics.
-    """
-    docs = _docs(spark, sf_dir)
-    grams = _gram_frame(docs)
-    eval_grams = (
-        grams.filter(F.col("doc_id") % EVAL_MOD == 0).select("gram").distinct()
-    )
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.zeros(BLOOM_BITS // 8, dtype=np.uint8)
-        seen = False
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            seen = True
-            g = np.asarray(pdf["gram"], dtype=object)
-            for idx in _bloom_indices(g):
-                np.bitwise_or.at(
-                    bits, (idx >> np.uint64(3)).astype(np.int64),
-                    np.left_shift(
-                        np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)
-                    ),
-                )
-        if seen:
-            yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-    parts = eval_grams.mapInPandas(build, "bits binary").collect()
-    merged = np.zeros(BLOOM_BITS // 8, dtype=np.uint8)
-    for row in parts:
-        merged |= np.frombuffer(row["bits"], dtype=np.uint8)
-    bc = spark.sparkContext.broadcast(merged.tobytes())
-
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            g = np.asarray(pdf["gram"], dtype=object)
-            mask = np.ones(len(g), dtype=bool)
-            for idx in _bloom_indices(g):
-                byte = (idx >> np.uint64(3)).astype(np.int64)
-                bit = (idx & np.uint64(7)).astype(np.uint8)
-                mask &= (bits[byte] >> bit) & 1 == 1
-            if mask.any():
-                yield pdf[mask]
-
-    corpus = grams.filter(F.col("doc_id") % EVAL_MOD != 0)
-    survivors = corpus.mapInPandas(probe, grams.schema)
-    hits = (
-        survivors.join(F.broadcast(eval_grams), "gram")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("gram").alias("n_hits"))
-    )
-    return (
-        docs.filter(F.col("doc_id") % EVAL_MOD != 0)
-        .select("doc_id", "lang")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)) > 0).alias("contaminated"),
-        )
-    )
-
+from .curation import N_DECON, _docs, _ngrams, _words
 
 # count-min geometry: width 2/eps = 20 000 cells, depth ceil(ln 1/δ) = 7
 # rows at δ = 1e-3, fixed seed.  1.1 MB of sketch state answers any

@@ -14,23 +14,19 @@ from pyspark.sql import DataFrame, SparkSession
 from .assemble import assemble_blocks, explode_tokens
 from .corpus import build_web_pages
 from .extract import extract_pages
+from .scale import decode_partitions
 
 
-def run_extraction(
-    spark: SparkSession,
-    sf_dir: str,
-    salt_partitions: int | None = None,
-) -> DataFrame:
+def run_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents parquet → EXTRACT_RESULT frame (one row per url).
 
     The salt exchange happens BEFORE the first Python stage (inside
     build_web_pages) so generation and decode pipeline together across all
-    cores with no shuffle in between."""
-    if salt_partitions is None:
-        from .scale import decode_partitions
-
-        salt_partitions = decode_partitions(spark, sf_dir)
-    pages = build_web_pages(spark, sf_dir, partitions=salt_partitions)
+    cores with no shuffle in between; its width is the size-derived
+    ``decode_partitions``."""
+    pages = build_web_pages(
+        spark, sf_dir, partitions=decode_partitions(spark, sf_dir)
+    )
     return extract_pages(pages)
 
 

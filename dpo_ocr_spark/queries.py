@@ -329,7 +329,7 @@ def _q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive, each referred to by every html page of its host.  At scale
     this is the shuffle-on-target aggregate + one anti-join a frontier
     builder actually runs (the known-set side would be a bloom/bucketed
-    probe — see decontaminate_bloom for the sketch variant)."""
+    probe)."""
     from .extract.meta import outlinks
 
     pages = _pages_shared(spark, sf_dir)
@@ -747,7 +747,7 @@ ORACLES["interpret_full"] = queries_cascade.INTERPRET_FULL_ORACLE
 # r6 rotation queue (late-r5 additions, all local-sweep green at sf0.01
 # AND sf0.1, never driver-sampled): append_sink, audio_features,
 # video_frame_sample, resume_extract, eval_accuracy_auto_designed (in
-# sample r5), decontaminate_bloom, source_counts_cms, term_topk_sketch,
+# sample r5), source_counts_cms, term_topk_sketch,
 # gram_cardinality_hll, bpe_merges; plus the WARC/WET/CDX container
 # queries (warc_extract, warc_fetch_subset, cdx_urlkeys, wet_langs)
 # and the charset-mix extraction twin (extract_text_charsets) and the

@@ -220,15 +220,18 @@ register("props_extract", EV.PROPS_EXTRACT_ORACLE)(EV.props_extract)
 def _q_streaming_sessionize(spark, sf_dir: str):
     """Stateful streaming sessionization drained availableNow: emits the
     gap-CLOSED sessions (batch sessionize minus each user's final open
-    session — re-derived exactly by the oracle)."""
-    from .streaming.stream import stream_sessionize
+    session — re-derived exactly by the oracle), read back from the
+    durable sink.  The source is staged as ONE file so the drain is one
+    micro-batch: the stream needs non-decreasing event time per user
+    across micro-batches, which unordered part files would not give."""
+    from .streaming.stream import SESSION_OUT, stream_sessionize
 
     tmp = _scratch_dir("stream_sess_")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.mode(
+    spark.read.parquet(f"{sf_dir}/events.parquet").coalesce(1).write.mode(
         "overwrite"
     ).parquet(tmp + "/src")
-    stream_sessionize(spark, tmp + "/src", tmp + "/ckpt", "stream_sess_q")
-    return spark.table("stream_sess_q")
+    stream_sessionize(spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink")
+    return spark.read.schema(SESSION_OUT).parquet(tmp + "/sink")
 
 
 def _streaming_sessionize_oracle() -> str:
@@ -352,17 +355,11 @@ register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)
 
 # r5 sketch layer (ops/sketches.py): fixed-size mergeable summaries for
 # the operators whose exact forms carry corpus-proportional shuffle or
-# state at 10^12 docs.  All outputs BIGINT/BOOL/VARCHAR-exact; the two
-# approximate paths are value-checked without hashing an estimate —
-# decontaminate_bloom's verify join restores exact semantics (it reuses
-# the exact oracle verbatim), and gram_cardinality_hll emits the exact
-# count plus an integer-math ±5% agreement flag the oracle pins TRUE.
+# state at 10^12 docs.  All outputs BIGINT/BOOL/VARCHAR-exact; the
+# approximate path is value-checked without hashing an estimate —
+# gram_cardinality_hll emits the exact count plus an integer-math ±5%
+# agreement flag the oracle pins TRUE.
 from .ops import sketches as SKT  # noqa: E402
-
-register(
-    "decontaminate_bloom",
-    C.DECONTAMINATE_ORACLE,
-)(SKT.decontaminate_bloom)
 
 register(
     "source_counts_cms",

@@ -753,9 +753,10 @@ GROUP BY 1
 def _q_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 end-to-end value check through a REAL double append: two
     designed slices of ``documents`` are written to the same parquet
-    target via ``write_results(mode='append')``, then the target is read
-    back and aggregated — the second write must ADD files, not clobber
-    the first (an overwrite would lose slice 0 and fail the hash)."""
+    target via ``write_results`` (which only appends), then the target
+    is read back and aggregated — the second write must ADD files, not
+    clobber the first (an overwrite would lose slice 0 and fail the
+    hash)."""
     from .session import scratch_dir
     from .sources.iceberg import write_results
 

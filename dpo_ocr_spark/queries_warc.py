@@ -39,7 +39,7 @@ def _archive(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
 
     def build() -> DataFrame:
         pages = build_web_pages(spark, sf_dir, partitions=8)
-        return W.write_warc(pages, out, compress=True, exercise_http_codings=True)
+        return W.write_warc(pages, out, exercise_http_codings=True)
 
     index = stagecache.shared(spark, f"warcidx:{sf_dir}:{out}", build)
     index.count()  # land the archives before any reader lists the dir

@@ -34,21 +34,19 @@ WORKER_DAEMON = ("spark.python.daemon.module", "dpo_ocr_spark.worker_daemon")
 def get_spark(
     app_name: str = "dpo_ocr_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) else 32.
-    Shuffle partitions default to 2×cores locally — on a real cluster this
-    would be sized to ~128 MB post-shuffle partitions and then AQE-coalesced.
+    Shuffle partitions are max(cores, 16), which AQE coalesces — on a
+    real cluster this would be sized to ~128 MB post-shuffle partitions.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cpus, 16)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

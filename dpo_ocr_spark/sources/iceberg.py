@@ -7,23 +7,22 @@ how. Everything here is jar-agnostic:
 
 - pure config/dispatch functions (``iceberg_session_conf``,
   ``is_table_ref``) are unit-tested without any Iceberg runtime;
-- reader/writer plumbing goes through the standard DataSource V2
-  options (``snapshot-id``, ``as-of-timestamp``, ``start-snapshot-id``,
-  ``end-snapshot-id``) — see the public Iceberg Spark docs
-  (https://iceberg.apache.org/docs/latest/spark-queries/);
+- reader plumbing goes through the standard DataSource V2 options
+  (``snapshot-id``, ``start-snapshot-id``) — see the public Iceberg
+  Spark docs (https://iceberg.apache.org/docs/latest/spark-queries/);
 - every entry point falls back to parquet paths (the sandbox fixture
   layout) so the same job code runs in both worlds. Time travel over a
   parquet path is a hard error, never a silent full scan.
 
-Resume contract at scale: each run records the table's snapshot id next
-to its per-partition lineage rows (scale.with_lineage). A restart does
-an incremental append-scan from that snapshot (``incremental_pages`` with
-the checkpointed id as ``start_snapshot_id``) — only rows committed
-after the checkpoint are reprocessed, and the anti-join against
-completed lineage (scale.resume_filter) covers the partial-failure window
-inside a snapshot. The reference's analog is
-delete-by-project + full rerun (block_identification.py:63); ours is
-additive and idempotent.
+Resume at scale: ``jobs/run_extract.py`` has two levers, and a restart
+can use both. ``--start-snapshot-id`` runs an incremental append-scan
+(``incremental_pages``) over only the rows committed after that
+snapshot; the operator takes the id from the table's snapshot log, since
+the lineage rows (scale.with_lineage) record partitions, not snapshots.
+``--resume-from`` anti-joins completed lineage or results
+(scale.resume_filter), which covers the partial-failure window inside a
+snapshot. Every write appends. The reference's analog is delete-by-project + full rerun
+(block_identification.py:63); ours is additive and idempotent.
 """
 
 from __future__ import annotations
@@ -58,15 +57,6 @@ def iceberg_session_conf(
     }
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg runtime jar is on the session classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(ICEBERG_CATALOG_CLASS)  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 def is_table_ref(source: str) -> bool:
     """catalog.db.table (Iceberg) vs filesystem path (parquet fallback).
 
@@ -78,25 +68,20 @@ def is_table_ref(source: str) -> bool:
 
 
 def read_web_pages(
-    spark: SparkSession,
-    source: str,
-    snapshot_id: int | None = None,
-    as_of_ts: str | None = None,
+    spark: SparkSession, source: str, snapshot_id: int | None = None
 ) -> DataFrame:
     """Scan the web-pages table, optionally time-traveled.
 
-    Iceberg table ref → format('iceberg') with ``snapshot-id`` /
-    ``as-of-timestamp`` read options; parquet path → plain scan (time
-    travel on parquet is a contract error — no snapshot log exists).
+    Iceberg table ref → format('iceberg') with the ``snapshot-id`` read
+    option; parquet path → plain scan (time travel on parquet is a
+    contract error — no snapshot log exists).
     """
     if is_table_ref(source):
         reader = spark.read.format("iceberg")
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", str(snapshot_id))
-        if as_of_ts is not None:
-            reader = reader.option("as-of-timestamp", as_of_ts)
         return reader.load(source)
-    if snapshot_id is not None or as_of_ts is not None:
+    if snapshot_id is not None:
         raise ValueError(
             f"time travel requested but {source!r} is a parquet path, "
             "not an Iceberg table ref"
@@ -105,50 +90,28 @@ def read_web_pages(
 
 
 def incremental_pages(
-    spark: SparkSession,
-    table: str,
-    start_snapshot_id: int,
-    end_snapshot_id: int | None = None,
+    spark: SparkSession, table: str, start_snapshot_id: int
 ) -> DataFrame:
     """Incremental append-scan: rows committed AFTER start_snapshot_id
-    (exclusive) up to end_snapshot_id (inclusive; default current).
+    (exclusive) up to the current snapshot.
 
     This is the resume primitive at 10^12 rows — a restart reprocesses
     only the snapshot delta, never the full table.
     """
     if not is_table_ref(table):
         raise ValueError(f"incremental scan needs an Iceberg table ref, got {table!r}")
-    reader = (
+    return (
         spark.read.format("iceberg")
         .option("start-snapshot-id", str(start_snapshot_id))
+        .load(table)
     )
-    if end_snapshot_id is not None:
-        reader = reader.option("end-snapshot-id", str(end_snapshot_id))
-    return reader.load(table)
 
 
-def latest_snapshot_id(spark: SparkSession, table: str) -> int | None:
-    """Current snapshot id from the table's ``.snapshots`` metadata table
-    — recorded alongside lineage as the run's checkpoint."""
-    row = (
-        spark.sql(
-            f"SELECT snapshot_id FROM {table}.snapshots "  # noqa: S608 — table ref from job config
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-    )
-    return int(row[0].snapshot_id) if row else None
-
-
-def write_results(
-    df: DataFrame, target: str, mode: str = "append"
-) -> None:
-    """Results/lineage sink: Iceberg ``writeTo`` (fanout on — input is
-    salted, not sorted by any partition spec) or parquet path append."""
+def write_results(df: DataFrame, target: str) -> None:
+    """Results/lineage sink, append only: Iceberg ``writeTo`` (fanout on
+    — input is salted, not sorted by any partition spec) or parquet path
+    append."""
     if is_table_ref(target):
-        writer = df.writeTo(target).option("fanout-enabled", "true")
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
+        df.writeTo(target).option("fanout-enabled", "true").append()
         return
-    df.write.mode(mode).parquet(target)
+    df.write.mode("append").parquet(target)

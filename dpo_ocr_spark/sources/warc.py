@@ -16,11 +16,13 @@ implements that ingestion/egress boundary Spark-first:
   task per archive, which is how Common Crawl jobs actually parallelise:
   ~1 GB archives × tens of thousands of files) streamed member-by-member, so
   peak memory is one compressed chunk + one record, never the whole file.
-  Handles uncompressed ``.warc`` too, plus HTTP ``Transfer-Encoding:
-  chunked`` and ``Content-Encoding: gzip`` response bodies.
+  Handles uncompressed ``.warc`` too (a manifest may list plain
+  archives), plus HTTP ``Transfer-Encoding: chunked`` and
+  ``Content-Encoding: gzip`` response bodies.  It yields only the HTTP
+  200 responses: they are the pages extraction reads.
 - :func:`write_wet` / :func:`read_wet` — the text-only "conversion record"
   sibling format (WET), carrying the extracted text per url.
-- :func:`cdx_lines` — SURT urlkey + 14-digit timestamp CDXJ rendering of
+- :func:`cdx_frame` — SURT urlkey + 14-digit timestamp CDX columns of
   the index frame, pure JVM expressions (no Python in the formatter).
 - :func:`fetch_records` — random access: given index rows, range-read and
   decode ONLY those members (the resume path: a restart re-fetches the
@@ -206,10 +208,10 @@ def _mime_of(html: bytes) -> str:
     return "application/json" if html[:1] == b"{" else "text/html; charset=UTF-8"
 
 
-def _archive_writer(it, out_dir: str, ext: str, compress: bool, records_of):
+def _archive_writer(it, out_dir: str, ext: str, records_of):
     """Shared writer scaffold for WARC/WET sinks: one file per partition
-    (warcinfo first, one gzip member per record when compressed), index
-    rows accumulated per the WARC_INDEX schema.
+    (warcinfo first, one gzip member per record), index rows accumulated
+    per the WARC_INDEX schema.
 
     ``records_of(batch)`` yields ``(url, ts, mime, status, digest,
     payload_len, record_bytes)`` per record."""
@@ -222,12 +224,11 @@ def _archive_writer(it, out_dir: str, ext: str, compress: bool, records_of):
     os.makedirs(out_dir, exist_ok=True)
     rows: dict[str, list] = {n: [] for n in WARC_INDEX.names}
     with open(path, "wb") as f:
-        info = _warcinfo(fname)
-        f.write(_gzip_member(info) if compress else info)
+        f.write(_gzip_member(_warcinfo(fname)))
         pos = f.tell()
         for batch in it:
             for url, ts, mime, status, digest, plen, rec in records_of(batch):
-                out = _gzip_member(rec) if compress else rec
+                out = _gzip_member(rec)
                 f.write(out)
                 rows["url"].append(url)
                 rows["warc_ts"].append(ts)
@@ -246,10 +247,9 @@ def write_warc(
     pages: DataFrame,
     out_dir: str,
     *,
-    compress: bool = True,
     exercise_http_codings: bool = False,
 ) -> DataFrame:
-    """web_pages frame → one WARC file per partition; returns WARC_INDEX.
+    """web_pages frame → one ``.warc.gz`` per partition; returns WARC_INDEX.
 
     Each response record is its own gzip member (Common Crawl layout), so
     ``(rec_offset, rec_length)`` supports ranged refetch.  The returned
@@ -261,7 +261,6 @@ def write_warc(
     gzip-encoded (both legal as-crawled forms) so a round trip proves the
     reader's HTTP decoding, not just the happy path.
     """
-    ext = ".warc.gz" if compress else ".warc"
 
     def records_of(batch):
         urls = batch.column("url").to_pylist()
@@ -293,7 +292,7 @@ def write_warc(
             yield url, ts, mime.split(";")[0], 200, digest, len(body), rec
 
     def gen(it):
-        yield from _archive_writer(it, out_dir, ext, compress, records_of)
+        yield from _archive_writer(it, out_dir, ".warc.gz", records_of)
 
     return pages.mapInArrow(gen, schema=WARC_INDEX)
 
@@ -303,11 +302,17 @@ def write_warc(
 # ---------------------------------------------------------------------------
 
 
-def _iter_members(f, chunk_size: int = 1 << 20) -> Iterator[tuple[int, int, bytes]]:
+# Reader budgets: compressed bytes per read, and payload bytes per Arrow
+# batch (same budget idiom as extract/stage.py).
+READ_CHUNK_BYTES = 1 << 20
+BATCH_BYTES = 32 << 20
+
+
+def _iter_members(f) -> Iterator[tuple[int, int, bytes]]:
     """Stream (offset, compressed_length, decompressed_bytes) per gzip
-    member from a file object, reading ``chunk_size`` at a time — peak
-    memory is one chunk + one record, never the file."""
-    buf = f.read(chunk_size)
+    member from a file object, reading at most ``READ_CHUNK_BYTES`` at a
+    time — peak memory is one chunk + one record, never the file."""
+    buf = f.read(READ_CHUNK_BYTES)
     pos = 0  # absolute offset of buf[0]
     while buf:
         d = zlib.decompressobj(16 + zlib.MAX_WBITS)
@@ -320,7 +325,7 @@ def _iter_members(f, chunk_size: int = 1 << 20) -> Iterator[tuple[int, int, byte
             buf = d.unused_data
             if d.eof:
                 break
-            nxt = f.read(chunk_size)
+            nxt = f.read(READ_CHUNK_BYTES)
             if not nxt:
                 if out:
                     break  # truncated final member: surface what decoded
@@ -328,7 +333,7 @@ def _iter_members(f, chunk_size: int = 1 << 20) -> Iterator[tuple[int, int, byte
             buf = nxt
         yield start, pos - start, bytes(out)
         if not buf:
-            buf = f.read(chunk_size)
+            buf = f.read(READ_CHUNK_BYTES)
 
 
 def _parse_warc_headers(raw: bytes, at: int) -> tuple[dict[str, str], int]:
@@ -464,10 +469,10 @@ def _records_of_file(path: str) -> Iterator[dict]:
                 yield _record(headers, payload, path, off, int(length))
 
 
-def _records_to_batches(recs: Iterator[dict], schema, batch_bytes: int = 32 << 20):
+def _records_to_batches(recs: Iterator[dict], schema):
     """Record dicts → Arrow batches of ``schema``, in order, each closed
-    once its payloads reach ``batch_bytes`` (same budget idiom as
-    extract/stage.py): a 1 GB archive never materializes as ONE batch."""
+    once its payloads reach ``BATCH_BYTES``: a 1 GB archive never
+    materializes as ONE batch."""
     import pyarrow as pa
 
     cols: dict[str, list] = {n: [] for n in schema.names}
@@ -476,7 +481,7 @@ def _records_to_batches(recs: Iterator[dict], schema, batch_bytes: int = 32 << 2
         for n, col in cols.items():
             col.append(r.get(n))
         budget += len(r.get("html") or b"") + 128
-        if budget >= batch_bytes:
+        if budget >= BATCH_BYTES:
             yield pa.RecordBatch.from_pydict(cols, schema=schema)
             cols = {n: [] for n in schema.names}
             budget = 0
@@ -492,8 +497,6 @@ def _paths_frame(spark: SparkSession, paths: list[str]) -> DataFrame:
 
 
 def list_warc_paths(spark: SparkSession, directory: str, suffix: str = ".warc.gz") -> list[str]:
-    import os
-
     return sorted(
         os.path.join(directory, p)
         for p in os.listdir(directory)
@@ -501,19 +504,18 @@ def list_warc_paths(spark: SparkSession, directory: str, suffix: str = ".warc.gz
     )
 
 
-def read_warc(
-    spark: SparkSession, paths: list[str], *, status_ok_only: bool = True
-) -> DataFrame:
-    """Archive paths → WARC_RECORDS frame (one streaming task per file)."""
+def read_warc(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Archive paths → WARC_RECORDS frame of the HTTP 200 responses (one
+    streaming task per file)."""
 
     def gen(it):
         for batch in it:
             for path in batch.column("path").to_pylist():
                 recs = (
-                    r for r in _records_of_file(path) if r["rec_type"] == "response"
+                    r
+                    for r in _records_of_file(path)
+                    if r["rec_type"] == "response" and r["http_status"] == 200
                 )
-                if status_ok_only:
-                    recs = (r for r in recs if r["http_status"] == 200)
                 yield from _records_to_batches(recs, _RECORDS_ARROW)
 
     return _paths_frame(spark, paths).mapInArrow(gen, schema=WARC_RECORDS)
@@ -562,7 +564,7 @@ def write_wet(extracted: DataFrame, out_dir: str) -> DataFrame:
             yield url, ts, "text/plain", None, digest, len(body), rec
 
     def gen(it):
-        yield from _archive_writer(it, out_dir, ".warc.wet.gz", True, records_of)
+        yield from _archive_writer(it, out_dir, ".warc.wet.gz", records_of)
 
     return extracted.select("url", "warc_ts", "lang", "text").mapInArrow(
         gen, schema=WARC_INDEX
@@ -619,29 +621,6 @@ def cdx_frame(index: DataFrame) -> DataFrame:
         "rec_offset",
         "rec_length",
     ).orderBy("urlkey", "cdx_ts")
-
-
-def cdx_lines(index: DataFrame) -> DataFrame:
-    """CDXJ rendering: ``urlkey ts {json}`` (one string column)."""
-    c = cdx_frame(index)
-    return c.select(
-        F.concat_ws(
-            " ",
-            "urlkey",
-            "cdx_ts",
-            F.to_json(
-                F.struct(
-                    "url",
-                    "mime",
-                    F.col("http_status").alias("status"),
-                    F.col("payload_digest").alias("digest"),
-                    F.col("warc_file").alias("filename"),
-                    F.col("rec_offset").alias("offset"),
-                    F.col("rec_length").alias("length"),
-                )
-            ),
-        ).alias("line")
-    )
 
 
 def fetch_records(spark: SparkSession, index: DataFrame) -> DataFrame:

@@ -4,14 +4,20 @@ The reference is strictly batch (incremental batches via doc_version CLI
 args, run_gvision_ocr.py:54-64); this thin wrapper is the stretch-goal
 re-expression: the SAME ``extract_pages`` transformation runs as a
 micro-batch stream with ``Trigger.AvailableNow`` (drain-everything-then-
-stop — the modern incremental-batch idiom), plus a watermarked windowed
-count on ``warc_ts`` for late-page monitoring.
+stop — the modern incremental-batch idiom), next to the event-stream
+operators (windowed counts, sessionization, interval join).  The
+extraction and sessionization drains read at most
+``MAX_FILES_PER_TRIGGER`` source files per micro-batch.
 
 The reference's semantics require no stateful operators; the engine adds
-one anyway for the training-data ingest path: ``dedup_first_seen``
-(applyInPandasWithState) drops duplicate urls across micro-batches and
-restarts. Resumability remains checkpoint-based (the stream checkpoint
-plays the role Iceberg snapshots play in the batch path).
+them anyway: ``dedup_first_seen`` (applyInPandasWithState) drops
+duplicate urls across micro-batches and restarts on the training-data
+ingest path, and ``stream_sessionize`` keeps each user's open session in
+the state store.  Resumability is checkpoint-based (the stream
+checkpoint plays the role Iceberg snapshots play in the batch path), so
+the resumable drains (``stream_dedup_extract``, ``stream_sessionize``)
+write a durable parquet sink; a memory sink cannot recover from a
+checkpoint.
 """
 
 from __future__ import annotations
@@ -23,6 +29,7 @@ from ..schemas import WEB_PAGES
 
 WATERMARK = "1 hour"  # event-time lateness the windowed counts tolerate
 JOIN_LEAD = "10 minutes"  # stream_interval_join's follow-up window
+MAX_FILES_PER_TRIGGER = 4  # source files per micro-batch
 
 
 def stream_extract(
@@ -42,7 +49,7 @@ def stream_extract(
     """
     pages = (
         spark.readStream.schema(WEB_PAGES)
-        .option("maxFilesPerTrigger", 4)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     extracted = extract_pages(pages)
@@ -107,7 +114,7 @@ def stream_dedup_extract(
     only, then the extraction stage, durable parquet sink (resumable)."""
     pages = (
         spark.readStream.schema(WEB_PAGES)
-        .option("maxFilesPerTrigger", 4)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     q = (
@@ -119,16 +126,6 @@ def stream_dedup_extract(
         .start()
     )
     q.awaitTermination()
-
-
-def late_page_counts(pages: DataFrame) -> DataFrame:
-    """Watermarked per-hour page counts (late-data monitoring shape)."""
-    return (
-        pages.withWatermark("warc_ts", WATERMARK)
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
-        .agg(F.count("*").alias("n_pages"))
-        .select("w.start", "w.end", "lang", "n_pages")
-    )
 
 
 EVENTS_SCHEMA = (
@@ -258,27 +255,16 @@ def sessionize_stream(events):
     )
 
 
-def stream_sessionize(
-    spark,
-    src_dir: str,
-    checkpoint_dir: str,
-    table: str,
-    max_files_per_trigger: int | None = None,
-    sink_dir: str | None = None,
-):
-    """readStream → stateful sessionization → sink, availableNow drain.
-    ``max_files_per_trigger`` forces multi-micro-batch processing (used by
-    the cross-batch/restart tests; files are consumed oldest-mtime first,
-    so chronologically staged chunks preserve per-user event order).
-    ``sink_dir`` set → durable parquet sink: the CHECKPOINT-RESUMABLE path
-    (a memory sink cannot recover from a checkpoint)."""
-    from pyspark.sql import functions as F
-
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+def stream_sessionize(spark, src_dir: str, checkpoint_dir: str, sink_dir: str):
+    """readStream → stateful sessionization → durable parquet sink at
+    ``sink_dir``, availableNow drain: the CHECKPOINT-RESUMABLE path.
+    More than ``MAX_FILES_PER_TRIGGER`` source files span several
+    micro-batches; files are consumed oldest-mtime first, so
+    chronologically staged chunks preserve per-user event order."""
     events = (
-        reader.parquet(src_dir)
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+        .parquet(src_dir)
         .select(
             "user_id",
             F.expr(
@@ -287,16 +273,15 @@ def stream_sessionize(
             ).alias("t_us"),
         )
     )
-    writer = (
+    q = (
         sessionize_stream(events)
         .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
+        .start()
     )
-    if sink_dir is not None:
-        q = writer.format("parquet").option("path", sink_dir).start()
-    else:
-        q = writer.format("memory").queryName(table).start()
     q.awaitTermination()
 
 

@@ -35,14 +35,14 @@ def shingle_frame_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_jaccard_from_shingles(
-    sh: DataFrame, threshold_x1000: int = 300, max_df: int = D.MAX_GROUP
+    sh: DataFrame, threshold_x1000: int = 300
 ) -> DataFrame:
     """Exact word-shingle Jaccard over all pairs sharing ≥1 shingle.
 
     Join on shingle (never crossJoin): candidate pairs are generated only
     where an inverted-index bucket overlaps — the same sparsity argument
     that makes this viable at scale, here with exact verification.
-    Shingles with document frequency > max_df are dropped from the
+    Shingles with document frequency > MAX_GROUP are dropped from the
     intersection (observed drop count: drop_stats('ngram_jaccard')) —
     the stop-shingle fan-out cap; sizes/denominators stay exact.
     Jaccard emitted ×1000 integer-floored (engine-exact)."""
@@ -56,7 +56,6 @@ def ngram_jaccard_from_shingles(
                 F.sort_array(F.collect_list("doc_id")).alias("ids")
             ),
             "ngram_jaccard",
-            max_df,
         )
         .select(F.explode(D._pair_combos("ids")).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))

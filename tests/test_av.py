@@ -81,15 +81,13 @@ def test_wav_rejections():
         decode_wav(bytes(d))
 
 
-def test_decode_stub_routes_riff():
-    from dpo_ocr_spark.ops.multimodal import decode_stub
-
-    rate, ch, sw, out = decode_stub(synth_wav(7))
+def test_synth_payloads_decode():
+    rate, ch, sw, out = decode_wav(synth_wav(7))
     assert rate == 8000
-    us, n, w, h, frames = decode_stub(synth_video(7))
+    us, n, w, h, frames = decode_avi(synth_video(7))
     assert n == 7 % 6 + 4 and len(frames) == n
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"\x00\x01\x02\x03" + b"junk" * 8)
+    with pytest.raises(ValueError):
+        decode_wav(b"\x00\x01\x02\x03" + b"junk" * 8)
 
 
 # --- AVI --------------------------------------------------------------------
@@ -97,7 +95,7 @@ def test_decode_stub_routes_riff():
 
 def test_avi_roundtrip():
     frames = [b"\xff\xd8" + bytes([i]) * (13 + i) for i in range(5)]
-    avi = encode_avi_mjpeg(frames, 96, 64, fps=10)
+    avi = encode_avi_mjpeg(frames, 96, 64)
     us, n, w, h, out = decode_avi(avi)
     assert (us, n, w, h) == (100_000, 5, 96, 64)
     assert out == frames  # byte-identical payloads incl. odd sizes

@@ -245,20 +245,6 @@ def test_dispatch_and_unknown():
         decode_image(b"RIFF....WAVE")
 
 
-def test_decode_stub_images_real_audio_real_compressed_not():
-    from dpo_ocr_spark.ops.multimodal import decode_stub
-
-    img = RNG.integers(0, 256, (6, 6, 3), dtype=np.uint8)
-    assert decode_stub(encode_png(img)).shape == (6, 6, 3)
-    # WAV decodes for REAL now (ops/av.py) — a malformed RIFF is a loud
-    # ValueError, not a stub reject...
-    with pytest.raises(ValueError):
-        decode_stub(b"RIFF....WAVE")
-    # ...and only genuinely-compressed formats remain NotImplemented
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"ID3\x04" + b"\x00" * 16)
-
-
 # --- property-based (hypothesis) -------------------------------------------
 
 from hypothesis import given, settings, strategies as st

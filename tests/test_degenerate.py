@@ -1,13 +1,17 @@
 """Degenerate-input sweep: empty tables and empty-text documents through
-the round-2 ops — none may raise (empty or trivial frames are fine).
+the round-2 ops — none may raise (empty or trivial frames are fine), and
+an empty table yields the same schema as real data.
 
-The review pass caught one empty-table crash (embedding_neardup_lsh);
-this pins the property for the whole new-op surface.
+The review pass caught one empty-table crash (embedding_neardup_lsh) and
+one empty-table schema drift (lsh_topk lost its ``rank`` column); this
+pins both properties for the whole new-op surface.
 """
 
 from __future__ import annotations
 
 import pytest
+
+SD = "/root/testdata/sf0.001"
 
 
 def _write_empty_tables(spark, tmp_path):
@@ -68,8 +72,10 @@ def _ops():
 def test_new_ops_survive_empty_tables(spark, tmp_path):
     _write_empty_tables(spark, tmp_path)
     for fn in _ops():
-        rows = fn(spark, str(tmp_path)).collect()
+        empty = fn(spark, str(tmp_path))
+        rows = empty.collect()
         assert rows == [], (fn.__name__, rows)
+        assert empty.schema == fn(spark, SD).schema, fn.__name__
 
 
 def test_new_ops_survive_empty_text_doc(spark, tmp_path):

@@ -480,22 +480,6 @@ def test_autocrop_gutter_and_empty():
     assert find_gutter(blank, (-1, -1, -1, -1)) == -1
 
 
-def test_deskew_recovers_known_rotation():
-    """Rotate a striped page by a known small angle; the projection-
-    profile search must recover (the negative of) it."""
-    import numpy as np
-
-    from dpo_ocr_spark.ops.pixels import estimate_skew, rotate_nn
-
-    img = np.full((120, 160), 255, dtype=np.uint8)
-    for y in range(20, 100, 12):  # horizontal text lines
-        img[y : y + 4, 20:140] = 0
-    assert estimate_skew(img.astype(np.float64)) == 0.0
-    skewed = rotate_nn(img, 2.0)
-    # deskew angle cancels the applied rotation (within the 0.5deg grid)
-    assert abs(estimate_skew(skewed.astype(np.float64)) + 2.0) <= 0.5
-
-
 def test_cluster_representatives_pick_quality_not_min_id(spark, tmp_path):
     """Within a near-dup cluster the HIGHEST-quality doc wins even when it
     has the larger doc_id (the production selection policy)."""

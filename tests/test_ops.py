@@ -87,18 +87,12 @@ def test_minhash_lsh_supersets_high_jaccard(spark):
 
 
 def test_media_header_roundtrip(spark):
-    from dpo_ocr_spark.ops.multimodal import (
-        decode_stub,
-        extract_media_meta,
-        synth_media,
-    )
+    from dpo_ocr_spark.ops.multimodal import extract_media_meta, synth_media
 
     media = synth_media(spark, SD)
     meta = extract_media_meta(media).collect()
     assert all(m.valid for m in meta)
     assert all(16 <= m.width < 656 and 16 <= m.height < 496 for m in meta)
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"MM01whatever")
 
 
 def test_quality_keep_flag(spark):
@@ -190,22 +184,25 @@ def test_hot_group_caps_bound_fanout(spark):
     out m²/2 pair structs inside one row (the 100 TB OOM mode)."""
     from dpo_ocr_spark.ops import dedup as D
 
-    n = 50
-    docs = spark.createDataFrame(
-        [(i, f"click here to see unique page {i}") for i in range(n)],
-        "doc_id long, text string",
-    )
-    sh = D.sized_shingles_of(docs).select("doc_id", "shingle").cache()
+    def shingles(n):
+        docs = spark.createDataFrame(
+            [(i, f"click here to see unique page {i}") for i in range(n)],
+            "doc_id long, text string",
+        )
+        return D.sized_shingles_of(docs).select("doc_id", "shingle")
 
-    # 4 shared shingles have df=50 > 10 → dropped; the unique 5th can't pair
-    pairs = R.ngram_jaccard_from_shingles(sh, threshold_x1000=0, max_df=10)
+    # 4 shared shingles have df = MAX_GROUP + 1 → dropped; the unique 5th
+    # can't pair
+    n = D.MAX_GROUP + 1
+    pairs = R.ngram_jaccard_from_shingles(shingles(n), threshold_x1000=0)
     assert pairs.count() == 0
     stats = D.drop_stats("ngram_jaccard")
     assert stats["dropped_groups"] == 4
     assert stats["dropped_ids"] == 4 * n
 
-    # control: default cap leaves semantics exact (4/6 jaccard → all pairs)
-    pairs = R.ngram_jaccard_from_shingles(sh, threshold_x1000=300)
+    # control: under the cap semantics stay exact (4/6 jaccard → all pairs)
+    n = 50
+    pairs = R.ngram_jaccard_from_shingles(shingles(n), threshold_x1000=300)
     assert pairs.count() == n * (n - 1) // 2
     assert D.drop_stats("ngram_jaccard") == {
         "dropped_groups": 0,
@@ -216,22 +213,29 @@ def test_hot_group_caps_bound_fanout(spark):
 def test_hot_lsh_bucket_cap(spark):
     """Identical docs collapse into one LSH bucket per band; the cap drops
     those buckets explicitly rather than materializing m²/2 pairs."""
+    from pyspark.sql import functions as F
+
     from dpo_ocr_spark.ops import dedup as D
 
-    n = 40
-    docs = spark.createDataFrame(
-        [(i, "the very same text for every single doc") for i in range(n)],
-        "doc_id long, text string",
+    # a synthetic signature frame: MAX_GROUP + 1 docs, one signature
+    n = D.MAX_GROUP + 1
+    sig = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        *(F.lit(7).cast("long").alias(f"mh_{j}") for j in range(D.MINHASH_K)),
     )
-    sig = R.minhash_of(D.sized_shingles_of(docs).select("doc_id", "shingle"))
-    capped = D.lsh_pairs_from_signatures(sig, max_bucket=10)
+    capped = D.lsh_pairs_from_signatures(sig)
     assert capped.count() == 0
     stats = D.drop_stats("minhash_lsh")
     assert stats["dropped_groups"] == D.LSH_BANDS
     assert stats["dropped_ids"] == D.LSH_BANDS * n
 
-    uncapped = D.lsh_pairs_from_signatures(sig)  # default cap ≥ n
-    assert uncapped.count() == n * (n - 1) // 2
+    n = 40  # under the cap: every pair of identical docs surfaces
+    docs = spark.createDataFrame(
+        [(i, "the very same text for every single doc") for i in range(n)],
+        "doc_id long, text string",
+    )
+    sig = R.minhash_of(D.sized_shingles_of(docs).select("doc_id", "shingle"))
+    assert D.lsh_pairs_from_signatures(sig).count() == n * (n - 1) // 2
 
 
 def test_embedding_neardup_lsh_vs_allpairs(spark):
@@ -319,23 +323,25 @@ def test_dedup_clusters_topologies(spark):
                    6: 6, 7: 6, 8: 6}
 
 
-def test_dedup_clusters_stop_rule(spark):
+def test_dedup_clusters_stop_rule(spark, monkeypatch):
     """A 16-node path needs 4 label-changing rounds plus one that
-    confirms the fixpoint: max_iter=4 raises instead of returning
+    confirms the fixpoint: a 4-round limit raises instead of returning
     unconverged labels, the default converges.  A graph with no edges
     is converged from the start, so one round suffices."""
-    from dpo_ocr_spark.ops.dedup import clusters_from_edges
+    from dpo_ocr_spark.ops import dedup as D
 
     docs = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(15)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
-        clusters_from_edges(docs, path, max_iter=4)
-    got = {r.doc_id: r.cluster_id for r in clusters_from_edges(docs, path).collect()}
+    got = {r.doc_id: r.cluster_id for r in D.clusters_from_edges(docs, path).collect()}
     assert got == {i: 0 for i in range(16)}
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 4)
+    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
+        D.clusters_from_edges(docs, path)
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 1)
     no_edges = path.limit(0)
-    got = clusters_from_edges(docs, no_edges, max_iter=1).collect()
+    got = D.clusters_from_edges(docs, no_edges).collect()
     assert {r.doc_id: r.cluster_id for r in got} == {i: i for i in range(16)}
 
 

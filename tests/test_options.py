@@ -1,11 +1,17 @@
-"""Every defaulted parameter in the package has a caller that passes it.
+"""Every option and every function in the package has a production caller.
 
-A parameter that no call site ever sets is a setting tested only at its
-default: the function should use the constant instead.  This walks
-`dpo_ocr_spark/` with `ast`, collects each function's defaulted
-parameters, and looks for a call that passes each one, by keyword or by
-position, anywhere in the package, the jobs, the tools, the benchmark
-drivers, the driver entry point or the tests.
+A parameter that no production call site ever sets is a setting tested
+only at its default: the function should use the constant instead.  A
+function that only tests reach is code kept alive for its own tests.
+Tests are not callers here: a value a test needs at a boundary comes
+from its input, or from a module constant it monkeypatches.
+
+The parameter check walks `dpo_ocr_spark/` with `ast`, collects each
+function's defaulted parameters, and looks for a call that passes each
+one, by keyword or by position, anywhere in the package, the jobs, the
+tools, the benchmark drivers or the driver entry point.  The function
+check looks, in the same files, for a reference to each undecorated
+module-level `def`/`class` outside its own body.
 
 Calls are matched by the called name alone (`f(...)` or `obj.f(...)`), so
 two functions that share a name share their callers; that can only hide
@@ -21,7 +27,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "dpo_ocr_spark"
-CALLER_TREES = ("dpo_ocr_spark", "jobs", "tools", "perfbench", "tests")
+CALLER_TREES = ("dpo_ocr_spark", "jobs", "tools", "perfbench")
 CALLER_GLOBS = ("bench*.py", "__spark_entry__.py")
 
 # Deployment settings: a cluster sets them, no code path in the repo does.
@@ -29,6 +35,18 @@ ALLOWED = {
     ("sources/iceberg.py", "iceberg_session_conf", "catalog"),
     ("sources/iceberg.py", "iceberg_session_conf", "warehouse"),
     ("sources/iceberg.py", "iceberg_session_conf", "catalog_type"),
+    # Makes decode_jpeg's restart-marker input (DRI/RSTn); the codec
+    # surface is out of scope for this check.
+    ("ops/codecs.py", "encode_jpeg", "restart_interval"),
+}
+
+# Reference sinks S8-S10 (COVERAGE.md): the registered queries check their
+# content through the same expressions (csv_cells, json_response,
+# extract_text), and the sinks are the deployment's write path.
+UNCALLED = {
+    ("export.py", "tokens_csv"): "S8 CSV sink, content gated by csv_cells",
+    ("export.py", "json_response_sink"): "S9 sink, gated by json_response",
+    ("export.py", "fulltext_sink"): "S10 sink, gated by extract_text",
 }
 
 
@@ -94,4 +112,56 @@ def test_every_defaulted_parameter_has_a_caller():
     assert not missing, (
         f"{len(missing)} defaulted parameters that no call site passes "
         "(use the constant they default to):\n" + "\n".join(missing)
+    )
+
+
+def _referenced_names() -> set[str]:
+    """Every `Name` id and `Attribute` attr in the caller files, except
+    the ones inside the body of the package-level def/class they name
+    (recursion is not a caller).  Imports, re-exports and docstrings are
+    not references."""
+    refs: set[str] = set()
+    for path in _caller_files():
+        tree = ast.parse(path.read_text(), str(path))
+        own = {
+            id(m)
+            for top in tree.body
+            if path.is_relative_to(PACKAGE)
+            and isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            for m in ast.walk(top)
+            if (isinstance(m, ast.Name) and m.id == top.name)
+            or (isinstance(m, ast.Attribute) and m.attr == top.name)
+        }
+        for m in ast.walk(tree):
+            if id(m) in own:
+                continue
+            if isinstance(m, ast.Name):
+                refs.add(m.id)
+            elif isinstance(m, ast.Attribute):
+                refs.add(m.attr)
+    return refs
+
+
+def _uncalled() -> list[str]:
+    refs = _referenced_names()
+    missing = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for top in ast.parse(path.read_text(), str(path)).body:
+            if (
+                isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not top.decorator_list
+                and top.name not in refs
+                and (rel, top.name) not in UNCALLED
+            ):
+                missing.append(f"{rel}:{top.lineno} {top.name}")
+    return missing
+
+
+def test_every_function_has_a_caller():
+    missing = _uncalled()
+    assert not missing, (
+        f"{len(missing)} package functions that only tests reach "
+        "(delete them with the tests that check only them):\n"
+        + "\n".join(missing)
     )

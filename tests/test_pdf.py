@@ -44,7 +44,18 @@ def test_dispatch_kind_pdf():
     assert text == expected_text(TEXTS[0]) and len(tokens) == 10
     # garbage that claims to be PDF quarantines instead of aborting
     kind, text, *_ = _extract_one(b"%PDF-1.4\nstream\n\x00\xff", None)
-    assert kind in ("pdf", "error")
+    assert kind == "error"
+
+
+def test_pdf_without_a_complete_stream_quarantines():
+    """A truncated stream (no endstream) and a header with no stream at
+    all are unreadable, not valid pages with no text."""
+    for payload in (
+        b"%PDF-1.4\n1 0 obj << /Length 99 >> stream\nxx",
+        b"%PDF-\xff\xfe\x00",
+    ):
+        kind, text, tokens, nb = _extract_one(payload, None)
+        assert (kind, text, tokens, nb) == ("error", None, [], len(payload))
 
 
 def test_string_escapes():

@@ -212,17 +212,3 @@ def test_expand_locality_broadcasts_hierarchy(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
-
-def test_bloom_verify_join_is_broadcast(spark):
-    """decontaminate_bloom's verify join must broadcast the (bounded)
-    eval gram set against the prescreen SURVIVORS — if it ever becomes a
-    shuffled join of the full corpus gram stream, the prescreen bought
-    nothing."""
-    from dpo_ocr_spark.ops.sketches import decontaminate_bloom
-
-    df = decontaminate_bloom(spark, SD)
-    plan = _plan(df).split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in plan, plan
-    assert "MapInPandas" in plan, plan  # the vectorized bloom probe
-    # the hits aggregation + final doc join: bounded Exchange count
-    assert plan.count("Exchange hashpartitioning") <= 4, plan

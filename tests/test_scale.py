@@ -40,7 +40,7 @@ def test_lineage_counts_cover_input(spark):
     from dpo_ocr_spark.pipeline import run_extraction
     from dpo_ocr_spark.scale import with_lineage
 
-    extracted = run_extraction(spark, SD, salt_partitions=8)
+    extracted = run_extraction(spark, SD)
     _, lineage = with_lineage(extracted)
     rows = lineage.collect()
     assert sum(r.input_count for r in rows) == 500

@@ -23,16 +23,6 @@ def test_stream_equals_batch(tmp_path, spark):
     assert got == want  # byte-identical text through the streaming path
 
 
-def test_late_page_counts_shape(spark):
-    from dpo_ocr_spark.corpus import build_web_pages
-    from dpo_ocr_spark.streaming.stream import late_page_counts
-
-    # watermark API works on batch frames too (no-op) — shape check
-    out = late_page_counts(build_web_pages(spark, SD, partitions=4)).collect()
-    assert sum(r.n_pages for r in out) == 500
-    assert all(r.start is not None and r.lang for r in out)
-
-
 def test_stateful_dedup_across_restarts(tmp_path, spark):
     """applyInPandasWithState first-seen dedup: each url emitted exactly
     once across micro-batches AND across checkpoint restarts."""
@@ -71,7 +61,10 @@ def test_streaming_sessionize_cross_batch_and_restart(spark, tmp_path):
 
     from dpo_ocr_spark.ops.events import GAP_S
 
-    from dpo_ocr_spark.streaming.stream import stream_sessionize
+    from dpo_ocr_spark.streaming.stream import (
+        MAX_FILES_PER_TRIGGER,
+        stream_sessionize,
+    )
 
     E0 = dt.datetime(2024, 1, 1)
     ts = lambda s: E0 + dt.timedelta(seconds=s)  # noqa: E731
@@ -92,29 +85,28 @@ def test_streaming_sessionize_cross_batch_and_restart(spark, tmp_path):
         shutil.copy(part, str(tmp_path / "src" / f"{name}.parquet"))
         time.sleep(1.1)  # distinct mtimes -> deterministic batch order
 
-    # chunk order is chronological; user 1's first session SPANS chunks
-    # a and b (gap < GAP_S across the file boundary)
-    write_chunk("a", [(ts(0), 1), (ts(600), 1), (ts(0), 2)])
+    # chunk order is chronological; the first MAX_FILES_PER_TRIGGER
+    # chunks fill micro-batch 1, so user 1's first session SPANS the
+    # micro-batch boundary (gap < GAP_S across it)
+    first = [(ts(0), 2)] + [
+        (ts(300 * i), 1) for i in range(MAX_FILES_PER_TRIGGER - 1)
+    ]
+    for i, row in enumerate(first):
+        write_chunk(f"a{i}", [row])
     write_chunk("b", [(ts(1200), 1), (ts(1200 + GAP_S + 1), 1)])
     ck = str(tmp_path / "ckpt")
     sink = str(tmp_path / "sink")
-    stream_sessionize(
-        spark, str(tmp_path / "src"), ck, "",
-        max_files_per_trigger=1, sink_dir=sink,
-    )
+    stream_sessionize(spark, str(tmp_path / "src"), ck, sink)
     run1 = {tuple(r) for r in spark.read.parquet(sink).collect()}
-    # user 1: session {0,600,1200} closed by the post-gap event; user 2's
-    # only session and user 1's trailing session remain open
+    # user 1: session {0,300,...,1200} closed by the post-gap event;
+    # user 2's only session and user 1's trailing session remain open
     e_us = int((E0 - dt.datetime(1970, 1, 1)).total_seconds()) * 1_000_000
-    assert run1 == {(1, e_us, e_us + 1_200_000_000, 3)}
+    assert run1 == {(1, e_us, e_us + 1_200_000_000, MAX_FILES_PER_TRIGGER)}
 
     # restart with a NEW chunk: closes user 1's trailing session and
     # user 2's session via later events
     write_chunk("c", [(ts(1200 + 3 * GAP_S), 1), (ts(3 * GAP_S), 2)])
-    stream_sessionize(
-        spark, str(tmp_path / "src"), ck, "",
-        max_files_per_trigger=1, sink_dir=sink,
-    )
+    stream_sessionize(spark, str(tmp_path / "src"), ck, sink)
     run2 = {
         tuple(r) for r in spark.read.parquet(sink).collect()
     } - run1  # resumed run appends only the newly closed sessions
