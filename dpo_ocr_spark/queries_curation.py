@@ -28,8 +28,9 @@ def _q_streaming_window_counts(spark, sf_dir: str):
     spark.read.parquet(f"{sf_dir}/events.parquet").write.mode(
         "overwrite"
     ).parquet(tmp + "/src")
-    stream_window_counts(spark, tmp + "/src", tmp + "/ckpt", "stream_win_q")
-    return spark.table("stream_win_q")
+    return stream_window_counts(
+        spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink"
+    )
 
 
 STREAM_WINDOW_ORACLE = """
@@ -78,8 +79,9 @@ def _q_streaming_interval_join(spark, sf_dir: str):
     spark.read.parquet(f"{sf_dir}/events.parquet").coalesce(1).write.mode(
         "overwrite"
     ).parquet(tmp + "/src")
-    stream_interval_join(spark, tmp + "/src", tmp + "/ckpt", "stream_ij_q")
-    return spark.table("stream_ij_q")
+    return stream_interval_join(
+        spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink"
+    )
 
 
 STREAM_INTERVAL_JOIN_ORACLE = """
@@ -224,14 +226,15 @@ def _q_streaming_sessionize(spark, sf_dir: str):
     durable sink.  The source is staged as ONE file so the drain is one
     micro-batch: the stream needs non-decreasing event time per user
     across micro-batches, which unordered part files would not give."""
-    from .streaming.stream import SESSION_OUT, stream_sessionize
+    from .streaming.stream import stream_sessionize
 
     tmp = _scratch_dir("stream_sess_")
     spark.read.parquet(f"{sf_dir}/events.parquet").coalesce(1).write.mode(
         "overwrite"
     ).parquet(tmp + "/src")
-    stream_sessionize(spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink")
-    return spark.read.schema(SESSION_OUT).parquet(tmp + "/sink")
+    return stream_sessionize(
+        spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink"
+    )
 
 
 def _streaming_sessionize_oracle() -> str:

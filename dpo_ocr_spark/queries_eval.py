@@ -607,8 +607,9 @@ def _q_streaming_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_web_pages(spark, sf_dir, partitions=8).write.mode(
         "overwrite"
     ).parquet(tmp + "/src")
-    stream_extract(spark, tmp + "/src", tmp + "/ckpt", "stream_extracted_q")
-    return spark.table("stream_extracted_q").select("url", "text")
+    return stream_extract(
+        spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink"
+    ).select("url", "text")
 
 
 def _streaming_oracle(select: str) -> str:
@@ -644,9 +645,10 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = build_web_pages(spark, sf_dir, partitions=8)
     dup = pages.union(pages)  # every url twice → state must halve it
     dup.write.mode("overwrite").parquet(tmp + "/src")
-    stream_dedup_extract(spark, tmp + "/src", tmp + "/ckpt", tmp + "/out")
     return (
-        spark.read.parquet(tmp + "/out")
+        stream_dedup_extract(
+            spark, tmp + "/src", tmp + "/ckpt", tmp + "/sink"
+        )
         .select("url", "text")
         .groupBy("url")
         .agg(F.count("*").alias("n"), F.max("text").alias("text"))

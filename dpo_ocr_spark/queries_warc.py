@@ -20,30 +20,24 @@ from .session import scratch_dir
 from .sources import warc as W
 
 # ---------------------------------------------------------------------------
-# Session-scoped archive memo (same write-once shape as stagecache: the
-# gate's four WARC queries share one written archive; bench disables the
-# memo so timings include the write)
+# The gate's four WARC queries share one written archive through the stage
+# memo (bench disables the memo, so its timings include the write)
 # ---------------------------------------------------------------------------
 
-_DIRS: dict[tuple[str, str], str] = {}
 
-
-def _archive(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+def _archive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The WARC_INDEX of the archive written from ``sf_dir``'s pages; its
+    ``warc_file`` column holds each archive's full path."""
     from . import stagecache
-
-    tok = stagecache._session_token(spark) if stagecache.enabled() else None
-    key = (tok, sf_dir)
-    if tok is None or key not in _DIRS:
-        _DIRS[key] = scratch_dir("warc_gate_")
-    out = _DIRS[key]
 
     def build() -> DataFrame:
         pages = build_web_pages(spark, sf_dir, partitions=8)
+        out = scratch_dir("warc_gate_")
         return W.write_warc(pages, out, exercise_http_codings=True)
 
-    index = stagecache.shared(spark, f"warcidx:{sf_dir}:{out}", build)
-    index.count()  # land the archives before any reader lists the dir
-    return out, index
+    index = stagecache.shared(spark, f"warcidx:{sf_dir}", build)
+    index.count()  # land the archives before any reader lists them
+    return index
 
 
 # ---------------------------------------------------------------------------
@@ -65,8 +59,9 @@ def _q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 matches only if every payload byte survived the container."""
     from .extract import extract_pages
 
-    out, _ = _archive(spark, sf_dir)
-    back = W.read_warc(spark, W.list_warc_paths(spark, out))
+    index = _archive(spark, sf_dir)
+    paths = sorted(r[0] for r in index.select("warc_file").distinct().collect())
+    back = W.read_warc(spark, paths)
     extracted = extract_pages(W.warc_pages(back))
     return extracted.select(
         "url",
@@ -95,7 +90,7 @@ def _q_warc_fetch_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct record."""
     from .extract import extract_pages
 
-    _, index = _archive(spark, sf_dir)
+    index = _archive(spark, sf_dir)
     sub = index.filter(F.substring("url", -6, 6).cast("int") % 7 == 0)
     got = W.fetch_records(spark, sub)
     extracted = extract_pages(W.warc_pages(got))
@@ -128,7 +123,7 @@ def _q_cdx_urlkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDX view of the written archive: SURT urlkey (JVM-side regex/
     array expressions, no Python) + yyyyMMddHHmmss timestamp + mime sniff
     recorded at write time."""
-    _, index = _archive(spark, sf_dir)
+    index = _archive(spark, sf_dir)
     return W.cdx_frame(index).select(
         "urlkey", "cdx_ts", "url", "mime", "http_status"
     )

@@ -97,7 +97,7 @@ def resume_bucket(num_buckets: int):
     return F.pmod(F.hash(F.xxhash64(F.col("url"))), F.lit(num_buckets)).cast("int")
 
 
-def with_lineage(extracted: DataFrame, num_buckets: int | None = None) -> tuple[DataFrame, DataFrame]:
+def with_lineage(extracted: DataFrame, num_buckets: int) -> tuple[DataFrame, DataFrame]:
     """Attach partition ids and derive the lineage frame (LINEAGE schema).
 
     Returns (results_with_partition_id, lineage).  Lineage aggregates are
@@ -107,32 +107,29 @@ def with_lineage(extracted: DataFrame, num_buckets: int | None = None) -> tuple[
     between the commits leaves results with no lineage, and a
     lineage-based resume then re-runs those partitions (ROADMAP
     direction 2 derives lineage from the committed results instead).
-    ``num_buckets`` (defaults to the frame's partition count) is recorded
-    on every lineage row so a resume run can recompute each url's
-    partition assignment without the data (see ``resume_filter``).
+    ``num_buckets`` (the salt-partition count) is recorded on every
+    lineage row so a resume run can recompute each url's partition
+    assignment without the data (see ``resume_filter``).
     """
-    n = num_buckets if num_buckets is not None else extracted.rdd.getNumPartitions()
     tagged = extracted.withColumn("partition_id", F.spark_partition_id())
     lineage = tagged.groupBy("partition_id").agg(
         F.count("*").alias("input_count"),
         F.sum("n_bytes").alias("input_bytes"),
         F.max("warc_ts").alias("checkpoint_watermark"),
-    ).withColumn("num_buckets", F.lit(n))
+    ).withColumn("num_buckets", F.lit(num_buckets))
     return tagged, lineage
 
 
 def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
     """Re-run predicate: keep only pages NOT covered by completed lineage.
 
-    Three sound forms, all content-based (the reference's analog is
+    Two sound forms, both content-based (the reference's analog is
     delete-by-project + rerun, block_identification.py:63; ours is
     additive and idempotent):
 
     * capture-bearing frame (url + warc_ts, e.g. the results table
       itself): null-safe anti-join on (url, warc_ts) — a capture is
       (url, warc_ts), so an unprocessed re-crawl of a done url still runs.
-    * url-only frame: anti-join on url — every capture of a listed url
-      counts as done.
     * LINEAGE-schema frame (partition_id + num_buckets): recompute each
       page's partition id with the same pure function salted_repartition
       used and anti-join on completed partition ids.  A lineage row
@@ -143,10 +140,11 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
       lineage did not is re-run, and its result rows are appended again
       (ROADMAP direction 2).
 
-    Empty lineage ⇒ everything pending.  A frame with neither column set
-    raises — a silent time/watermark filter here would drop unprocessed
-    rows of failed partitions (every hash partition spans the full
-    timestamp range).
+    Empty lineage ⇒ everything pending.  Any other frame raises: a
+    url-only frame would mark every capture of a listed url done, so an
+    unprocessed re-crawl would be skipped, and a silent time/watermark
+    filter would drop unprocessed rows of failed partitions (every hash
+    partition spans the full timestamp range).
     """
     cols = set(lineage_done.columns)
     if {"url", "warc_ts"} <= cols:
@@ -159,8 +157,6 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
             & F.col("warc_ts").eqNullSafe(F.col("__done_ts")),
             "left_anti",
         )
-    if "url" in cols:
-        return pages.join(lineage_done.select("url"), "url", "left_anti")
     if {"partition_id", "num_buckets"} <= cols:
         # num_buckets is constant per run; lineage is one row per partition
         # (thousands at scale) so this collect is metadata-sized.
@@ -189,9 +185,9 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
             .drop("__bucket")
         )
     raise ValueError(
-        "resume_filter needs a 'url' column or LINEAGE-schema columns "
-        "(partition_id, num_buckets); refusing to guess — a watermark "
-        "filter would silently skip failed partitions' pending rows"
+        "resume_filter needs captures (url, warc_ts) or LINEAGE-schema "
+        "columns (partition_id, num_buckets); refusing to guess — a url "
+        "or watermark filter would silently skip pending rows"
     )
 
 

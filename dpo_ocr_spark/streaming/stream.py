@@ -13,11 +13,13 @@ The reference's semantics require no stateful operators; the engine adds
 them anyway: ``dedup_first_seen`` (applyInPandasWithState) drops
 duplicate urls across micro-batches and restarts on the training-data
 ingest path, and ``stream_sessionize`` keeps each user's open session in
-the state store.  Resumability is checkpoint-based (the stream
-checkpoint plays the role Iceberg snapshots play in the batch path), so
-the resumable drains (``stream_dedup_extract``, ``stream_sessionize``)
-write a durable parquet sink; a memory sink cannot recover from a
-checkpoint.
+the state store.
+
+Every drain ends in ``_drain``: one append-mode parquet sink whose
+checkpoint makes it resumable (the stream checkpoint plays the role
+Iceberg snapshots play in the batch path) — re-running a drain with the
+same checkpoint and sink processes only new source files.  Each drain
+returns the sink's committed rows.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..extract import extract_pages
+from ..ops.events import _epoch_us
 from ..schemas import WEB_PAGES
 
 WATERMARK = "1 hour"  # event-time lateness the windowed counts tolerate
@@ -32,35 +35,38 @@ JOIN_LEAD = "10 minutes"  # stream_interval_join's follow-up window
 MAX_FILES_PER_TRIGGER = 4  # source files per micro-batch
 
 
-def stream_extract(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_table: str = "stream_extracted",
-) -> None:
-    """Drain ``source_dir`` (parquet, WEB_PAGES schema) through the
-    extraction stage into the memory table ``sink_table``, exactly-once
-    per file via the checkpoint; returns after completion (AvailableNow).
+def _drain(frame: DataFrame, checkpoint_dir: str, sink_dir: str) -> DataFrame:
+    """Run ``frame`` availableNow into an append-mode parquet sink at
+    ``sink_dir`` (checkpoint at ``checkpoint_dir``), wait for the run to
+    end, and return the sink's committed rows."""
+    (
+        frame.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return frame.sparkSession.read.schema(frame.schema).parquet(sink_dir)
 
-    A memory sink CANNOT recover from a checkpoint, so this is for ad-hoc
-    inspection with a fresh checkpoint; ``stream_dedup_extract`` is the
-    resumable drain (durable parquet sink: re-running with the same
-    checkpoint processes only new files).
-    """
-    pages = (
+
+def _pages(spark: SparkSession, src_dir: str) -> DataFrame:
+    """WEB_PAGES parquet source, ``MAX_FILES_PER_TRIGGER`` files per
+    micro-batch."""
+    return (
         spark.readStream.schema(WEB_PAGES)
         .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
-        .parquet(source_dir)
+        .parquet(src_dir)
     )
-    extracted = extract_pages(pages)
-    q = (
-        extracted.writeStream.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("memory")
-        .queryName(sink_table)
-        .start()
-    )
-    q.awaitTermination()
+
+
+def stream_extract(
+    spark: SparkSession, src_dir: str, checkpoint_dir: str, sink_dir: str
+) -> DataFrame:
+    """Drain ``src_dir`` (parquet, WEB_PAGES schema) through the
+    extraction stage, exactly-once per file via the checkpoint."""
+    pages = _pages(spark, src_dir)
+    return _drain(extract_pages(pages), checkpoint_dir, sink_dir)
 
 
 def dedup_first_seen(pages: DataFrame) -> DataFrame:
@@ -105,27 +111,12 @@ def dedup_first_seen(pages: DataFrame) -> DataFrame:
 
 
 def stream_dedup_extract(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink_dir: str,
-) -> None:
+    spark: SparkSession, src_dir: str, checkpoint_dir: str, sink_dir: str
+) -> DataFrame:
     """Ingest-dedup variant of ``stream_extract``: first-seen-url pages
-    only, then the extraction stage, durable parquet sink (resumable)."""
-    pages = (
-        spark.readStream.schema(WEB_PAGES)
-        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
-        .parquet(source_dir)
-    )
-    q = (
-        extract_pages(dedup_first_seen(pages))
-        .writeStream.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", sink_dir)
-        .start()
-    )
-    q.awaitTermination()
+    only, then the extraction stage."""
+    pages = dedup_first_seen(_pages(spark, src_dir))
+    return _drain(extract_pages(pages), checkpoint_dir, sink_dir)
 
 
 EVENTS_SCHEMA = (
@@ -135,14 +126,10 @@ EVENTS_SCHEMA = (
 
 
 def stream_window_counts(
-    spark,
-    src_dir: str,
-    checkpoint_dir: str,
-    table: str,
-):
+    spark: SparkSession, src_dir: str, checkpoint_dir: str, sink_dir: str
+) -> DataFrame:
     """Watermarked tumbling-window aggregation through a REAL stream:
-    readStream → withWatermark → 1h window groupBy → append-mode memory
-    sink, availableNow drain.
+    readStream → withWatermark → 1h window groupBy → append-mode sink.
 
     Append mode emits a window only once the watermark (max event time −
     1h) passes its end — the late-data-finalization semantics; the final
@@ -150,21 +137,13 @@ def stream_window_counts(
     integer-exact (epoch-us window start, floor(value·100) sums) so a SQL
     oracle re-derives them including the watermark cutoff.
     """
-    from pyspark.sql import functions as F
-
     events = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
     # watermarks require TIMESTAMP (an absolute instant); rebuild one from
     # the NTZ wall time tz-independently: NTZ -> epoch-us integer (pure
     # arithmetic) -> timestamp_micros (UTC instant).  Window boundaries and
     # unix_micros(start) are then session-timezone-proof.
-    instant = F.timestamp_micros(
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        )
-    )
     agg = (
-        events.withColumn("t", instant)
+        events.withColumn("t", F.timestamp_micros(_epoch_us("ts")))
         .withWatermark("t", WATERMARK)
         .groupBy(F.window("t", "1 hour").alias("w"), "event_type")
         .agg(
@@ -180,15 +159,7 @@ def stream_window_counts(
             "value_x100_sum",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(agg, checkpoint_dir, sink_dir)
 
 
 SESSION_OUT = (
@@ -255,42 +226,25 @@ def sessionize_stream(events):
     )
 
 
-def stream_sessionize(spark, src_dir: str, checkpoint_dir: str, sink_dir: str):
-    """readStream → stateful sessionization → durable parquet sink at
-    ``sink_dir``, availableNow drain: the CHECKPOINT-RESUMABLE path.
-    More than ``MAX_FILES_PER_TRIGGER`` source files span several
-    micro-batches; files are consumed oldest-mtime first, so
-    chronologically staged chunks preserve per-user event order."""
+def stream_sessionize(
+    spark: SparkSession, src_dir: str, checkpoint_dir: str, sink_dir: str
+) -> DataFrame:
+    """readStream → stateful sessionization → sink.  More than
+    ``MAX_FILES_PER_TRIGGER`` source files span several micro-batches;
+    files are consumed oldest-mtime first, so chronologically staged
+    chunks preserve per-user event order."""
     events = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(src_dir)
-        .select(
-            "user_id",
-            F.expr(
-                "timestampdiff(MICROSECOND,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            ).alias("t_us"),
-        )
+        .select("user_id", _epoch_us("ts").alias("t_us"))
     )
-    q = (
-        sessionize_stream(events)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(sessionize_stream(events), checkpoint_dir, sink_dir)
 
 
 def stream_interval_join(
-    spark,
-    src_dir: str,
-    checkpoint_dir: str,
-    table: str,
-):
+    spark: SparkSession, src_dir: str, checkpoint_dir: str, sink_dir: str
+) -> DataFrame:
     """Stream-stream self INTERVAL JOIN: each event matched to the same
     user's follow-up events within ``JOIN_LEAD`` — the attribution/funnel
     shape (click → purchase) every event pipeline needs.
@@ -304,17 +258,11 @@ def stream_interval_join(
     one micro-batch (the registered query stages a single parquet file).
     Outputs are epoch-us integers — engine-stringification-proof.
     """
-    instant_of = lambda col: F.timestamp_micros(  # noqa: E731
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            f" TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
-        )
-    )
     a = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .parquet(src_dir)
         .select(
-            instant_of("ts").alias("a_t"),
+            F.timestamp_micros(_epoch_us("ts")).alias("a_t"),
             F.col("event_id").alias("src_event_id"),
             "user_id",
         )
@@ -324,7 +272,7 @@ def stream_interval_join(
         spark.readStream.schema(EVENTS_SCHEMA)
         .parquet(src_dir)
         .select(
-            instant_of("ts").alias("b_t"),
+            F.timestamp_micros(_epoch_us("ts")).alias("b_t"),
             F.col("event_id").alias("dst_event_id"),
             F.col("user_id").alias("b_user"),
             F.col("event_type").alias("dst_type"),
@@ -345,12 +293,4 @@ def stream_interval_join(
         F.unix_micros("b_t").alias("dst_us"),
         "dst_type",
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return _drain(joined, checkpoint_dir, sink_dir)

@@ -20,8 +20,11 @@ input_hint web_pages table + the CDX index rows, committed together.
 With --extract-to the extraction stage runs in the same job: salted
 repartition on url-hash defuses host skew before the Arrow decode stage,
 and per-partition lineage rows land beside the results (north_rule
-resume contract).  A failed run re-fetches only missing records by CDX
-offset (sources/warc.fetch_records) instead of rescanning archives.
+resume contract).  The job keeps no resume state of its own: a failed
+run is re-run over its whole archive list, which re-reads every archive
+and appends to the outputs again.  To resume only the extraction, run
+jobs/run_extract.py over the written pages table with --resume-from
+the committed results or lineage.
 """
 
 from __future__ import annotations

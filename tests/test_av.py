@@ -161,24 +161,3 @@ def test_video_container_sampling(spark):
     for f in sampled:
         img = decode_jpeg(frames[f])
         assert img.shape == (64, 96, 3)
-
-
-# --- Spark queries vs their DuckDB oracles at sf0.001 -----------------------
-
-
-@pytest.mark.parametrize("name", ["audio_features", "video_frame_sample"])
-def test_query_matches_oracle_sf0001(spark, name):
-    import duckdb
-
-    from dpo_ocr_spark.queries import ORACLES, QUERIES
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = QUERIES[name](spark, sf_dir)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    want = con.execute(ORACLES[name]).fetchall()
-    cols = [d[0] for d in con.description]
-    assert got.columns == cols
-    assert sorted(map(tuple, got.collect())) == sorted(want)

@@ -214,13 +214,11 @@ def test_streaming_window_withholds_unfinalized(spark, tmp_path):
     spark.read.parquet(str(tmp_path / "events.parquet")).write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "src"))
-    stream_window_counts(
-        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"), "swc_test"
+    out = stream_window_counts(
+        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"),
+        str(tmp_path / "sink"),
     )
-    got = {
-        r.start_us // 3_600_000_000: r.n_events
-        for r in spark.table("swc_test").collect()
-    }
+    got = {r.start_us // 3_600_000_000: r.n_events for r in out.collect()}
     # watermark = (5h+10s) - 1h -> hour-0 and hour-1 windows finalized
     # (end <= watermark); the hour-5 window is withheld
     epoch_hour0 = int(

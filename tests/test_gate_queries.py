@@ -1,0 +1,48 @@
+"""Gate queries that no other test runs, checked against their DuckDB
+oracles at sf0.001: the audio/video queries, the WARC/WET/CDX container
+round trips (queries_warc.py) and the Structured Streaming drains
+(streaming/stream.py through their query wrappers)."""
+
+from __future__ import annotations
+
+import pytest
+
+SD = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="module")
+def con():
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("documents", "events"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SD}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "audio_features",
+        "video_frame_sample",
+        "warc_extract",
+        "warc_fetch_subset",
+        "cdx_urlkeys",
+        "wet_langs",
+        "streaming_extract",
+        "streaming_dedup",
+        "streaming_window_counts",
+        "streaming_interval_join",
+        "streaming_sessionize",
+    ],
+)
+def test_query_matches_oracle_sf0001(spark, con, name):
+    from dpo_ocr_spark.queries import ORACLES, QUERIES
+
+    got = QUERIES[name](spark, SD)
+    res = con.execute(ORACLES[name])
+    cols = [d[0] for d in res.description]
+    want = res.fetchall()
+    assert got.columns == cols
+    assert sorted(map(tuple, got.collect())) == sorted(want)

@@ -41,7 +41,9 @@ def test_lineage_counts_cover_input(spark):
     from dpo_ocr_spark.scale import with_lineage
 
     extracted = run_extraction(spark, SD)
-    _, lineage = with_lineage(extracted)
+    _, lineage = with_lineage(
+        extracted, num_buckets=extracted.rdd.getNumPartitions()
+    )
     rows = lineage.collect()
     assert sum(r.input_count for r in rows) == 500
     assert all(r.input_bytes > 0 for r in rows)
@@ -53,9 +55,11 @@ def test_resume_filter_skips_done_urls(spark):
     from dpo_ocr_spark.scale import resume_filter
 
     pages = build_web_pages(spark, SD).cache()
-    done = pages.limit(0).select("url")  # empty → everything pending
+    done = pages.limit(0).select("url", "warc_ts")  # empty → all pending
     assert resume_filter(pages, done).count() == 500
-    done = pages.select("url").filter(F.col("url").contains("host-hot"))
+    done = pages.select("url", "warc_ts").filter(
+        F.col("url").contains("host-hot")
+    )
     n_done = done.count()
     remaining = resume_filter(pages, done).count()
     assert remaining == 500 - n_done
@@ -65,8 +69,10 @@ def test_resume_filter_keys_results_by_capture(spark):
     """A capture is (url, warc_ts): resuming against the results table
     skips only the done capture, so an unprocessed re-crawl of a done url
     still runs (a null warc_ts matches null-safely).  A url-only frame
-    keeps its meaning: every capture of a listed url is done."""
+    is refused: it would mark every capture of a listed url done."""
     from datetime import datetime
+
+    import pytest
 
     from dpo_ocr_spark.scale import resume_filter
 
@@ -80,7 +86,8 @@ def test_resume_filter_keys_results_by_capture(spark):
     )
     left = resume_filter(pages, done).collect()
     assert [(r.url, r.warc_ts) for r in left] == [("u", t2)]
-    assert resume_filter(pages, done.select("url")).count() == 0
+    with pytest.raises(ValueError, match=r"\(url, warc_ts\)"):
+        resume_filter(pages, done.select("url"))
 
 
 def test_resume_bucket_matches_spark_partition_id(spark):
@@ -138,8 +145,9 @@ def test_resume_filter_lineage_schema_is_content_based(spark):
 
 
 def test_resume_filter_refuses_unresumable_frames(spark):
-    """Neither url nor (partition_id, num_buckets) → loud error, never a
-    silent watermark filter; mixed num_buckets → loud error."""
+    """Neither (url, warc_ts) nor (partition_id, num_buckets) → loud
+    error, never a silent watermark filter; mixed num_buckets → loud
+    error."""
     import pytest
 
     from dpo_ocr_spark.corpus import build_web_pages
@@ -199,8 +207,8 @@ def test_spark_submit_job_end_to_end(tmp_path, spark):
     assert spark.read.parquet(out).count() == 500
     lineage = spark.read.parquet(lin)
     assert lineage.agg(F.sum("input_count")).collect()[0][0] == 500
-    # resume run with the extraction output as completed-urls lineage
-    done = spark.read.parquet(out).select("url")
+    # resume run with the extraction output's captures as the done set
+    done = spark.read.parquet(out).select("url", "warc_ts")
     done_path = str(tmp_path / "done")
     done.write.parquet(done_path)
     r2 = subprocess.run(

@@ -12,10 +12,10 @@ def test_stream_equals_batch(tmp_path, spark):
 
     src = str(tmp_path / "src")
     build_web_pages(spark, SD, partitions=4).write.parquet(src)
-    stream_extract(spark, src, str(tmp_path / "ckpt"), "t_stream")
-    got = sorted(
-        (r.url, r.text) for r in spark.table("t_stream").select("url", "text").collect()
+    out = stream_extract(
+        spark, src, str(tmp_path / "ckpt"), str(tmp_path / "sink")
     )
+    got = sorted((r.url, r.text) for r in out.select("url", "text").collect())
     want = sorted(
         (r.url, r.text)
         for r in run_extraction(spark, SD).select("url", "text").collect()
@@ -140,11 +140,11 @@ def test_stream_interval_join_boundaries(spark, tmp_path):
         "event_id long, ts timestamp_ntz, user_id long,"
         " event_type string, value double, props string",
     ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "src"))
-    stream_interval_join(
-        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"), "t_ij"
+    out = stream_interval_join(
+        spark, str(tmp_path / "src"), str(tmp_path / "ckpt"),
+        str(tmp_path / "sink"),
     )
     got = {
-        (r.src_event_id, r.dst_event_id): r.dst_type
-        for r in spark.table("t_ij").collect()
+        (r.src_event_id, r.dst_event_id): r.dst_type for r in out.collect()
     }
     assert got == {(0, 1): "buy", (1, 2): "buy"}

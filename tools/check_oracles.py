@@ -14,6 +14,7 @@ import hashlib
 import os
 import sys
 import time
+import traceback
 
 import duckdb
 
@@ -90,9 +91,22 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
+        try:
+            sdf = fn(spark, sf_dir)
+            scols = sdf.columns
+            srows = [tuple(r) for r in sdf.collect()]
+            if name in oracles:
+                ores = con.execute(oracles[name])
+                ocols = [d[0] for d in ores.description]
+                orows = ores.fetchall()
+        except Exception as e:
+            # one raising query is counted, not allowed to end the sweep
+            traceback.print_exc()
+            first = (str(e).strip().splitlines() or [""])[0]
+            print(f"{name:28s} FAIL {type(e).__name__}: {first}")
+            counts["FAIL"] += 1
+            failed.append(name)
+            continue
         if name not in oracles:
             print(f"{name:28s} rows-only: {len(srows)} rows "
                   f"({time.time()-t0:.1f}s)")
@@ -100,9 +114,6 @@ def main() -> int:
             if len(srows) == 0:
                 failed.append(name)
             continue
-        ores = con.execute(oracles[name])
-        ocols = [d[0] for d in ores.description]
-        orows = ores.fetchall()
         ok_cols = sorted(scols) == sorted(ocols)
         ok_count = len(srows) == len(orows)
         sh = value_hash(scols, srows)
