@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup import _words
+
 SEP = "\x1f"
 N_MERGES = 8
 
@@ -38,13 +40,9 @@ def _word_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(seg, n): delimited single-char segmentation per DISTINCT word,
     weighted by corpus frequency."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = docs.select(
-        F.explode(
-            F.split(
-                F.regexp_replace(F.lower(F.col("text")), r"\s+", " "), " "
-            )
-        ).alias("word")
-    ).filter(F.col("word") != "")
+    words = docs.select(F.explode(_words()).alias("word")).filter(
+        F.col("word") != ""
+    )
     return (
         words.groupBy("word")
         .agg(F.count("*").alias("n"))

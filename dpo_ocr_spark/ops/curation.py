@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from .dedup import _words
+
 N_DECON = 4  # words per decontamination n-gram
 EVAL_MOD = 97  # doc_id % EVAL_MOD == 0 -> held-out eval document
 N_SHARDS = 8  # training shards (scales with corpus in production)
@@ -40,13 +42,6 @@ N_SHARDS = 8  # training shards (scales with corpus in production)
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _words() -> Column:
-    """Whitespace-collapsed lowercase word array (ops.dedup contract)."""
-    return F.split(
-        F.regexp_replace(F.lower(F.col("text")), r"\s+", " "), " "
-    )
 
 
 def _ngrams(words: Column, n: int) -> Column:

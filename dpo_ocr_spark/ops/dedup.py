@@ -13,8 +13,6 @@ Scale shapes:
 - **SimHash**: 64-bit sign-aggregated word-hash fingerprint; hamming-ball
   candidates.  Oracle-checked: FNV-1a + bit-majority re-derived in DuckDB
   HUGEINT arithmetic (see queries_ops._FNV_SQL), plus a pytest reference.
-- **embedding near-dup**: integer-quantized cosine gate — exact arithmetic,
-  so Spark and DuckDB agree bit-for-bit (see _QUANT comment).
 
 All outputs are integer/string-exact (no raw float in oracle-checked
 columns).
@@ -76,12 +74,8 @@ def drop_stats(what: str) -> dict:
         F.sum(F.when(hot, F.size("ids")).otherwise(0)).alias("i"),
     ).first()
     return {"dropped_groups": int(row["g"] or 0), "dropped_ids": int(row["i"] or 0)}
-# embedding quantization: round(x * 10^3) → exact BIGINT arithmetic.
-# Overflow budget: |x| ≤ 1, dims ≤ 128 → |dot| ≤ 1.28e8, dot² ≤ 1.64e16;
-# with t = COS_NUM/COS_DEN ≤ 1 and COS_DEN ≤ 20: dot²·COS_DEN² ≤ 6.6e18
-# < 2^63 and COS_NUM²·na·nb ≤ 6.6e18 < 2^63.
-_QUANT = 1_000
-COS_NUM, COS_DEN = 2, 5  # embedding near-dup gate: cosine ≥ 2/5
+
+
 JACCARD_X1000 = 300  # shingle-Jaccard near-dup gate (×1000)
 CLUSTER_JACCARD_X1000 = 100  # dedup_clusters' edge gate (×1000)
 
@@ -113,6 +107,12 @@ def _norm_text() -> F.Column:
     return F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
 
 
+def _words() -> F.Column:
+    """THE word contract: lowercase, collapse whitespace runs, split on
+    ' '.  An empty text yields one empty word."""
+    return F.split(_norm_text(), " ")
+
+
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the smallest doc_id per exact (normalized) text: one shuffle."""
     docs = _docs(spark, sf_dir).select(
@@ -124,14 +124,13 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WS_SQL = "split(regexp_replace(lower(text), '\\\\s+', ' '), ' ')"
-# Java \s is ASCII-only — re.ASCII keeps Python identical to _WS_SQL
+# Java \s is ASCII-only — re.ASCII keeps Python identical to _words()
 _WS_ASCII = re.compile(r"\s+", re.ASCII)
 
 
 def _distinct_shingles(text: str | None) -> list[str]:
     """The text's distinct word-SHINGLE_K shingles in first-occurrence
-    order: _WS_SQL's lower → ASCII-whitespace normalize → split, then
+    order: _words()'s lower → ASCII-whitespace normalize → split, then
     every K-word window; a text shorter than K words (empty and NULL
     included) yields one clipped shingle."""
     words = _WS_ASCII.sub(" ", (text or "").lower()).split(" ")
@@ -232,7 +231,7 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _substring_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _docs(spark, sf_dir)
-        .select("doc_id", F.expr(_WS_SQL).alias("w"))
+        .select("doc_id", _words().alias("w"))
         .withColumn("n_words", F.size("w"))
     )
 
@@ -513,96 +512,6 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, schema="doc_id long, simhash_hi long, simhash_lo long"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Embedding near-dup (integer-exact cosine gate)
-# ---------------------------------------------------------------------------
-
-
-def _quantized(df: DataFrame) -> DataFrame:
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * _QUANT).cast("long"),
-    )
-    return df.select(
-        "vec_id",
-        q.alias("q"),
-    ).select(
-        "vec_id",
-        "q",
-        F.aggregate(
-            F.zip_with(F.col("q"), F.col("q"), lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("norm2"),
-    )
-
-
-def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for embedding near-dup (the REGISTERED query): candidate
-    pairs are restricted to same-(table, bucket) random-hyperplane LSH
-    collisions (union over the 8 tables), then decided by the same EXACT
-    integer cosine gate as the all-pairs twin.  Deterministic-approximate:
-    pairs never colliding in any table are missed — recall vs the all-pairs
-    twin (tests/dedup_reference.py) is pinned in pytest, and the
-    DuckDB oracle re-derives the identical buckets, so the driver hash is
-    still exact.
-
-    Scale shape: one matmul per Arrow batch for all table buckets, one
-    groupBy(tbl, bucket) shuffle with the hot-bucket cap
-    (drop_stats('embedding_neardup')), in-array pair fan-out, then two
-    hash joins on vec_id to fetch vectors — NEVER an O(n²) self-join."""
-    from .similarity import _all_buckets_udf, embedding_dims
-
-    emb = _quantized(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    tabbed = emb.select(
-        "vec_id",
-        F.posexplode(_all_buckets_udf(embedding_dims(sf_dir))("q")).alias(
-            "tbl", "bucket"
-        ),
-    )
-    pairs = (
-        _capped_groups(
-            tabbed.groupBy("tbl", "bucket").agg(
-                F.sort_array(F.collect_list("vec_id")).alias("ids")
-            ),
-            "embedding_neardup",
-        )
-        .select(F.explode(_pair_combos("ids")).alias("p"))
-        .select(
-            F.col("p.doc_a").alias("vec_a"), F.col("p.doc_b").alias("vec_b")
-        )
-        .distinct()
-    )
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("q").alias("qa"),
-        F.col("norm2").alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("q").alias("qb"),
-        F.col("norm2").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        pairs.join(a, "vec_a")
-        .join(b, "vec_b")
-        .withColumn("dot", dot)
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot") * F.col("dot") * (COS_DEN * COS_DEN)
-                >= F.lit(COS_NUM * COS_NUM) * F.col("na") * F.col("nb")
-            )
-        )
-        .select("vec_a", "vec_b")
     )
 
 

@@ -1,26 +1,43 @@
-"""Approximate-nearest-neighbor search over an embedding column.
+"""Embedding arithmetic and the queries built on it: near-dup, ANN search,
+k-means centroids and semantic pruning.
+
+The integer-exact contract, shared by every query here and by their
+DuckDB oracles: vectors are quantized to int64 (``_emb``), dot products
+are exact integers (``_dot``), and a cosine is one IEEE double division
+of exact integers (``_cos``) — so both engines produce bit-identical
+doubles and identical orderings.  Means round half away from zero in
+pure integer arithmetic (``_int_mean``), so centroids stay int64 vectors.
 
 - ``brute_force_topk``: exact cosine top-k per query — the correctness
-  baseline.  Cosine is computed from EXACT integer dot/norms (quantized),
-  then a single IEEE double division+sqrt of identical integers — so Spark
-  and DuckDB produce bit-identical doubles and identical orderings.
-  Per-query window argmax (never a global sort).
+  baseline.  Per-query window argmax (never a global sort).
 - ``lsh_topk``: the scale path — random-hyperplane sign buckets
   (hyperplanes derived from md5, engine-free determinism), candidates
   restricted to same-bucket rows, then exact re-rank.  At 10¹² rows the
   bucket join replaces the all-pairs crossJoin; recall is tested in pytest
   against the brute-force baseline.
+- ``embedding_neardup_lsh``: integer-quantized cosine gate over the same
+  buckets — exact arithmetic, so Spark and DuckDB agree bit-for-bit (see
+  the _QUANT comment).
 """
 
 from __future__ import annotations
+
+import functools
+import hashlib
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from .dedup import _QUANT
+from .dedup import _capped_groups, _pair_combos
 
+# embedding quantization: round(x * 10^3) → exact BIGINT arithmetic.
+# Overflow budget: |x| ≤ 1, dims ≤ 128 → |dot| ≤ 1.28e8, dot² ≤ 1.64e16;
+# with t = COS_NUM/COS_DEN ≤ 1 and COS_DEN ≤ 20: dot²·COS_DEN² ≤ 6.6e18
+# < 2^63 and COS_NUM²·na·nb ≤ 6.6e18 < 2^63.
+_QUANT = 1_000
+COS_NUM, COS_DEN = 2, 5  # embedding near-dup gate: cosine ≥ 2/5
 N_QUERIES = 10  # vec_id < N_QUERIES act as the query set
 TOP_K = 5
 # multi-table LSH: L tables × k planes each.  One fine table would give
@@ -36,17 +53,31 @@ LSH_PLANES = 4  # 2^4 buckets per table
 MULTIPROBE_RADIUS = 1
 
 
-def embedding_dims(sf_dir: str) -> int | None:
-    """Embedding dimensionality from the embeddings table's first row,
-    read with pyarrow (no Spark job: sizing the hyperplane matrix is a
-    driver-side metadata question, guide §5).  None for an empty table,
-    whose row count the parquet footers give; any read error raises."""
-    import pyarrow.dataset as ds
+def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
+    """Exact int64 dot product of two quantized vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
 
-    table = ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet")
-    if table.count_rows() == 0:
-        return None
-    return len(table.head(1, columns=["embedding"]).column(0)[0].as_py())
+
+def _cos(a: str, na: str, b: str, nb: str) -> F.Column:
+    """Cosine of vectors ``a``, ``b`` with squared norms ``na``, ``nb``:
+    double(dot) / sqrt(double(na)·double(nb)), each step IEEE-rounded."""
+    return _dot(a, b).cast("double") / F.sqrt(
+        F.col(na).cast("double") * F.col(nb).cast("double")
+    )
+
+
+def _int_mean(s: str, c: str) -> F.Column:
+    """sum ``s`` / count ``c`` rounded half away from zero in pure
+    integer arithmetic: s≥0: (2s+c) div 2c, else the negated positive
+    form."""
+    return F.expr(
+        f"CASE WHEN {s} >= 0 THEN (2 * {s} + {c}) div (2 * {c}) "
+        f"ELSE -(((-2 * {s}) + {c}) div (2 * {c})) END"
+    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,20 +101,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda x: F.round(x.cast("double") * _QUANT).cast("long"),
     )
-    norm2 = F.aggregate(
-        F.zip_with(q, q, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return df.select("vec_id", "label", q.alias("q"), norm2.alias("norm2"))
-
-
-def _dot(a: str, b: str) -> F.Column:
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return df.select("vec_id", "label", q.alias("q"), _dot(q, q).alias("norm2"))
 
 
 def _topk(scored: DataFrame) -> DataFrame:
@@ -118,63 +136,51 @@ def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = corpus.crossJoin(F.broadcast(queries)).filter(
         F.col("cand_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "cand_id",
-        (
-            _dot("qv", "cv").cast("double")
-            / F.sqrt(F.col("qn").cast("double") * F.col("cn").cast("double"))
-        ).alias("cos"),
-    )
+    ).select("query_id", "cand_id", _cos("qv", "qn", "cv", "cn").alias("cos"))
     return _topk(scored)
 
 
-def _plane_signs(table: int, plane: int, dims: int) -> list[int]:
-    """Deterministic ±1 plane components: sign = md5(f"{t}:{p}|{d}")
-    leading nibble ≥ 8.  Computed ONCE driver-side (hashlib) and shipped
-    as an array literal sized to the actual embedding dim — the runtime
-    expression is pure arithmetic (4M in-query md5 calls were the
-    measured ann_lsh hot spot)."""
-    import hashlib
-
-    return [
-        1
-        if int(hashlib.md5(f"{table}:{plane}|{d}".encode()).hexdigest()[0], 16) >= 8
-        else -1
-        for d in range(dims)
-    ]
-
-
-def _all_buckets_udf(dims: int | None):
-    """All LSH-table buckets in ONE vectorized matmul per Arrow batch:
-    X(batch×dims) @ M(dims×(tables·planes)) → sign bits → per-table
-    bucket ints.  (The expression-tree form — 32 interpreted higher-order
-    folds over literal arrays — was the measured cold-start hot spot.)
-
-    ``dims`` is None for an empty table (``embedding_dims``): the planes
-    get zero width, no batch ever reaches the UDF, and the caller's plan
-    and schema stay those of a non-empty table."""
-    from pyspark.sql import types as T
-
-    M = np.array(
+@functools.lru_cache(maxsize=None)
+def _planes(dims: int) -> np.ndarray:
+    """dims × (tables·planes) ±1 hyperplane matrix: component d of plane
+    p in table t is +1 when md5(f"{t}:{p}|{d}")'s leading nibble is ≥ 8.
+    Built once per worker and width (hashlib, no in-query md5: 4M
+    in-query md5 calls were the measured ann_lsh hot spot)."""
+    return np.array(
         [
-            _plane_signs(t, p, dims or 0)
-            for t in range(LSH_TABLES)
-            for p in range(LSH_PLANES)
+            [
+                1
+                if int(hashlib.md5(f"{t}:{p}|{d}".encode()).hexdigest()[0], 16) >= 8
+                else -1
+                for t in range(LSH_TABLES)
+                for p in range(LSH_PLANES)
+            ]
+            for d in range(dims)
         ],
         dtype=np.int64,
-    ).T  # dims × (tables·planes)
-    weights = (1 << np.arange(LSH_PLANES, dtype=np.int64))
+    )
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def buckets(qs: pd.Series) -> pd.Series:
-        X = np.stack(qs.to_numpy())  # batch × dims
-        bits = (X @ M) > 0  # batch × (tables·planes)
-        bits = bits.reshape(len(X), LSH_TABLES, LSH_PLANES)
-        vals = (bits * weights).sum(axis=2).astype("int32")  # batch × tables
-        return pd.Series(list(vals))
 
-    return buckets
+def _bucket_ids(qs: pd.Series) -> pd.Series:
+    """All LSH-table buckets in ONE vectorized matmul per Arrow batch:
+    X(batch×dims) @ planes → sign bits → per-table bucket ints.  (The
+    expression-tree form — 32 interpreted higher-order folds over
+    literal arrays — was the measured cold-start hot spot.)"""
+    X = np.stack(qs.to_numpy())  # batch × dims
+    bits = (X @ _planes(X.shape[1])) > 0  # batch × (tables·planes)
+    bits = bits.reshape(len(X), LSH_TABLES, LSH_PLANES)
+    weights = 1 << np.arange(LSH_PLANES, dtype=np.int64)
+    return pd.Series(list((bits * weights).sum(axis=2).astype("int32")))
+
+
+def _buckets(emb: DataFrame) -> DataFrame:
+    """``emb`` with one (tbl, bucket) row per vector and LSH table.  An
+    empty table sends no batch, so its plan and schema stay those of a
+    non-empty one."""
+    from pyspark.sql import types as T
+
+    buckets = F.pandas_udf(_bucket_ids, T.ArrayType(T.IntegerType()))
+    return emb.select("*", F.posexplode(buckets("q")).alias("tbl", "bucket"))
 
 
 IVF_CELLS = 16
@@ -183,10 +189,9 @@ IVF_NPROBE = 4
 
 def _ivf_centroids(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic coarse centroids: the IVF_CELLS vectors with the
-    smallest md5(vec_id) — a seedless random sample (at real scale,
-    replace with a k-means fit on the same md5-sample; the search path
-    below is unchanged). Returns (quantized int64 cells × dims, norm²)
-    — INTEGER centroids so cell assignment is engine-portable (the
+    smallest md5(vec_id) — a seedless random sample, and the init of the
+    k-means fit (_kmeans_fit).  Returns (quantized int64 cells × dims,
+    norm²) — INTEGER centroids so cell assignment is engine-portable (the
     DuckDB oracle re-derives identical assignments)."""
     rows = (
         emb.select("vec_id", "q", "norm2")
@@ -225,6 +230,14 @@ def _cells_udf(M: np.ndarray, cn2: np.ndarray, nprobe: int):
     return cells
 
 
+def _assign_cells(emb: DataFrame, M: np.ndarray, cn2: np.ndarray) -> DataFrame:
+    """Nearest-centroid assignment under the portable sim contract."""
+    return emb.select(
+        "vec_id", "q", "norm2",
+        F.element_at(_cells_udf(M, cn2, 1)("q"), 1).alias("cell"),
+    )
+
+
 def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame:
     """IVF (inverted-file) ANN: corpus vectors live in their single
     nearest-centroid cell; queries probe their IVF_NPROBE nearest cells;
@@ -243,11 +256,11 @@ def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame
         M, cn2 = _kmeans_fit(emb)
     else:
         M, cn2 = _ivf_centroids(emb)
-    corpus = emb.select(
+    corpus = _assign_cells(emb, M, cn2).select(
         F.col("vec_id").alias("cand_id"),
         F.col("q").alias("cv"),
         F.col("norm2").alias("cn"),
-        F.element_at(_cells_udf(M, cn2, 1)("q"), 1).alias("cell"),
+        "cell",
     )
     queries = (
         emb.filter(F.col("vec_id") < N_QUERIES)
@@ -266,14 +279,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame
             & (F.col("cand_id") != F.col("query_id")),
         )
         .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot("qv", "cv").cast("double")
-                / F.sqrt(
-                    F.col("qn").cast("double") * F.col("cn").cast("double")
-                )
-            ).alias("cos"),
+            "query_id", "cand_id", _cos("qv", "qn", "cv", "cn").alias("cos")
         )
         .dropDuplicates(["query_id", "cand_id"])
     )
@@ -283,14 +289,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str, fit: str = "sample") -> DataFrame
 def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table bucketed ANN: candidates = union over tables of
     same-bucket rows, exact cosine re-rank within candidates."""
-    emb = _emb(spark, sf_dir)
-    dims = embedding_dims(sf_dir)
     # all table buckets in ONE pass over one scan (an 8-way union re-read
-    # the parquet 8× — measured), then posexplode to (tbl, bucket) rows
-    tabbed = emb.select(
-        "vec_id", "q", "norm2",
-        F.posexplode(_all_buckets_udf(dims)("q")).alias("tbl", "bucket"),
-    )
+    # the parquet 8× — measured), posexploded to (tbl, bucket) rows
+    tabbed = _buckets(_emb(spark, sf_dir))
     probe_buckets = F.array(
         F.col("bucket"),
         *(
@@ -324,68 +325,97 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "cand_id", "qv", "cv", "qn", "cn")
         .dropDuplicates(["query_id", "cand_id"])  # union of tables
         .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot("qv", "cv").cast("double")
-                / F.sqrt(
-                    F.col("qn").cast("double") * F.col("cn").cast("double")
-                )
-            ).alias("cos"),
+            "query_id", "cand_id", _cos("qv", "qn", "cv", "cn").alias("cos")
         )
     )
     return _topk(scored)
 
 
-KMEANS_ITERS = 2
+def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs, cosine ≥ COS_NUM/COS_DEN decided in EXACT
+    integer arithmetic: dot > 0 and dot²·COS_DEN² ≥ COS_NUM²·na·nb (no
+    float in the predicate).  Candidate pairs are restricted to
+    same-(table, bucket) random-hyperplane LSH collisions (union over the
+    8 tables).  Deterministic-approximate: pairs never colliding in any
+    table are missed — recall vs the all-pairs twin
+    (tests/dedup_reference.py) is pinned in pytest, and the DuckDB oracle
+    re-derives the identical buckets, so the driver hash is still exact.
 
-
-def _assign_cells(emb: DataFrame, M: np.ndarray, cn2: np.ndarray) -> DataFrame:
-    """Nearest-centroid assignment under the portable sim contract."""
-    return emb.select(
-        "vec_id", "q", "norm2",
-        F.element_at(_cells_udf(M, cn2, 1)("q"), 1).alias("cell"),
+    Scale shape: one matmul per Arrow batch for all table buckets, one
+    groupBy(tbl, bucket) shuffle with the hot-bucket cap
+    (drop_stats('embedding_neardup')), in-array pair fan-out, then two
+    hash joins on vec_id to fetch vectors — NEVER an O(n²) self-join."""
+    emb = _emb(spark, sf_dir)
+    pairs = (
+        _capped_groups(
+            _buckets(emb).groupBy("tbl", "bucket").agg(
+                F.sort_array(F.collect_list("vec_id")).alias("ids")
+            ),
+            "embedding_neardup",
+        )
+        .select(F.explode(_pair_combos("ids")).alias("p"))
+        .select(
+            F.col("p.doc_a").alias("vec_a"), F.col("p.doc_b").alias("vec_b")
+        )
+        .distinct()
     )
+    a = emb.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("q").alias("qa"),
+        F.col("norm2").alias("na"),
+    )
+    b = emb.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("q").alias("qb"),
+        F.col("norm2").alias("nb"),
+    )
+    return (
+        pairs.join(a, "vec_a")
+        .join(b, "vec_b")
+        .withColumn("dot", _dot("qa", "qb"))
+        .filter(
+            (F.col("dot") > 0)
+            & (
+                F.col("dot") * F.col("dot") * (COS_DEN * COS_DEN)
+                >= F.lit(COS_NUM * COS_NUM) * F.col("na") * F.col("nb")
+            )
+        )
+        .select("vec_a", "vec_b")
+    )
+
+
+KMEANS_ITERS = 2
 
 
 def _kmeans_fit(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """KMEANS_ITERS distributed Lloyd's iterations with INTEGER-EXACT
     centroid updates over IVF_CELLS cells.
 
-    The fit the ann_ivf docstring promises at real scale, kept
-    engine-portable: assignment uses the established exact-int-dot /
-    IEEE-double-sim contract, and each new centroid dimension is the
-    member mean rounded half-away-from-zero in PURE INTEGER arithmetic
-    (s≥0: (2s+c)//(2c), else the negated positive form) — so centroids
-    stay int64 vectors and DuckDB reproduces every round bit-for-bit
-    (no float accumulation, no rounding-mode divergence).  Per round:
-    one matmul-per-batch assignment pass + one (cell, dim) aggregation;
-    only the cells×dims centroid table (driver-side constant) is collected.
-    Empty cells keep their previous centroid."""
+    Engine-portable: assignment uses the exact-int-dot / IEEE-double-sim
+    contract, and each new centroid dimension is the member mean
+    (_int_mean) — so centroids stay int64 vectors and DuckDB reproduces
+    every round bit-for-bit (no float accumulation, no rounding-mode
+    divergence).  Per round: one matmul-per-batch assignment pass + one
+    (cell, dim) aggregation; only the cells×dims centroid table
+    (driver-side constant) is collected.  Empty cells keep their previous
+    centroid."""
     M, cn2 = _ivf_centroids(emb)  # deterministic md5-sample init
     # fewer vectors than IVF_CELLS (incl. an empty table): fit over what
     # exists — M may have fewer rows; callers size output to len(M)
     if M.ndim != 2 or len(M) == 0:
-        import numpy as _np
-
-        return _np.zeros((0, 1), dtype=_np.int64), _np.zeros(0, _np.int64)
+        return np.zeros((0, 1), dtype=np.int64), np.zeros(0, np.int64)
     for _ in range(KMEANS_ITERS):
-        sums = (
+        means = (
             _assign_cells(emb, M, cn2)
             .select("cell", F.posexplode("q").alias("d", "x"))
             .groupBy("cell", "d")
             .agg(F.sum("x").alias("s"), F.count("*").alias("c"))
+            .select("cell", "d", _int_mean("s", "c").alias("v"))
             .collect()  # cells × dims rows — centroid-table-sized
         )
-        newM = M.copy()
-        for r in sums:
-            s, c = int(r["s"]), int(r["c"])
-            if s >= 0:
-                v = (2 * s + c) // (2 * c)
-            else:
-                v = -((-2 * s + c) // (2 * c))
-            newM[r["cell"], r["d"]] = v  # posexplode pos is 0-based
-        M = newM
+        M = M.copy()
+        for r in means:
+            M[r["cell"], r["d"]] = r["v"]  # posexplode pos is 0-based
         cn2 = (M * M).sum(axis=1)
     return M, cn2
 
@@ -434,9 +464,9 @@ def semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully distributed: the per-(label, dim) integer-mean aggregation is one
     shuffle over n·dims rows (linear), centroids broadcast back, and the
-    per-label rank is one window.  Centroid means use the _kmeans_fit
-    integer round-half-away contract, similarities the exact-int-dot /
-    IEEE-double contract — so the DuckDB twin matches bit-for-bit.
+    per-label rank is one window.  Centroid means and similarities follow
+    the module's integer-exact contract — so the DuckDB twin matches
+    bit-for-bit.
 
     Scale note: the rank window sorts each label's rows on one reducer —
     fine while labels are balanced; for billion-row labels replace the
@@ -444,16 +474,11 @@ def semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     per label), same output contract.
     """
     e = _emb(spark, sf_dir)
-
-    # per-(label, dim) integer mean, rounded half-away-from-zero
-    mean_v = F.when(
-        F.col("s") >= 0, F.expr("(2 * s + c) div (2 * c)")
-    ).otherwise(-F.expr("((-2 * s) + c) div (2 * c)"))
     cent = (
         e.select("label", F.posexplode("q").alias("d", "x"))
         .groupBy("label", "d")
         .agg(F.sum("x").alias("s"), F.count("*").alias("c"))
-        .select("label", "d", mean_v.alias("v"))
+        .select("label", "d", _int_mean("s", "c").alias("v"))
         .groupBy("label")
         .agg(
             F.transform(
@@ -461,21 +486,12 @@ def semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda sv: sv.getField("v"),
             ).alias("cv")
         )
-        .select(
-            "label",
-            "cv",
-            F.aggregate(
-                F.zip_with("cv", "cv", lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("cn"),
-        )
-    )
-    sim = _dot("q", "cv").cast("double") / F.sqrt(
-        F.col("norm2").cast("double") * F.col("cn").cast("double")
+        .select("label", "cv", _dot("cv", "cv").alias("cn"))
     )
     scored = e.join(F.broadcast(cent), "label").select(
-        "vec_id", "label", F.round(sim, 6).alias("cos_r6")
+        "vec_id",
+        "label",
+        F.round(_cos("q", "norm2", "cv", "cn"), 6).alias("cos_r6"),
     )
     w = W.partitionBy("label").orderBy(F.desc("cos_r6"), "vec_id")
     return scored.select(

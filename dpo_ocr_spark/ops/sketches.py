@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .curation import N_DECON, _docs, _ngrams, _words
+from .curation import N_DECON, _docs, _ngrams
+from .dedup import _words
 
 # count-min geometry: width 2/eps = 20 000 cells, depth ceil(ln 1/δ) = 7
 # rows at δ = 1e-3, fixed seed.  1.1 MB of sketch state answers any

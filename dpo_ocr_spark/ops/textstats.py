@@ -15,7 +15,7 @@ Ratios are emitted ×1000 as integers (FP-hash-safe oracle contract).
 
 from __future__ import annotations
 
-from .dedup import _docs, md5_int63
+from .dedup import _docs, _norm_text, md5_int63
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # tiny per-language stopword lists (deterministic, shared with oracle SQL)
@@ -103,7 +103,7 @@ def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup fingerprint: md5 of lowercase-collapsed text (identical
     in DuckDB), plus a 60-bit integer form for bucketing."""
     docs = _docs(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
+    norm = _norm_text()
     return docs.select(
         "doc_id",
         F.md5(norm).alias("fp_md5"),
@@ -195,8 +195,6 @@ def curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression in the same projection.  Rule order is the verdict
     contract: a short duplicate reports 'dup', not 'short'."""
     from pyspark.sql import Window as W
-
-    from .dedup import _norm_text
 
     docs = _docs(spark, sf_dir)
     is_keeper = F.col("doc_id") == F.min("doc_id").over(

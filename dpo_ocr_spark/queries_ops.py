@@ -376,7 +376,7 @@ WHERE CAST(list_dot_product(list_transform(na.qv, x -> CAST(x AS DOUBLE)),
              AS BIGINT) * 25
       >= 4 * na.norm2 * nb.norm2
 """,
-)(D.embedding_neardup_lsh)
+)(S.embedding_neardup_lsh)
 
 # dedup_clusters: connected components over the near-dup pair graph.
 # The min-label fixpoint is unique, so the Spark pointer-jumping loop and

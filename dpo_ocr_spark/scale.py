@@ -14,10 +14,11 @@ residual skew (``spark.sql.adaptive.skewJoin.enabled``).
 
 Resume: lineage is written with results; a restarted job anti-joins its
 input against completed work — by capture (url, warc_ts) when a results
-frame is given, by url when the frame has urls only, else by
-CONTENT-DERIVED partition id (``pmod(hash(xxhash64(url)), num_buckets)``,
-exactly the assignment ``salted_repartition`` produced, so a completed
-partition's rows are re-identified from the urls alone).
+frame is given, else by CONTENT-DERIVED partition id
+(``pmod(hash(xxhash64(url)), num_buckets)`` from a lineage frame, exactly
+the assignment ``salted_repartition`` produced, so a completed
+partition's rows are re-identified from the urls alone).  Any other
+frame, a url-only one included, raises ``ValueError``.
 Time/watermark is never used as a resume predicate: under hash
 partitioning every partition spans the full timestamp range, so a
 max-watermark filter would silently drop unprocessed rows of failed

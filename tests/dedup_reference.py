@@ -9,7 +9,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dpo_ocr_spark.ops import dedup as D
+from dpo_ocr_spark.ops import dedup as D, similarity as S
+
+# the word contract spelled out in SQL (the production form is
+# dedup._words(); a reference does not import what it checks)
+_WS_SQL = "split(regexp_replace(lower(text), '\\\\s+', ' '), ' ')"
 
 
 def _shingles() -> F.Column:
@@ -18,9 +22,9 @@ def _shingles() -> F.Column:
     mirrors the same clipping via inclusive list slices."""
     return F.array_distinct(
         F.expr(
-            f"transform(sequence(1, greatest(size({D._WS_SQL}) - "
+            f"transform(sequence(1, greatest(size({_WS_SQL}) - "
             f"{D.SHINGLE_K - 1}, 1)), "
-            f"i -> concat_ws(' ', slice({D._WS_SQL}, i, {D.SHINGLE_K})))"
+            f"i -> concat_ws(' ', slice({_WS_SQL}, i, {D.SHINGLE_K})))"
         )
     )
 
@@ -107,9 +111,7 @@ def embedding_neardup_pairs(
     dot > 0 and dot² · t_den² ≥ t_num² · |a|²·|b|² — bit-identical across
     engines (no float in the predicate).  All-pairs here (500 vecs); the
     scale path buckets by LSH first (ops/similarity.py)."""
-    emb = D._quantized(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    )
+    emb = S._emb(spark, sf_dir)
     a = emb.alias("a")
     b = emb.alias("b")
     dot = F.aggregate(

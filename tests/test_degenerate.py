@@ -39,6 +39,7 @@ def _ops():
     from dpo_ocr_spark.ops import curation as C, dedup as D, events as EV
     from dpo_ocr_spark.ops.similarity import (
         brute_force_topk,
+        embedding_neardup_lsh,
         ivf_topk,
         kmeans_centroids,
         lsh_topk,
@@ -63,7 +64,7 @@ def _ops():
         C.url_normalize,
         C.curated_training_set,
         D.incremental_dedup,
-        D.embedding_neardup_lsh,
+        embedding_neardup_lsh,
         D.cluster_representatives,
         semantic_prune,
     ]

@@ -1,7 +1,8 @@
 """Gate queries that no other test runs, checked against their DuckDB
 oracles at sf0.001: the audio/video queries, the WARC/WET/CDX container
-round trips (queries_warc.py) and the Structured Streaming drains
-(streaming/stream.py through their query wrappers)."""
+round trips (queries_warc.py), the Structured Streaming drains
+(streaming/stream.py through their query wrappers) and the embedding
+queries (ops/similarity.py)."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ def con():
     import duckdb
 
     con = duckdb.connect()
-    for t in ("documents", "events"):
+    for t in ("documents", "events", "embeddings"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SD}/{t}.parquet'")
     yield con
     con.close()
@@ -35,6 +36,13 @@ def con():
         "streaming_window_counts",
         "streaming_interval_join",
         "streaming_sessionize",
+        "embedding_neardup",
+        "ann_brute_force",
+        "ann_lsh",
+        "ann_ivf",
+        "ann_ivf_kmeans",
+        "kmeans_centroids",
+        "semantic_prune",
     ],
 )
 def test_query_matches_oracle_sf0001(spark, con, name):

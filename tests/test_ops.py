@@ -243,13 +243,13 @@ def test_embedding_neardup_lsh_vs_allpairs(spark):
     all-pairs twin (the gate is identical; only candidates differ), with
     recall above the multi-table collision bound, and its plan must not
     contain the O(n²) self-join."""
-    from dpo_ocr_spark.ops import dedup as D
+    from dpo_ocr_spark.ops import similarity as S
 
     sf = "/root/testdata/sf0.001"
     exact = {
         (r.vec_a, r.vec_b) for r in R.embedding_neardup_pairs(spark, sf).collect()
     }
-    lsh_df = D.embedding_neardup_lsh(spark, sf)
+    lsh_df = S.embedding_neardup_lsh(spark, sf)
     lsh = {(r.vec_a, r.vec_b) for r in lsh_df.collect()}
     assert lsh <= exact
     if exact:

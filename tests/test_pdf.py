@@ -1,4 +1,5 @@
-"""PDF content-stream extraction (extract/pdf.py) + the PDF corpus mix."""
+"""PDF content-stream extraction (extract/pdf.py) + the PDF corpus mix, and
+the token-offset contract on hostile text for PDF and layout payloads."""
 
 from __future__ import annotations
 
@@ -6,7 +7,12 @@ import zlib
 
 from hypothesis import given, settings, strategies as st
 
-from dpo_ocr_spark.corpus import expected_text, render_pdf
+from dpo_ocr_spark.corpus import (
+    expected_text,
+    is_layout_doc,
+    render_layout,
+    render_pdf,
+)
 from dpo_ocr_spark.extract.pdf import (
     _decode_pdf_string,
     _parse_content,
@@ -142,13 +148,16 @@ _HOSTILE_PIECES = [
 
 @given(
     st.lists(st.sampled_from(_HOSTILE_PIECES), max_size=30).map("".join),
-    st.integers(0, 1),
+    st.sampled_from([0, 1, 4, 9]),
 )
-@settings(max_examples=400, derandomize=True, deadline=None)
+@settings(max_examples=1000, derandomize=True, deadline=None)
 def test_token_offsets_slice_text_on_hostile_input(raw, doc_id):
-    # doc_id parity picks the FlateDecode or the raw content stream
-    kind, text, tokens, _nb = _extract_one(render_pdf(doc_id, raw), None)
-    assert kind == "pdf"
+    # layout doc ids (doc_id % 5 == 4) render the layout JSON; otherwise
+    # doc_id parity picks the PDF's FlateDecode or raw content stream
+    kind = "layout" if is_layout_doc(doc_id) else "pdf"
+    render = render_layout if kind == "layout" else render_pdf
+    got, text, tokens, _nb = _extract_one(render(doc_id, raw), None)
+    assert got == kind
     for tok in tokens:
         start, end = tok[8], tok[9]
         assert 0 <= start <= end <= len(text), (tok, text)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import dpo_ocr_spark.ops.curation as C
+import dpo_ocr_spark.ops.dedup as D
 import dpo_ocr_spark.ops.sketches as SK
 
 SF = "/root/testdata/sf0.001"
@@ -27,7 +27,7 @@ def test_source_counts_cms_exact(spark):
 def test_term_topk_matches_exact_groupby(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     exact = (
-        docs.select(F.explode(C._words()).alias("term"))
+        docs.select(F.explode(D._words()).alias("term"))
         .groupBy("term").agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "term").limit(SK.TOPK_K)
     )
