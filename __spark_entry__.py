@@ -6,7 +6,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 Engine: ``dpo_ocr_spark`` — see SURVEY.md §2 for the operator inventory
-each query key maps to.
+each query key maps to.  This module is the one loader of the query
+layer: importing the seven ``queries_*`` modules (after ``queries``, the
+registry they all import) registers every query.
 """
 
 from __future__ import annotations
@@ -15,7 +17,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dpo_ocr_spark import queries as Q
+from dpo_ocr_spark import (  # noqa: F401 (each module registers on import)
+    queries as Q,
+    queries_ops,
+    queries_eval,
+    queries_curation,
+    queries_canary,
+    queries_cascade,
+    queries_sinks,
+    queries_warc,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -26,7 +37,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(Q.QUERIES)
+    """Every registered query; the 50 the driver samples (``Q._FIRST``)
+    come first, the rest in registration order."""
+    return {n: Q.QUERIES[n] for n in Q._FIRST} | Q.QUERIES
 
 
 def oracle_sql() -> dict[str, str]:

@@ -23,7 +23,7 @@ behavior gap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 SIZES = [0.05, 0.1, 0.2, 0.3, 0.4, 0.5]
 
@@ -137,6 +137,22 @@ def _auto_long(fields: DataFrame) -> DataFrame:
     )
 
 
+def _pct_matched(j: DataFrame, matched: Column) -> DataFrame:
+    """Per (field, reference_size) of the golden × auto join ``j``: the
+    golden values, those ``matched`` keeps non-null, and their share."""
+    return (
+        j.select("field", "reference_size", "data", matched.alias("m"))
+        .groupBy("field", "reference_size")
+        .agg(
+            F.round(F.count("m") * 100.0 / F.count("data"), 2).alias(
+                "pct_matched"
+            ),
+            F.count("data").alias("n_golden"),
+            F.count("m").alias("n_matched"),
+        )
+    )
+
+
 def accuracy_over_auto(
     spark: SparkSession,
     sf_dir: str,
@@ -156,17 +172,7 @@ def accuracy_over_auto(
         auto_long, ["url", "reference_size", "field"], "left"
     )
     matched = F.when(F.col("value") == F.col("data"), F.col("value"))
-    return (
-        j.select("field", "reference_size", "data", matched.alias("m"))
-        .groupBy("field", "reference_size")
-        .agg(
-            F.round(F.count("m") * 100.0 / F.count("data"), 2).alias(
-                "pct_matched"
-            ),
-            F.count("data").alias("n_golden"),
-            F.count("m").alias("n_matched"),
-        )
-    )
+    return _pct_matched(j, matched)
 
 
 def accuracy(
@@ -208,14 +214,4 @@ def accuracy(
         matched = F.when(
             F.col("auto_value") == F.col("data"), F.col("auto_value")
         )
-    return (
-        j.select("field", "reference_size", "data", matched.alias("m"))
-        .groupBy("field", "reference_size")
-        .agg(
-            F.round(F.count("m") * 100.0 / F.count("data"), 2).alias(
-                "pct_matched"
-            ),
-            F.count("data").alias("n_golden"),
-            F.count("m").alias("n_matched"),
-        )
-    )
+    return _pct_matched(j, matched)

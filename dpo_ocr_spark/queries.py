@@ -1,6 +1,12 @@
 """Query registry: every implemented operator gets a ``QUERIES`` entry and,
 when SQL-expressible, an ``ORACLES`` DuckDB-SQL twin (driver contract).
 
+This module is the leaf of the query layer: it holds the registry, the
+oracle fragments and stage builders the query modules share, and its own
+queries, and it imports no ``queries_*`` module.  Each ``queries_*``
+module imports it and registers its queries on import;
+``__spark_entry__`` is the one loader that imports them all.
+
 Oracle design rules (FP-safe hashing):
 - integer-exact outputs wherever possible (counts, ``conf_x100`` sums);
 - money values integerised as ``floor(x * 10000 + 0.5)`` on plain doubles in
@@ -25,6 +31,10 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from . import relational as R
+from .interpret.dims import _COUNTIES
+from .interpret.labels import PRECISE_TAILS
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -55,6 +65,10 @@ def _url_sql_of(expr: str) -> str:
 
 
 _URL_SQL = _url_sql_of("doc_id")
+
+# the DuckDB word contract: lowercase, every whitespace run collapsed to
+# one space (the twin of ops/dedup._norm_text)
+_NORM_SQL = r"regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')"
 
 # host base — corpus.page_url's scheme+host prefix (outlink resolution)
 _HOST_SQL = (
@@ -388,20 +402,15 @@ def q_block_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _register_relational() -> None:
-    from . import relational as R
-
-    pairs: list[tuple[str, Callable, str]] = [
-        (
-            "filter_scan",
-            R.q_filter_scan,
-            """SELECT event_id, user_id, value FROM events
+register(
+    "filter_scan",
+    """SELECT event_id, user_id, value FROM events
                WHERE value > 50.0 AND event_type = 'click'""",
-        ),
-        (
-            "multiway_join",
-            R.q_multiway_join,
-            """SELECT n_name,
+)(R.q_filter_scan)
+
+register(
+    "multiway_join",
+    """SELECT n_name,
                       CAST(SUM(CAST(floor(l_extendedprice * (1 - l_discount)
                                      * 10000.0 + 0.5) AS BIGINT)) AS BIGINT)
                         AS revenue_x10k,
@@ -411,83 +420,83 @@ def _register_relational() -> None:
                JOIN customer ON o_custkey  = c_custkey
                JOIN nation   ON c_nationkey = n_nationkey
                GROUP BY n_name""",
-        ),
-        (
-            "left_join_counts",
-            R.q_left_join_counts,
-            """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
+)(R.q_multiway_join)
+
+register(
+    "left_join_counts",
+    """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders
                FROM customer LEFT JOIN orders ON c_custkey = o_custkey
                GROUP BY c_custkey, c_name""",
-        ),
-        (
-            "semi_join",
-            R.q_semi_join,
-            """SELECT o_orderkey, o_orderstatus FROM orders
+)(R.q_left_join_counts)
+
+register(
+    "semi_join",
+    """SELECT o_orderkey, o_orderstatus FROM orders
                WHERE o_orderkey IN
                  (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 49)""",
-        ),
-        (
-            "anti_join",
-            R.q_anti_join,
-            """SELECT o_orderkey, o_orderstatus FROM orders
+)(R.q_semi_join)
+
+register(
+    "anti_join",
+    """SELECT o_orderkey, o_orderstatus FROM orders
                WHERE o_orderkey NOT IN
                  (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 49)""",
-        ),
-        (
-            "topk_window",
-            R.q_topk_window,
-            """SELECT c_nationkey, c_custkey, c_acctbal FROM (
+)(R.q_anti_join)
+
+register(
+    "topk_window",
+    """SELECT c_nationkey, c_custkey, c_acctbal FROM (
                  SELECT c_nationkey, c_custkey, c_acctbal,
                         row_number() OVER (PARTITION BY c_nationkey
                           ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
                  FROM customer) WHERE rn = 1""",
-        ),
-        (
-            "avg_round",
-            R.q_avg_round,
-            """SELECT l_returnflag, l_linestatus,
+)(R.q_topk_window)
+
+register(
+    "avg_round",
+    """SELECT l_returnflag, l_linestatus,
                       round(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)))
                                  AS DOUBLE) / COUNT(*), 4) AS avg_qty,
                       COUNT(*) AS n_rows
                FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-        ),
-        (
-            "count_distinct",
-            R.q_count_distinct,
-            """SELECT o_orderstatus,
+)(R.q_avg_round)
+
+register(
+    "count_distinct",
+    """SELECT o_orderstatus,
                       COUNT(DISTINCT o_custkey) AS n_customers,
                       COUNT(*) AS n_orders
                FROM orders GROUP BY o_orderstatus""",
-        ),
-        (
-            "string_agg_distinct",
-            R.q_string_agg_distinct,
-            """SELECT user_id,
+)(R.q_count_distinct)
+
+register(
+    "string_agg_distinct",
+    """SELECT user_id,
                       array_to_string(list_sort(list(DISTINCT event_type)), ',')
                         AS event_types
                FROM events GROUP BY user_id""",
-        ),
-        (
-            "minmax_envelope",
-            R.q_minmax_envelope,
-            """SELECT l_returnflag,
+)(R.q_string_agg_distinct)
+
+register(
+    "minmax_envelope",
+    """SELECT l_returnflag,
                       greatest(MIN(l_quantity), 2.0) AS qty_lo,
                       least(MAX(l_quantity), 49.0) AS qty_hi,
                       MIN(l_shipdate) AS first_ship,
                       MAX(l_shipdate) AS last_ship
                FROM lineitem GROUP BY l_returnflag""",
-        ),
-        (
-            "histogram",
-            R.q_histogram,
-            """SELECT CAST(floor(value / 25.0) AS INT) AS bucket,
+)(R.q_minmax_envelope)
+
+register(
+    "histogram",
+    """SELECT CAST(floor(value / 25.0) AS INT) AS bucket,
                       COUNT(*) AS n
                FROM events GROUP BY 1""",
-        ),
-        (
-            "case_bucket",
-            R.q_case_bucket,
-            """SELECT CASE WHEN l_discount > 0.08 THEN 'high'
+)(R.q_histogram)
+
+register(
+    "case_bucket",
+    """SELECT CASE WHEN l_discount > 0.08 THEN 'high'
                            WHEN l_discount > 0.04 THEN 'mid'
                            WHEN l_discount > 0.02 THEN 'low'
                            ELSE 'none' END AS disc_class,
@@ -495,60 +504,53 @@ def _register_relational() -> None:
                       CAST(SUM(CAST(floor(l_extendedprice * 10000.0 + 0.5)
                                AS BIGINT)) AS BIGINT) AS gross_x10k
                FROM lineitem GROUP BY 1""",
-        ),
-        (
-            "union_distinct",
-            R.q_union_distinct,
-            """SELECT p_brand AS name, 1 AS sortorder FROM part
+)(R.q_case_bucket)
+
+register(
+    "union_distinct",
+    """SELECT p_brand AS name, 1 AS sortorder FROM part
                UNION
                SELECT p_type AS name, 2 AS sortorder FROM part""",
-        ),
-        (
-            "unpivot",
-            R.q_unpivot,
-            """SELECT p_partkey, 'brand' AS field, p_brand AS data FROM part
+)(R.q_union_distinct)
+
+register(
+    "unpivot",
+    """SELECT p_partkey, 'brand' AS field, p_brand AS data FROM part
                WHERE p_brand IS NOT NULL
                UNION ALL
                SELECT p_partkey, 'type', p_type FROM part
                WHERE p_type IS NOT NULL""",
-        ),
-        (
-            "range_join",
-            R.q_range_join,
-            """SELECT r_regionkey AS zone_id, COUNT(*) AS n_orders,
+)(R.q_unpivot)
+
+register(
+    "range_join",
+    """SELECT r_regionkey AS zone_id, COUNT(*) AS n_orders,
                       CAST(SUM(CAST(floor(o_totalprice * 10000.0 + 0.5)
                                AS BIGINT)) AS BIGINT) AS total_x10k
                FROM orders JOIN region
                  ON o_totalprice >= r_regionkey * 60000.0
                 AND o_totalprice < (r_regionkey + 1) * 60000.0
                GROUP BY 1""",
-        ),
-        (
-            "fuzzy_argmax",
-            R.q_fuzzy_argmax,
-            """SELECT query, s_suppkey, s_name, dist FROM (
+)(R.q_range_join)
+
+register(
+    "fuzzy_argmax",
+    """SELECT query, s_suppkey, s_name, dist FROM (
                  SELECT n_name AS query, s_suppkey, s_name,
                         levenshtein(s_name, n_name) AS dist,
                         row_number() OVER (PARTITION BY n_name
                           ORDER BY levenshtein(s_name, n_name) ASC,
                                    length(s_name) ASC, s_suppkey ASC) AS rn
                  FROM supplier CROSS JOIN nation) WHERE rn = 1""",
-        ),
-        (
-            "split_sample",
-            R.q_split_sample,
-            """SELECT doc_id,
+)(R.q_fuzzy_argmax)
+
+register(
+    "split_sample",
+    """SELECT doc_id,
                       CASE WHEN doc_id % 10 < 2 THEN 'ref' ELSE 'test' END
                         AS ref_or_test
                FROM documents""",
-        ),
-    ]
-    for name, fn, sql in pairs:
-        QUERIES[name] = fn
-        ORACLES[name] = sql
-
-
-_register_relational()
+)(R.q_split_sample)
 
 
 # ---------------------------------------------------------------------------
@@ -577,6 +579,18 @@ lbl AS (
   WHERE o_orderkey % 100 = 0
 )
 """
+
+# county / precise-locality tail of a label, k/100-indexed (labels are
+# multiples of 100 — k % 10/5 is degenerate; k/100 is exact in double, so
+# the CAST is loss-free)
+_COUNTY_SQL = (
+    "[" + ", ".join(f"'{c}'" for c in _COUNTIES) + "]"
+    "[CAST((k / 100) % 10 AS INT) + 1]"
+)
+_TAIL_SQL = (
+    "[" + ", ".join(f"'{t}'" for t in PRECISE_TAILS) + "]"
+    "[CAST((k / 100) % 5 AS INT) + 1]"
+)
 
 
 def _label_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,19 +695,6 @@ def q_interp_collector(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(*_INTERP_COLS)
 
 
-@register("interpret_full")
-def q_interpret_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full §3.2 pipeline incl. locality/taxonomy fuzzy match and the
-    pg_trgm similarity fallback.  Rows-only from r1-r4; since r5 the
-    designed fixture outcome is SQL-derivable end-to-end (see
-    queries_cascade.py, which also slices this same cached frame into six
-    stage queries), so the composite carries a full-table oracle —
-    registered after queries_cascade import below."""
-    from .queries_cascade import _full_frame
-
-    return _full_frame(spark, sf_dir)
-
-
 @register(
     "reading_order",
     f"""
@@ -716,23 +717,12 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", "block", "block_text", _conf_sum_x100(), "n_words"
     )
 
-# side-effect registration of the training-data ops queries
-from . import queries_ops  # noqa: E402,F401
-from . import queries_eval  # noqa: E402,F401
-from . import queries_curation  # noqa: E402,F401
-from . import queries_canary  # noqa: E402,F401
-from . import queries_cascade  # noqa: E402,F401
-from . import queries_sinks  # noqa: E402,F401
-from . import queries_warc  # noqa: E402,F401
-
-ORACLES["interpret_full"] = queries_cascade.INTERPRET_FULL_ORACLE
-
 
 # ---------------------------------------------------------------------------
 # Registry order (r4): the driver's CORRECTNESS gate samples the FIRST 50
 # entries.  Rounds 1-3 always sampled the same long-green r1 block, so 44
 # registered queries never received a driver row (VERDICT r3, What's wrong
-# #3).  The rotation below front-loads (a) the flagship pair, (b) the three
+# #3).  ``__spark_entry__.queries()`` front-loads (a) the flagship pair, (b) the three
 # r3-disputed queries (so their green/FAIL row lands every round), (c) the
 # first r4 wave of modified/added queries, then (d) the 40 oracle-backed
 # never-driver-checked queries — filling all 50 slots (the r3 VERDICT's
@@ -807,14 +797,3 @@ _FIRST = [
     # covered by the local sweep (ORACLES_r{N}.txt) every round.
 ]
 assert len(_FIRST) == 50, "driver-sample boundary must be deliberate"
-
-
-def _rotate() -> None:
-    ordered = [n for n in _FIRST if n in QUERIES]
-    ordered += [n for n in QUERIES if n not in ordered]
-    snapshot = dict(QUERIES)
-    QUERIES.clear()
-    QUERIES.update({n: snapshot[n] for n in ordered})
-
-
-_rotate()

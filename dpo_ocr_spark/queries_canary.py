@@ -43,7 +43,7 @@ All Spark sides are constant frames (``spark.range``/``VALUES``) — the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .queries import register
 
@@ -118,8 +118,6 @@ def _canary_floor_half(spark: SparkSession, sf_dir: str) -> DataFrame:
        GROUP BY ROLLUP (g)""",
 )
 def _canary_rollup_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame([("a",), ("a",), ("b",)], "g string")
     return (
         df.rollup("g")
@@ -160,8 +158,6 @@ def _canary_float_str(spark: SparkSession, sf_dir: str) -> DataFrame:
        FROM (VALUES (1), (2), (3), (4), (5)) t(i)""",
 )
 def _canary_sum_cast_bigint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return spark.range(1, 6).agg(
         F.sum("id").cast("long").alias("s"), F.count("*").alias("n")
     )
@@ -173,8 +169,6 @@ def _canary_sum_cast_bigint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT SUM(i) AS s FROM (VALUES (1), (2), (3), (4), (5)) t(i)",
 )
 def _canary_hugeint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return spark.range(1, 6).agg(F.sum("id").alias("s"))
 
 

@@ -36,8 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .interpret.dims import _GENERA, _SPECIES
 from .interpret.labels import ROMAN_OF_MONTH
-from .queries import _LBL_CTE, register
-from .sqlfrags import _COUNTY_SQL, _TAIL_SQL
+from .queries import _COUNTY_SQL, _LBL_CTE, _TAIL_SQL, register
 
 # roman month of d INCLUDING XII (the date-stage filter, not the map,
 # encodes the X11 quirk here: block text always renders December as XII)
@@ -210,3 +209,5 @@ UNION ALL
 UNION ALL
 {_SQL_TAXONOMY}
 """
+
+register("interpret_full", INTERPRET_FULL_ORACLE)(_full_frame)

@@ -11,11 +11,34 @@ epoch-microsecond timestamps).
 
 from __future__ import annotations
 
-from .queries import ORACLES, register
-from .session import scratch_dir as _scratch_dir
 from .ops import curation as C
 from .ops import events as EV
+from .ops import sketches as SKT
+from .ops.av import (
+    AUDIO_FEATURES_ORACLE,
+    VIDEO_FRAME_SAMPLE_ORACLE,
+    audio_features,
+    video_frame_sample,
+)
+from .ops.bpe import bpe_oracle, bpe_train
+from .ops.dedup import (
+    BATCH_MOD,
+    MAX_GROUP,
+    cluster_representatives,
+    incremental_dedup,
+)
+from .ops.events import GAP_S
+from .ops.pixels import IMAGE_AUTOCROP_ORACLE, image_autocrop
 from .ops.similarity import SEMANTIC_PRUNE_ORACLE, semantic_prune
+from .ops.textstats import HOST_CAP, host_cap
+from .queries import _NORM_SQL, _URL_SQL, register
+from .queries_ops import (
+    CURATION_VERDICT_ORACLE,
+    DEDUP_CLUSTERS_ORACLE,
+    _SH_CTE,
+    _STOP_EN,
+)
+from .session import scratch_dir as _scratch_dir
 
 
 def _q_streaming_window_counts(spark, sf_dir: str):
@@ -106,12 +129,10 @@ register(
 )(_q_streaming_interval_join)
 
 
-def _curated_training_oracle() -> str:
-    # chain the already-registered curation_verdict oracle, then apply the
-    # training_order hash/rank contract over its keepers
-    verdict_sql = ORACLES["curation_verdict"]
-    return f"""
-WITH verd AS ({verdict_sql}),
+# chain the curation_verdict oracle, then apply the training_order
+# hash/rank contract over its keepers
+CURATED_TRAINING_ORACLE = f"""
+WITH verd AS ({CURATION_VERDICT_ORACLE}),
 kept AS (SELECT doc_id FROM verd WHERE keep),
 h AS (
   SELECT doc_id,
@@ -125,18 +146,10 @@ SELECT doc_id, h % {C.N_SHARDS} AS shard,
 FROM h
 """
 
-
-register(
-    "curated_training_set",
-    _curated_training_oracle(),
-)(C.curated_training_set)
+register("curated_training_set", CURATED_TRAINING_ORACLE)(C.curated_training_set)
 
 
-def _host_cap_oracle() -> str:
-    from .queries import _URL_SQL
-    from .ops.textstats import HOST_CAP
-
-    return f"""
+HOST_CAP_ORACLE = f"""
 WITH pages AS (
   SELECT {_URL_SQL} AS url FROM documents
 ), h AS (
@@ -151,36 +164,28 @@ SELECT url, host,
 FROM h
 """
 
-
-from .ops.textstats import host_cap  # noqa: E402
-
-register("host_cap", _host_cap_oracle())(host_cap)
+register("host_cap", HOST_CAP_ORACLE)(host_cap)
 
 
-def _incremental_dedup_oracle() -> str:
-    from .ops.dedup import BATCH_MOD, MAX_GROUP, incremental_dedup  # noqa: F401
-    from .queries_ops import _SH_CTE
-
-    m = BATCH_MOD
-    return f"""
+INCREMENTAL_DEDUP_ORACLE = f"""
 WITH {_SH_CTE},
 fps AS (
   SELECT doc_id,
-         md5(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS fp,
-         doc_id % {m} = 0 AS b
+         md5({_NORM_SQL}) AS fp,
+         doc_id % {BATCH_MOD} = 0 AS b
   FROM documents
 ), exact AS (
   SELECT DISTINCT f.doc_id FROM fps f
   WHERE f.b AND EXISTS (SELECT 1 FROM fps c WHERE NOT c.b AND c.fp = f.fp)
 ), corp_df AS (
-  SELECT shingle, COUNT(*) AS df FROM sh WHERE doc_id % {m} <> 0
+  SELECT shingle, COUNT(*) AS df FROM sh WHERE doc_id % {BATCH_MOD} <> 0
   GROUP BY shingle
 ), inter AS (
   SELECT n.doc_id AS new_id, c.doc_id AS corp_id, COUNT(*) AS n_inter
   FROM sh n
   JOIN sh c ON n.shingle = c.shingle
   JOIN corp_df d ON d.shingle = n.shingle AND d.df <= {MAX_GROUP}
-  WHERE n.doc_id % {m} = 0 AND c.doc_id % {m} <> 0
+  WHERE n.doc_id % {BATCH_MOD} = 0 AND c.doc_id % {BATCH_MOD} <> 0
   GROUP BY 1, 2
 ), sizes AS (
   SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
@@ -206,13 +211,10 @@ SELECT d.doc_id,
 FROM documents d
 LEFT JOIN exact e ON e.doc_id = d.doc_id
 LEFT JOIN best b ON b.doc_id = d.doc_id
-WHERE d.doc_id % {m} = 0
+WHERE d.doc_id % {BATCH_MOD} = 0
 """
 
-
-from .ops.dedup import incremental_dedup  # noqa: E402
-
-register("incremental_dedup", _incremental_dedup_oracle())(incremental_dedup)
+register("incremental_dedup", INCREMENTAL_DEDUP_ORACLE)(incremental_dedup)
 
 register("pii_scrub", C.PII_ORACLE)(C.pii_scrub)
 
@@ -237,10 +239,7 @@ def _q_streaming_sessionize(spark, sf_dir: str):
     )
 
 
-def _streaming_sessionize_oracle() -> str:
-    from .ops.events import GAP_S
-
-    return f"""
+STREAM_SESSIONIZE_ORACLE = f"""
 WITH base AS (
   SELECT user_id, epoch_us(ts) AS t_us FROM events
 ), flagged AS (
@@ -268,13 +267,10 @@ FROM (SELECT *, MAX(session_id) OVER (PARTITION BY user_id) AS last_sid
 WHERE session_id <> last_sid
 """
 
-
 register(
     "streaming_sessionize",
-    _streaming_sessionize_oracle(),
+    STREAM_SESSIONIZE_ORACLE,
 )(_q_streaming_sessionize)
-
-from .ops.pixels import IMAGE_AUTOCROP_ORACLE, image_autocrop  # noqa: E402
 
 register("image_autocrop", IMAGE_AUTOCROP_ORACLE)(image_autocrop)
 # same arithmetic oracle through the COMPRESSED codec paths: PNG is
@@ -301,12 +297,8 @@ register(
 )(lambda spark, sf_dir: image_autocrop(spark, sf_dir, codec="jpeg_prog"))
 
 
-def _cluster_reps_oracle() -> str:
-    from .queries_ops import _STOP_EN
-
-    clusters_sql = ORACLES["dedup_clusters"]
-    return f"""
-WITH cl AS ({clusters_sql}),
+CLUSTER_REPS_ORACLE = f"""
+WITH cl AS ({DEDUP_CLUSTERS_ORACLE}),
 q AS (
   SELECT doc_id,
          CAST(floor(len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+'),
@@ -326,13 +318,9 @@ SELECT doc_id, cluster_id, quality_x1000, rep_doc_id,
 FROM rk
 """
 
-
-from .ops.dedup import cluster_representatives  # noqa: E402
-
-register(
-    "cluster_representatives",
-    _cluster_reps_oracle(),
-)(cluster_representatives)
+register("cluster_representatives", CLUSTER_REPS_ORACLE)(
+    cluster_representatives
+)
 
 register("url_normalize", C.URL_NORMALIZE_ORACLE)(C.url_normalize)
 
@@ -345,12 +333,6 @@ register("cube_summary", EV.CUBE_SUMMARY_ORACLE)(EV.cube_summary)
 # stdlib/numpy — see ops/av.py header for the honest remaining boundary:
 # compressed audio / inter-frame video codecs).  Designed-fixture exact
 # oracles, BIGINT/INT-only outputs per the r5 type ban.
-from .ops.av import (  # noqa: E402
-    AUDIO_FEATURES_ORACLE,
-    VIDEO_FRAME_SAMPLE_ORACLE,
-    audio_features,
-    video_frame_sample,
-)
 
 register("audio_features", AUDIO_FEATURES_ORACLE)(audio_features)
 register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)
@@ -362,7 +344,6 @@ register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)
 # approximate path is value-checked without hashing an estimate —
 # gram_cardinality_hll emits the exact count plus an integer-math ±5%
 # agreement flag the oracle pins TRUE.
-from .ops import sketches as SKT  # noqa: E402
 
 register(
     "source_counts_cms",
@@ -372,10 +353,7 @@ FROM documents GROUP BY 1
 """,
 )(SKT.source_counts_cms)
 
-_WS_TERMS = (
-    "unnest(regexp_split_to_array(regexp_replace(lower(text),"
-    " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' '))"
-)
+_WS_TERMS = f"unnest(regexp_split_to_array({_NORM_SQL}, ' '))"
 
 register(
     "term_topk_sketch",
@@ -390,7 +368,7 @@ _GRAMS_BY_LANG = f"""
 ws AS (
   SELECT lang,
          regexp_split_to_array(
-           regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS w
+           {_NORM_SQL}, ' ') AS w
   FROM documents
 ), g AS (
   SELECT lang,
@@ -417,6 +395,5 @@ SELECT 'ALL', count(DISTINCT gram), TRUE FROM g
 # weighted pair counting over the distinct-word table; the DuckDB twin
 # replays every data-driven iteration via materialized CTEs + scalar
 # subqueries, so the full iterative computation is value-checked.
-from .ops.bpe import bpe_oracle, bpe_train  # noqa: E402
 
 register("bpe_merges", bpe_oracle())(bpe_train)

@@ -12,11 +12,21 @@ Oracle notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import ORACLES, _LBL_CTE, register
-from .sqlfrags import _COUNTY_SQL, _TAIL_SQL  # noqa: F401 (re-export)
 from .eval import harness as H
+from .queries import (
+    _COUNTY_SQL,
+    _ETEXT_CTE,
+    _INTERP_COLS,
+    _LBL_CTE,
+    _TAIL_SQL,
+    _TOKENS_CTE,
+    _extracted,
+    _tokens,
+    register,
+)
+from .session import scratch_dir as _scratch_dir
 
 _SIZES_SQL = ", ".join(f"('{s}', {int(s * 100)})" for s in H.SIZES)
 
@@ -129,9 +139,7 @@ def _q_accuracy_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return H.accuracy(spark, sf_dir, fields, fuzzy=False)
 
 
-register(
-    "eval_accuracy_exact",
-    f"""
+EVAL_ACCURACY_EXACT_ORACLE = f"""
 WITH {_GOLDEN_CTE},
 test_g AS (
   SELECT g.url, g.field, g.data, g.mon, s.reference_size
@@ -151,8 +159,9 @@ SELECT field, reference_size,
        COUNT(m) AS n_matched
 FROM matched
 GROUP BY field, reference_size
-""",
-)(_q_accuracy_exact)
+"""
+
+register("eval_accuracy_exact", EVAL_ACCURACY_EXACT_ORACLE)(_q_accuracy_exact)
 
 
 def _q_accuracy_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,10 +177,7 @@ def _q_accuracy_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a word_similarity kernel that under-scores identical strings or
 # mishandles NULLs breaks this hash. (The kernel's pg_trgm values are
 # separately pinned against published outputs in tests/test_interpret.py.)
-register(
-    "eval_accuracy_trgm",
-    ORACLES["eval_accuracy_exact"],
-)(_q_accuracy_fuzzy)
+register("eval_accuracy_trgm", EVAL_ACCURACY_EXACT_ORACLE)(_q_accuracy_fuzzy)
 
 
 # --- §3.3 auto-match cascade (auto_id_compare.py:276-311, 519-555) -----------
@@ -251,8 +257,6 @@ _GEO_DESIGNED = [
 
 
 def _q_accuracy_geo_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return _q_accuracy_geo(spark, sf_dir).filter(
         F.col("field").isin(_GEO_DESIGNED)
     )
@@ -298,8 +302,6 @@ _AUTO_DESIGNED = [
 
 
 def _q_accuracy_auto_designed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return _q_accuracy_auto(spark, sf_dir).filter(
         F.col("field").isin(_AUTO_DESIGNED)
     )
@@ -336,7 +338,6 @@ def _q_other_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     back from DuckDB as Decimal and the gate renders Decimal ≠ float)."""
     from .interpret.labels import ento_blocks
     from .interpret.match import match_other_numbers
-    from .queries import _INTERP_COLS
 
     return match_other_numbers(ento_blocks(spark, sf_dir)).select(
         *_INTERP_COLS
@@ -370,9 +371,7 @@ def _q_span_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_records(lines, fields)
 
 
-register(
-    "span_records",
-    f"""
+SPAN_RECORDS_ORACLE = f"""
 WITH {_GOLDEN_CTE},
 lines AS (
   -- blocks in reading order: roman-date, elevation 'Alt N', year, Coll.
@@ -412,8 +411,9 @@ SELECT url, field,
        line AS content
 FROM f
 WHERE verbatim IS NOT NULL AND strpos(line, verbatim) > 1
-""",
-)(_q_span_records)
+"""
+
+register("span_records", SPAN_RECORDS_ORACLE)(_q_span_records)
 
 
 def _q_training_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,7 +428,7 @@ def _q_training_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # struct (end, start, display_name); minimal JSON escaping (backslash,
 # quote) matches Jackson on this corpus (ASCII, no control chars).
 _TRAIN_JSONL_SQL = (
-    "WITH spans AS (\n" + ORACLES["span_records"] + "\n),\n"
+    "WITH spans AS (\n" + SPAN_RECORDS_ORACLE + "\n),\n"
     """ann AS (
   SELECT url,
          '{"text_extraction":{"text_segment":{"end_offset":'
@@ -473,32 +473,22 @@ zcell AS (
 """
 
 
-def _zonal_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .assemble import explode_tokens
-    from .queries import _extracted
-
-    return explode_tokens(_extracted(spark, sf_dir))
-
-
 def _q_zonal_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .zones import zonal_data, zone_template
 
-    return zonal_data(_zonal_tokens(spark, sf_dir), zone_template(spark))
+    return zonal_data(_tokens(spark, sf_dir), zone_template(spark))
 
 
 def _q_zonal_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .zones import zonal_data, zonal_pivot, zone_template
 
-    cells = zonal_data(_zonal_tokens(spark, sf_dir), zone_template(spark))
+    cells = zonal_data(_tokens(spark, sf_dir), zone_template(spark))
     return zonal_pivot(cells)
 
 
-def _register_zonal() -> None:
-    from .queries import _TOKENS_CTE
-
-    register(
-        "zonal_cells",
-        f"""
+register(
+    "zonal_cells",
+    f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE}
 SELECT url,
        'z' || CAST(row_no AS VARCHAR)
@@ -511,10 +501,11 @@ SELECT url,
 FROM zcell WHERE field_name IS NOT NULL
 GROUP BY url, field_name, row_no
 """,
-    )(_q_zonal_cells)
-    register(
-        "zonal_pivot",
-        f"""
+)(_q_zonal_cells)
+
+register(
+    "zonal_pivot",
+    f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE},
 cells AS (
   SELECT url, field_name, row_no,
@@ -527,10 +518,7 @@ SELECT url, CAST(row_no AS INT) AS row_no,
        max(CASE WHEN field_name = 'right_col' THEN cell_text END) AS right_col
 FROM cells GROUP BY url, row_no
 """,
-    )(_q_zonal_pivot)
-
-
-_register_zonal()
+)(_q_zonal_pivot)
 
 
 # --- QA summary queries (ui/app.R:103-186 family) -------------------------------
@@ -539,9 +527,7 @@ _register_zonal()
 def _q_url_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2+A2+A3: per-url token stats — mean confidence (integer-exact),
     'successful OCR' count at the 0.7 floor (ui/app.R:109-130)."""
-    from pyspark.sql import functions as F
-
-    t = _zonal_tokens(spark, sf_dir)
+    t = _tokens(spark, sf_dir)
     conf_x100 = F.round(F.col("confidence") * 100).cast("long")
     return t.groupBy("url").agg(
         F.count("*").alias("n_tokens"),
@@ -553,21 +539,16 @@ def _q_url_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: 40-bin confidence histogram (ui/app.R:457-466), bins computed
     from the exact integer form to stay engine-identical."""
-    from pyspark.sql import functions as F
-
-    t = _zonal_tokens(spark, sf_dir)
+    t = _tokens(spark, sf_dir)
     bucket = F.floor(
         F.round(F.col("confidence") * 100).cast("long") * 40 / 100
     ).cast("int")
     return t.groupBy(bucket.alias("bin")).agg(F.count("*").alias("n"))
 
 
-def _register_qa() -> None:
-    from .queries import _TOKENS_CTE
-
-    register(
-        "url_confidence",
-        f"""
+register(
+    "url_confidence",
+    f"""
 WITH {_TOKENS_CTE}
 SELECT url, COUNT(*) AS n_tokens,
        CAST(SUM(conf_x100) AS BIGINT) AS conf_sum_x100,
@@ -575,25 +556,20 @@ SELECT url, COUNT(*) AS n_tokens,
          AS n_ok
 FROM tok GROUP BY url
 """,
-    )(_q_url_confidence)
-    register(
-        "conf_histogram",
-        f"""
+)(_q_url_confidence)
+
+register(
+    "conf_histogram",
+    f"""
 WITH {_TOKENS_CTE}
 SELECT CAST(floor(conf_x100 * 40 / 100) AS INT) AS bin,
        COUNT(*) AS n
 FROM tok GROUP BY 1
 """,
-    )(_q_conf_histogram)
-
-
-_register_qa()
+)(_q_conf_histogram)
 
 
 # --- streaming (AvailableNow drain; equivalence checked in pytest) ---------------
-
-
-from .session import scratch_dir as _scratch_dir  # noqa: E402
 
 
 def _q_streaming_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,8 +595,6 @@ def _streaming_oracle(select: str) -> str:
     expected-text derivation — the stream adds no value semantics, only
     incremental execution (r4 verdict stretch item: streaming value
     checks via the batch twin)."""
-    from .queries import _ETEXT_CTE
-
     return f"WITH {_ETEXT_CTE}\n{select}"
 
 
@@ -636,8 +610,6 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction stage, durable parquet sink (rows-only; exactly-once
     across restarts pinned in tests/test_streaming.py).  The source is
     written with duplicate urls so the state actually drops rows."""
-    from pyspark.sql import functions as F
-
     from .corpus import build_web_pages
     from .streaming.stream import stream_dedup_extract
 
@@ -671,15 +643,12 @@ register(
 def _q_annotate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .export import annotate_plan
 
-    return annotate_plan(_zonal_tokens(spark, sf_dir))
+    return annotate_plan(_tokens(spark, sf_dir))
 
 
-def _register_annotate() -> None:
-    from .queries import _TOKENS_CTE
-
-    register(
-        "annotate_plan",
-        f"""
+register(
+    "annotate_plan",
+    f"""
 WITH {_TOKENS_CTE},
 geo AS (
   SELECT doc_id, url, block, word, conf_x100, widx,
@@ -711,10 +680,7 @@ SELECT url, CAST(block AS INT) AS block,
        CAST(least(by1 + 3, 100) AS INT) AS ay3
 FROM blocks
 """,
-    )(_q_annotate_plan)
-
-
-_register_annotate()
+)(_q_annotate_plan)
 
 
 # --- Document-AI form-field pairs (run_docai.py:130-145) ---------------------
@@ -723,15 +689,12 @@ _register_annotate()
 def _q_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .export import form_fields
 
-    return form_fields(_zonal_tokens(spark, sf_dir))
+    return form_fields(_tokens(spark, sf_dir))
 
 
-def _register_form_fields() -> None:
-    from .queries import _TOKENS_CTE
-
-    register(
-        "form_fields",
-        f"""
+register(
+    "form_fields",
+    f"""
 WITH {_TOKENS_CTE},
 ff AS (
   SELECT url, block AS line, word, widx, conf_x100,
@@ -759,10 +722,7 @@ GROUP BY url, line
 HAVING COUNT(*) FILTER (side = 'f') > 0
    AND COUNT(*) FILTER (side = 'v') > 0
 """,
-    )(_q_form_fields)
-
-
-_register_form_fields()
+)(_q_form_fields)
 
 
 # --- crop-rect planning (I4 + A5 + C13) ------------------------------------------
@@ -772,10 +732,8 @@ def _q_crop_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crop-to-text + buffer + clamp (run_gvision_ocr.py:390-415,
     old/ocr_to_csv.py:56-69): per-url min/max envelope of word quads,
     padded by BUF, clamped to the page box via greatest/least."""
-    from pyspark.sql import functions as F
-
     BUF, PAGE_W, PAGE_H = 10, 2000, 100
-    t = _zonal_tokens(spark, sf_dir).filter(F.col("bbox").isNotNull())
+    t = _tokens(spark, sf_dir).filter(F.col("bbox").isNotNull())
     env = t.groupBy("url").agg(
         F.min(F.element_at("bbox", 1)).alias("x0"),
         F.min(F.element_at("bbox", 2)).alias("y0"),
@@ -799,8 +757,6 @@ def _q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_quantity is integral in TPC-H-style data, so the quantity total is
     emitted as pure-integer ``qty_x10k`` (no DECIMAL and no FP anywhere —
     a hashed DECIMAL column was the r4 gate FAIL for this query)."""
-    from pyspark.sql import functions as F
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.rollup("l_returnflag", "l_linestatus")
@@ -821,8 +777,6 @@ def _q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10/C11/C12 scalar-function chain: concat_ws, replace, initcap,
     round, cast — the reference's string-cleanup idioms
     (block_identification.py:206-233, ui/app.R:388)."""
-    from pyspark.sql import functions as F
-
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")
     r = spark.read.parquet(f"{sf_dir}/region.parquet")
     return (
@@ -840,12 +794,9 @@ def _q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_misc() -> None:
-    from .queries import _TOKENS_CTE
-
-    register(
-        "crop_rects",
-        f"""
+register(
+    "crop_rects",
+    f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE}
 SELECT url,
        CAST(greatest(MIN(wx0) - 10, 0) AS BIGINT) AS crop_x0,
@@ -855,20 +806,22 @@ SELECT url,
        CAST(least(MAX(line_idx * 24 + 18) + 10, 100) AS BIGINT) AS crop_y1
 FROM ztok GROUP BY url
 """,
-    )(_q_crop_rects)
-    register(
-        "rollup_summary",
-        """
+)(_q_crop_rects)
+
+register(
+    "rollup_summary",
+    """
 SELECT COALESCE(l_returnflag, 'ALL') AS rf,
        COALESCE(l_linestatus, 'ALL') AS ls,
        COUNT(*) AS n,
        CAST(SUM(CAST(l_quantity AS BIGINT) * 10000) AS BIGINT) AS qty_x10k
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
-    )(_q_rollup_summary)
-    register(
-        "scalar_chain",
-        """
+)(_q_rollup_summary)
+
+register(
+    "scalar_chain",
+    """
 SELECT n_nationkey,
        lower(replace(n_name || ', ' || r_name, ' EAST', ' East.'))
          AS pretty,
@@ -876,10 +829,7 @@ SELECT n_nationkey,
        CAST(n_nationkey AS VARCHAR) AS key_str
 FROM nation JOIN region ON n_regionkey = r_regionkey
 """,
-    )(_q_scalar_chain)
-
-
-_register_misc()
+)(_q_scalar_chain)
 
 
 # --- paragraph-level dedup (CCNet-style boilerplate detection) ----------------
@@ -892,10 +842,6 @@ def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a single shuffle on the hash key, same shape as exact_dedup;
     consumers anti-join paragraphs with n_docs above a boilerplate
     threshold back against the corpus."""
-    from pyspark.sql import functions as F
-
-    from .queries import _extracted
-
     ext = _extracted(spark, sf_dir)
     paras = ext.select(
         "url", F.posexplode(F.split("text", "\n")).alias("pidx", "para")
@@ -910,12 +856,9 @@ def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_paragraph() -> None:
-    from .queries import _ETEXT_CTE
-
-    register(
-        "paragraph_dedup",
-        f"""
+register(
+    "paragraph_dedup",
+    f"""
 WITH {_ETEXT_CTE},
 p AS (
   SELECT url, unnest(str_split(etext, chr(10))) AS para FROM paras
@@ -924,7 +867,4 @@ SELECT md5(para) AS para_md5, COUNT(*) AS n_occurrences,
        COUNT(DISTINCT url) AS n_docs, MIN(url) AS first_url
 FROM p WHERE length(para) > 0 GROUP BY 1
 """,
-    )(_q_paragraph_dedup)
-
-
-_register_paragraph()
+)(_q_paragraph_dedup)

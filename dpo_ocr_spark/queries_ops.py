@@ -1,7 +1,6 @@
 """Query+oracle registrations for the training-data ops (ops/*).
 
-Separated from queries.py for readability; imported by it for side-effect
-registration.  Shared determinism contracts:
+Shared determinism contracts:
 - shingles: word-3-grams of whitespace-collapsed lowercase text, distinct,
   short texts yield one clipped shingle (slice semantics identical);
 - minhash_i = min over shingles of int64(md5("i|" || shingle)[:15 hex]);
@@ -12,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries import register
+from .queries import _NORM_SQL, register
 from .ops import dedup as D
 from .ops import similarity as S
 from .ops import textstats as TS
@@ -21,11 +20,11 @@ from .ops.textstats import STOPWORDS, SUBWORD_REGEX
 
 # --- shared oracle fragments -------------------------------------------------
 
-_WS_CTE = r"""
+_WS_CTE = f"""
 ws AS (
   SELECT doc_id,
          regexp_split_to_array(
-           regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'), ' ') AS w
+           {_NORM_SQL}, ' ') AS w
   FROM documents
 )
 """
@@ -173,8 +172,6 @@ FROM s
 """,
 )(TS.language_id)
 
-_NORM_SQL = r"regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')"
-
 register(
     "fingerprints",
     f"""
@@ -219,13 +216,11 @@ _VERDICT_CASE = """CASE WHEN NOT is_keeper THEN 'dup'
             WHEN pred_lang != labeled_lang THEN 'lang_mismatch'
             ELSE 'keep' END"""
 
-register(
-    "curation_verdict",
-    f"""
+CURATION_VERDICT_ORACLE = f"""
 WITH k AS (
   SELECT doc_id,
          doc_id = MIN(doc_id) OVER (
-           PARTITION BY md5(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))
+           PARTITION BY md5({_NORM_SQL})
          ) AS is_keeper,
          length(text) AS n_chars,
          CAST(floor(len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\x0b\\f\\r]+'),
@@ -245,8 +240,9 @@ SELECT doc_id,
        {_VERDICT_CASE} AS verdict,
        ({_VERDICT_CASE}) = 'keep' AS keep
 FROM p
-""",
-)(TS.curation_verdict)
+"""
+
+register("curation_verdict", CURATION_VERDICT_ORACLE)(TS.curation_verdict)
 
 _RATE_CASE = "CASE " + " ".join(
     f"WHEN lang = '{lang}' THEN {r}"
@@ -281,8 +277,8 @@ FROM documents
 
 register(
     "exact_dedup",
-    r"""
-SELECT md5(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp,
+    f"""
+SELECT md5({_NORM_SQL}) AS fp,
        MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_dups
 FROM documents GROUP BY 1
 """,
@@ -381,9 +377,7 @@ WHERE CAST(list_dot_product(list_transform(na.qv, x -> CAST(x AS DOUBLE)),
 # dedup_clusters: connected components over the near-dup pair graph.
 # The min-label fixpoint is unique, so the Spark pointer-jumping loop and
 # the DuckDB recursive reachability CTE provably agree row-for-row.
-register(
-    "dedup_clusters",
-    f"""
+DEDUP_CLUSTERS_ORACLE = f"""
 WITH RECURSIVE {_SH_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 shc AS (
@@ -412,8 +406,9 @@ reach AS (
   SELECT r.doc, e.b FROM reach r JOIN edges e ON e.a = r.lab
 )
 SELECT doc AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY doc
-""",
-)(D.dedup_clusters)
+"""
+
+register("dedup_clusters", DEDUP_CLUSTERS_ORACLE)(D.dedup_clusters)
 
 # --- similarity search ----------------------------------------------------------
 

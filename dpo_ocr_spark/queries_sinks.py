@@ -15,9 +15,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .queries import _ETEXT_CTE, _TOKENS_CTE, register, _tokens
+from .queries import (
+    _COUNTY_SQL,
+    _ETEXT_CTE,
+    _TOKENS_CTE,
+    _extracted,
+    _tokens,
+    register,
+)
 from .queries_cascade import _CASCADE_CTE, _SQL_DATES, _full_frame
-from .sqlfrags import _COUNTY_SQL
 
 # ---------------------------------------------------------------------------
 # S8: CSV sink cells (QUOTE_NONNUMERIC rendering, run_gvision_ocr.py:173-174)
@@ -116,8 +122,6 @@ def _q_json_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     fields (url/payload_kind/n_tokens/text) — the token-array tail is
     covered value-wise by csv_cells/span_records; a byte-exact SQL twin
     of nested struct arrays would pin DuckDB's JSON writer, not ours."""
-    from .queries import _extracted
-
     return _extracted(spark, sf_dir).select(
         "url",
         F.to_json(

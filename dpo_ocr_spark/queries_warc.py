@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import build_web_pages
-from .queries import _ETEXT_CTE, _URL_SQL, register
+from .queries import _ETEXT_CTE, _URL_SQL, _extracted, register
 from .session import scratch_dir
 from .sources import warc as W
 
@@ -149,8 +149,6 @@ def _q_wet_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """extraction → WET sink (conversion records with the language header)
     → WET source → per-language rollup.  Counts and character sums match
     only if every text and its language tag survived the round trip."""
-    from .queries import _extracted
-
     out = scratch_dir("wet_gate_")
     ext = _extracted(spark, sf_dir).select("url", "warc_ts", "lang", "text")
     W.write_wet(ext, out).count()

@@ -9,6 +9,7 @@ import decimal
 import duckdb
 import pytest
 
+import __spark_entry__ as E
 from dpo_ocr_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
@@ -29,14 +30,14 @@ EXPECTED = {
 
 @pytest.mark.parametrize("name", sorted(EXPECTED))
 def test_canary_spark_values(spark, name):
-    rows = sorted(map(tuple, Q.QUERIES[name](spark, SF).collect()))
+    rows = sorted(map(tuple, E.queries()[name](spark, SF).collect()))
     assert rows == sorted(EXPECTED[name])
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED))
 def test_canary_oracle_values(name):
     con = duckdb.connect()
-    rows = sorted(map(tuple, con.execute(Q.ORACLES[name]).fetchall()))
+    rows = sorted(map(tuple, con.execute(E.oracle_sql()[name]).fetchall()))
     assert rows == sorted(EXPECTED[name])
 
 
@@ -50,19 +51,19 @@ def test_canary_probe_types():
         return [r[1] for r in
                 con.execute(f"DESCRIBE SELECT * FROM ({sql})").fetchall()]
 
-    assert out_types(Q.ORACLES["canary_hugeint"]) == ["HUGEINT"]
-    assert out_types(Q.ORACLES["canary_decimal"]) == ["DECIMAL(38,4)"]
+    assert out_types(E.oracle_sql()["canary_hugeint"]) == ["HUGEINT"]
+    assert out_types(E.oracle_sql()["canary_decimal"]) == ["DECIMAL(38,4)"]
     for name in EXPECTED:
         if name in ("canary_hugeint", "canary_decimal"):
             continue
         assert not any(
             t.startswith(("HUGEINT", "UHUGEINT", "DECIMAL"))
-            for t in out_types(Q.ORACLES[name])
+            for t in out_types(E.oracle_sql()[name])
         ), name
 
 
 def test_canaries_hold_registry_slots_3_to_12():
-    names = list(Q.QUERIES)
+    names = list(E.queries())
     assert names[:2] == ["extract_text", "block_assembly"]
     assert all(n.startswith("canary_") for n in names[2:12])
     assert len([n for n in names[:12] if n.startswith("canary_")]) == 10
@@ -72,7 +73,7 @@ def test_driver_sample_boundary_is_deliberate():
     """All 50 driver-sampled slots are named in _FIRST — no query receives
     a driver row by registration-order accident, and a future module
     reorder cannot silently swap which queries are sampled."""
-    names = list(Q.QUERIES)
+    names = list(E.queries())
     assert len(Q._FIRST) == 50
     assert names[:50] == Q._FIRST
     assert names[48:50] == ["streaming_extract", "streaming_dedup"]

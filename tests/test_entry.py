@@ -2,7 +2,65 @@
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
 import __spark_entry__ as E
+from dpo_ocr_spark.queries import _FIRST
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# imports argv[1] first, then the driver contract, and prints the registry
+# it sees: query names in order and the md5 of every oracle string
+_REGISTRY_SNAPSHOT = """
+import hashlib, importlib, json, sys
+importlib.import_module(sys.argv[1])
+import __spark_entry__ as E
+print(json.dumps({
+    "names": list(E.queries()),
+    "oracles": {n: hashlib.md5(s.encode()).hexdigest()
+                for n, s in E.oracle_sql().items()},
+}))
+"""
+
+
+def _registry_after_importing(module: str) -> dict:
+    out = subprocess.run(
+        [sys.executable, "-c", _REGISTRY_SNAPSHOT, module],
+        cwd=REPO, capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stderr
+    return json.loads(out.stdout)
+
+
+@pytest.fixture(scope="module")
+def driver_registry():
+    return _registry_after_importing("__spark_entry__")
+
+
+@pytest.mark.parametrize("first", [
+    "__spark_entry__",
+    "dpo_ocr_spark.queries",
+    "dpo_ocr_spark.queries_ops",
+    "dpo_ocr_spark.queries_eval",
+    "dpo_ocr_spark.queries_curation",
+    "dpo_ocr_spark.queries_canary",
+    "dpo_ocr_spark.queries_cascade",
+    "dpo_ocr_spark.queries_sinks",
+    "dpo_ocr_spark.queries_warc",
+])
+def test_registry_is_import_order_independent(driver_registry, first):
+    """Whichever query module a fresh interpreter imports first, the
+    driver contract lists the same queries with the 50 driver-sampled
+    names first, and the same oracle strings."""
+    got = _registry_after_importing(first)
+    assert set(got["names"]) == set(driver_registry["names"])
+    assert got["names"][:50] == _FIRST
+    assert got["oracles"] == driver_registry["oracles"]
 
 
 def test_entry_returns_rows(spark):

@@ -46,10 +46,10 @@ def con():
     ],
 )
 def test_query_matches_oracle_sf0001(spark, con, name):
-    from dpo_ocr_spark.queries import ORACLES, QUERIES
+    import __spark_entry__ as E
 
-    got = QUERIES[name](spark, SD)
-    res = con.execute(ORACLES[name])
+    got = E.queries()[name](spark, SD)
+    res = con.execute(E.oracle_sql()[name])
     cols = [d[0] for d in res.description]
     want = res.fetchall()
     assert got.columns == cols
