@@ -30,7 +30,8 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # r01 ran ×8 and read 41.5k docs/s purely from fixed-overhead amortization.
 REPLICATE = int(os.environ.get("BENCH_REPLICATE", "48"))
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 
 def _replicated_pages(spark, sf_dir: str, copies: int):
@@ -246,7 +247,7 @@ def main() -> int:
 def _one_scaling_run(cpus: int) -> dict:
     """Run the extraction bench in a fresh subprocess at local[cpus]."""
     code = (
-        "import sys, json, time; sys.path.insert(0, '/root/repo')\n"
+        f"import sys, json, time; sys.path.insert(0, {ROOT!r})\n"
         "from dpo_ocr_spark.session import get_spark\n"
         "import bench\n"
         f"spark = get_spark('scaling', cpus={cpus}, extra_conf="
@@ -261,7 +262,7 @@ def _one_scaling_run(cpus: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True, text=True, timeout=1200,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
@@ -322,7 +323,7 @@ def scaling_main() -> int:
     eff_ctl = (ctl[hi] / ctl[lo]) / (hi / lo)
     eff_832 = (r_32["docs_per_sec"] / r_hi["docs_per_sec"]) / 4
     ctl_832 = (ctl[32] / ctl[hi]) / 4
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     md = f"""# BENCH — measured baseline & scaling evidence
 
 Input: deterministic synthetic web corpus derived from `{SF_DIR}`
@@ -384,7 +385,7 @@ what extrapolates.
     # preserve hand-written narrative sections below the marker — the
     # auto-generated block above it is replaced, everything after kept
     marker = "<!-- MANUAL-SECTIONS (preserved by bench.py --scaling) -->\n"
-    path = "/root/repo/BENCH/BASELINE.md"
+    path = os.path.join(ROOT, "BENCH", "BASELINE.md")
     manual = ""
     if os.path.exists(path):
         cur = open(path).read()

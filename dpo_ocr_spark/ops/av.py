@@ -1,4 +1,4 @@
-"""Real audio/video decode paths (closing the ops/multimodal.py stub).
+"""Real audio/video decode paths.
 
 The container has no libsndfile/ffmpeg, but two REAL container formats
 are fully parseable with stdlib + numpy, so the engine implements them

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
-from .dedup import _words
+from .dedup import NORM_SQL, _words
 
 N_DECON = 4  # words per decontamination n-gram
 EVAL_MOD = 97  # doc_id % EVAL_MOD == 0 -> held-out eval document
@@ -94,9 +94,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WS_SQL = (
-    "regexp_split_to_array(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')"
-)
+_WS_SQL = f"regexp_split_to_array({NORM_SQL}, ' ')"
 
 DECONTAMINATE_ORACLE = f"""
 WITH ws AS (

@@ -85,7 +85,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost ~constant work per input byte, so the decode_partitions rule
     (one task per 32 KB compressed, clamp 2×cores) applies — a fixed
     core-count fan-out paid ~32 task dispatches per tiny gate corpus.
-    The codec paths (pixels/av/multimodal) keep full ensure_parallelism:
+    The codec paths (pixels/av) keep full ensure_parallelism:
     their per-row work is huge regardless of byte size."""
     from ..scale import decode_partitions, ensure_parallelism
 
@@ -111,6 +111,11 @@ def _words() -> F.Column:
     """THE word contract: lowercase, collapse whitespace runs, split on
     ' '.  An empty text yields one empty word."""
     return F.split(_norm_text(), " ")
+
+
+# the DuckDB twin of _norm_text(), the one spelling every oracle uses:
+# RE2's \s lacks vertical tab, so the ASCII whitespace class is explicit
+NORM_SQL = r"regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')"
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,9 +472,6 @@ def simhash64_py(words: list[str]) -> int:
     return out
 
 
-_WS_SPLIT = re.compile(r"[ \t\n\r\f\v]+")
-
-
 def simhash_tokens(text: str | None) -> list[str]:
     """The simhash tokenization contract, shared by kernel and tests:
     lowercase, then split on ASCII whitespace ONLY.  Deliberately NOT
@@ -478,7 +480,7 @@ def simhash_tokens(text: str | None) -> list[str]:
     spells the set as the explicit class ``[ \\t\\n\\x0b\\f\\r]+``
     because RE2's ``\\s`` lacks vertical tab while Java's and Python's
     include it (r3 review finding)."""
-    return [w for w in _WS_SPLIT.split((text or "").lower()) if w]
+    return [w for w in _WS_ASCII.split((text or "").lower()) if w]
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

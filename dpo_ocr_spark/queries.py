@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import relational as R
 from .interpret.dims import _COUNTIES
 from .interpret.labels import PRECISE_TAILS
+from .ops.dedup import NORM_SQL as _NORM_SQL  # the DuckDB word contract
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -65,10 +66,6 @@ def _url_sql_of(expr: str) -> str:
 
 
 _URL_SQL = _url_sql_of("doc_id")
-
-# the DuckDB word contract: lowercase, every whitespace run collapsed to
-# one space (the twin of ops/dedup._norm_text)
-_NORM_SQL = r"regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g')"
 
 # host base — corpus.page_url's scheme+host prefix (outlink resolution)
 _HOST_SQL = (
@@ -737,8 +734,7 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r6 rotation queue (late-r5 additions, all local-sweep green at sf0.01
 # AND sf0.1, never driver-sampled): append_sink, audio_features,
 # video_frame_sample, resume_extract, eval_accuracy_auto_designed (in
-# sample r5), source_counts_cms, term_topk_sketch,
-# gram_cardinality_hll, bpe_merges; plus the WARC/WET/CDX container
+# sample r5); plus the WARC/WET/CDX container
 # queries (warc_extract, warc_fetch_subset, cdx_urlkeys, wet_langs)
 # and the charset-mix extraction twin (extract_text_charsets) and the
 # head-metadata family (html_meta, noindex_filter, outlinks,

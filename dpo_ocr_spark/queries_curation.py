@@ -13,14 +13,12 @@ from __future__ import annotations
 
 from .ops import curation as C
 from .ops import events as EV
-from .ops import sketches as SKT
 from .ops.av import (
     AUDIO_FEATURES_ORACLE,
     VIDEO_FRAME_SAMPLE_ORACLE,
     audio_features,
     video_frame_sample,
 )
-from .ops.bpe import bpe_oracle, bpe_train
 from .ops.dedup import (
     BATCH_MOD,
     MAX_GROUP,
@@ -328,72 +326,11 @@ register("unicode_normalize", C.UNICODE_NORMALIZE_ORACLE)(C.unicode_normalize)
 
 register("cube_summary", EV.CUBE_SUMMARY_ORACLE)(EV.cube_summary)
 
-# r5 late additions: the audio/video stub in ops/multimodal.py replaced
-# by REAL container decode paths (RIFF/WAVE PCM + MJPEG-in-AVI, pure
-# stdlib/numpy — see ops/av.py header for the honest remaining boundary:
-# compressed audio / inter-frame video codecs).  Designed-fixture exact
-# oracles, BIGINT/INT-only outputs per the r5 type ban.
+# r5 late additions: REAL container decode paths (RIFF/WAVE PCM +
+# MJPEG-in-AVI, pure stdlib/numpy — see ops/av.py header for the honest
+# remaining boundary: compressed audio / inter-frame video codecs).
+# Designed-fixture exact oracles, BIGINT/INT-only outputs per the r5
+# type ban.
 
 register("audio_features", AUDIO_FEATURES_ORACLE)(audio_features)
 register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)
-
-
-# r5 sketch layer (ops/sketches.py): fixed-size mergeable summaries for
-# the operators whose exact forms carry corpus-proportional shuffle or
-# state at 10^12 docs.  All outputs BIGINT/BOOL/VARCHAR-exact; the
-# approximate path is value-checked without hashing an estimate —
-# gram_cardinality_hll emits the exact count plus an integer-math ±5%
-# agreement flag the oracle pins TRUE.
-
-register(
-    "source_counts_cms",
-    """
-SELECT source, count(*) AS n_docs
-FROM documents GROUP BY 1
-""",
-)(SKT.source_counts_cms)
-
-_WS_TERMS = f"unnest(regexp_split_to_array({_NORM_SQL}, ' '))"
-
-register(
-    "term_topk_sketch",
-    f"""
-WITH w AS (SELECT {_WS_TERMS} AS term FROM documents),
-c AS (SELECT term, count(*) AS n FROM w GROUP BY 1)
-SELECT term, n FROM c ORDER BY n DESC, term LIMIT {SKT.TOPK_K}
-""",
-)(SKT.term_topk_sketch)
-
-_GRAMS_BY_LANG = f"""
-ws AS (
-  SELECT lang,
-         regexp_split_to_array(
-           {_NORM_SQL}, ' ') AS w
-  FROM documents
-), g AS (
-  SELECT lang,
-         unnest(list_transform(
-           generate_series(1, greatest(len(w) - {C.N_DECON - 1}, 1)),
-           i -> array_to_string(w[i:i + {C.N_DECON - 1}], ' '))) AS gram
-  FROM ws
-)
-"""
-
-register(
-    "gram_cardinality_hll",
-    f"""
-WITH {_GRAMS_BY_LANG}
-SELECT lang, count(DISTINCT gram) AS n_distinct, TRUE AS est_ok
-FROM g GROUP BY 1
-UNION ALL
-SELECT 'ALL', count(DISTINCT gram), TRUE FROM g
-""",
-)(SKT.gram_cardinality_hll)
-
-
-# Distributed BPE tokenizer training (ops/bpe.py): 8 merge iterations of
-# weighted pair counting over the distinct-word table; the DuckDB twin
-# replays every data-driven iteration via materialized CTEs + scalar
-# subqueries, so the full iterative computation is value-checked.
-
-register("bpe_merges", bpe_oracle())(bpe_train)

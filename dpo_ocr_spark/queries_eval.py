@@ -15,6 +15,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .eval import harness as H
+from .export import (
+    LINE_WIDTH,
+    PAGE_H,
+    PAGE_W,
+    annotate_plan,
+    flatten_lines,
+    form_fields,
+    span_records,
+    training_jsonl,
+)
 from .queries import (
     _COUNTY_SQL,
     _ETEXT_CTE,
@@ -362,7 +372,6 @@ FROM lbl
 
 
 def _q_span_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .export import flatten_lines, span_records
     from .interpret.labels import label_blocks
 
     blocks = label_blocks(spark, sf_dir)
@@ -417,8 +426,6 @@ register("span_records", SPAN_RECORDS_ORACLE)(_q_span_records)
 
 
 def _q_training_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .export import training_jsonl
-
     return training_jsonl(_q_span_records(spark, sf_dir))
 
 
@@ -641,8 +648,6 @@ register(
 
 
 def _q_annotate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .export import annotate_plan
-
     return annotate_plan(_tokens(spark, sf_dir))
 
 
@@ -670,14 +675,14 @@ SELECT url, CAST(block AS INT) AS block,
             WHEN s > 80 * n THEN '#ffdb4d'
             WHEN s > 70 * n THEN '#ffa366'
             ELSE '#ff6666' END AS linecolor,
-       CAST(greatest(bx0 - 3, 0) AS INT) AS ax0,
-       CAST(greatest(by0 - 3, 0) AS INT) AS ay0,
-       CAST(least(bx1 + 3, 2000) AS INT) AS ax1,
-       CAST(greatest(by0 - 3, 0) AS INT) AS ay1,
-       CAST(least(bx1 + 3, 2000) AS INT) AS ax2,
-       CAST(least(by1 + 3, 100) AS INT) AS ay2,
-       CAST(greatest(bx0 - 3, 0) AS INT) AS ax3,
-       CAST(least(by1 + 3, 100) AS INT) AS ay3
+       CAST(greatest(bx0 - {LINE_WIDTH}, 0) AS INT) AS ax0,
+       CAST(greatest(by0 - {LINE_WIDTH}, 0) AS INT) AS ay0,
+       CAST(least(bx1 + {LINE_WIDTH}, {PAGE_W}) AS INT) AS ax1,
+       CAST(greatest(by0 - {LINE_WIDTH}, 0) AS INT) AS ay1,
+       CAST(least(bx1 + {LINE_WIDTH}, {PAGE_W}) AS INT) AS ax2,
+       CAST(least(by1 + {LINE_WIDTH}, {PAGE_H}) AS INT) AS ay2,
+       CAST(greatest(bx0 - {LINE_WIDTH}, 0) AS INT) AS ax3,
+       CAST(least(by1 + {LINE_WIDTH}, {PAGE_H}) AS INT) AS ay3
 FROM blocks
 """,
 )(_q_annotate_plan)
@@ -687,8 +692,6 @@ FROM blocks
 
 
 def _q_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .export import form_fields
-
     return form_fields(_tokens(spark, sf_dir))
 
 
@@ -727,12 +730,13 @@ HAVING COUNT(*) FILTER (side = 'f') > 0
 
 # --- crop-rect planning (I4 + A5 + C13) ------------------------------------------
 
+_CROP_BUF = 10
+
 
 def _q_crop_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crop-to-text + buffer + clamp (run_gvision_ocr.py:390-415,
     old/ocr_to_csv.py:56-69): per-url min/max envelope of word quads,
-    padded by BUF, clamped to the page box via greatest/least."""
-    BUF, PAGE_W, PAGE_H = 10, 2000, 100
+    padded by _CROP_BUF, clamped to export's page box via greatest/least."""
     t = _tokens(spark, sf_dir).filter(F.col("bbox").isNotNull())
     env = t.groupBy("url").agg(
         F.min(F.element_at("bbox", 1)).alias("x0"),
@@ -742,10 +746,10 @@ def _q_crop_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return env.select(
         "url",
-        F.greatest(F.col("x0") - BUF, F.lit(0)).alias("crop_x0"),
-        F.greatest(F.col("y0") - BUF, F.lit(0)).alias("crop_y0"),
-        F.least(F.col("x1") + BUF, F.lit(PAGE_W)).alias("crop_x1"),
-        F.least(F.col("y1") + BUF, F.lit(PAGE_H)).alias("crop_y1"),
+        F.greatest(F.col("x0") - _CROP_BUF, F.lit(0)).alias("crop_x0"),
+        F.greatest(F.col("y0") - _CROP_BUF, F.lit(0)).alias("crop_y0"),
+        F.least(F.col("x1") + _CROP_BUF, F.lit(PAGE_W)).alias("crop_x1"),
+        F.least(F.col("y1") + _CROP_BUF, F.lit(PAGE_H)).alias("crop_y1"),
     )
 
 
@@ -799,11 +803,11 @@ register(
     f"""
 WITH {_TOKENS_CTE}, {_ZONE_CTE}
 SELECT url,
-       CAST(greatest(MIN(wx0) - 10, 0) AS BIGINT) AS crop_x0,
-       CAST(greatest(MIN(line_idx * 24) - 10, 0) AS BIGINT) AS crop_y0,
-       CAST(least(MAX(wx0 + 8 * length(word)) + 10, 2000) AS BIGINT)
+       CAST(greatest(MIN(wx0) - {_CROP_BUF}, 0) AS BIGINT) AS crop_x0,
+       CAST(greatest(MIN(line_idx * 24) - {_CROP_BUF}, 0) AS BIGINT) AS crop_y0,
+       CAST(least(MAX(wx0 + 8 * length(word)) + {_CROP_BUF}, {PAGE_W}) AS BIGINT)
          AS crop_x1,
-       CAST(least(MAX(line_idx * 24 + 18) + 10, 100) AS BIGINT) AS crop_y1
+       CAST(least(MAX(line_idx * 24 + 18) + {_CROP_BUF}, {PAGE_H}) AS BIGINT) AS crop_y1
 FROM ztok GROUP BY url
 """,
 )(_q_crop_rects)

@@ -667,51 +667,6 @@ FROM ranked WHERE rn <= {S.TOP_K}
 
 register("ann_ivf", _IVF_ORACLE)(S.ivf_topk)
 
-# --- multimodal (plumbing; header metadata is oracle-checkable) ------------------
-
-
-def _media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import extract_media_meta, synth_media
-
-    return extract_media_meta(synth_media(spark, sf_dir))
-
-
-register(
-    "media_meta",
-    """
-SELECT doc_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'audio' ELSE 'image' END AS media_type,
-       CAST(octet_length(encode(text)) % 640 + 16 AS INT) AS width,
-       CAST(doc_id % 480 + 16 AS INT) AS height,
-       octet_length(encode(text)) + 12 AS n_bytes,
-       TRUE AS valid
-FROM documents
-""",
-)(_media_meta)
-
-
-def _resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import resize_plan, synth_media
-
-    return resize_plan(synth_media(spark, sf_dir))
-
-
-register(
-    "media_resize_plan",
-    """
-WITH m AS (
-  SELECT doc_id,
-         CAST(octet_length(encode(text)) % 640 + 16 AS INT) AS width,
-         CAST(doc_id % 480 + 16 AS INT) AS height
-  FROM documents
-)
-SELECT doc_id, width, height,
-       CAST(floor(width * 256 / greatest(width, height)) AS INT) AS target_w,
-       CAST(floor(height * 256 / greatest(width, height)) AS INT) AS target_h
-FROM m
-""",
-)(_resize_plan)
-
 # simhash oracle: FNV-1a re-implemented in DuckDB HUGEINT arithmetic
 # (the 64-bit wrap-around multiply runs mod 2^64 in 128-bit ints; xor
 # only ever touches the low 8 bits so a BIGINT xor on h%256 is exact),

@@ -1,4 +1,4 @@
-"""Training-data ops: dedup / similarity / textstats / multimodal."""
+"""Training-data ops: dedup / similarity / textstats."""
 
 from __future__ import annotations
 
@@ -84,15 +84,6 @@ def test_minhash_lsh_supersets_high_jaccard(spark):
     assert len(missed) <= max(1, len(high) // 5), (
         f"LSH missed too many near-identical pairs: {missed}"
     )
-
-
-def test_media_header_roundtrip(spark):
-    from dpo_ocr_spark.ops.multimodal import extract_media_meta, synth_media
-
-    media = synth_media(spark, SD)
-    meta = extract_media_meta(media).collect()
-    assert all(m.valid for m in meta)
-    assert all(16 <= m.width < 656 and 16 <= m.height < 496 for m in meta)
 
 
 def test_quality_keep_flag(spark):
