@@ -13,7 +13,7 @@ Layers:
 - ``interpret``   — rule-based + fuzzy-match field interpretation (dates,
                     elevations, localities, taxonomy, collectors)
 - ``ops``         — large-scale training-data ops: dedup, similarity search,
-                    text analysis, audio/video container decode
+                    text analysis, audio container decode
 - ``eval``        — golden-transcription accuracy harness
 - ``scale``       — salted repartition, per-partition lineage, resume
 """

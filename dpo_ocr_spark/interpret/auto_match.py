@@ -40,7 +40,6 @@ data.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 from typing import Any
 
@@ -50,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from bisect import bisect_left
 from functools import lru_cache
 
+from .dates import alpha_of
 from .fuzzy import partial_ratio, ratio, token_set_ratio
 
 AUTO_SIZES = ["0.05", "0.1", "0.2"]  # the sizes the reference loop runs
@@ -68,9 +68,6 @@ AUTO_SCHEMA = (
     "stage string, pass_no int, block int"
 )
 
-# the reference's (ineffective) alpha scrub — kept verbatim
-_ALPHA_RE = re.compile(r"\W+ ,-/")
-
 
 def candidates_of(block_text: str) -> list[tuple[str, int]]:
     """(candidate, string_len) pairs in reference generation order."""
@@ -80,9 +77,8 @@ def candidates_of(block_text: str) -> list[tuple[str, int]]:
     for i in range(n - 1):
         for j in range(i + 1, n):  # j < n: the last word is never included
             text = " ".join(words[i:j])
-            alpha = _ALPHA_RE.sub("", text)
             alpha = (
-                " ".join(alpha.split())
+                " ".join(alpha_of(text).split())
                 .replace(" .", ".")
                 .replace(".", ". ")
                 .strip()

@@ -38,6 +38,8 @@ ROMAN_MONTH = {
 
 FROM_YEAR = 1800  # block_identification.py:79
 CUR_YEAR = 2026  # the "current year" bound, pinned so output is reproducible
+# the reference's (ineffective) alpha scrub — kept verbatim; auto_match's
+# candidate generation shares it through alpha_of
 _ALPHA_RE = re.compile(r"\W+ ,-/")
 _NONWORD_RE = re.compile(r"\W+")
 _DIGITS_RE = re.compile(r"\d+")

@@ -1,32 +1,27 @@
-"""Real audio/video decode paths.
+"""Real audio decode path.
 
-The container has no libsndfile/ffmpeg, but two REAL container formats
-are fully parseable with stdlib + numpy, so the engine implements them
-instead of faking the whole modality:
+The package depends on no audio library (libsndfile/ffmpeg), but a REAL
+container format is fully parseable with stdlib + numpy, so the engine
+implements it instead of faking the modality:
 
 - **WAV (RIFF/WAVE, PCM)**: proper chunk walk (unknown chunks skipped,
   odd-size pad bytes honored), PCM u8 / s16 / s24 / s32 little-endian,
   mono + multichannel.  Decode is pinned against the stdlib ``wave``
   module in tests/test_av.py.
-- **AVI (RIFF/MJPEG)**: the standard Motion-JPEG-in-AVI layout
-  (``hdrl``(``avih``/``strl``) + ``movi`` + ``idx1``); per-frame JPEG
-  payloads are decoded by the engine's own baseline-JPEG decoder
-  (ops/codecs.py) — an end-to-end real video path: container parse →
-  frame sample → image decode → pixel geometry.
 
-What remains genuinely out of scope for this sandbox (and is rejected
-explicitly, not faked): compressed audio (MP3/AAC/FLAC) and inter-frame
-video codecs (H.264/VP9) — those need entropy/transform stacks that are
-real codec libraries, and a from-scratch reimplementation is outside the
-reference's surface (the reference itself has no audio/video operators;
-these exist for the brief's multimodal-pipeline requirement).
+What remains out of scope (and is rejected explicitly, not faked):
+compressed audio (MP3/AAC/FLAC) — that needs entropy/transform stacks
+that are real codec libraries, and a from-scratch reimplementation is
+outside the reference's surface (the reference itself has no audio
+operators; this exists for the brief's multimodal-pipeline
+requirement).
 
-Both registered queries follow the designed-fixture pattern of
+The registered query follows the designed-fixture pattern of
 ops/pixels.py: payloads are synthesized as a pure function of doc_id, so
 the DuckDB oracle re-derives every output column arithmetically while
-the engine does the full bytes → container walk → samples/pixels →
-features work inside Arrow batches (mapInPandas, zero shuffles — the
-scan→decode shape that scales linearly with input splits at 100 TB).
+the engine does the full bytes → container walk → samples → features
+work inside Arrow batches (mapInPandas, zero shuffles — the scan→decode
+shape that scales linearly with input splits at 100 TB).
 """
 
 from __future__ import annotations
@@ -117,94 +112,6 @@ def decode_wav(data: bytes) -> tuple[int, int, int, np.ndarray]:
         raise ValueError(f"unsupported bit depth {bits}")
     n = len(x) // ch
     return rate, ch, sampwidth, x[: n * ch].reshape(n, ch)
-
-
-# ---------------------------------------------------------------------------
-# AVI container (Motion-JPEG)
-# ---------------------------------------------------------------------------
-
-FPS = 10  # frame rate of every synthesized video
-_US_PER_FRAME = 1_000_000 // FPS
-
-
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
-    """Standard MJPEG-in-AVI at ``FPS``: LIST hdrl (avih + LIST
-    strl(strh/strf)), LIST movi of ``00dc`` chunks, idx1 index."""
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return (
-            cid + struct.pack("<I", len(body)) + body
-            + (b"\x00" if len(body) % 2 else b"")
-        )
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    n = len(frames)
-    avih = struct.pack(
-        "<14I",
-        _US_PER_FRAME,     # microseconds per frame
-        0,                 # max bytes/sec (advisory)
-        0, 0x10,           # padding, flags: AVIF_HASINDEX
-        n, 0, 1, 0,        # total frames, initial, streams, suggested buf
-        width, height,
-        0, 0, 0, 0,        # reserved
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIIi", 0, 0, 0, 0, 1, FPS, 0, n, 0, 0, -1)
-        + struct.pack("<4H", 0, 0, width, height)
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_body = b"movi"
-    offsets = []
-    for f in frames:
-        offsets.append(len(movi_body))  # offset of the 00dc fourcc
-        movi_body += chunk(b"00dc", f)
-    movi = chunk(b"LIST", movi_body)
-    idx1 = chunk(
-        b"idx1",
-        b"".join(
-            b"00dc" + struct.pack("<III", 0x10, off, len(f))
-            for off, f in zip(offsets, frames)
-        ),
-    )
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def decode_avi(data: bytes) -> tuple[int, int, int, int, list[bytes]]:
-    """Walk the RIFF tree; return ``(us_per_frame, n_frames, width,
-    height, frames)`` with ``frames`` the raw per-frame JPEG payloads
-    from the ``movi`` list (``00dc``/``00db`` chunks)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI stream")
-    us_per_frame = n_frames = width = height = 0
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int) -> None:
-        nonlocal us_per_frame, n_frames, width, height
-        while pos + 8 <= end:
-            cid = data[pos : pos + 4]
-            (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-            body_at = pos + 8
-            if cid == b"LIST":
-                walk(body_at + 4, body_at + size)  # skip the list kind
-            elif cid == b"avih":
-                vals = struct.unpack("<14I", data[body_at : body_at + 56])
-                us_per_frame, n_frames = vals[0], vals[4]
-                width, height = vals[8], vals[9]
-            elif cid in (b"00dc", b"00db"):
-                frames.append(data[body_at : body_at + size])
-            pos = body_at + size + (size % 2)
-
-    walk(12, 8 + struct.unpack("<I", data[4:8])[0])
-    return us_per_frame, n_frames, width, height, frames
 
 
 # ---------------------------------------------------------------------------
@@ -303,107 +210,3 @@ SELECT doc_id,
        CAST(2 * c - 1 AS BIGINT) AS zero_crossings
 FROM p
 """
-
-
-# ---------------------------------------------------------------------------
-# Designed video fixture + frame-sample query
-# ---------------------------------------------------------------------------
-# Per doc: an MJPEG AVI of F = doc_id%6+4 frames at 10 fps; frame f's
-# page geometry is ops.pixels._geometry(doc_id + 131*f) (the +131 walks
-# every residue class of the geometry moduli across frames).  The query
-# samples every 2nd frame (the standard stride frame-sample), decodes
-# the sampled JPEGs with the engine's own decoder, and reports the
-# autocrop box + gutter per sampled frame.  JPEG q92 4:2:0 quantization
-# never moves a border/gutter under the WHITE=250 threshold — verified
-# EXHAUSTIVELY over the geometry residue space (lcm(5,4,7,6,10) = 420
-# distinct images) in tests/test_av.py, which covers every possible
-# (doc_id, frame) input, not just the ids the gate samples.
-
-FRAME_STRIDE = 2
-
-
-def synth_video(doc_id: int) -> bytes:
-    from .codecs import encode_jpeg
-    from .pixels import IMG_H, IMG_W, synth_page
-
-    n = doc_id % 6 + 4
-    frames = [
-        encode_jpeg(synth_page(doc_id + 131 * f), 92, "420")
-        for f in range(n)
-    ]
-    return encode_avi_mjpeg(frames, IMG_W, IMG_H)
-
-
-def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container parse → stride frame-sample → real JPEG decode → pixel
-    geometry, one output row per SAMPLED frame."""
-    from ..scale import ensure_parallelism
-
-    docs = ensure_parallelism(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ).select("doc_id")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import decode_jpeg
-        from .pixels import _gray, autocrop_bounds, find_gutter
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                us, n, w, h, frames = decode_avi(synth_video(did))
-                for f in range(0, n, FRAME_STRIDE):
-                    img = decode_jpeg(frames[f])
-                    g = _gray(img)
-                    box = autocrop_bounds(g)
-                    rows.append(
-                        (did, n, us, f, img.shape[1], img.shape[0],
-                         *box, find_gutter(g, box))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "us_per_frame", "frame_idx",
-                    "width", "height", "top", "bottom", "left", "right",
-                    "gutter_x",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, n_frames int, us_per_frame int, frame_idx int,"
-            " width int, height int, top int, bottom int, left int,"
-            " right int, gutter_x int"
-        ),
-    )
-
-
-def _video_oracle() -> str:
-    from .pixels import GUTTER_W, IMG_H, IMG_W
-
-    half = (GUTTER_W - 1) // 2
-    return f"""
-WITH fr AS (SELECT CAST(range AS INT) AS frame_idx FROM range(0, 10)),
-g AS (
-  SELECT d.doc_id, fr.frame_idx,
-         CAST(d.doc_id % 6 + 4 AS INT) AS n_frames,
-         d.doc_id + 131 * fr.frame_idx AS gid
-  FROM documents d
-  JOIN fr ON fr.frame_idx < d.doc_id % 6 + 4
-         AND fr.frame_idx % {FRAME_STRIDE} = 0
-)
-SELECT doc_id, n_frames,
-       CAST({_US_PER_FRAME} AS INT) AS us_per_frame,
-       frame_idx,
-       CAST({IMG_W} AS INT) AS width, CAST({IMG_H} AS INT) AS height,
-       CAST(gid % 5 + 2 AS INT) AS top,
-       CAST({IMG_H} - 1 - (gid % 4 + 2) AS INT) AS bottom,
-       CAST(gid % 7 + 2 AS INT) AS "left",
-       CAST({IMG_W} - 1 - (gid % 6 + 2) AS INT) AS "right",
-       CAST(gid % 7 + 2 + 10 + gid % 10 + {half} AS INT) AS gutter_x
-FROM g
-"""
-
-
-VIDEO_FRAME_SAMPLE_ORACLE = _video_oracle()

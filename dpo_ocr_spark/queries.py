@@ -725,23 +725,11 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never-driver-checked queries — filling all 50 slots (the r3 VERDICT's
 # done-criterion: driver rows for ≥40 of the previously unchecked).
 # Deliberately OUTSIDE the sample, covered by the local sweep
-# (ORACLES_r{N}.txt) + the sf0.1 subset instead: eval_accuracy_auto
-# (rows-only — a driver row adds little over the pytest pins) and the
-# late-r4 additions (substring_dedup{,_spans}, image_autocrop_png_adam7 /
-# _jpeg_prog) — rotate those in next round once the 44-unchecked backlog
-# has its rows.  The long-green r1 relational/interp block stays at the
-# tail.
-# r6 rotation queue (late-r5 additions, all local-sweep green at sf0.01
-# AND sf0.1, never driver-sampled): append_sink, audio_features,
-# video_frame_sample, resume_extract, eval_accuracy_auto_designed (in
-# sample r5); plus the WARC/WET/CDX container
-# queries (warc_extract, warc_fetch_subset, cdx_urlkeys, wet_langs)
-# and the charset-mix extraction twin (extract_text_charsets) and the
-# head-metadata family (html_meta, noindex_filter, outlinks,
-# canonical_dedup, crawl_frontier) and the PDF-payload extraction twin
-# (extract_text_pdf).
-# Swap them over the canary block (slots 3-12) once CORRECTNESS_r05
-# settles the driver-env dispute.
+# (ORACLES_r{N}.txt) + the sf0.1 subset instead: the three rows-only
+# queries (auto_match, eval_accuracy_auto, eval_accuracy_geo — no oracle,
+# so a driver row adds little over their pytest pins), the long-green r1
+# relational/interp block, and the later container-decode, WARC/WET/CDX,
+# head-metadata and extraction-twin families.
 # ---------------------------------------------------------------------------
 
 _FIRST = [

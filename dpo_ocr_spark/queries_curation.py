@@ -13,12 +13,7 @@ from __future__ import annotations
 
 from .ops import curation as C
 from .ops import events as EV
-from .ops.av import (
-    AUDIO_FEATURES_ORACLE,
-    VIDEO_FRAME_SAMPLE_ORACLE,
-    audio_features,
-    video_frame_sample,
-)
+from .ops.av import AUDIO_FEATURES_ORACLE, audio_features
 from .ops.dedup import (
     BATCH_MOD,
     MAX_GROUP,
@@ -326,11 +321,9 @@ register("unicode_normalize", C.UNICODE_NORMALIZE_ORACLE)(C.unicode_normalize)
 
 register("cube_summary", EV.CUBE_SUMMARY_ORACLE)(EV.cube_summary)
 
-# r5 late additions: REAL container decode paths (RIFF/WAVE PCM +
-# MJPEG-in-AVI, pure stdlib/numpy — see ops/av.py header for the honest
-# remaining boundary: compressed audio / inter-frame video codecs).
-# Designed-fixture exact oracles, BIGINT/INT-only outputs per the r5
-# type ban.
+# r5 late addition: a REAL container decode path (RIFF/WAVE PCM, pure
+# stdlib/numpy — see ops/av.py header for the honest remaining boundary:
+# compressed audio).  Designed-fixture exact oracle, BIGINT/INT-only
+# outputs per the r5 type ban.
 
 register("audio_features", AUDIO_FEATURES_ORACLE)(audio_features)
-register("video_frame_sample", VIDEO_FRAME_SAMPLE_ORACLE)(video_frame_sample)

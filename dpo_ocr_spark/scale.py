@@ -106,8 +106,8 @@ def with_lineage(extracted: DataFrame, num_buckets: int) -> tuple[DataFrame, Dat
     NOT committed atomically: ``jobs/run_extract.py`` writes them with
     two ``write_results`` calls, i.e. two Iceberg commits.  A crash
     between the commits leaves results with no lineage, and a
-    lineage-based resume then re-runs those partitions (ROADMAP
-    direction 2 derives lineage from the committed results instead).
+    lineage-based resume then re-runs those partitions; deriving
+    lineage from the committed results would close that gap.
     ``num_buckets`` (the salt-partition count) is recorded on every
     lineage row so a resume run can recompute each url's partition
     assignment without the data (see ``resume_filter``).
@@ -138,8 +138,8 @@ def resume_filter(pages: DataFrame, lineage_done: DataFrame) -> DataFrame:
       lineage is written only after the results), so those partitions
       are skipped.  Results and lineage are two commits, not one (see
       ``with_lineage``): a partition whose results committed but whose
-      lineage did not is re-run, and its result rows are appended again
-      (ROADMAP direction 2).
+      lineage did not is re-run, and its result rows are appended
+      again.
 
     Empty lineage ⇒ everything pending.  Any other frame raises: a
     url-only frame would mark every capture of a listed url done, so an

@@ -15,6 +15,7 @@ from dpo_ocr_spark.interpret.auto_match import (
     cascade_rows,
 )
 from dpo_ocr_spark.interpret.fuzzy import partial_ratio, ratio, token_set_ratio
+from sf_fixture import SD
 
 
 def test_thresholds_match_settings_template():
@@ -141,7 +142,7 @@ def test_auto_match_end_to_end(spark):
     country row), and last-writer-wins dedup per (url, size, field)."""
     from dpo_ocr_spark.interpret.auto_match import AUTO_SIZES, auto_match
 
-    df = auto_match(spark, "/root/testdata/sf0.001").cache()
+    df = auto_match(spark, SD).cache()
     rows = df.collect()
     assert df.columns == ["url", "reference_size", "field", "value", "stage"]
     keys = [(r.url, r.reference_size, r.field) for r in rows]
@@ -151,5 +152,5 @@ def test_auto_match_end_to_end(spark):
     country = [r for r in rows if r.field == "country"]
     assert country and all(r.stage == "geo" for r in country)
     # deterministic across runs
-    again = sorted(map(tuple, auto_match(spark, "/root/testdata/sf0.001").collect()))
+    again = sorted(map(tuple, auto_match(spark, SD).collect()))
     assert again == sorted(map(tuple, rows))

@@ -1,8 +1,8 @@
-"""Audio/video container paths (ops/av.py): WAV decode pinned against
-the stdlib ``wave`` module, AVI/MJPEG round-trip, the designed-fixture
-closed forms both queries' oracles rely on, and the EXHAUSTIVE
-JPEG-quantization border-safety sweep the video oracle's correctness
-claim rests on."""
+"""Audio container path (ops/av.py): WAV decode pinned against the
+stdlib ``wave`` module and the designed-fixture closed forms the
+audio_features oracle relies on; plus the EXHAUSTIVE JPEG-quantization
+border-safety sweep the image_autocrop_jpeg oracle's correctness claim
+("exhaustive over the id space", queries_curation.py) rests on."""
 
 from __future__ import annotations
 
@@ -14,13 +14,9 @@ import numpy as np
 import pytest
 
 from dpo_ocr_spark.ops.av import (
-    FRAME_STRIDE,
     _audio_params,
-    decode_avi,
     decode_wav,
-    encode_avi_mjpeg,
     encode_wav,
-    synth_video,
     synth_wav,
 )
 
@@ -84,29 +80,11 @@ def test_wav_rejections():
 def test_synth_payloads_decode():
     rate, ch, sw, out = decode_wav(synth_wav(7))
     assert rate == 8000
-    us, n, w, h, frames = decode_avi(synth_video(7))
-    assert n == 7 % 6 + 4 and len(frames) == n
     with pytest.raises(ValueError):
         decode_wav(b"\x00\x01\x02\x03" + b"junk" * 8)
 
 
-# --- AVI --------------------------------------------------------------------
-
-
-def test_avi_roundtrip():
-    frames = [b"\xff\xd8" + bytes([i]) * (13 + i) for i in range(5)]
-    avi = encode_avi_mjpeg(frames, 96, 64)
-    us, n, w, h, out = decode_avi(avi)
-    assert (us, n, w, h) == (100_000, 5, 96, 64)
-    assert out == frames  # byte-identical payloads incl. odd sizes
-
-
-def test_avi_rejection():
-    with pytest.raises(ValueError):
-        decode_avi(b"RIFF\x04\x00\x00\x00WAVE")
-
-
-# --- designed-fixture closed forms (what the oracles assert) ----------------
+# --- designed-fixture closed forms (what the oracle asserts) ----------------
 
 
 @pytest.mark.parametrize("doc_id", list(range(24)) + [123, 457, 499, 4999])
@@ -124,11 +102,12 @@ def test_audio_closed_forms(doc_id):
 
 
 def test_video_frame_geometry_exhaustive_over_residue_space():
-    """The video oracle re-derives each sampled frame's crop box/gutter
-    arithmetically, which is only sound if JPEG q92 4:2:0 quantization
-    never moves a border/gutter under the WHITE=250 threshold.  The
-    fixture image is fully determined by gid mod lcm(5,4,7,6,10)=420, so
-    sweeping gid 0..419 covers EVERY possible (doc_id, frame) input."""
+    """The image_autocrop_jpeg oracle re-derives each page's crop
+    box/gutter arithmetically, which is only sound if JPEG q92 4:2:0
+    quantization never moves a border/gutter under the WHITE=250
+    threshold.  The fixture image is fully determined by gid mod
+    lcm(5,4,7,6,10)=420, so sweeping gid 0..419 covers EVERY possible
+    doc_id input."""
     from dpo_ocr_spark.ops.codecs import decode_jpeg, encode_jpeg
     from dpo_ocr_spark.ops.pixels import (
         GUTTER_W, IMG_H, IMG_W, _gray, autocrop_bounds, find_gutter,
@@ -148,16 +127,3 @@ def test_video_frame_geometry_exhaustive_over_residue_space():
         assert find_gutter(g, box) == (
             gid % 7 + 2 + 10 + gid % 10 + (GUTTER_W - 1) // 2
         ), gid
-
-
-def test_video_container_sampling(spark):
-    """End-to-end AVI walk on one doc: frame count, stride sampling and
-    per-frame payload decodability (no Spark job — kernel level)."""
-    from dpo_ocr_spark.ops.codecs import decode_jpeg
-
-    us, n, w, h, frames = decode_avi(synth_video(17))
-    assert n == 17 % 6 + 4 and len(frames) == n and (w, h) == (96, 64)
-    sampled = list(range(0, n, FRAME_STRIDE))
-    for f in sampled:
-        img = decode_jpeg(frames[f])
-        assert img.shape == (64, 96, 3)

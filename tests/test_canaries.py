@@ -11,8 +11,7 @@ import pytest
 
 import __spark_entry__ as E
 from dpo_ocr_spark import queries as Q
-
-SF = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 EXPECTED = {
     "canary_literals": [(42, 1.5, "x", True, None)],
@@ -30,7 +29,7 @@ EXPECTED = {
 
 @pytest.mark.parametrize("name", sorted(EXPECTED))
 def test_canary_spark_values(spark, name):
-    rows = sorted(map(tuple, E.queries()[name](spark, SF).collect()))
+    rows = sorted(map(tuple, E.queries()[name](spark, SD).collect()))
     assert rows == sorted(EXPECTED[name])
 
 

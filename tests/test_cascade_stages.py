@@ -5,8 +5,7 @@ upsert-overwrite quirks must hold (fallback overwrites iv/vv only)."""
 from __future__ import annotations
 
 import __spark_entry__ as E
-
-SF = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 STAGES = [
     "cascade_dates", "cascade_fallback", "cascade_elevation",
@@ -15,10 +14,10 @@ STAGES = [
 
 
 def test_stages_partition_full_output(spark):
-    full = sorted(map(tuple, E.queries()["interpret_full"](spark, SF).collect()))
+    full = sorted(map(tuple, E.queries()["interpret_full"](spark, SD).collect()))
     parts = []
     for name in STAGES:
-        parts.extend(map(tuple, E.queries()[name](spark, SF).collect()))
+        parts.extend(map(tuple, E.queries()[name](spark, SD).collect()))
     assert sorted(parts) == full
 
 
@@ -28,7 +27,7 @@ def test_fallback_overwrite_quirk(spark):
     survive — elevation keeps source='' while showing the 'Alt N'' text
     (not the date-stage list-repr), and the only 'similarity' rows are the
     December X11 recoveries at score 1.0 with the matched row's format."""
-    rows = E.queries()["interpret_full"](spark, SF).collect()
+    rows = E.queries()["interpret_full"](spark, SD).collect()
     elev = [r for r in rows if r.data_type == "elevation"]
     assert elev and all(
         r.interpreted_value.startswith("Alt ")

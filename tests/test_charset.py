@@ -14,6 +14,7 @@ from dpo_ocr_spark.extract.charset import decode_html, detect_charset
 from dpo_ocr_spark.extract.html import extract_html, segment_html
 from html_reference import segment_html as reference_segment_html
 from dpo_ocr_spark.corpus import expected_text, render_html, render_html_cs
+from sf_fixture import SD
 
 
 def test_bom_detection_and_strip():
@@ -90,13 +91,12 @@ def test_charset_mix_gate_query(spark):
     """extract_text_charsets == extract_text on the same sf dir."""
     from dpo_ocr_spark.queries import QUERIES
 
-    sf = "/root/testdata/sf0.001"
     a = {
         (r["url"], r["text"])
-        for r in QUERIES["extract_text_charsets"](spark, sf).collect()
+        for r in QUERIES["extract_text_charsets"](spark, SD).collect()
     }
     b = {
         (r["url"], r["text"])
-        for r in QUERIES["extract_text"](spark, sf).collect()
+        for r in QUERIES["extract_text"](spark, SD).collect()
     }
     assert a == b

@@ -10,8 +10,7 @@ pins both properties for the whole new-op surface.
 from __future__ import annotations
 
 import pytest
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 def _write_empty_tables(spark, tmp_path):

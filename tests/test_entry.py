@@ -11,6 +11,7 @@ import pytest
 
 import __spark_entry__ as E
 from dpo_ocr_spark.queries import _FIRST
+from sf_fixture import SD
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -78,7 +79,7 @@ def test_queries_oracles_aligned():
 
 
 def test_extract_text_nonempty(spark):
-    df = E.queries()["extract_text"](spark, "/root/testdata/sf0.001")
+    df = E.queries()["extract_text"](spark, SD)
     rows = df.limit(5).collect()
     assert all(r.text and "\n" not in r.url for r in rows)
 
@@ -109,9 +110,9 @@ def test_corpus_gen_equivalence(spark):
                 }
             )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+    docs = spark.read.parquet(f"{SD}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
     ref = sorted(map(repr, docs.mapInPandas(reference_batches, schema=WEB_PAGES).collect()))
-    hot = sorted(map(repr, build_web_pages(spark, "/root/testdata/sf0.001").collect()))
+    hot = sorted(map(repr, build_web_pages(spark, SD).collect()))
     assert ref == hot

@@ -5,8 +5,7 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import functions as F
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 def _auto_fields(spark):
@@ -174,8 +173,7 @@ def test_auto_geo_passes_and_accuracy(spark):
     from dpo_ocr_spark.eval.harness import accuracy_over_auto
     from dpo_ocr_spark.interpret.auto_match import AUTO_SIZES
 
-    sd = "/root/testdata/sf0.001"
-    geo = auto_geo(spark, sd).cache()
+    geo = auto_geo(spark, SD).cache()
     rows = geo.collect()
     assert geo.columns == ["url", "reference_size", "field", "value", "stage"]
     keys = [(r.url, r.reference_size, r.field) for r in rows]
@@ -186,7 +184,7 @@ def test_auto_geo_passes_and_accuracy(spark):
     assert stages["district_county"] == {"geo_county"}
     acc = {
         (r.field, r.reference_size): r
-        for r in accuracy_over_auto(spark, sd, geo, AUTO_SIZES).collect()
+        for r in accuracy_over_auto(spark, SD, geo, AUTO_SIZES).collect()
     }
     for (field, size), r in acc.items():
         # the geo hierarchy fills these for every test url → exact 100%
@@ -201,7 +199,7 @@ def test_auto_geo_passes_and_accuracy(spark):
         if field == "verbatim_locality":
             assert 0.0 < r.pct_matched < 100.0, (field, size)
     # determinism
-    again = sorted(map(tuple, auto_geo(spark, sd).collect()))
+    again = sorted(map(tuple, auto_geo(spark, SD).collect()))
     assert again == sorted(map(tuple, rows))
 
 

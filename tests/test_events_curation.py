@@ -5,8 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import functions as F
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 _EPOCH = dt.datetime(2024, 1, 1)
 

@@ -19,9 +19,10 @@ from dpo_ocr_spark.corpus import (
 )
 from dpo_ocr_spark.extract.html import extract_html, segment_html
 from dpo_ocr_spark.extract.layout import extract_layout
+from sf_fixture import SD
 
 DOCS = duckdb.sql(
-    "select doc_id, text from '/root/testdata/sf0.001/documents.parquet'"
+    f"select doc_id, text from '{SD}/documents.parquet'"
 ).fetchall()
 
 
@@ -116,7 +117,7 @@ def test_stage_matches_per_row_reference(spark):
         ],
         schema=WEB_PAGES,
     )
-    pages = build_web_pages(spark, "/root/testdata/sf0.001").unionByName(extra)
+    pages = build_web_pages(spark, SD).unionByName(extra)
     out = extract_pages(pages)
     assert out.schema == EXTRACT_RESULT
     want = {}

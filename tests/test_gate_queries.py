@@ -1,5 +1,5 @@
 """Gate queries that no other test runs, checked against their DuckDB
-oracles at sf0.001: the audio/video queries, the WARC/WET/CDX container
+oracles at sf0.001: the audio query, the WARC/WET/CDX container
 round trips (queries_warc.py), the Structured Streaming drains
 (streaming/stream.py through their query wrappers) and the embedding
 queries (ops/similarity.py)."""
@@ -7,8 +7,7 @@ queries (ops/similarity.py)."""
 from __future__ import annotations
 
 import pytest
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 @pytest.fixture(scope="module")
@@ -26,7 +25,6 @@ def con():
     "name",
     [
         "audio_features",
-        "video_frame_sample",
         "warc_extract",
         "warc_fetch_subset",
         "cdx_urlkeys",

@@ -9,9 +9,10 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from dpo_ocr_spark.corpus import render_html
 from dpo_ocr_spark.extract.html import segment_html
 from html_reference import segment_html as reference_segment_html
+from sf_fixture import SD
 
 DOCS = duckdb.sql(
-    "select doc_id, text from '/root/testdata/sf0.001/documents.parquet'"
+    f"select doc_id, text from '{SD}/documents.parquet'"
 ).fetchall()
 
 

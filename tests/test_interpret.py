@@ -20,6 +20,7 @@ from dpo_ocr_spark.interpret.fuzzy import (
     word_similarity,
 )
 from dpo_ocr_spark.interpret.mini_dateparser import parse
+from sf_fixture import SD
 
 
 # --- date cascade ----------------------------------------------------------
@@ -144,11 +145,10 @@ def test_interpret_all_on_labels(spark):
     from dpo_ocr_spark.interpret.labels import label_blocks_with_dims
     from dpo_ocr_spark.interpret.match import interpret_all
 
-    sd = "/root/testdata/sf0.001"
-    blocks = label_blocks_with_dims(spark, sd)
-    hier = gazetteer_hierarchy(spark, sd)
+    blocks = label_blocks_with_dims(spark, SD)
+    hier = gazetteer_hierarchy(spark, SD)
     fields = interpret_all(
-        spark, blocks, gazetteer(spark, sd), taxonomy(spark), hierarchy=hier
+        spark, blocks, gazetteer(spark, SD), taxonomy(spark), hierarchy=hier
     ).collect()
     urls = {r.url for r in fields}
     assert urls, "no label urls produced fields"
@@ -175,7 +175,7 @@ def test_interpret_all_on_labels(spark):
     assert tax and tax[0].data_format == "taxonomy:species"
     # determinism across runs
     again = interpret_all(
-        spark, blocks, gazetteer(spark, sd), taxonomy(spark), hierarchy=hier
+        spark, blocks, gazetteer(spark, SD), taxonomy(spark), hierarchy=hier
     ).collect()
     assert sorted(map(tuple, fields)) == sorted(map(tuple, again))
 

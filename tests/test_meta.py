@@ -10,6 +10,7 @@ from dpo_ocr_spark.corpus import (
     render_layout,
 )
 from dpo_ocr_spark.extract.meta import page_meta
+from sf_fixture import SD
 
 TEXT = "alpha beta gamma delta epsilon zeta eta theta iota"
 
@@ -62,7 +63,7 @@ def test_html_meta_frame(spark):
     from dpo_ocr_spark.corpus import build_web_pages
     from dpo_ocr_spark.extract.meta import html_meta
 
-    pages = build_web_pages(spark, "/root/testdata/sf0.001", partitions=4)
+    pages = build_web_pages(spark, SD, partitions=4)
     rows = {r["url"]: r for r in html_meta(pages).collect()}
     assert len(rows) == 500
     for url, r in list(rows.items())[:50]:
@@ -132,7 +133,7 @@ def test_canonical_dup_marking():
 def test_crawl_frontier_query(spark):
     from dpo_ocr_spark.queries import QUERIES
 
-    rows = QUERIES["crawl_frontier"](spark, "/root/testdata/sf0.001").collect()
+    rows = QUERIES["crawl_frontier"](spark, SD).collect()
     # hosts with html docs x 7 boilerplate paths; a host h's docs all
     # share doc_id%5 == h%5, so hosts 4/9/14/19 are layout-only and
     # emit no links: hot + {1..19} minus {4,9,14,19,10} = 15 hosts.

@@ -7,8 +7,7 @@ import pytest
 from dpo_ocr_spark.ops.dedup import simhash64_py
 
 import dedup_reference as R
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 def test_simhash_reference_properties():
@@ -236,11 +235,10 @@ def test_embedding_neardup_lsh_vs_allpairs(spark):
     contain the O(n²) self-join."""
     from dpo_ocr_spark.ops import similarity as S
 
-    sf = "/root/testdata/sf0.001"
     exact = {
-        (r.vec_a, r.vec_b) for r in R.embedding_neardup_pairs(spark, sf).collect()
+        (r.vec_a, r.vec_b) for r in R.embedding_neardup_pairs(spark, SD).collect()
     }
-    lsh_df = S.embedding_neardup_lsh(spark, sf)
+    lsh_df = S.embedding_neardup_lsh(spark, SD)
     lsh = {(r.vec_a, r.vec_b) for r in lsh_df.collect()}
     assert lsh <= exact
     if exact:
@@ -342,19 +340,18 @@ def test_kmeans_centroids_fit(spark):
     centroids drive the same IVF search path."""
     from dpo_ocr_spark.ops import similarity as S
 
-    sf = "/root/testdata/sf0.001"
-    cents = S.kmeans_centroids(spark, sf).collect()
+    cents = S.kmeans_centroids(spark, SD).collect()
     assert len(cents) == S.IVF_CELLS
-    emb = S._emb(spark, sf)
+    emb = S._emb(spark, SD)
     assert sum(r.n_members for r in cents) == emb.count()  # all assigned
     M0, _ = S._ivf_centroids(emb)
     init_csv = {",".join(str(int(x)) for x in M0[i]) for i in range(len(M0))}
     moved = [r for r in cents if r.centroid_csv not in init_csv]
     assert moved, "no centroid moved after Lloyd's iterations"
-    again = S.kmeans_centroids(spark, sf).collect()
+    again = S.kmeans_centroids(spark, SD).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, cents))
     # fitted centroids plug into the identical search path
-    topk = S.ivf_topk(spark, sf, fit="kmeans").collect()
+    topk = S.ivf_topk(spark, SD, fit="kmeans").collect()
     assert topk and all(r["rank"] <= S.TOP_K for r in topk)
 
 
@@ -394,7 +391,7 @@ def test_shard_packing_budget_property(spark):
     overshoot the budget at most by one document."""
     from dpo_ocr_spark.ops.textstats import SHARD_TOKEN_BUDGET, shard_packing
 
-    rows = shard_packing(spark, "/root/testdata/sf0.001").collect()
+    rows = shard_packing(spark, SD).collect()
     by_lang: dict = {}
     for r in sorted(rows, key=lambda r: (r.lang, r.doc_id)):
         by_lang.setdefault(r.lang, []).append(r)

@@ -19,6 +19,7 @@ from dpo_ocr_spark.extract.pdf import (
     extract_pdf,
 )
 from dpo_ocr_spark.extract.stage import _extract_one
+from sf_fixture import SD
 
 TEXTS = [
     "alpha beta gamma delta epsilon zeta eta theta iota kappa",
@@ -99,14 +100,13 @@ def test_td_tstar_tj_array_parsing():
 def test_pdf_gate_query(spark):
     from dpo_ocr_spark.queries import QUERIES
 
-    sf = "/root/testdata/sf0.001"
     a = {
         (r["url"], r["text"])
-        for r in QUERIES["extract_text_pdf"](spark, sf).collect()
+        for r in QUERIES["extract_text_pdf"](spark, SD).collect()
     }
     b = {
         (r["url"], r["text"])
-        for r in QUERIES["extract_text"](spark, sf).collect()
+        for r in QUERIES["extract_text"](spark, SD).collect()
     }
     assert a == b
 

@@ -6,8 +6,7 @@ column pruning, or broadcast-dim selection — the plan properties the
 """
 
 from __future__ import annotations
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 def _plan(df) -> str:

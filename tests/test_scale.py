@@ -7,8 +7,8 @@ import subprocess
 import sys
 
 from pyspark.sql import functions as F
+from sf_fixture import SD
 
-SD = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 

@@ -21,8 +21,8 @@ from dpo_ocr_spark.sources import (
     read_web_pages,
     write_results,
 )
+from sf_fixture import SD
 
-SD = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 

@@ -1,8 +1,7 @@
 """Structured Streaming wrapper: stream result ≡ batch result."""
 
 from __future__ import annotations
-
-SD = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 def test_stream_equals_batch(tmp_path, spark):

@@ -18,14 +18,13 @@ import pytest
 from dpo_ocr_spark.corpus import build_web_pages
 from dpo_ocr_spark.session import scratch_dir
 from dpo_ocr_spark.sources import warc as W
-
-SF = "/root/testdata/sf0.001"
+from sf_fixture import SD
 
 
 @pytest.fixture(scope="module")
 def warc_dir(spark):
     out = scratch_dir("warc_rt_")
-    pages = build_web_pages(spark, SF, partitions=4)
+    pages = build_web_pages(spark, SD, partitions=4)
     index = W.write_warc(pages, out, exercise_http_codings=True).cache()
     index.count()  # force the files
     return out, index
@@ -33,7 +32,7 @@ def warc_dir(spark):
 
 def test_roundtrip_byte_identical(spark, warc_dir):
     out, index = warc_dir
-    pages = build_web_pages(spark, SF).select("url", "html")
+    pages = build_web_pages(spark, SD).select("url", "html")
     back = W.read_warc(spark, W.list_warc_paths(spark, out)).select(
         "url", "html", "http_status"
     )
@@ -68,7 +67,7 @@ def test_fetch_records_ranged(spark, warc_dir):
 
     sub = index.filter(F.crc32(F.col("url")) % 5 == 0)
     got = W.fetch_records(spark, sub)
-    pages = build_web_pages(spark, SF).select("url", "html")
+    pages = build_web_pages(spark, SD).select("url", "html")
     n_sub = sub.count()
     assert n_sub > 0
     joined = pages.join(got.withColumnRenamed("html", "html2"), "url")
@@ -90,7 +89,7 @@ def test_uncompressed_roundtrip(spark, warc_dir):
     back = W.read_warc(spark, W.list_warc_paths(spark, out, ".warc"))
     from pyspark.sql import functions as F
 
-    pages = build_web_pages(spark, SF)
+    pages = build_web_pages(spark, SD)
     joined = pages.select("url", "html").join(
         back.withColumnRenamed("html", "html2"), "url"
     )
@@ -105,7 +104,7 @@ def test_wet_roundtrip(spark):
     from dpo_ocr_spark.pipeline import run_extraction
 
     out = scratch_dir("wet_rt_")
-    extracted = run_extraction(spark, SF).select("url", "warc_ts", "lang", "text")
+    extracted = run_extraction(spark, SD).select("url", "warc_ts", "lang", "text")
     W.write_wet(extracted, out).count()
     back = W.read_wet(
         spark, W.list_warc_paths(spark, out, suffix=".warc.wet.gz")
@@ -324,7 +323,7 @@ def test_warc_ingest_job_end_to_end(tmp_path, spark, warc_dir):
     assert cdx.count() == 500
     assert cdx.filter(~F.col("urlkey").startswith("org,example,")).count() == 0
     ext = spark.read.parquet(ext_t).select("url", "text")
-    ref = run_extraction(spark, SF).select(
+    ref = run_extraction(spark, SD).select(
         "url", F.col("text").alias("text_ref")
     )
     j = ext.join(ref, "url")

@@ -92,7 +92,6 @@ def main() -> int:
         "lm_bigram_score",    # vocab groupBys + skew-tolerant instance joins
         "domain_mix",         # one groupBy + scalar-aggregate broadcast
         "audio_features",     # Arrow WAV decode kernel, zero shuffles (r5)
-        "video_frame_sample",  # Arrow AVI walk + JPEG decode, zero shuffles
     ]
     sections = ["# PLANS — physical-plan evidence (auto-generated)\n"]
     sections.append(
@@ -121,13 +120,12 @@ def main() -> int:
     assert p.count("Exchange") < 50, (
         f"{p.count('Exchange')} Exchanges — CC loop lineage not truncated"
     )
-    for av_q in ("audio_features", "video_frame_sample"):
-        p = plan_of(qs[av_q](spark, sf_dir))
-        # the only allowed Exchange is ensure_parallelism's local-fixture
-        # round-robin split (same as image_autocrop); no join/agg shuffles
-        assert p.count("Exchange") <= 2, f"{av_q}:\n{p}"
-        for op in ("SortMergeJoin", "HashAggregate", "BroadcastHashJoin"):
-            assert op not in p, f"{av_q} grew a {op}:\n{p}"
+    p = plan_of(qs["audio_features"](spark, sf_dir))
+    # the only allowed Exchange is ensure_parallelism's local-fixture
+    # round-robin split (same as image_autocrop); no join/agg shuffles
+    assert p.count("Exchange") <= 2, p
+    for op in ("SortMergeJoin", "HashAggregate", "BroadcastHashJoin"):
+        assert op not in p, f"audio_features grew a {op}:\n{p}"
     sections.append(
         "## Asserted invariants\n\n"
         "- `filter_scan`: `GreaterThan(value,50.0)` + equality filter are "
@@ -142,9 +140,9 @@ def main() -> int:
         "- `cluster_representatives`: < 50 Exchanges — the CC loop "
         "localCheckpoints each round, so the plan is O(1) in round count "
         "(was 2,922 Exchanges before truncation).\n"
-        "- `audio_features` / `video_frame_sample`: no join/aggregate "
-        "shuffles — the WAV/AVI container decode kernels are pure "
-        "per-partition Arrow stages over a pruned doc_id scan (the "
+        "- `audio_features`: no join/aggregate shuffles — the WAV "
+        "container decode kernel is a pure per-partition Arrow stage "
+        "over a pruned doc_id scan (the "
         "scan→decode shape that scales linearly with input splits); the "
         "only Exchange is ensure_parallelism's local-fixture split, a "
         "metadata no-op on a production multi-split table.\n"
